@@ -27,8 +27,13 @@ object Bench {
     val loadStart = loadavg()
     // JVM/codegen/scan warm-up so the first timed query isn't charged
     // for session bring-up (flagship entry touches joins+agg+parquet)
+    // a failure is recorded by its first 300 chars: Spark messages can
+    // embed whole plans, and the record line must stay parseable
+    def failure(e: Throwable): Some[String] = Some(e.toString.take(300))
     val warmT0 = System.nanoTime()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val warmupError =
+      try { SparkEntry.entry(spark).count(); None }
+      catch { case e: Throwable => failure(e) }
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
     // sorted name order: a hash-Map iteration reshuffles execution order
     // whenever a query is added, making round-over-round per-query deltas
@@ -43,10 +48,14 @@ object Bench {
     // number of record (driver 30.5 s vs 7.5 s reproducible). The min
     // is the contention-free capability number; all runs are kept in
     // BENCH_LOCAL.json so an outlier is self-evident, not a mystery.
+    // a run is its wall time, or the error it threw: a query that fails
+    // early must never enter the record as a fast one
     def timed(fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
+        org.apache.spark.sql.DataFrame): Either[String, Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val outcome =
+        try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => failure(e) }
       val dt = (System.nanoTime() - t0) / 1e9
       // Per-query hygiene (outside the timed window): localCheckpoint RDD
       // blocks (BlockBootstrap/Dedup/Divergence) and cached plans otherwise
@@ -57,7 +66,7 @@ object Bench {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()
-      dt
+      outcome.toLeft(dt)
     }
     // INTERLEAVED passes (q1 q2 … qN, then q1 q2 … qN — not q1 q1
     // q2 q2): back-to-back runs of the same query share any transient
@@ -77,15 +86,25 @@ object Bench {
       // owned both runs; a third sample is the cheapest defense that
       // leaves a visible record (three agreeing inflated runs = real
       // cost, not noise).
-      val runs = if (two(1) > 1.2 * two(0)) two :+ timed(fn)
-                 else two
+      val runs = two match {
+        case Seq(Right(t0), Right(t1)) if t1 > 1.2 * t0 => two :+ timed(fn)
+        case _ => two
+      }
+      val times = runs.collect { case Right(t) => t }
+      val error = runs.collectFirst { case Left(e) => e }
       System.err.println(String.format(java.util.Locale.ROOT,
-        "[bench] %-28s %8.2f s (runs: %s)", name, Double.box(runs.min),
-        runs.map(r => String.format(java.util.Locale.ROOT, "%.2f",
-          Double.box(r))).mkString("/")))
-      (name, runs.min, runs)
+        "[bench] %-28s %s (runs: %s)", name,
+        error.fold(String.format(java.util.Locale.ROOT, "%8.2f s",
+          Double.box(times.min)))(e => s"FAILED: $e"),
+        runs.map(_.fold(_ => "failed", r => String.format(
+          java.util.Locale.ROOT, "%.2f", Double.box(r)))).mkString("/")))
+      (name, error, times)
     }
-    val results = raw.map { case (name, mn, _) => name -> mn }
+    // a query that failed in any run is listed with its error and left
+    // out of the times and the total
+    val failures = warmupError.map("warmup" -> _).toSeq ++
+      raw.collect { case (name, Some(e), _) => name -> e }
+    val results = raw.collect { case (name, None, times) => name -> times.min }
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Durable full-precision record: the driver captures only the tail of
     // stdout and BENCH_r03/r04 both lost the line's head ("metric":"total"
@@ -98,12 +117,19 @@ object Bench {
       .mkString("{", ",", "}")
     val runsFull = raw.map { case (k, _, rs) =>
       s"\"" + k + "\":[" + rs.mkString(",") + "]" }.mkString("{", ",", "}")
+    import Verify.jsonString
+    val statusJson = raw.map { case (k, error, _) =>
+      jsonString(k) + ":" + jsonString(if (error.isEmpty) "ok" else "failed")
+    }.mkString("{", ",", "}")
+    val failedJson = failures.map { case (k, e) =>
+      s"""{"query":${jsonString(k)},"error":${jsonString(e)}}"""
+    }.mkString("[", ",", "]")
     def d3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val fingerprint =
       s""""load_start":"$loadStart","load_end":"${loadavg()}","warmup_sec":${d3(warmupSec)}"""
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"runs":$runsFull,"sf":"$sfDir",$fingerprint}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"runs":$runsFull,"status":$statusJson,"failed":$failedJson,"sf":"$sfDir",$fingerprint}"""
     // a SPARK_GRAFT_ONLY subset must never clobber the committed
     // full-suite record (the ScaleBench rule — an isolated-profiling
     // run overwrote BENCH_LOCAL.json with a one-query record in r15),
@@ -140,7 +166,7 @@ object Bench {
     val qs3 = results.map { case (k, v) => s"\"" + k + "\":" + d3(v) }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs3,"sf":"$sfDir","full":"$localOut"}"""
+      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs3,"failed":$failedJson,"sf":"$sfDir","full":"$localOut"}"""
     // Sidecar copy of the exact stdout record: three driver rounds
     // (r08–r10) ended `parsed: null` because sbt wraps stdout in
     // `[info] ` prefixes and a `[success]` trailer that the driver's
@@ -164,5 +190,9 @@ object Bench {
     println(line)
     spark.stop()
     println(line)
+    if (failures.nonEmpty) {
+      failures.foreach { case (k, e) => System.err.println(s"[bench] FAILED $k: $e") }
+      sys.exit(1)
+    }
   }
 }

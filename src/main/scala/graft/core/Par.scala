@@ -4,6 +4,7 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future}
+import scala.util.Try
 
 /** Overlap INDEPENDENT Spark actions from driver threads (optimization
   * guide §2.6 "Overlap independent jobs"): Spark's scheduler runs
@@ -35,34 +36,42 @@ object Par {
 
   /** Run every thunk concurrently, return results in order. The LAST
     * thunk runs on the calling thread (no pool slot is held by a
-    * blocked parent while its own legs run). Failures propagate the
-    * first thrown exception after all legs settle. */
+    * blocked parent while its own legs run). Every leg settles before
+    * anything is returned or thrown, so a caller's `finally` never runs
+    * while a sibling leg is still using its storage; the first failure
+    * in leg order is then rethrown. */
   def seq[A](thunks: Seq[() => A]): Seq[A] = {
     if (thunks.isEmpty) return Nil
     val fs = thunks.init.map(t => Future(t())(pool))
-    val last = thunks.last()
-    fs.map(f => Await.result(f, Duration.Inf)) :+ last
+    val last = Try(thunks.last())
+    (fs.map(settle) :+ last).map(_.get)
   }
 
   def par2[A, B](a: => A, b: => B): (A, B) = {
     val fa = Future(a)(pool)
-    val rb = b
-    (Await.result(fa, Duration.Inf), rb)
+    val rb = Try(b)
+    (settle(fa).get, rb.get)
   }
 
   def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
     val fa = Future(a)(pool)
     val fb = Future(b)(pool)
-    val rc = c
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf), rc)
+    val rc = Try(c)
+    val (ra, rb) = (settle(fa), settle(fb))
+    (ra.get, rb.get, rc.get)
   }
 
   def par4[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
     val fa = Future(a)(pool)
     val fb = Future(b)(pool)
     val fc = Future(c)(pool)
-    val rd = d
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-      Await.result(fc, Duration.Inf), rd)
+    val rd = Try(d)
+    val (ra, rb, rc) = (settle(fa), settle(fb), settle(fc))
+    (ra.get, rb.get, rc.get, rd.get)
+  }
+
+  private def settle[A](f: Future[A]): Try[A] = {
+    Await.ready(f, Duration.Inf)
+    f.value.get
   }
 }

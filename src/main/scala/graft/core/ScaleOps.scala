@@ -11,6 +11,12 @@ import org.apache.spark.sql.functions._
   */
 object ScaleOps {
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, read
+    * typed (so "-1" and "10MB" both parse); ≤ 0 means auto-broadcast is
+    * disabled. The explicit-broadcast guards bound their hints by it. */
+  def autoBroadcastBytes(spark: SparkSession): Long =
+    spark.sessionState.conf.autoBroadcastJoinThreshold
+
   /** Write both sides bucketed+sorted on the join key, so repeated
     * fact-to-fact joins read pre-shuffled data (no Exchange over
     * either side — SortMergeJoin directly on bucket files). This is

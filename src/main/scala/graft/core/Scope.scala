@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.RddBridge
 
 /** Storage-block scoping for multi-leg evaluators (guide §5: unpersist
   * when done). A grouped metric record is built from shared
@@ -13,28 +14,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Scope {
 
   /** Run `build`, eagerly materialize its (output-sized) result via
-    * localCheckpoint, then unpersist every storage block the thunk
-    * registered along the way — including lazy `persist()`s, whose
-    * backing RDDs only appear once the materialization runs them. The
-    * caller receives a frame backed by its own checkpoint blocks ONLY;
-    * data-sized intermediates are released the moment this returns, and
-    * the result itself is one unpersist away (the bench's per-query
-    * hygiene already clears it).
-    *
-    * Safe against caller state: only RDD ids that first appear between
-    * entry and the post-materialization snapshot are dropped, the
-    * result's own blocks are excluded by id, and the result is fully
+    * localCheckpoint, then release as [[released]] does. The caller
+    * receives a frame backed by its own checkpoint blocks ONLY (excluded
+    * by id); data-sized intermediates are released the moment this
+    * returns, and the result itself is one unpersist away (the bench's
+    * per-query hygiene already clears it). The result is fully
     * materialized BEFORE anything is released. */
-  def materialized(spark: SparkSession)(build: => DataFrame): DataFrame = {
+  def materialized(spark: SparkSession)(build: => DataFrame): DataFrame =
+    releasing(spark)(build.localCheckpoint())(RddBridge.logicalRddIds(_).toSet)
+
+  /** Run `body`, then — in `finally`, whether it returns or throws —
+    * unpersist every local checkpoint first registered while it ran.
+    * That is all the storage the evaluators create (their returns and
+    * histogram checkpoints), including a checkpoint whose job failed
+    * half-way. A frame the caller cached, or an RDD an ML fit on another
+    * thread persisted, is not a local checkpoint and is left alone.
+    * `body` must not return a frame backed by its own checkpoints:
+    * collect first. */
+  def released[A](spark: SparkSession)(body: => A): A =
+    releasing(spark)(body)(_ => Set.empty)
+
+  private def releasing[A](spark: SparkSession)(body: => A)(
+      keep: A => Set[Int]): A = {
     val sc = spark.sparkContext
     val pre = sc.getPersistentRDDs.keySet.toSet
-    val raw = build
-    val rec = raw.localCheckpoint() // eager: runs every leg, fills caches
-    val own = org.apache.spark.sql.graftbridge.RddBridge
-      .logicalRddIds(rec).toSet
-    val created = sc.getPersistentRDDs.keySet.toSet.diff(pre).diff(own)
-    created.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    rec
+    var kept = Set.empty[Int]
+    try { val r = body; kept = keep(r); r }
+    finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!pre(id) && !kept(id) && RddBridge.isLocalCheckpoint(rdd))
+        rdd.unpersist(blocking = false)
+    }
   }
 }

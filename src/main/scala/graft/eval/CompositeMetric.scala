@@ -1,9 +1,10 @@
 package graft.eval
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.series.{SeriesOps, SeriesSpec}
+import graft.eval.DistributionEvaluator.{OneSeries, groupedReturns, returnPrefixes}
+import graft.series.SeriesSpec
 import graft.stats.{Divergence, SeriesStats, Spectral}
 
 /** C8: composite quality score — weighted sum of 11 normalized
@@ -11,9 +12,9 @@ import graft.stats.{Divergence, SeriesStats, Spectral}
   * Ref: composite_metric.py:66-153 (weights table :78-90).
   *
   * Deviations (documented per SURVEY §5 tolerance rules):
-  *  - JS uses the shared-support 100-bin probability histogram of
-  *    Divergence.histJsd (reference: 99 linspace-edge density bins with
-  *    pre-normalization ε — numerically equivalent smoothing).
+  *  - JS uses the shared-support 99-bin probability histogram of
+  *    Divergence.histJsdGrouped (reference: 99 linspace-edge density
+  *    bins with pre-normalization ε — numerically equivalent smoothing).
   *  - Hurst uses SeriesStats.hurst's segment-on-values R/S variant
   *    (reference diffs within each segment); both are standard R/S
   *    estimators and agree on the reference's fixtures to ~1e-2.
@@ -26,8 +27,18 @@ object CompositeMetric {
     "hurst_diff" -> 2.0, "vol_cluster" -> 1.5, "spectral" -> 1.5,
     "skew_diff" -> 1.0, "kurt_diff" -> 1.0, "std_ratio" -> 2.0)
 
-  /** @return (score, details) — score 0 = perfect, higher = worse. */
-  /** @param withExpensive false skips the hurst + spectral legs (their
+  /** The reference's one-series composite: (score, details) — score 0 =
+    * perfect, higher = worse. The 9 SQL-expressible components come from
+    * the keyed core ([[scoreGroupedCore]]'s legs) over one
+    * [[DistributionEvaluator.groupedReturns]] checkpoint with one
+    * constant series key. In the same concurrent fan-out, the FFT leg
+    * takes both labels' bounded return prefixes from that checkpoint in
+    * one collect, and the two hurst legs fit on PRICES from the start.
+    * A side aggregate that is null (the skewness or kurtosis of a
+    * constant side) counts as 0.0; a component that stays undefined (an
+    * empty side) reads NaN. Every storage block the call created is
+    * released before it returns, or throws.
+    * @param withExpensive false skips the hurst + spectral legs (their
     *        details report 0.0) — used by the oracle-checkable core
     *        variant, whose components are all SQL-expressible. */
   def score(real: DataFrame, synth: DataFrame, orderCols: Seq[String],
@@ -36,138 +47,64 @@ object CompositeMetric {
             withExpensive: Boolean = true): (Double, Map[String, Double]) = {
     val spark = real.sparkSession
     val spec = SeriesSpec(Nil, orderCols)
-
-    // union first, lag over (PARTITION BY lab) — identical values to
-    // per-half global lags, but the data-sized pass partitions
-    def labeled(df: DataFrame, lab: String): DataFrame =
-      df.select((lit(lab).as("lab") +: col(price).cast("double").as("_p")
-        +: orderCols.map(col)): _*)
-    val labSpec = SeriesSpec(Seq("lab"), orderCols)
-    // score() runs ~8 actions over these lineages (JS range+counts, KS,
-    // lagged agg, 2 hurst legs, 2 FFT collects) — persist both the
-    // labeled prices and the window-heavy returns pass, unpersist on exit
-    val lp = labeled(real, "real").unionByName(labeled(synth, "synth")).persist()
-    val u = SeriesOps.logReturns(lp, labSpec, "_p", "ret")
-      .filter(col("ret").isNotNull)
-      .select((col("lab") +: col("ret") +: orderCols.map(col)): _*)
-      .persist()
-    val rr = u.filter(col("lab") === "real")
-    val rs = u.filter(col("lab") === "synth")
-
-    // The sub-metric legs are INDEPENDENT jobs over the two persisted
-    // frames; run them concurrently (guide §2.6 — overlap independent
-    // jobs) so each leg's task tail back-fills the others. Every leg is
-    // the byte-identical plan it was when sequential.
-    val (js, ks, lagged, expensiveLegs) = graft.core.Par.par4(
-      Divergence.histJsd(u, "ret", col("lab"), "real", "synth", 99)
-        .first().getAs[Double]("js_divergence"),
-      Divergence.ecdfStats(u, "ret", col("lab"), "real", "synth")
-        .first().getAs[Double]("ks_stat"),
-      {
-        // per-label lag autocorrs + |ret| vol clustering + moments, one pass
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("lab")).orderBy(orderCols.map(col): _*)
-        u.withColumn("l1", lag(col("ret"), 1).over(w))
-          .withColumn("l5", lag(col("ret"), 5).over(w))
-          .withColumn("l24", lag(col("ret"), 24).over(w))
-          .groupBy(col("lab")).agg(
-            coalesce(corr(col("ret"), col("l1")), lit(0.0)).as("ac1"),
-            coalesce(corr(col("ret"), col("l5")), lit(0.0)).as("ac5"),
-            coalesce(corr(col("ret"), col("l24")), lit(0.0)).as("ac24"),
-            coalesce(corr(abs(col("ret")), abs(col("l1"))), lit(0.0)).as("vc"),
-            avg(col("ret")).as("mean"),
-            stddev_pop(col("ret")).as("std"),
-            skewness(col("ret")).as("skew"),
-            (kurtosis(col("ret")) + 3.0).as("kurt_raw")) // fisher=False
-          .collect().map(r => r.getString(0) -> r).toMap
-      },
-      if (!withExpensive) (0.0, 0.0, 0.0)
-      else {
-        // hurst runs on PRICES — feed it the persisted labeled halves
-        // rather than re-deriving the raw inputs; the two hurst fits and
-        // the two bounded FFT collects are themselves independent
-        val (h1, h2, rets) = graft.core.Par.par3(
-          SeriesStats.hurst(lp.filter(col("lab") === "real"), spec, "_p")
-            .first().getAs[Double]("hurst"),
-          SeriesStats.hurst(lp.filter(col("lab") === "synth"), spec, "_p")
-            .first().getAs[Double]("hurst"),
+    def hurstOf(df: DataFrame): Double =
+      SeriesStats.hurst(df.select((col(price).cast("double").as("_p") +:
+          orderCols.map(col)): _*), spec, "_p")
+        .first().getAs[Double]("hurst")
+    val ((hr, hs), (core, rets)) = graft.core.Scope.released(spark) {
+      graft.core.Par.par2(
+        if (!withExpensive) (0.0, 0.0)
+        else graft.core.Par.par2(hurstOf(real), hurstOf(synth)),
+        {
+          val u = groupedReturns(real, synth, OneSeries, orderCols, price)
           graft.core.Par.par2(
-            rr.orderBy(orderCols.map(col): _*)
-              .limit(SeriesStats.MaxCollectRows) // bounded collect (FFT leg)
-              .select("ret").collect().map(_.getDouble(0)),
-            rs.orderBy(orderCols.map(col): _*)
-              .limit(SeriesStats.MaxCollectRows)
-              .select("ret").collect().map(_.getDouble(0))))
-        (h1, h2, Spectral.distance(spark, rets._1, rets._2))
-      })
-    val (re, sy) = (lagged("real"), lagged("synth"))
-    val (hr, hs, spectral) = expensiveLegs
-
-    def ratioDev(r: Double, s: Double): Double =
-      if (math.abs(r) > 1e-6) math.abs(s / r - 1.0) else math.abs(s)
-
-    val kurtR = re.getAs[Double]("kurt_raw")
-    val details = Map(
-      "js_divergence" -> js,
-      "ks_statistic" -> ks,
-      "ac_lag1" -> ratioDev(re.getAs[Double]("ac1"), sy.getAs[Double]("ac1")),
-      "ac_lag5" -> ratioDev(re.getAs[Double]("ac5"), sy.getAs[Double]("ac5")),
-      "ac_lag24" -> ratioDev(re.getAs[Double]("ac24"), sy.getAs[Double]("ac24")),
-      "hurst_diff" -> math.abs(hs - hr),
-      "vol_cluster" -> ratioDev(re.getAs[Double]("vc"), sy.getAs[Double]("vc")),
-      "spectral" -> spectral,
-      "skew_diff" -> math.abs(sy.getAs[Double]("skew") - re.getAs[Double]("skew")),
-      "kurt_diff" -> math.abs(sy.getAs[Double]("kurt_raw") - kurtR) / math.max(kurtR, 1.0),
-      "std_ratio" -> math.abs(sy.getAs[Double]("std") / re.getAs[Double]("std") - 1.0))
-
-    u.unpersist(); lp.unpersist()
+            componentsOf(scoreSides(u, orderCols), c => coalesce(col(c), lit(0.0)))
+              .collect().head,
+            if (!withExpensive) Map.empty[String, Array[Double]]
+            else returnPrefixes(u, orderCols))
+        })
+    }
+    def side(lab: String) = rets.getOrElse(lab, Array.empty[Double])
+    val spectral =
+      if (!withExpensive) 0.0
+      else Spectral.distance(spark, side("real"), side("synth"))
+    val details = CoreComponents.map { c =>
+        c -> (if (core.isNullAt(core.fieldIndex(c))) Double.NaN else core.getAs[Double](c))
+      }.toMap ++
+      Map("hurst_diff" -> math.abs(hs - hr), "spectral" -> spectral)
     val totalW = weights.values.sum
     val s = weights.map { case (k, wt) => wt * details(k) }.sum / totalW
     (s, details)
   }
 
-  /** PER-SERIES twin of the deterministic core (the q31f component
+  /** The deterministic core per series (the q31f component
     * set): one row of the 9 SQL-expressible components per `seriesCol`
     * value — JS (unsquared, 99 bins, per-key support), KS, ratio-dev
     * autocorrs (1/5/24), |ret| vol clustering, skew/kurt diffs
     * (population moments), std ratio. Every stage is keyed on the
     * series — the million-series composite-scoring shape. The
-    * hurst/spectral legs stay with [[score]] (driver-bounded by
-    * contract). Oracle-gated by q31b. */
+    * hurst/spectral legs are [[scoreGroupedFull]]'s. Oracle-gated by
+    * q31b. */
   def scoreGrouped(real: DataFrame, synth: DataFrame, seriesCol: String,
                    orderCols: Seq[String], price: String): DataFrame =
     graft.core.Scope.materialized(real.sparkSession) {
       scoreGroupedCore(
-        groupedReturns(real, synth, seriesCol, orderCols, price),
+        groupedReturns(real, synth, col(seriesCol), orderCols, price),
         seriesCol, orderCols)
     }
 
-  /** The labeled per-series returns frame every grouped component leg
-    * consumes — built and MATERIALIZED (localCheckpoint) once so callers
-    * composing extra legs (the q31c full composite's spectral leg) share
-    * one window exchange instead of re-deriving it from prices.
-    * localCheckpoint rather than persist (r17): lineage truncation keeps
-    * the ~10 downstream leg subtrees one scan node deep each (the r17
-    * q31c plan was 100 kB formatted, seconds of cold planning);
-    * partitioning/order metadata survive, so keyed legs still skip
-    * their exchange+sort. */
-  private[eval] def groupedReturns(real: DataFrame, synth: DataFrame,
-                                   seriesCol: String, orderCols: Seq[String],
-                                   price: String): DataFrame = {
-    def labeled(df: DataFrame, lab: String): DataFrame =
-      df.select((col(seriesCol).as("_k") +: lit(lab).as("lab") +:
-        col(price).cast("double").as("_p") +: orderCols.map(col)): _*)
-    val labSpec = SeriesSpec(Seq("_k", "lab"), orderCols)
-    SeriesOps.logReturns(
-        labeled(real, "real").unionByName(labeled(synth, "synth")),
-        labSpec, "_p", "ret")
-      .filter(col("ret").isNotNull)
-      .select((col("_k") +: col("lab") +: col("ret") +: orderCols.map(col)): _*)
-      .localCheckpoint()
-  }
-
   private[eval] def scoreGroupedCore(u: DataFrame, seriesCol: String,
-                                     orderCols: Seq[String]): DataFrame = {
+                                     orderCols: Seq[String]): DataFrame =
+    componentsOf(scoreSides(u, orderCols), col, col("_k").as(seriesCol))
+
+  /** The 9 SQL-expressible component names, in output order. */
+  private val CoreComponents = Seq("js_divergence", "ks_statistic",
+    "ac_lag1", "ac_lag5", "ac_lag24", "vol_cluster", "skew_diff",
+    "kurt_diff", "std_ratio")
+
+  /** Per series `_k`: JS, KS and every per-side aggregate the ratio and
+    * moment components read (prefix r = real, s = synth). */
+  private def scoreSides(u: DataFrame, orderCols: Seq[String]): DataFrame = {
     val js = Divergence.histJsdGrouped(u, "ret", col("lab"), "real", "synth",
         99, "_k")
       .select(col("_k"), col("js_divergence"))
@@ -199,19 +136,25 @@ object CompositeMetric {
       side("real", "std").as("rstd"), side("synth", "std").as("sstd"),
       side("real", "skew").as("rskew"), side("synth", "skew").as("sskew"),
       side("real", "kurt_raw").as("rkurt"), side("synth", "kurt_raw").as("skurt"))
-    def ratioDev(r: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column) =
-      when(abs(r) > 1e-6, abs(s / r - 1.0)).otherwise(abs(s))
     js.join(ks, "_k").join(piv, "_k")
-      .select(col("_k").as(seriesCol),
-        col("js_divergence"), col("ks_statistic"),
-        ratioDev(col("rac1"), col("sac1")).as("ac_lag1"),
-        ratioDev(col("rac5"), col("sac5")).as("ac_lag5"),
-        ratioDev(col("rac24"), col("sac24")).as("ac_lag24"),
-        ratioDev(col("rvc"), col("svc")).as("vol_cluster"),
-        abs(col("sskew") - col("rskew")).as("skew_diff"),
-        (abs(col("skurt") - col("rkurt")) / greatest(col("rkurt"), lit(1.0)))
-          .as("kurt_diff"),
-        abs(col("sstd") / col("rstd") - 1.0).as("std_ratio"))
+  }
+
+  /** The 9 components over [[scoreSides]], each per-side aggregate read
+    * through `side`, after the `lead` columns. */
+  private def componentsOf(sides: DataFrame, side: String => Column,
+                           lead: Column*): DataFrame = {
+    def ratioDev(r: Column, s: Column) =
+      when(abs(r) > 1e-6, abs(s / r - 1.0)).otherwise(abs(s))
+    sides.select(lead ++ Seq(
+      col("js_divergence"), col("ks_statistic"),
+      ratioDev(side("rac1"), side("sac1")).as("ac_lag1"),
+      ratioDev(side("rac5"), side("sac5")).as("ac_lag5"),
+      ratioDev(side("rac24"), side("sac24")).as("ac_lag24"),
+      ratioDev(side("rvc"), side("svc")).as("vol_cluster"),
+      abs(side("sskew") - side("rskew")).as("skew_diff"),
+      (abs(side("skurt") - side("rkurt")) / greatest(side("rkurt"), lit(1.0)))
+        .as("kurt_diff"),
+      abs(side("sstd") / side("rstd") - 1.0).as("std_ratio")): _*)
   }
 
   /** PER-SERIES FULL composite: all 11 reference components + the
@@ -242,7 +185,7 @@ object CompositeMetric {
     // labeled logReturns window from prices — guide §2.4, remove
     // shuffles outright); only the hurst leg reads PRICES and keeps
     // its own pass
-    val u = groupedReturns(real, synth, seriesCol, orderCols, price)
+    val u = groupedReturns(real, synth, col(seriesCol), orderCols, price)
     val core = scoreGroupedCore(u, seriesCol, orderCols)
       .withColumn(seriesCol, col(seriesCol).cast("long"))
     def labeled(df: DataFrame, lab: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.eval
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.series.{SeriesOps, SeriesSpec}
@@ -19,12 +19,14 @@ import graft.stats.Divergence
   * behavior when the lib is missing — a full MacKinnon ADF is out of
   * v1 scope, SURVEY C5), quality_score = kl + 0.1·wass + |Δstd|.
   *
-  * All-Spark: every sub-metric is a window+agg pipeline; the final
-  * record assembly crossJoins one-row frames (no data collect).
+  * One implementation per metric: the one-series [[evaluate]] and the
+  * many-series [[evaluateGrouped]] run the same keyed window+agg core
+  * ([[groupedCore]]) over the same checkpointed returns
+  * ([[groupedReturns]]); [[evaluate]] keys every row by one constant.
   */
 object DistributionEvaluator {
 
-  /** PER-SERIES twin of [[evaluate]]'s deterministic core: one metric
+  /** [[evaluate]]'s deterministic core per series: one metric
     * record per `seriesCol` value (series present in either table;
     * metrics involving a missing side go null-driven like the
     * reference's degenerate cases). Every stage — returns, per-key
@@ -36,14 +38,15 @@ object DistributionEvaluator {
   def evaluateGrouped(real: DataFrame, synth: DataFrame, seriesCol: String,
                       orderCols: Seq[String], price: String): DataFrame =
     graft.core.Scope.materialized(real.sparkSession) {
-      groupedCore(groupedReturns(real, synth, seriesCol, orderCols, price),
+      groupedCore(groupedReturns(real, synth, col(seriesCol), orderCols, price),
         seriesCol, orderCols)
     }
 
-  /** The labeled per-series returns frame every grouped metric leg
-    * consumes — built and MATERIALIZED (localCheckpoint) once so callers
-    * composing several legs (the q30b core + ADF record) share one
-    * window exchange instead of re-deriving it per leg. localCheckpoint
+  /** The labeled per-series returns frame every metric leg consumes,
+    * keyed by `key` (a series column, or [[OneSeries]]) — built and
+    * MATERIALIZED (localCheckpoint) once so callers composing several
+    * legs (the q30b core + ADF record) share one window exchange
+    * instead of re-deriving it per leg. localCheckpoint
     * rather than persist (r17): it truncates the lineage, so the ~10
     * downstream leg subtrees carry a one-node scan instead of the full
     * window chain each — the r17 q31c plan was 100 kB formatted and paid
@@ -51,10 +54,10 @@ object DistributionEvaluator {
     * and in-partition order metadata survive the checkpoint, so the
     * keyed window/agg legs still skip their exchange+sort. */
   private[eval] def groupedReturns(real: DataFrame, synth: DataFrame,
-                                   seriesCol: String, orderCols: Seq[String],
+                                   key: Column, orderCols: Seq[String],
                                    price: String): DataFrame = {
     def labeled(df: DataFrame, lab: String): DataFrame =
-      df.select((col(seriesCol).as("_k") +: lit(lab).as("lab") +:
+      df.select((key.as("_k") +: lit(lab).as("lab") +:
         col(price).cast("double").as("_p") +: orderCols.map(col)): _*)
     val labSpec = SeriesSpec(Seq("_k", "lab"), orderCols)
     SeriesOps.logReturns(
@@ -150,7 +153,7 @@ object DistributionEvaluator {
                              maxRows: Int =
                                graft.stats.SeriesStats.MaxCollectRows): DataFrame =
     graft.core.Scope.materialized(real.sparkSession) {
-      val u = groupedReturns(real, synth, seriesCol, orderCols, price)
+      val u = groupedReturns(real, synth, col(seriesCol), orderCols, price)
       val core = groupedCore(u, seriesCol, orderCols)
       val adf = adfFromClustered(
         u.select(col("_k").cast("long").as("_k"),
@@ -197,104 +200,69 @@ object DistributionEvaluator {
       .withColumnRenamed("_k", seriesCol)
   }
 
-  /** `withAdf=true` runs the real ADF (graft.stats.Adf — C5) over the
-    * collected bounded return series; short series keep the reference's
-    * −1.0 "unavailable" sentinel. */
+  /** The reference's one-series metric record, on the keyed cores with
+    * one constant series key: [[groupedReturns]] checkpoints the labeled
+    * returns once (clustered by (key, label), sorted by time), and two
+    * concurrent legs read that checkpoint — [[groupedCore]]'s record
+    * and, with `withAdf`, both labels' bounded return prefixes
+    * ([[returnPrefixes]], one collect) for the driver-side ADF (C5,
+    * graft.stats.Adf). A side with ≤ 31 returns, or whose ADF fit is
+    * singular, keeps the reference's −1.0 "unavailable" sentinel, as
+    * does every side when `withAdf` is false. The record is collected
+    * and returned as a local one-row frame (no row when both sides are
+    * empty); every storage block the call created is released before it
+    * returns, or throws. One series
+    * occupies one keyed partition per label — many series go through
+    * [[evaluateGrouped]]. */
   def evaluate(real: DataFrame, synth: DataFrame,
                orderCols: Seq[String], price: String,
                withAdf: Boolean = true): DataFrame = {
-    // union first, lag over (PARTITION BY lab): identical values to
-    // lagging each half separately, but the window partitions — no
-    // single-partition stage for the data-sized returns pass
-    def labeled(df: DataFrame, lab: String): DataFrame =
-      df.select((lit(lab).as("lab") +: col(price).cast("double").as("_p")
-        +: orderCols.map(col)): _*)
-    val labSpec = SeriesSpec(Seq("lab"), orderCols)
-    // ~6 actions consume this window-heavy lineage (JS range+counts, KS,
-    // moments, autocorr, 2 ADF collects) — persist it, materialize the
-    // one-row record eagerly, unpersist before returning
-    val u = SeriesOps.logReturns(
-        labeled(real, "real").unionByName(labeled(synth, "synth")),
-        labSpec, "_p", "ret")
-      .filter(col("ret").isNotNull)
-      .select((col("lab") +: col("ret") +: orderCols.map(col)): _*)
-      .persist()
-
-    // the kl/wass builders each run bounded eager actions (support agg +
-    // counts collect; checkpoint + partition-stats collect) and the ADF
-    // leg is one bounded collect — all INDEPENDENT jobs over the
-    // persisted returns; run them concurrently (guide §2.6) so each
-    // leg's task tail back-fills the others. Each leg's jobs are the
-    // byte-identical plans they were when sequential.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lab")).orderBy(orderCols.map(col): _*)
-    val (kl, wass, adfSeries) = graft.core.Par.par3(
-      Divergence.histJsd(u, "ret", col("lab"), "real", "synth", 100)
-        .select(col("kl_divergence")),
-      Divergence.ecdfStats(u, "ret", col("lab"), "real", "synth")
-        .select(col("wasserstein").as("wasserstein_distance")),
-      // BOTH labels' bounded prefixes in one action (per-label row_number
-      // cap + ordered driver sort), instead of two separate sort+collects;
-      // skipped outright when the caller asked for no ADF
-      if (!withAdf) Map.empty[String, Array[Double]]
-      else {
-        val rk = row_number().over(w)
-        u.withColumn("_rk", rk)
-          .filter(col("_rk") <= graft.stats.SeriesStats.MaxCollectRows)
-          .select(col("lab"), col("_rk"), col("ret"))
-          .collect()
-          .groupBy(_.getString(0))
-          .view.mapValues(_.sortBy(_.getInt(1)).map(_.getDouble(2))).toMap
-      })
-
-    // moments + autocorr (lags 1/5/10) per label in ONE window+agg
-    // pass, pivoted into one row — the mean/std aggregate over exactly
-    // the same rows, so a separate moments scan would duplicate work
-    val lagged = u
-      .withColumn("l1", lag(col("ret"), 1).over(w))
-      .withColumn("l5", lag(col("ret"), 5).over(w))
-      .withColumn("l10", lag(col("ret"), 10).over(w))
-      .groupBy(col("lab")).agg(
-        avg(col("ret")).as("mean"),
-        stddev_pop(col("ret")).as("std"),
-        coalesce(corr(col("ret"), col("l1")), lit(0.0)).as("ac1"),
-        coalesce(corr(col("ret"), col("l5")), lit(0.0)).as("ac5"),
-        coalesce(corr(col("ret"), col("l10")), lit(0.0)).as("ac10"))
-    val momentsRow = lagged.groupBy().agg(
-      max(when(col("lab") === "real", col("mean"))).as("real_return_mean"),
-      max(when(col("lab") === "synth", col("mean"))).as("synthetic_return_mean"),
-      max(when(col("lab") === "real", col("std"))).as("real_return_std"),
-      max(when(col("lab") === "synth", col("std"))).as("synthetic_return_std"))
-    val acRow = lagged.groupBy().agg(
-      max(when(col("lab") === "real", col("ac1"))).as("real_autocorr_lag1"),
-      max(when(col("lab") === "synth", col("ac1"))).as("synthetic_autocorr_lag1"),
-      max(when(col("lab") === "real", col("ac5"))).as("real_autocorr_lag5"),
-      max(when(col("lab") === "synth", col("ac5"))).as("synthetic_autocorr_lag5"),
-      max(when(col("lab") === "real", col("ac10"))).as("real_autocorr_lag10"),
-      max(when(col("lab") === "synth", col("ac10"))).as("synthetic_autocorr_lag10"))
-
-    def adfOf(lab: String): Double =
-      if (!withAdf) -1.0
-      else {
-        val s = adfSeries.getOrElse(lab, Array.empty)
-        if (s.length <= 31) -1.0 // reference sentinel when untestable
-        else
-          // Reference wraps adfuller in try/except and publishes -1.0; a
-          // constant series (level collinear with intercept) or a barely-
-          // long-enough one makes the OLS normal equations singular here.
-          scala.util.Try(graft.stats.Adf.test(s).pValue).getOrElse(-1.0)
-      }
-
-    val record = kl.crossJoin(wass).crossJoin(momentsRow).crossJoin(acRow)
-      .withColumn("real_adf_pvalue", lit(adfOf("real")))
-      .withColumn("synthetic_adf_pvalue", lit(adfOf("synth")))
-      .withColumn("quality_score",
-        col("kl_divergence") + lit(0.1) * col("wasserstein_distance") +
-          abs(col("real_return_std") - col("synthetic_return_std")))
     val spark = real.sparkSession
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(record.collect(): _*), record.schema)
-    u.unpersist()
-    local
+    graft.core.Scope.released(spark) {
+      val u = groupedReturns(real, synth, OneSeries, orderCols, price)
+      val (core, (adfReal, adfSynth)) = graft.core.Par.par2(
+        {
+          val c = groupedCore(u, "_k", orderCols).drop("_k")
+          spark.createDataFrame(java.util.Arrays.asList(c.collect(): _*), c.schema)
+        },
+        if (!withAdf) (-1.0, -1.0)
+        else {
+          val prefixes = returnPrefixes(u, orderCols)
+          def adfOf(lab: String): Double = {
+            val s = prefixes.getOrElse(lab, Array.empty[Double])
+            if (s.length <= 31) -1.0 // reference sentinel when untestable
+            else
+              // the reference wraps adfuller in try/except and publishes
+              // -1.0; a constant or barely-long-enough series makes the
+              // OLS normal equations singular here
+              scala.util.Try(graft.stats.Adf.test(s).pValue).getOrElse(-1.0)
+          }
+          (adfOf("real"), adfOf("synth"))
+        })
+      core.withColumn("real_adf_pvalue", lit(adfReal))
+        .withColumn("synthetic_adf_pvalue", lit(adfSynth))
+        .select((core.columns.init ++ Seq("real_adf_pvalue",
+          "synthetic_adf_pvalue", "quality_score")).map(col): _*)
+    }
+  }
+
+  /** The series key the one-series evaluators group by. */
+  private[eval] val OneSeries = lit(0L)
+
+  /** Both labels' first [[graft.stats.SeriesStats.MaxCollectRows]]
+    * returns in time order, from a [[groupedReturns]] checkpoint of one
+    * series, in one collect. The checkpoint is already clustered by
+    * (key, label) and sorted by time, so the row_number adds no
+    * exchange. */
+  private[eval] def returnPrefixes(u: DataFrame,
+                                   orderCols: Seq[String]): Map[String, Array[Double]] = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("_k"), col("lab")).orderBy(orderCols.map(col): _*)
+    u.withColumn("_rk", row_number().over(w))
+      .filter(col("_rk") <= graft.stats.SeriesStats.MaxCollectRows)
+      .select(col("lab"), col("_rk"), col("ret"))
+      .collect()
+      .groupBy(_.getString(0))
+      .view.mapValues(_.sortBy(_.getInt(1)).map(_.getDouble(2))).toMap
   }
 }

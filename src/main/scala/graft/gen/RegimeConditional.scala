@@ -50,7 +50,14 @@ object RegimeConditional {
     * Ref: regime_conditional.py:64-79. */
   def features(prices: DataFrame, orderCols: Seq[String], price: String,
                volWindow: Int = 24, volLong: Int = 72,
-               maxRows: Int = 20000): DataFrame = {
+               maxRows: Int = 20000): DataFrame =
+    featureFrames(prices, orderCols, price, volWindow, volLong, maxRows)._1
+
+  /** [[features]] plus the persisted clean frame it reads, for callers
+    * that release it when done. */
+  private def featureFrames(prices: DataFrame, orderCols: Seq[String],
+                            price: String, volWindow: Int, volLong: Int,
+                            maxRows: Int): (DataFrame, DataFrame) = {
     val spec = SeriesSpec(Nil, orderCols)
     // fit-prefix cap (same contract as maxFitRows below): every stage
     // here is causal, so capping BEFORE the vol windows bounds the
@@ -80,14 +87,15 @@ object RegimeConditional {
       avg(col("ret")).as("m0"), stddev_pop(col("ret")).as("s0"),
       avg(col("vol_short")).as("m1"), stddev_pop(col("vol_short")).as("s1"),
       avg(col("vol_ratio")).as("m2"), stddev_pop(col("vol_ratio")).as("s2"))
-    clean.crossJoin(broadcast(stats))
+    (clean.crossJoin(broadcast(stats))
       .select(col("rn"), col("ret"),
         ((col("ret") - col("m0")) / (col("s0") + 1e-10)).as("f0"),
         ((col("vol_short") - col("m1")) / (col("s1") + 1e-10)).as("f1"),
         ((col("vol_ratio") - col("m2")) / (col("s2") + 1e-10)).as("f2"),
         // carried through (constant columns) so fit() can persist the
         // normalization stats into the reference-compatible artifact
-        col("m0"), col("s0"), col("m1"), col("s1"), col("m2"), col("s2"))
+        col("m0"), col("s0"), col("m1"), col("s1"), col("m2"), col("s2")),
+      clean)
   }
 
   /** PER-SERIES grouped twin of [[features]]: every series' normalized
@@ -283,78 +291,82 @@ object RegimeConditional {
           nRegimes: Int = 4, withGarch: Boolean = false,
           maxFitRows: Int = 20000, emIters: Int = 50): RegimeModel = {
     val spark = prices.sparkSession
-    val feat = features(prices, orderCols, price, maxRows = maxFitRows)
-      .cache()
-    val rows = feat.select("rn", "ret", "f0", "f1", "f2").collect()
-    val x = rows.map(r => Array(r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-    val hmm = Hmm.fit(x, nRegimes, maxIter = emIters)
-    val labels = Hmm.predict(hmm, x)
+    // the persisted clean frame and the cached features are this fit's
+    // only storage; both are released whether the fit returns or throws
+    val (normalized, clean) =
+      featureFrames(prices, orderCols, price, 24, 72, maxFitRows)
+    val feat = normalized.cache()
+    try {
+      val rows = feat.select("rn", "ret", "f0", "f1", "f2").collect()
+      val x = rows.map(r => Array(r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+      val hmm = Hmm.fit(x, nRegimes, maxIter = emIters)
+      val labels = Hmm.predict(hmm, x)
 
-    // per-regime stats over the labeled returns — Spark groupBy (A8)
-    import spark.implicits._
-    val labeled = rows.zip(labels).toIndexedSeq
-      .map { case (r, lab) => (r.getInt(0), r.getDouble(1), lab) }
-      .toDF("rn", "ret", "regime")
-    val wReg = Window.partitionBy(col("regime")).orderBy(col("rn"))
-    // the per-regime stats agg, the global std, the znorm row, the
-    // price stats and the G5 GARCH grid are five INDEPENDENT actions
-    // (the grid's regime subsequences are already on the driver — they
-    // fed the EM); submit them concurrently (guide §2.6). The GARCH
-    // stage itself is ONE job of regimes × (α, β) tasks over the
-    // broadcast subsequences ([[Garch.fitMany]]) instead of a
-    // sequential count + collect + grid job per regime — identical
-    // variance targeting, likelihood recursion and tie-break.
-    val ((statsDf, globalStd, znorm, priceStats), rawFits) =
-      graft.core.Par.par2(
-        graft.core.Par.par4(
-          labeled
-            .withColumn("lag_ret", lag(col("ret"), 1).over(wReg))
-            .groupBy(col("regime"))
-            .agg(count(lit(1)).as("n"), avg(col("ret")).as("mean"),
-              stddev_pop(col("ret")).as("std"), skewness(col("ret")).as("skew"),
-              coalesce(corr(col("ret"), col("lag_ret")), lit(0.0)).as("ar1"))
-            .collect().map { r =>
-              def dbl(i: Int): Double =
-                if (r.isNullAt(i)) 0.0
-                else { val v = r.getDouble(i); if (v.isNaN) 0.0 else v }
-              r.getInt(0) -> RegimeParams(dbl(2), dbl(3), dbl(4), dbl(5), r.getLong(1))
-            }.toMap,
-          feat.agg(stddev_pop(col("ret"))).first().getDouble(0),
-          feat.select("m0", "s0", "m1", "s1", "m2", "s2").first(),
-          prices.agg(
-            avg(col(price)).as("m"), stddev_pop(col(price)).as("s")).first()),
-        if (!withGarch) Map.empty[Int, GarchFit]
-        else {
-          // same subsequences Garch.fit saw: rn-ascending returns of
-          // each labeled regime, ≥30 rows to earn a grid
-          val ordered = rows.zip(labels)
-            .map { case (r, lab) => (r.getInt(0), r.getDouble(1), lab) }
-            .sortBy(_._1)
-          val byRegime = ordered.groupBy(_._3)
-            .map { case (k, a) => k -> a.map(_._2) }
-          Garch.fitMany(spark, byRegime.filter(_._2.length >= 30))
+      // per-regime stats over the labeled returns — Spark groupBy (A8)
+      import spark.implicits._
+      val labeled = rows.zip(labels).toIndexedSeq
+        .map { case (r, lab) => (r.getInt(0), r.getDouble(1), lab) }
+        .toDF("rn", "ret", "regime")
+      val wReg = Window.partitionBy(col("regime")).orderBy(col("rn"))
+      // the per-regime stats agg, the global std, the znorm row, the
+      // price stats and the G5 GARCH grid are five INDEPENDENT actions
+      // (the grid's regime subsequences are already on the driver — they
+      // fed the EM); submit them concurrently (guide §2.6). The GARCH
+      // stage itself is ONE job of regimes × (α, β) tasks over the
+      // broadcast subsequences ([[Garch.fitMany]]) instead of a
+      // sequential count + collect + grid job per regime — identical
+      // variance targeting, likelihood recursion and tie-break.
+      val ((statsDf, globalStd, znorm, priceStats), rawFits) =
+        graft.core.Par.par2(
+          graft.core.Par.par4(
+            labeled
+              .withColumn("lag_ret", lag(col("ret"), 1).over(wReg))
+              .groupBy(col("regime"))
+              .agg(count(lit(1)).as("n"), avg(col("ret")).as("mean"),
+                stddev_pop(col("ret")).as("std"), skewness(col("ret")).as("skew"),
+                coalesce(corr(col("ret"), col("lag_ret")), lit(0.0)).as("ar1"))
+              .collect().map { r =>
+                def dbl(i: Int): Double =
+                  if (r.isNullAt(i)) 0.0
+                  else { val v = r.getDouble(i); if (v.isNaN) 0.0 else v }
+                r.getInt(0) -> RegimeParams(dbl(2), dbl(3), dbl(4), dbl(5), r.getLong(1))
+              }.toMap,
+            feat.agg(stddev_pop(col("ret"))).first().getDouble(0),
+            feat.select("m0", "s0", "m1", "s1", "m2", "s2").first(),
+            prices.agg(
+              avg(col(price)).as("m"), stddev_pop(col(price)).as("s")).first()),
+          if (!withGarch) Map.empty[Int, GarchFit]
+          else {
+            // same subsequences Garch.fit saw: rn-ascending returns of
+            // each labeled regime, ≥30 rows to earn a grid
+            val ordered = rows.zip(labels)
+              .map { case (r, lab) => (r.getInt(0), r.getDouble(1), lab) }
+              .sortBy(_._1)
+            val byRegime = ordered.groupBy(_._3)
+              .map { case (k, a) => k -> a.map(_._2) }
+            Garch.fitMany(spark, byRegime.filter(_._2.length >= 30))
+          })
+      val params = Array.tabulate(nRegimes) { k =>
+        statsDf.get(k).filter(_.count >= 5).getOrElse(
+          RegimeParams(0.0, globalStd, 0.0, 0.0,
+            statsDf.get(k).map(_.count).getOrElse(0L)))
+      }
+
+      // G5: regimes whose subsequence is too short for a grid keep the
+      // global-variance fallback (unchanged)
+      val garchFits =
+        if (!withGarch) None
+        else Some(Array.tabulate(nRegimes) { k =>
+          rawFits.getOrElse(k, GarchFit(globalStd * globalStd * 0.05, 0.05, 0.90,
+            globalStd * globalStd, 0.0))
         })
-    val params = Array.tabulate(nRegimes) { k =>
-      statsDf.get(k).filter(_.count >= 5).getOrElse(
-        RegimeParams(0.0, globalStd, 0.0, 0.0,
-          statsDf.get(k).map(_.count).getOrElse(0L)))
-    }
 
-    // G5: regimes whose subsequence is too short for a grid keep the
-    // global-variance fallback (unchanged)
-    val garchFits =
-      if (!withGarch) None
-      else Some(Array.tabulate(nRegimes) { k =>
-        rawFits.getOrElse(k, GarchFit(globalStd * globalStd * 0.05, 0.05, 0.90,
-          globalStd * globalStd, 0.0))
-      })
-
-    feat.unpersist()
-    RegimeModel(nRegimes, hmm.transition, hmm.startProbs, params, garchFits,
-      featureMeans = Array(znorm.getDouble(0), znorm.getDouble(2), znorm.getDouble(4)),
-      featureStds = Array(znorm.getDouble(1), znorm.getDouble(3), znorm.getDouble(5)),
-      hmmMeans = hmm.means, hmmCovars = hmm.variances,
-      dataMean = priceStats.getDouble(0), dataStd = priceStats.getDouble(1))
+      RegimeModel(nRegimes, hmm.transition, hmm.startProbs, params, garchFits,
+        featureMeans = Array(znorm.getDouble(0), znorm.getDouble(2), znorm.getDouble(4)),
+        featureStds = Array(znorm.getDouble(1), znorm.getDouble(3), znorm.getDouble(5)),
+        hmmMeans = hmm.means, hmmCovars = hmm.variances,
+        dataMean = priceStats.getDouble(0), dataStd = priceStats.getDouble(1))
+    } finally { feat.unpersist(); clean.unpersist() }
   }
 
   private def sampleCat(probs: Array[Double], u: Double): Int = {

@@ -107,8 +107,7 @@ object Similarity {
     import org.apache.spark.network.util.JavaUtils
     val spark = withNorm.sparkSession
     val estBytes = nVectors * (8L * math.max(1, dim) + 24L)
-    val autoBytes = JavaUtils.byteStringAsBytes(spark.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
+    val autoBytes = graft.core.ScaleOps.autoBroadcastBytes(spark)
     val cap = spark.conf.getOption("spark.graft.verify.broadcastMaxBytes")
       .map(JavaUtils.byteStringAsBytes)
       .getOrElse(if (autoBytes > 0) 4L * autoBytes else 0L)

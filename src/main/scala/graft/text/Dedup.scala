@@ -90,9 +90,7 @@ object Dedup {
   private def pairSideJoin(spark: org.apache.spark.sql.SparkSession,
                            estBytes: Long, sideA: DataFrame,
                            sideB: DataFrame): (DataFrame, DataFrame) = {
-    val autoBytes = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(spark.conf
-        .get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
+    val autoBytes = graft.core.ScaleOps.autoBroadcastBytes(spark)
     if (autoBytes > 0 && estBytes <= 4L * autoBytes)
       (broadcast(sideA), broadcast(sideB))
     else (sideA.hint("shuffle_hash"), sideB.hint("shuffle_hash"))
@@ -321,9 +319,7 @@ object Dedup {
     // explicit hint bypasses Spark's own size check). 4× headroom over
     // the auto threshold: an intentional hint may exceed what Spark
     // would auto-pick, but stays ~40 MB at defaults, far from OOM.
-    val autoBytes = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(train.sparkSession.conf
-        .get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
+    val autoBytes = graft.core.ScaleOps.autoBroadcastBytes(train.sparkSession)
     val nBench = benchSigs.count()
     val benchBytes = math.max(nBench * bands * 48L,
       nBench * (8L * numPerm + 24L))

@@ -225,6 +225,21 @@ class DedupSimSpec extends AnyFunSuite {
     assert(m.contains((1L, 3L)), "LSH must catch the 1-token near-dup")
   }
 
+  test("pair paths run with auto-broadcast disabled (threshold -1)") {
+    val emb = graft.core.Tables.embeddings(spark, SparkSpec.sfDir)
+    def run() = (
+      Dedup.minhashLshPairs(docsDf, "doc_id", "text", k = 3, numPerm = 64,
+        bands = 16, threshold = 0.3).collect().map(_.toSeq).toSet,
+      Dedup.fuzzyContamination(docsDf, docsDf.filter(col("doc_id") <= 3),
+        "doc_id", "text", k = 3).collect().map(_.toSeq).toSet,
+      Similarity.lshNearDupPairs(emb, "vec_id", "embedding", threshold = 0.3,
+        nPlanes = 4, bands = 8, seed = 42L).collect().map(_.toSeq).toSet)
+    val disabled = SparkSpec.withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
+    assert(disabled._1.nonEmpty && disabled._2.nonEmpty && disabled._3.nonEmpty)
+    assert(disabled === run()) // the join strategy never changes the rows
+  }
+
   test("simhash: identical docs at hamming 0; near-dup within small distance") {
     val pairs = Dedup.simhashPairs(docsDf, "doc_id", "text", maxHamming = 12)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap

@@ -53,6 +53,99 @@ class EvalSpec extends AnyFunSuite {
     }
   }
 
+  /** Same value to 1e-12 relative (1e-12 absolute near zero); NaN and
+    * null only match themselves. */
+  private def assertClose(what: String, got: Any, want: Any): Unit = (got, want) match {
+    case (g: Double, w: Double) =>
+      assert((g.isNaN && w.isNaN) ||
+        math.abs(g - w) <= math.max(1e-12, math.abs(w) * 1e-12), s"$what: $g vs oracle $w")
+    case _ => assert(got == want, s"$what: $got vs oracle $want")
+  }
+
+  // (label, real, synth): random walks, a constant synth, a synth
+  // shorter than lag 24, and ≤ 31 rows per side (the ADF sentinel)
+  private def oracleCases = {
+    val walk = SparkSpec.randomWalk(400, seed = 11)
+    val walk2 = SparkSpec.randomWalk(400, seed = 12, vol = 2e-3)
+    Seq(
+      ("random walks", walk, walk2),
+      ("constant synth", walk,
+        walk2.withColumn("typical_price", lit(1.3))),
+      ("synth shorter than lag 24", walk, SparkSpec.randomWalk(20, seed = 13)),
+      ("31 rows", SparkSpec.randomWalk(31, seed = 14),
+        SparkSpec.randomWalk(30, seed = 15)))
+  }
+
+  test("evaluate == retired single-series oracle (walks and degenerate inputs)") {
+    for ((label, real, synth) <- oracleCases; withAdf <- Seq(true, false)) {
+      val got = DistributionEvaluator.evaluate(real, synth, Seq("DATE_TIME"),
+        "typical_price", withAdf).collect()
+      val want = EvalOracle.evaluate(real, synth, Seq("DATE_TIME"),
+        "typical_price", withAdf)
+      assert(got.length === 1, label)
+      assert(got.head.schema.fieldNames.toSeq === want.schema.fieldNames.toSeq, label)
+      want.schema.fieldNames.foreach(c =>
+        assertClose(s"$label/adf=$withAdf/$c", got.head.getAs[Any](c), want.getAs[Any](c)))
+    }
+  }
+
+  test("score == retired single-series oracle (walks and degenerate inputs)") {
+    for ((label, real, synth) <- oracleCases; withExpensive <- Seq(true, false)) {
+      val (s, d) = CompositeMetric.score(real, synth, Seq("DATE_TIME"),
+        "typical_price", withExpensive = withExpensive)
+      val (os, od) = EvalOracle.score(real, synth, Seq("DATE_TIME"),
+        "typical_price", withExpensive)
+      assert(d.keySet === od.keySet, label)
+      od.foreach { case (k, v) => assertClose(s"$label/$k", d(k), v) }
+      assertClose(s"$label/score", s, os)
+    }
+  }
+
+  test("evaluate and score leave no storage behind, also when they throw") {
+    val sc = spark.sparkContext
+    def newBlocks(body: => Unit): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      body
+      sc.getPersistentRDDs.keySet.toSet.diff(before)
+    }
+    val real = SparkSpec.randomWalk(300, seed = 21)
+    val synth = SparkSpec.randomWalk(300, seed = 22)
+    assert(newBlocks(DistributionEvaluator.evaluate(real, synth,
+      Seq("DATE_TIME"), "typical_price").collect()).isEmpty)
+    assert(newBlocks(CompositeMetric.score(real, synth,
+      Seq("DATE_TIME"), "typical_price")).isEmpty)
+    // the synth frame fails only when a job runs it
+    val boom = udf((p: Double) => {
+      if (p > 0) throw new IllegalStateException("synth failed"); p
+    })
+    val failing = synth.repartition(2)
+      .withColumn("typical_price", boom(col("typical_price")))
+    assert(newBlocks(intercept[Exception](DistributionEvaluator.evaluate(
+      real, failing, Seq("DATE_TIME"), "typical_price"))).isEmpty)
+    assert(newBlocks(intercept[Exception](CompositeMetric.score(
+      real, failing, Seq("DATE_TIME"), "typical_price"))).isEmpty)
+  }
+
+  test("Scope.released drops the body's local checkpoints, also when it throws, " +
+       "and keeps a caller's cache") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    intercept[IllegalStateException](graft.core.Scope.released(spark) {
+      spark.range(100).localCheckpoint().count()
+      throw new IllegalStateException("body failed")
+    })
+    assert(sc.getPersistentRDDs.keySet.toSet.diff(before).isEmpty)
+    // a caller's lazy cache first filled inside the body is not the body's
+    val cached = spark.range(10).toDF("x").cache()
+    try {
+      graft.core.Scope.released(spark) {
+        cached.count()
+        spark.range(100).localCheckpoint().count()
+      }
+      assert(sc.getPersistentRDDs.keySet.toSet.diff(before).size === 1)
+    } finally cached.unpersist()
+  }
+
   test("grouped evaluators survive degenerate series (tiny, constant, lopsided)") {
     import org.apache.spark.sql.functions._
     val s = SparkSpec.spark

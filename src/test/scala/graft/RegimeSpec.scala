@@ -103,6 +103,15 @@ class RegimeSpec extends AnyFunSuite {
     assert(a.forall(_ > 0))
   }
 
+  test("regime conditional fit releases the storage it persisted") {
+    val prices = SparkSpec.randomWalk(400, seed = 3)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    RegimeConditional.fit(prices, Seq("DATE_TIME"), "typical_price", 3,
+      withGarch = true)
+    assert(sc.getPersistentRDDs.keySet.toSet.diff(before).isEmpty)
+  }
+
   test("G4/G5 regime conditional: deterministic, plausible vol") {
     val prices = SparkSpec.randomWalk(600)
     val m4 = RegimeConditional.fit(prices, Seq("DATE_TIME"), "typical_price", 3)
