@@ -151,22 +151,18 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_LOCAL.json write failed: $e")
     }
-    // stdout one-liner (driver contract): carries the FULL per-query
-    // map again. The r14-r17 minimal line (just {metric, value, unit,
-    // sf, full}) was captured intact in BENCH_r17.json's tail yet came
-    // back `parsed: null`, and PERF_r17's bench comparison ran empty
-    // (prev/now_bench_ok false, per_query {}) — the driver validates
-    // the contract's "queries" key, which the minimal line dropped.
-    // Measurement-harness fix, declared in OPTIMIZATION_r18.md: restore
-    // the contract shape (values at 3 decimals keep the line ~7 kB) and
-    // keep BOTH fixed-name sidecars (BENCH_STDOUT.json = this exact
-    // line, BENCH_LOCAL.json = full precision + raw runs + load
-    // fingerprint) so a clipped capture window can never lose the
-    // numbers of record.
-    val qs3 = results.map { case (k, v) => s"\"" + k + "\":" + d3(v) }
+    // stdout: the full-precision record first, then a compact line
+    // LAST — the driver parses the tail of stdout, and r18's ~7 kB line
+    // lost its head to a ~4.7 kB capture window. The compact line keeps
+    // the contract's "queries" key at 2 decimals and drops "unit" and
+    // "full"; both fixed-name sidecars stay (BENCH_STDOUT.json = this
+    // exact compact line, BENCH_LOCAL.json = the full record).
+    def d2(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    val qs2 = results.map { case (k, v) => s"\"" + k + "\":" + d2(v) }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs3,"failed":$failedJson,"sf":"$sfDir","full":"$localOut"}"""
+      s"""{"metric":"total","value":${d3(total)},"queries":$qs2,"failed":$failedJson,"sf":"$sfDir"}"""
     // Sidecar copy of the exact stdout record: three driver rounds
     // (r08–r10) ended `parsed: null` because sbt wraps stdout in
     // `[info] ` prefixes and a `[success]` trailer that the driver's
@@ -184,10 +180,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_STDOUT.json write failed: $e")
     }
-    // printed twice — before and after session teardown — so the
-    // record appears at two distinct stdout offsets and a capture
-    // window anchored to either end of the output sees one of them
-    println(line)
+    println(fileJson)
     spark.stop()
     println(line)
     if (failures.nonEmpty) {

@@ -360,14 +360,37 @@ object Cli {
     *   [--lm_ref_docs p --min_avg_logprob x] [--min_q_prob x]
     *   [--pack_budget N]
     *   [--chunk_window 480] [--chunk_stride 384] [--metrics_out m.json]
+    *
+    * Every frame the chain persists and every local checkpoint its
+    * stages register are released when the run ends, also when it
+    * throws (a bad id, an infeasible mixture).
     */
   def runCurate(spark: SparkSession, cfg: GraftConfig): Unit = {
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    graft.core.Scope.released(spark) {
+      try curate(spark, cfg, df => {
+        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        persisted += p
+        p
+      })
+      finally persisted.foreach(_.unpersist())
+    }
+  }
+
+  private def curate(spark: SparkSession, cfg: GraftConfig,
+                     persist: DataFrame => DataFrame): Unit = {
     import graft.text.{Dedup, TextOps}
     import graft.core.ScaleOps
     // --stage_timing true: per-materialization wall timings to stderr.
     // Each curate stage is lazy until its funnel count / write, so the
     // count is where the stage's cost lands — this labels those
     // barriers so a scale-cell regression names its stage directly.
+    // Funnel counts that only the metrics JSON reads ride a neighbour's
+    // aggregate and print no line of their own: the id guard rides
+    // input_count (domain_gate with a blocklist), the Gopher and
+    // language counts ride quality_gates, and the LM and classifier
+    // counts ride pii_redact. seen_register_write runs beside
+    // chunk_pack_topic_write, so their two lines overlap in time.
     val stageTiming = cfg.strOpt("stage_timing").contains("true")
     def timedStage[T](name: String)(f: => T): T =
       if (!stageTiming) f
@@ -422,7 +445,19 @@ object Cli {
             col(id).cast("long") === col("seen_id"), "left_anti")
       case None => docs0
     }
-    val n0 = timedStage("input_count")(docs.count())
+    // fail fast on non-integral doc ids (CSV reads ids as strings): the
+    // near-dup cluster stage casts ids to long — a ticker-style id would
+    // silently become NULL and collapse clusters (same failure mode as
+    // the --series_col guard in CsvIO)
+    val badId = col(id).isNotNull && col(id).cast("long").isNull
+    def countWithBadIds(df: DataFrame, stage: String): (Long, Long) = {
+      val r = timedStage(stage)(df.agg(count(lit(1)), count_if(badId)).head())
+      (r.getLong(0), r.getLong(1))
+    }
+    val blocklisted = cfg.strOpt("domain_blocklist").isDefined
+    val (n0, inputBadIds) =
+      if (blocklisted) (timedStage("input_count")(docs.count()), 0L)
+      else countWithBadIds(docs, "input_count")
     // ── optional URL blocklist gate (--domain_blocklist d1,d2 with
     // [--url_col url]): the a14 primitive, FIRST in the chain — the
     // C4/RefinedWeb ordering, URL rules drop documents before any text
@@ -441,15 +476,9 @@ object Cli {
             .select(col(id)), Seq(id), "left_semi")
       case None => docs
     }
-    val nDomain = timedStage("domain_gate")(
-      if (cfg.strOpt("domain_blocklist").isDefined) domainGated.count()
-      else n0)
-    // fail fast on non-integral doc ids (CSV reads ids as strings): the
-    // near-dup cluster stage casts ids to long — a ticker-style id would
-    // silently become NULL and collapse clusters (same failure mode as
-    // the --series_col guard in CsvIO)
-    val badIds = timedStage("id_guard")(domainGated.filter(col(id).isNotNull &&
-      col(id).cast("long").isNull).count())
+    val (nDomain, badIds) =
+      if (blocklisted) countWithBadIds(domainGated, "domain_gate")
+      else (n0, inputBadIds)
     require(badIds == 0,
       s"curate needs integral $id values; $badIds rows fail the long cast " +
         "(map string ids to a dense surrogate key first)")
@@ -576,8 +605,7 @@ object Cli {
       case None => (lineFiltered, 0L)
     }
 
-    val exact = Dedup.dropExactDuplicates(lineShaped, id, text)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exact = persist(Dedup.dropExactDuplicates(lineShaped, id, text))
     val n1 = timedStage("exact_dedup")(exact.count())
 
     val pairs = timedStage("minhash_pairs_build")(
@@ -602,7 +630,7 @@ object Cli {
     // stage misses. The operating point derives from the corpus size
     // (bandedNearDupPairsScaled: planesForOccupancy + bandsForRecall),
     // the production contract rather than d08's gate-pinned literals.
-    val deduped = (cfg.strOpt("semantic_threshold") match {
+    val deduped = persist(cfg.strOpt("semantic_threshold") match {
       case Some(t) =>
         val vecs = timedStage("semantic_embed_ckpt")(TextOps
           .hashEmbedVectors(shingleDeduped, id, text)
@@ -617,7 +645,7 @@ object Cli {
           .filter(col("id") =!= col("cluster")).select(col("id").as(id)))
         shingleDeduped.join(drop, Seq(id), "left_anti")
       case None => shingleDeduped
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    })
     val n2 = timedStage("near+semantic_dedup")(deduped.count())
 
     // ── optional SURGICAL span cut (--cut_dup_spans L): instead of
@@ -630,10 +658,9 @@ object Cli {
     // election cannot collapse).
     val curated = cfg.strOpt("cut_dup_spans") match {
       case Some(l) =>
-        val c = Dedup.substringDedupCut(deduped, id, text,
+        val c = persist(Dedup.substringDedupCut(deduped, id, text,
             k = 8, minSpanTokens = l.toInt)
-          .select(col(id), col("cleaned").as(text))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(col(id), col("cleaned").as(text)))
         timedStage("cut_dup_spans")(c.count())
         c
       case None => deduped
@@ -699,12 +726,12 @@ object Cli {
           .select(col(id), col("flesch").as("_flesch")), Seq(id), "left")
       case None => withSpan.withColumn("_flesch", lit(null).cast("double"))
     }
-    val gate = (cfg.strOpt("langs") match {
+    val gate = persist(cfg.strOpt("langs") match {
       case Some(_) =>
         withRead.join(TextOps.langId(curated, id, text)
           .select(col(id), col("lang_guess").as("_lang")), id)
       case None => withRead.withColumn("_lang", lit(null).cast("string"))
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    })
 
     val maxDup = cfg.strOpt("max_dup_ratio").map(_.toDouble).getOrElse(1.0)
     val kept = gate
@@ -720,28 +747,25 @@ object Cli {
             col("_flesch").isNotNull && col("_flesch") >= x.toDouble
           case None => lit(true)
         }))
-    val n3 = timedStage("quality_gates")(kept.count())
-
     // optional Gopher rule gate (--gopher_min_stop N): the t14
     // rule-based quality filter — word-count/word-length/alpha/symbol
     // bounds plus ≥ N distinct stopwords present; keep == all rules
-    val ruleKept =
-      if (cfg.strOpt("gopher_min_stop").isDefined)
-        kept.filter(col("_gopher_keep") === 1)
-      else kept
-    val nGopher = timedStage("gopher_gate")(ruleKept.count())
-
+    val gopherOk =
+      if (cfg.strOpt("gopher_min_stop").isDefined) col("_gopher_keep") === 1
+      else lit(true)
     // optional language filter (--langs en,es): q20's marker-word
     // language ID, keep docs whose argmax language is in the set —
     // the CCNet-style lang gate, before decontamination so the
     // benchmark overlap pass only reads surviving docs
-    val langKept = (cfg.strOpt("langs") match {
+    val langOk = cfg.strOpt("langs") match {
       case Some(spec) =>
-        val langs = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        ruleKept.filter(col("_lang").isin(langs: _*))
-      case None => ruleKept
-    }).select(col(id), col(text))
-    val nLang = timedStage("lang_gate")(langKept.count())
+        col("_lang").isin(spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq: _*)
+      case None => lit(true)
+    }
+    val Seq(n3, nGopher, nLang) = timedStage("quality_gates")(kept
+      .agg(count(lit(1)), count_if(gopherOk), count_if(gopherOk && langOk))
+      .head().toSeq.map(_.asInstanceOf[Long]))
+    val langKept = kept.filter(gopherOk && langOk).select(col(id), col(text))
 
     val clean = cfg.strOpt("benchmark_docs") match {
       // --cut_contaminated_spans L: SURGICAL decontamination (t23 +
@@ -820,7 +844,7 @@ object Cli {
         }
       case _ => capped
     }
-    // NOT persisted (measured): the LM/classifier counts and the
+    // NOT persisted (measured): the LM/classifier scores and the
     // redaction build re-derive this frame, but its lineage reads the
     // deduped/gate caches and the re-derivation is cheap — persisting
     // the text-heavy epoch-upsampled rows instead EVICTED the upstream
@@ -832,7 +856,7 @@ object Cli {
     // optional LM-score filter (--lm_ref_docs p --min_avg_logprob x):
     // add-k bigram LM trained on the reference corpus, docs below the
     // mean-log-likelihood floor dropped (the perplexity quality gate)
-    val lmFiltered = (cfg.strOpt("lm_ref_docs"),
+    val lmScored = (cfg.strOpt("lm_ref_docs"),
         cfg.strOpt("min_avg_logprob")) match {
       case (Some(p), Some(minLp)) =>
         val ref = load(p).select(col(id), col(text))
@@ -843,35 +867,37 @@ object Cli {
         val scores = TextOps.lmScore(ref, mixed, id, text)
           .select(col(id), col("avg_logprob"))
         mixed.join(scores, Seq(id), "left")
-          .filter(col("avg_logprob").isNull ||
+          .withColumn("_lm_ok", col("avg_logprob").isNull ||
             col("avg_logprob") >= minLp.toDouble)
           .drop("avg_logprob")
-      case _ => mixed
+      case _ => mixed.withColumn("_lm_ok", lit(true))
     }
-    val nLm = timedStage("lm_gate")(lmFiltered.count())
 
     // optional quality-classifier gate (--min_q_prob x): the frozen t11
     // hashed-bigram logistic model; unscorable sub-bigram docs pass
-    // (same contract as the LM gate above)
-    val qFiltered = cfg.strOpt("min_q_prob") match {
+    // (same contract as the LM gate above). The model scores each doc
+    // on its own, so scoring the LM's losers too changes no verdict.
+    val scored = cfg.strOpt("min_q_prob") match {
       case Some(q) =>
-        val scores = TextOps.qualityClassifierScore(lmFiltered, id, text)
+        val scores = TextOps.qualityClassifierScore(lmScored, id, text)
           .select(col(id), col("q_prob"))
-        lmFiltered.join(scores, Seq(id), "left")
-          .filter(col("q_prob").isNull || col("q_prob") >= q.toDouble)
+        lmScored.join(scores, Seq(id), "left")
+          .withColumn("_keep", col("_lm_ok") &&
+            (col("q_prob").isNull || col("q_prob") >= q.toDouble))
           .drop("q_prob")
-      case None => lmFiltered
+      case None => lmScored.withColumn("_keep", col("_lm_ok"))
     }
-    val nQ = timedStage("quality_classifier")(qFiltered.count())
 
-    val redacted = TextOps.redactPii(qFiltered, text)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val Seq(n4, nEmail, nPhone) = timedStage("pii_redact")(redacted
-      .agg(count(lit(1)), sum("n_email"), sum("n_phone")).collect())
-      .headOption.map(r => Seq(r.getLong(0),
-        Option(r.get(1)).fold(0L)(_.asInstanceOf[Number].longValue),
-        Option(r.get(2)).fold(0L)(_.asInstanceOf[Number].longValue)))
-      .getOrElse(Seq(0L, 0L, 0L))
+    // both verdicts ride the redaction pass; its one aggregate counts
+    // every gate and the kept docs' redactions
+    val redactedAll = persist(TextOps.redactPii(scored, text))
+    val Seq(nLm, nQ, nEmail, nPhone) = timedStage("pii_redact")(redactedAll
+      .agg(count_if(col("_lm_ok")), count_if(col("_keep")),
+        sum(when(col("_keep"), col("n_email"))),
+        sum(when(col("_keep"), col("n_phone"))))
+      .head().toSeq.map(v => Option(v).fold(0L)(_.asInstanceOf[Number].longValue)))
+    val n4 = nQ
+    val redacted = redactedAll.filter(col("_keep"))
 
     val chunks = TextOps.chunk(
       redacted.select(col(id) +: epochCols.map(col) :+
@@ -991,9 +1017,26 @@ object Cli {
           .write.mode("overwrite")
           .parquet(s"${cfg.str("output")}_bpe_vocab.parquet")
     }
-    timedStage("chunk_pack_topic_write")(
-      labeled.write.mode("overwrite").partitionBy("split")
-        .parquet(cfg.str("output")))
+    // the seen register this output offers to the NEXT increment:
+    // prior register (if chaining) ∪ this run's exact-dedup survivors.
+    // (seen_id, text_md5) is ~24 bytes per unique doc — join-keyed
+    // distributed state, never driver-sized. An EMPTY register can
+    // write zero part files (AQE plans an empty frame to zero
+    // partitions), so the register READ schema-guards. It is written
+    // beside the chunks: neither reads the other.
+    val ownSeen = exact.select(col(id).cast("long").as("seen_id"),
+      md5(col(text)).as("text_md5"))
+    val allSeen = seenPath match {
+      case Some(p) => readSeen(p).unionByName(ownSeen).distinct()
+      case None    => ownSeen
+    }
+    graft.core.Par.par2(
+      timedStage("seen_register_write")(
+        allSeen.write.mode("overwrite")
+          .parquet(s"${cfg.str("output")}_seen.parquet")),
+      timedStage("chunk_pack_topic_write")(
+        labeled.write.mode("overwrite").partitionBy("split")
+          .parquet(cfg.str("output"))))
     // count what actually LANDED (the contract for the funnel metric) —
     // but an all-filtered corpus writes zero part files under
     // partitionBy, and parquet cannot infer a schema from none: an
@@ -1001,22 +1044,6 @@ object Cli {
     val nChunks = timedStage("output_readback")(
       try spark.read.parquet(cfg.str("output")).count()
       catch { case _: org.apache.spark.sql.AnalysisException => 0L })
-
-    // the seen register this output offers to the NEXT increment:
-    // prior register (if chaining) ∪ this run's exact-dedup survivors.
-    // (seen_id, text_md5) is ~24 bytes per unique doc — join-keyed
-    // distributed state, never driver-sized. An EMPTY register can
-    // write zero part files (AQE plans an empty frame to zero
-    // partitions), so the register READ below schema-guards.
-    val ownSeen = exact.select(col(id).cast("long").as("seen_id"),
-      md5(col(text)).as("text_md5"))
-    val allSeen = seenPath match {
-      case Some(p) => readSeen(p).unionByName(ownSeen).distinct()
-      case None    => ownSeen
-    }
-    timedStage("seen_register_write")(
-      allSeen.write.mode("overwrite")
-        .parquet(s"${cfg.str("output")}_seen.parquet"))
 
     val s = spark
     import s.implicits._
@@ -1032,9 +1059,6 @@ object Cli {
         "n_chunks")
     writeMetricsJson(funnel,
       cfg.strOpt("metrics_out").getOrElse(s"${cfg.str("output")}_metrics.json"))
-    exact.unpersist(); deduped.unpersist(); gate.unpersist()
-    if (curated ne deduped) curated.unpersist()
-    redacted.unpersist()
     System.err.println(s"[graft] curated $n0 docs -> $nChunks chunks " +
       s"-> ${cfg.str("output")}")
   }

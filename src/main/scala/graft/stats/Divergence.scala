@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
   * pure DataFrame pipelines (one sort-free hash-agg pass for histograms;
   * one global sort over the DISTINCT value support for ECDF stats — the
   * support is orders of magnitude smaller than the data after the
-  * group-by, so the sort is cheap even at scale).
+  * group-by, so the sort is cheap even at scale). These are the
+  * one-sample-pair operators (q14/q15); the evaluators compute the same
+  * distances per series inside their kernel
+  * ([[graft.eval.SeriesKernel.histJs2]] / [[graft.eval.SeriesKernel.ecdf]]).
   */
 object Divergence {
 
@@ -67,107 +70,6 @@ object Divergence {
       (sum(col("pa") * log(col("pa") / col("m"))) * 0.5 +
        sum(col("pb") * log(col("pb") / col("m"))) * 0.5).as("kl_divergence"))
       .withColumn("js_divergence", sqrt(col("kl_divergence")))
-  }
-
-  /** PER-KEY twin of [[histJsd]]: one JS²/JS row per `key` value, with
-    * per-key combined min..max support. Everything stays keyed hash
-    * aggregation + broadcast-sized joins — the many-series evaluation
-    * shape (millions of series scored in one pass at 100 TB).
-    *
-    * ONE data-sized pass (r18, was two plus a ~12× lazy re-derivation):
-    * the per-key lo/hi ride the same keyed exchange as the bucket
-    * counts (whole-partition min/max window — exact, no accumulation),
-    * so the separate ranges agg + join is gone; the bounded histogram
-    * (≤ keys × nBins rows) is localCheckpointed ONCE, and the whole
-    * smoothing chain below — which a lazy plan expanded into a TREE
-    * re-deriving the data-sized aggregations up to 12× per action (the
-    * r17 q30b/q31c plans carried ~15 InMemoryTableScans from exactly
-    * this) — runs per key over the checkpointed histogram via
-    * whole-partition windows: integer totals are exact in any
-    * association, the eps-smoothing arithmetic is unchanged per row,
-    * and the r6+ rounding at every gate entry absorbs the double-sum
-    * fold-order difference (byte-compared identical at sf0.01/sf0.1).
-    * Contract: `value` rows are non-null (the evaluators filter
-    * upstream) — a key whose every value is null has no histogram and
-    * emits no row. Callers release the checkpoint via
-    * [[graft.core.Scope.materialized]]. */
-  def histJsdGrouped(df: DataFrame, value: String, label: Column,
-                     a: String, b: String, nBins: Int,
-                     key: String): DataFrame = {
-    val v = col(value).cast("double")
-    val two = df.filter(label.isin(a, b))
-      .select(col(key).as("_k"), v.as("v"), label.as("lab"))
-    val wK = Window.partitionBy(col("_k"))
-    val counts = two
-      .withColumn("lo", min(col("v")).over(wK))
-      .withColumn("hi", max(col("v")).over(wK))
-      .withColumn("bucket", Histogram.bucketCol(col("v"), col("lo"), col("hi"), nBins))
-      .filter(col("bucket").isNotNull)
-      .groupBy(col("_k"), col("bucket")) // clustered by _k — no 2nd exchange
-      .agg(
-        sum(when(col("lab") === a, 1).otherwise(0)).as("ca"),
-        sum(when(col("lab") === b, 1).otherwise(0)).as("cb"))
-      .localCheckpoint()
-    // every key × bin participates in smoothing (np.histogram emits 0s)
-    val allBins = counts.select(col("_k")).distinct()
-      .select(col("_k"), explode(sequence(lit(0), lit(nBins - 1))).as("bucket"))
-    val hist = allBins.join(counts, Seq("_k", "bucket"), "left")
-      .select(col("_k"),
-        coalesce(col("ca"), lit(0L)).as("ca"),
-        coalesce(col("cb"), lit(0L)).as("cb"))
-    val eps = 1e-10
-    val smoothed = hist
-      .withColumn("ta", sum(col("ca")).over(wK))
-      .withColumn("tb", sum(col("cb")).over(wK))
-      .withColumn("pa_raw", col("ca") / col("ta") + eps)
-      .withColumn("pb_raw", col("cb") / col("tb") + eps)
-      .withColumn("tpa", sum(col("pa_raw")).over(wK))
-      .withColumn("tpb", sum(col("pb_raw")).over(wK))
-      .withColumn("pa", col("pa_raw") / col("tpa"))
-      .withColumn("pb", col("pb_raw") / col("tpb"))
-      .withColumn("m", (col("pa") + col("pb")) / 2)
-    smoothed.groupBy(col("_k")).agg(
-      (sum(col("pa") * log(col("pa") / col("m"))) * 0.5 +
-        sum(col("pb") * log(col("pb") / col("m"))) * 0.5).as("kl_divergence"))
-      .withColumn("js_divergence", sqrt(col("kl_divergence")))
-      .withColumnRenamed("_k", key)
-  }
-
-  /** PER-KEY twin of [[ecdfStats]]: (key, wasserstein, ks_stat) per key.
-    * Each key's distinct support is bounded (one series), so the
-    * cumulative scan partitions on the key itself — no range
-    * partitioning machinery needed, and no global window anywhere.
-    *
-    * Per-key totals ride the SAME keyed window pass as the running
-    * sums (whole-partition frame) instead of a separate groupBy +
-    * self-join — that join re-derived the data-sized support
-    * aggregation a second time per action (guide §2.4). The totals are
-    * integer sums, exact in every association, so fa/fb are
-    * bit-identical to the join formulation. */
-  def ecdfStatsGrouped(df: DataFrame, value: String, label: Column,
-                       a: String, b: String, key: String): DataFrame = {
-    val v = col(value).cast("double")
-    val perValue = df.filter(label.isin(a, b))
-      .select(col(key).as("_k"), v.as("v"), label.as("lab"))
-      .groupBy(col("_k"), col("v"))
-      .agg(
-        sum(when(col("lab") === a, 1).otherwise(0)).as("na"),
-        sum(when(col("lab") === b, 1).otherwise(0)).as("nb"))
-    val wKey = Window.partitionBy(col("_k"))
-    val wIn = Window.partitionBy(col("_k")).orderBy(col("v"))
-    val run = wIn.rowsBetween(Window.unboundedPreceding, 0)
-    val ecdf = perValue
-      .withColumn("ta", sum(col("na")).over(wKey))
-      .withColumn("tb", sum(col("nb")).over(wKey))
-      .withColumn("fa", sum(col("na")).over(run) / col("ta"))
-      .withColumn("fb", sum(col("nb")).over(run) / col("tb"))
-      .withColumn("dx", lead(col("v"), 1).over(wIn) - col("v"))
-      .withColumn("gap", abs(col("fa") - col("fb")))
-    ecdf.groupBy(col("_k")).agg(
-      sum(when(col("dx").isNotNull, col("gap") * col("dx")).otherwise(0.0))
-        .as("wasserstein"),
-      max(col("gap")).as("ks_stat"))
-      .withColumnRenamed("_k", key)
   }
 
   /** C3+C4 in one pass: exact 1-D Wasserstein-1 distance (∫|Fa−Fb| dx

@@ -145,7 +145,7 @@ object SeriesStats {
     * grouped-SQL predecessor); slope 0.0 when the fit is degenerate
     * (single lag point — SQL regr_slope NULL → greatest(NULL, 0.0)).
     * O(n) per lag ⇒ O(n·min(100, n/4)) per series, no materialization. */
-  private[stats] def hurstOfSeries(xs: Array[Double],
+  private[graft] def hurstOfSeries(xs: Array[Double],
                                    maxLagCap: Int): Option[(Double, Long)] = {
     val n = xs.length
     val maxlag = math.min(maxLagCap, n / 4)
@@ -199,6 +199,15 @@ object SeriesStats {
     val slope = if (sLxx == 0.0) 0.0 else sLxy / sLxx
     Some((slope, np.toLong))
   }
+
+  /** [[hurst]]'s estimate on an in-memory ordered prefix (the
+    * one-series composite's kernel leg): the R/S sweep of
+    * [[hurstOfSeries]] with [[hurst]]'s conventions — the slope clamped
+    * to [0, 1] and unrounded, 0.5 when the series is too short for two
+    * lags, 0.0 when no lag survives the filters. */
+  private[graft] def hurstOfPrefix(xs: Array[Double]): Double =
+    if (xs.length < 8) 0.5
+    else hurstOfSeries(xs, 100).fold(0.0)(h => math.min(math.max(h._1, 0.0), 1.0))
 
   def hurst(df: DataFrame, spec: SeriesSpec, value: String,
             maxRows: Int = SeriesStats.MaxCollectRows): DataFrame = {

@@ -142,11 +142,12 @@ object Spectral {
     }.toDF(seriesCol, "k", "p_real", "p_synth", "spectral_distance", "capped")
   }
 
-  /** Spectral distance between two series (truncated to common length).
-    * Bounded series go through the driver FFT (O(n log n), the
-    * reference's shape); the distributed DFT above remains the path for
-    * spectra of series too long to FFT in one task. */
-  def distance(spark: SparkSession, a: Array[Double], b: Array[Double]): Double = {
+  /** Spectral distance between two in-memory series (truncated to common
+    * length) by FFT (O(n log n), the reference's shape) — on the driver
+    * or inside a task (the evaluators' per-series kernel); the
+    * distributed DFT above remains the path for spectra of series too
+    * long to FFT in one task. */
+  def distance(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     if (n == 0) return 0.0
     val pa = Fft.powerSpectrum(a.take(n))

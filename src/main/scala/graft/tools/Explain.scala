@@ -1,37 +1,50 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Dev harness: dump `.explain("formatted")` for SparkEntry queries.
-  * Usage: runMain graft.tools.Explain <sfDir> <outDir> <suffix> <query...>
-  * Writes <outDir>/<query>_<suffix>.txt per query. Queries whose
-  * builder runs eager driver-side actions (q30/q31/q32 metric records)
-  * dump the plan of the frame the query RETURNS — the committed file
-  * says so in its header when that plan is a local-relation assembly. */
+/** Dev harness: dump the plan of every SQL execution a SparkEntry query
+  * runs. Usage: runMain graft.tools.Explain <sfDir> <outDir> <suffix> <query...>
+  * Writes <outDir>/<query>_<suffix>.txt per query: one formatted
+  * (final, adaptive) physical plan per execution, in completion order —
+  * the eager driver-side actions a query's builder runs (the q30/q31
+  * evaluator records) as well as the collect of the frame it returns.
+  * The session is the CLI's (`Tables.localSession`, SPARK_GRAFT_CPUS
+  * threads, default 4). Paths are written relative to the data
+  * directory's parent, so dumps from different checkouts compare. */
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: Explain <sfDir> <outDir> <suffix> <query...>")
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val names = args.drop(3).toSeq
-    val spark = SparkSession.builder()
-      .config("spark.sql.ansi.enabled", "false")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.add(s"$funcName (${durationNs / 1000000} ms)\n" +
+          qe.explainString(FormattedMode))
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        executions.add(s"$funcName FAILED: $e\n" + qe.explainString(FormattedMode))
+    })
+    val dataParent = java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize
+      .getParent.toString + "/"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (name <- names) {
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    for (name <- args.drop(3)) {
+      executions.clear()
+      graft.SparkEntry.queries(name)(spark, sfDir).collect()
+      PlanBridge.awaitListeners(spark)
+      val plans = executions.toArray(Array.empty[String])
+      val text = (s"# $name on $sfDir: ${plans.length} SQL executions\n\n" +
+        plans.zipWithIndex.map { case (p, i) => s"## execution $i: $p" }
+          .mkString("\n")).replace(dataParent, "")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-        plan.getBytes("UTF-8"))
+        text.getBytes("UTF-8"))
       System.err.println(s"[explain] wrote $outDir/${name}_$suffix.txt " +
-        s"(${plan.length} chars)")
+        s"(${plans.length} executions)")
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))

@@ -72,6 +72,8 @@ class EvalSpec extends AnyFunSuite {
       ("constant synth", walk,
         walk2.withColumn("typical_price", lit(1.3))),
       ("synth shorter than lag 24", walk, SparkSpec.randomWalk(20, seed = 13)),
+      ("tied returns", walk.withColumn("typical_price",
+        round(col("typical_price"), 3)), walk2),
       ("31 rows", SparkSpec.randomWalk(31, seed = 14),
         SparkSpec.randomWalk(30, seed = 15)))
   }
@@ -99,6 +101,78 @@ class EvalSpec extends AnyFunSuite {
       od.foreach { case (k, v) => assertClose(s"$label/$k", d(k), v) }
       assertClose(s"$label/score", s, os)
     }
+  }
+
+  /** 60 seeded series covering the kernel's edge cases: random walks of
+    * random length, constant series (both sides equal: zero range, no
+    * record), series shorter than lag 24, ≤ 31 rows, tied returns, and
+    * keys present on one side only. */
+  private def panel = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(404)
+    val t0 = java.time.Instant.parse("2021-01-01T00:00:00Z")
+    def walk(n: Int): Seq[Double] =
+      Seq.iterate(100.0, n)(_ * math.exp(rnd.nextGaussian() * 0.01))
+    def prices(kind: Int): Seq[Double] = kind match {
+      case 0 => walk(rnd.nextInt(300) + 40)
+      case 1 => Seq.fill(rnd.nextInt(60) + 2)(42.0)
+      case 2 => walk(rnd.nextInt(20) + 2)
+      case 3 => walk(rnd.nextInt(31) + 1)
+      case 4 => Seq.tabulate(rnd.nextInt(80) + 30)(i => Seq(100.0, 101.0, 99.5)(i % 3))
+      case _ => walk(rnd.nextInt(120) + 30).map(p => math.rint(p))
+    }
+    def rows(uid: Long, ps: Seq[Double]) = ps.zipWithIndex.map { case (p, i) =>
+      (uid, java.sql.Timestamp.from(t0.plusSeconds(i * 3600L)), p)
+    }
+    val sides = (0L until 60L).map { uid =>
+      val kind = (uid % 6).toInt
+      val real = prices(kind)
+      val synth = if (kind == 1) real else prices(rnd.nextInt(6))
+      (uid % 10) match {
+        case 7 => (rows(uid, real), Nil)
+        case 8 => (Nil, rows(uid, synth))
+        case _ => (rows(uid, real), rows(uid, synth))
+      }
+    }
+    (sides.flatMap(_._1).toDF("uid", "DATE_TIME", "typical_price"),
+      sides.flatMap(_._2).toDF("uid", "DATE_TIME", "typical_price"))
+  }
+
+  private def assertSameRecords(what: String, got: org.apache.spark.sql.DataFrame,
+                                want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.columns.toSeq === want.columns.toSeq, what)
+    val g = got.collect().map(r => r.getLong(0) -> r).toMap
+    val w = want.collect().map(r => r.getLong(0) -> r).toMap
+    assert(g.keySet === w.keySet, what)
+    for ((k, row) <- w; c <- want.columns.tail)
+      assertClose(s"$what/uid=$k/$c", g(k).getAs[Any](c), row.getAs[Any](c))
+  }
+
+  test("grouped kernel == retired grouped SQL legs on 60 degenerate-rich series") {
+    val (real, synth) = panel
+    val order = Seq("DATE_TIME")
+    val dist = DistributionEvaluator.evaluateGrouped(real, synth, "uid", order,
+      "typical_price")
+    assertSameRecords("evaluateGrouped", dist,
+      EvalOracle.evaluateGrouped(real, synth, "uid", order, "typical_price"))
+    assert(dist.count() >= 50)
+    assertSameRecords("scoreGrouped",
+      CompositeMetric.scoreGrouped(real, synth, "uid", order, "typical_price"),
+      EvalOracle.scoreGrouped(real, synth, "uid", order, "typical_price"))
+    assertSameRecords("scoreGroupedFull",
+      CompositeMetric.scoreGroupedFull(real, synth, "uid", order, "typical_price"),
+      EvalOracle.scoreGroupedFull(real, synth, "uid", order, "typical_price"))
+    // the ADF legs of the full record are adfGrouped's, from the same pass
+    val withAdf = DistributionEvaluator.evaluateGroupedWithAdf(real, synth, "uid",
+      order, "typical_price")
+    assertSameRecords("evaluateGroupedWithAdf core", withAdf.drop(
+      "real_adf_pvalue", "synthetic_adf_pvalue"), dist)
+    assertSameRecords("evaluateGroupedWithAdf adf",
+      withAdf.select("uid", "real_adf_pvalue", "synthetic_adf_pvalue"),
+      DistributionEvaluator.adfGrouped(real, synth, "uid", order, "typical_price")
+        .join(dist.select("uid"), "uid")
+        .select("uid", "real_adf_pvalue", "synthetic_adf_pvalue"))
   }
 
   test("evaluate and score leave no storage behind, also when they throw") {
@@ -224,7 +298,7 @@ class EvalSpec extends AnyFunSuite {
         .filter(col("ret").isNotNull).orderBy("DATE_TIME")
         .select("ret").collect().map(_.getDouble(0))
     }
-    val exact = graft.stats.Spectral.distance(s, rets(a), rets(b))
+    val exact = graft.stats.Spectral.distance(rets(a), rets(b))
     assert(math.abs(grouped - exact) < 1e-9,
       s"in-plan DFT $grouped vs driver FFT $exact")
   }
@@ -305,9 +379,9 @@ class EvalSpec extends AnyFunSuite {
 
   test("spectral distance: identical spectra 0, white noise vs impulse > 0") {
     val x = Array.tabulate(64)(i => math.sin(2 * math.Pi * i / 8.0))
-    assert(Spectral.distance(spark, x, x) < 1e-12)
+    assert(Spectral.distance(x, x) < 1e-12)
     val y = Array.tabulate(64)(i => if (i == 0) 1.0 else 0.0)
-    assert(Spectral.distance(spark, x, y) > 0.01)
+    assert(Spectral.distance(x, y) > 0.01)
   }
 
   test("GARCH grid fit: recovers high persistence on vol-clustered data, respects constraint") {
