@@ -4,17 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // numpy-parity numeric semantics: division/overflow yield
-      // nan/inf/null, never errors (the reference never ANSI-errors;
-      // DuckDB corr on constant input is NULL, matching coalesce(corr,0))
-      .config("spark.sql.ansi.enabled", "false")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(cpus.toInt)
     // load fingerprint (VERDICT r17 #2/#4): /proc/loadavg before the run
     // plus the warm-up wall below — round-over-round totals on this box
     // swing ±20% with background load, and r17's verdict lost its

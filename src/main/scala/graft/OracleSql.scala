@@ -5862,7 +5862,7 @@ object OracleSql {
 
     // sequence packing: greedy 128-token first-fit per source in doc_id
     // order — the recursive CTE replays the same O(1)-state scan the
-    // Spark consecutive-run mapPartitions pass performs per shard
+    // Spark in-partition packing scan performs per shard
     "t09_pack_sequences" ->
       """WITH RECURSIVE toks AS (SELECT doc_id, unnest(string_split(text,' ')) AS token
         |              FROM documents),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints `explain("formatted")` for representative queries so plan
   * regressions (lost pushdown, missed broadcast, surprise shuffles,
   * codegen breaks) are visible per round. Run:
@@ -13,16 +11,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_pricing_summary", "q02_revenue_by_nation",
         "q05_log_returns", "q12_histogram_price", "q21_jaccard_neardup")
-    val spark = SparkSession.builder()
-      // numpy-parity numeric semantics: division/overflow yield
-      // nan/inf/null, never errors (the reference never ANSI-errors;
-      // DuckDB corr on constant input is NULL, matching coalesce(corr,0))
-      .config("spark.sql.ansi.enabled", "false")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Tables.localSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

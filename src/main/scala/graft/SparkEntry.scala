@@ -1715,7 +1715,7 @@ object SparkEntry {
 
     // ── G4 PER-SERIES EM witness: one Baum-Welch update for EVERY user
     //    series in one keyed pass — per-series quantileInit + emStep
-    //    inside consecutive-run mapPartitions (no driver fit loop; the
+    //    inside SeriesOps.runs (no driver fit loop; the
     //    oracle replays init + forward/backward + M-step per user in
     //    keyed recursive CTEs) ───────────────────────────────────────
     "g04tb_hmm_em_step_per_user" -> ((s, dir) => {
@@ -3141,7 +3141,7 @@ object SparkEntry {
 
     // ── C5 PER-SERIES: closed-form ADF(maxlag=2, autolag=AIC) — τ,
     //    MacKinnon p and chosen lag for every (user, parity) series in
-    //    one keyed pass (consecutive-run mapPartitions after the
+    //    one keyed pass (SeriesOps.runs after the
     //    returns window; no second exchange) ──────────────────────────
     "c05_adf_per_user" -> ((s, dir) => {
       val e = ev(s, dir)

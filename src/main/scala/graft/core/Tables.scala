@@ -49,7 +49,8 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
-  /** Local test/CLI session with the settings the driver uses. */
+  /** The one local session factory: the CLI, the gate (`Verify`), the
+    * bench, the dev tools and the tests all run this configuration. */
   def localSession(threads: Int = 4, appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()
       // native expressions on the SQL surface (dot_product)

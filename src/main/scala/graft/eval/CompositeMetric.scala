@@ -77,7 +77,7 @@ object CompositeMetric {
             weights: Map[String, Double] = DefaultWeights,
             withExpensive: Boolean = true): (Double, Map[String, Double]) = {
     val cap = SeriesStats.MaxCollectRows
-    def hurst(s: Side) = SeriesStats.hurstOfPrefix(s.prices.take(cap))
+    def hurst(s: Side) = SeriesStats.hurstOfPrefix(s.prices.take(cap))._1
     val names = CoreComponents ++ Seq("hurst_diff", "spectral")
     val row = SeriesKernel.run(real, synth, DistributionEvaluator.OneSeries,
         orderCols, price, "_k",

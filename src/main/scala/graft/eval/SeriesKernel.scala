@@ -10,8 +10,8 @@ import graft.series.{SeriesOps, SeriesSpec}
 /** The per-series metric kernel both evaluators run, for one series and
   * for millions. The labeled prices of both tables are hash-clustered on
   * the series key alone; that exchange also satisfies the (key, label)
-  * log-returns window, which only adds an in-partition sort. One
-  * consecutive-run `mapPartitions` then hands each series' two sides —
+  * log-returns window, which only adds an in-partition sort.
+  * [[graft.series.SeriesOps.runs]] then hands each series' two sides —
   * its prices and its returns, in time order — to a record function
   * that computes every metric from those arrays: one exchange and no
   * materialized intermediate per call, instead of a SQL leg (and its
@@ -55,34 +55,26 @@ private[eval] object SeriesKernel {
       StructField(keyName, rows.schema("_k").dataType) +: fields.fields)
     val nullable = fields.fields.map(f => f.nullable)
     rows.mapPartitions { part =>
-      val it = part.buffered
-      def side(key: Any, isReal: Boolean): Side = {
-        val ps = Array.newBuilder[Double]; val rs = Array.newBuilder[Double]
-        while (it.hasNext && it.head.get(0) == key && it.head.getBoolean(1) == isReal) {
-          val r = it.next()
-          if (!r.isNullAt(2)) ps += r.getDouble(2)
-          if (!r.isNullAt(3)) rs += r.getDouble(3)
-        }
-        Side(ps.result(), rs.result())
-      }
-      new Iterator[Row] {
-        private var pending: Row = _
-        private def advance(): Unit =
-          while (pending == null && it.hasNext) {
-            val key = it.head.get(0)
-            // the window sorts each key's rows synth (false) first
-            val synthSide = side(key, isReal = false)
-            val realSide = side(key, isReal = true)
-            if (realSide.rets.nonEmpty || synthSide.rets.nonEmpty)
-              record(realSide, synthSide).foreach { vs =>
-                pending = Row.fromSeq(key +: vs.zip(nullable).map {
-                  case (d: Double, true) if d.isNaN => null
-                  case (v, _) => v
-                })
-              }
+      SeriesOps.runs(part)(_.get(0)) { (key, run) =>
+        def side(isReal: Boolean): Side = {
+          val ps = Array.newBuilder[Double]; val rs = Array.newBuilder[Double]
+          while (run.hasNext && run.head.getBoolean(1) == isReal) {
+            val r = run.next()
+            if (!r.isNullAt(2)) ps += r.getDouble(2)
+            if (!r.isNullAt(3)) rs += r.getDouble(3)
           }
-        def hasNext: Boolean = { advance(); pending != null }
-        def next(): Row = { advance(); val r = pending; pending = null; r }
+          Side(ps.result(), rs.result())
+        }
+        // the window sorts each key's rows synth (false) first
+        val synthSide = side(isReal = false)
+        val realSide = side(isReal = true)
+        if (realSide.rets.isEmpty && synthSide.rets.isEmpty) None
+        else record(realSide, synthSide).map { vs =>
+          Row.fromSeq(key +: vs.zip(nullable).map {
+            case (d: Double, true) if d.isNaN => null
+            case (v, _) => v
+          })
+        }
       }
     }(Encoders.row(schema))
   }

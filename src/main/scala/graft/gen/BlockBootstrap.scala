@@ -171,23 +171,13 @@ object BlockBootstrap {
     }
 
     // after the window, partitions are hash-clustered on the series key
-    // and sorted (sid, orderCols) — grouping CONSECUTIVE runs in
-    // mapPartitions costs no second exchange, where groupByKey's opaque
+    // and sorted (sid, orderCols) — walking them with SeriesOps.runs
+    // costs no second exchange, where groupByKey's opaque
     // lambda key would re-shuffle data Catalyst already co-located
     // (asserted in PlanAuditSpec). Memory is bounded by one series.
     indexed.as[(Long, Int, Double)].mapPartitions { rows =>
-      val it = rows.buffered
-      new Iterator[(Long, Int, Double)] {
-        private var out: Iterator[(Long, Int, Double)] = Iterator.empty
-        private def advance(): Unit =
-          while (!out.hasNext && it.hasNext) {
-            val sid = it.head._1
-            val ps = Array.newBuilder[Double]
-            while (it.hasNext && it.head._1 == sid) ps += it.next()._3
-            out = chainOne(sid, ps.result())
-          }
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): (Long, Int, Double) = { advance(); out.next() }
+      graft.series.SeriesOps.runs(rows)(_._1) { (sid, run) =>
+        chainOne(sid, run.map(_._3).toArray)
       }
     }.toDF(seriesCol, "rn", "typical_price")
   }

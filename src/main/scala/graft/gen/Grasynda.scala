@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.series.SeriesOps
+
 /** Fitted Grasynda model: quantile bin edges (interior), row-stochastic
   * transition matrix, per-bin value pools (sorted for determinism),
   * start-state distribution. Small, driver-resident, JSON-serializable
@@ -245,39 +247,30 @@ object Grasynda {
     import spark.implicits._
     val v = col(value).cast("double")
     // __rn must SURVIVE the projection: dropping it would let Catalyst
-    // prune the window away, and with it the hash-clustering + sort the
-    // consecutive-run grouping below depends on
+    // prune the window away, and with it the hash-clustering + sort
+    // SeriesOps.runs below depends on
     val data = returns.filter(v.isNotNull)
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col(seriesCol)).orderBy(orderCols.map(col): _*)))
       .select(col(seriesCol).cast("long").as("sid"), col("__rn"), v.as("v"))
-    val rows = data.as[(Long, Int, Double)].mapPartitions { it0 =>
-      val it = it0.buffered
-      new Iterator[(Long, Int, Double)] {
-        private var cur: Iterator[(Long, Int, Double)] = Iterator.empty
-        private def advance(): Unit =
-          while (!cur.hasNext && it.hasNext) {
-            val sid = it.head._1
-            val b = Array.newBuilder[Double]
-            while (it.hasNext && it.head._1 == sid) b += it.next()._3
-            val vs = b.result()
-            if (vs.length >= minRows) {
-              val m = fitArray(vs, nBins)
-              val rnd = new scala.util.Random(seed + sid)
-              var state = sampleCat(m.startProbs, rnd.nextDouble())
-              val out = new Array[(Long, Int, Double)](n)
-              var i = 0
-              while (i < n) {
-                val pool = m.pools.getOrElse(state, m.pools(m.pools.keys.min))
-                out(i) = (sid, i, pool(rnd.nextInt(pool.length)))
-                state = sampleCat(m.transition(state), rnd.nextDouble())
-                i += 1
-              }
-              cur = out.iterator
-            }
+    val rows = data.as[(Long, Int, Double)].mapPartitions { part =>
+      SeriesOps.runs(part)(_._1) { (sid, run) =>
+        val vs = run.map(_._3).toArray
+        if (vs.length < minRows) Iterator.empty
+        else {
+          val m = fitArray(vs, nBins)
+          val rnd = new scala.util.Random(seed + sid)
+          var state = sampleCat(m.startProbs, rnd.nextDouble())
+          val out = new Array[(Long, Int, Double)](n)
+          var i = 0
+          while (i < n) {
+            val pool = m.pools.getOrElse(state, m.pools(m.pools.keys.min))
+            out(i) = (sid, i, pool(rnd.nextInt(pool.length)))
+            state = sampleCat(m.transition(state), rnd.nextDouble())
+            i += 1
           }
-        def hasNext: Boolean = { advance(); cur.hasNext }
-        def next(): (Long, Int, Double) = { advance(); cur.next() }
+          out.iterator
+        }
       }
     }.toDF(seriesCol, "rn", "ret")
     val w = Window.partitionBy(col(seriesCol)).orderBy(col("rn"))

@@ -191,9 +191,9 @@ object RegimeConditional {
     *
     * Scale shape: [[featuresGrouped]] is keyed end-to-end and its rn
     * window leaves rows clustered and sorted on the series key, so
-    * consecutive-run mapPartitions grouping runs every series' E+M
-    * pass with NO second exchange and memory bounded by one capped
-    * series — a million series fit in one shuffle (the last algorithm
+    * [[SeriesOps.runs]] walks every series' E+M pass with NO second
+    * exchange and memory bounded by one capped series — a million
+    * series fit in one shuffle (the last algorithm
     * family that still fitted driver-side when a series column
     * exists; VERDICT r04 #2). */
   def emStepGrouped(prices: DataFrame, seriesCol: String,
@@ -246,9 +246,9 @@ object RegimeConditional {
   }
 
   /** Shared grouped-EM scaffold: ROUNDED per-series features, first-`n`
-    * cap, consecutive-run grouping (the _t window leaves rows clustered
-    * on the series key and sorted by rn, so the run grouping costs no
-    * further exchange), one callback per series. */
+    * cap, [[SeriesOps.runs]] (the _t window leaves rows clustered on
+    * the series key and sorted by rn, so the walk costs no further
+    * exchange), one callback per series. */
   private def groupedFeatureRuns[T: org.apache.spark.sql.Encoder](
       prices: DataFrame, seriesCol: String, orderCols: Seq[String],
       price: String, n: Int)(
@@ -264,20 +264,8 @@ object RegimeConditional {
       .filter(col("_t") <= n)
       .select(col("sid"), col("f0"), col("f1"), col("f2"))
     capped.as[(Long, Double, Double, Double)].mapPartitions { rows =>
-      val it = rows.buffered
-      new Iterator[T] {
-        private var cur: Iterator[T] = Iterator.empty
-        private def advance(): Unit =
-          while (!cur.hasNext && it.hasNext) {
-            val sid = it.head._1
-            val b = Array.newBuilder[Array[Double]]
-            while (it.hasNext && it.head._1 == sid) {
-              val r = it.next(); b += Array(r._2, r._3, r._4)
-            }
-            cur = f(sid, b.result())
-          }
-        def hasNext: Boolean = { advance(); cur.hasNext }
-        def next(): T = { advance(); cur.next() }
+      SeriesOps.runs(rows)(_._1) { (sid, run) =>
+        f(sid, run.map(r => Array(r._2, r._3, r._4)).toArray)
       }
     }
   }

@@ -99,23 +99,14 @@ object LocalFitness {
       .sortWithinPartitions(col("sid"), col("rn"))
       .as[(Long, Int, Double)]
       .mapPartitions { rows =>
-        val it = rows.buffered
-        new Iterator[(Long, Int, Double, Double)] {
-          private var cur: Iterator[(Long, Int, Double, Double)] = Iterator.empty
-          private def advance(): Unit =
-            while (!cur.hasNext && it.hasNext) {
-              val sid = it.head._1
-              val b = Array.newBuilder[Double]
-              while (it.hasNext && it.head._1 == sid) b += it.next()._3
-              val x = b.result()
-              if (x.length >= nBins * 4) {
-                val synth = grasyndaWalk(x, nBins, smooth, n, seed + sid)
-                val score = compositeLite(x, synth)
-                cur = Iterator.tabulate(n)(i => (sid, i, synth(i), score))
-              }
-            }
-          def hasNext: Boolean = { advance(); cur.hasNext }
-          def next(): (Long, Int, Double, Double) = { advance(); cur.next() }
+        graft.series.SeriesOps.runs(rows)(_._1) { (sid, run) =>
+          val x = run.map(_._3).toArray
+          if (x.length < nBins * 4) Iterator.empty
+          else {
+            val synth = grasyndaWalk(x, nBins, smooth, n, seed + sid)
+            val score = compositeLite(x, synth)
+            Iterator.tabulate(n)(i => (sid, i, synth(i), score))
+          }
         }
       }.toDF(seriesCol, "i", "synth", "score")
   }

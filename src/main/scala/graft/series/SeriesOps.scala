@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
+import scala.collection.BufferedIterator
+
 /** Which series a row belongs to and how rows are ordered within it.
   *
   * The reference engine (harveybc/synthetic-datagen) operates on ONE
@@ -288,6 +290,55 @@ object SeriesOps {
       lag(col(state), 1).over(spec.w) =!= col(state), 1).otherwise(0)
     df.withColumn(out, sum(changed).over(spec.running))
   }
+
+  /** The per-series walk of a clustered partition: every per-series
+    * kernel (evaluators, fitters, generators, the optimizer sweep)
+    * exchanges once on its series key, sorts each series' rows in
+    * place, and then runs this over each partition.
+    *
+    * `part` must hold each key's rows consecutively (hash-clustered and
+    * sorted on the key, or a window's output, which is both). Each
+    * maximal run of rows with equal `key` is handed to `f(key, run)`
+    * as a buffered iterator over that run's rows alone; rows `f`
+    * leaves unread are skipped before the next run starts, and the
+    * results are flattened lazily, so one run's rows are in memory at
+    * a time and the output streams. A key that reappears after another
+    * key starts a second run. `run` is valid only until `f`'s result
+    * has been read to its end. */
+  def runs[R, K, T](part: Iterator[R])(key: R => K)(
+      f: (K, BufferedIterator[R]) => IterableOnce[T]): Iterator[T] =
+    new Iterator[T] {
+      private val it = part.buffered
+      private var run: Run = _
+      private var out: Iterator[T] = Iterator.empty
+
+      private final class Run(k: K) extends BufferedIterator[R] {
+        private var known = false
+        private var more = false
+        def hasNext: Boolean = {
+          if (!known) { more = it.hasNext && key(it.head) == k; known = true }
+          more
+        }
+        def head: R = {
+          if (!hasNext) throw new NoSuchElementException("end of run")
+          it.head
+        }
+        def next(): R = { head; known = false; it.next() }
+      }
+
+      private def advance(): Unit =
+        while (!out.hasNext && {
+            if (run != null) while (run.hasNext) run.next()
+            it.hasNext
+          }) {
+          val k = key(it.head)
+          run = new Run(k)
+          out = f(k, run).iterator
+        }
+
+      def hasNext: Boolean = { advance(); out.hasNext }
+      def next(): T = { advance(); out.next() }
+    }
 
   // spark's `size` shadowed by WindowSpec import contexts; local alias
   private def size_(c: Column): Column = org.apache.spark.sql.functions.size(c)

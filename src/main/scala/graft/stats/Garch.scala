@@ -142,10 +142,10 @@ object Garch {
   }
 
   /** PER-SERIES grid: every series' full (α, β) grid scored inside its
-    * group — ONE shuffle on the series key (consecutive-run
-    * mapPartitions over the window's clustering, the grouped-generator
-    * pattern), so at scale the work distributes as series × configs
-    * with each σ² recursion bounded by one series. Oracle-gated by
+    * group — ONE shuffle on the series key, then
+    * [[graft.series.SeriesOps.runs]] over the window's clustering — so
+    * at scale the work distributes as series × configs with each σ²
+    * recursion bounded by one series. Oracle-gated by
     * q29b (keyed recursive-CTE replay). */
   def gridGrouped(returns: DataFrame, seriesCol: String,
                   orderCols: Seq[String], value: String,
@@ -160,30 +160,16 @@ object Garch {
         col(value).cast("double").as("v"))
     val grid = for { a <- alphas; b <- betas if a + b < 0.999 } yield (a, b)
     indexed.as[(Long, Int, Double)].mapPartitions { rows =>
-      val it = rows.buffered
-      new Iterator[(Long, Double, Double, Double, Double, Double)] {
-        private var out: Iterator[(Long, Double, Double, Double, Double, Double)] =
-          Iterator.empty
-        private def advance(): Unit =
-          while (!out.hasNext && it.hasNext) {
-            val sid = it.head._1
-            val ps = Array.newBuilder[Double]
-            while (it.hasNext && it.head._1 == sid) ps += it.next()._3
-            val r = ps.result()
-            out =
-              if (r.isEmpty) Iterator.empty
-              else {
-                val mean = r.sum / r.length
-                val variance = r.map(x => (x - mean) * (x - mean)).sum / r.length
-                grid.iterator.map { case (a, b) =>
-                  val omega = variance * (1.0 - a - b)
-                  (sid, a, b, omega, variance, logLik(r, omega, a, b, variance))
-                }
-              }
+      graft.series.SeriesOps.runs(rows)(_._1) { (sid, run) =>
+        val r = run.map(_._3).toArray
+        if (r.isEmpty) Iterator.empty
+        else {
+          val mean = r.sum / r.length
+          val variance = r.map(x => (x - mean) * (x - mean)).sum / r.length
+          grid.iterator.map { case (a, b) =>
+            val omega = variance * (1.0 - a - b)
+            (sid, a, b, omega, variance, logLik(r, omega, a, b, variance))
           }
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): (Long, Double, Double, Double, Double, Double) = {
-          advance(); out.next()
         }
       }
     }.toDF(seriesCol, "alpha", "beta", "omega", "long_run_var", "ll")

@@ -17,20 +17,25 @@ import org.apache.spark.sql.functions._
   */
 object Histogram {
 
-  /** Assign equal-width bucket ids [0, nBins). `lo`/`hi` as columns. */
+  /** Assign equal-width bucket ids [0, nBins). `lo`/`hi` as columns.
+    * A null `x` gets a null bucket; a zero range (hi = lo) puts every
+    * value in the last bin (the divide is null and `least` skips it). */
   def bucketCol(x: org.apache.spark.sql.Column, lo: org.apache.spark.sql.Column,
                 hi: org.apache.spark.sql.Column, nBins: Int): org.apache.spark.sql.Column =
-    least(floor((x - lo) / (hi - lo) * nBins), lit(nBins - 1)).cast("int")
+    when(x.isNotNull, least(floor((x - lo) / (hi - lo) * nBins), lit(nBins - 1)))
+      .cast("int")
 
   /** Histogram of `value`, optionally per `label` group but over the
     * COMBINED min..max range (the reference compares real-vs-synthetic on
-    * a shared support). Output: (label?, bucket, cnt, density).
+    * a shared support). Null values are dropped.
+    * Output: (label?, bucket, cnt, density).
     */
   def fixedBins(df: DataFrame, value: String, nBins: Int,
                 labelCol: Option[String] = None): DataFrame = {
     val v = col(value).cast("double")
-    val range = df.groupBy().agg(min(v).as("lo"), max(v).as("hi"))
-    val withB = df.crossJoin(broadcast(range))
+    val present = df.filter(v.isNotNull)
+    val range = present.groupBy().agg(min(v).as("lo"), max(v).as("hi"))
+    val withB = present.crossJoin(broadcast(range))
       .withColumn("bucket", bucketCol(v, col("lo"), col("hi"), nBins))
       .withColumn("bin_width", (col("hi") - col("lo")) / nBins)
     val keys = labelCol.toSeq :+ "bucket"
@@ -68,18 +73,6 @@ object Histogram {
     (rankedFrame(vals.filter(col("_h") < lit(1L << (60 - pShift)))),
       rankedFrame(vals))
   }
-
-  /** PRODUCTION entry point: only the p-bounded SAMPLE side of
-    * [[hashSampleQuantiles]] — its global rank window is bounded by
-    * the sample size by construction, so this is the path a 100 TB
-    * caller runs. The full-data exact side (a global sort over every
-    * row) exists solely as the gate-scale accuracy witness; callers
-    * who don't need the witness must never pay for it (the r14
-    * advisor finding — use this method, then [[quantileFrame]]). */
-  def sampleQuantiles(df: DataFrame, value: String, key: String,
-                      pShift: Int, seed: Int): DataFrame =
-    rankedFrame(hashKeyed(df, value, key, seed)
-      .filter(col("_h") < lit(1L << (60 - pShift))))
 
   private def hashKeyed(df: DataFrame, value: String, key: String,
                         seed: Int): DataFrame =

@@ -110,7 +110,7 @@ object Mmd {
     * group's two sides are reduced to ordered-prefix samples of
     * ≤ `maxRows` (the per-group cap bounds the quadratic kernel at
     * maxRows² evals per group regardless of group size), then one
-    * exchange on the group key + consecutive-run mapPartitions computes
+    * exchange on the group key + [[graft.series.SeriesOps.runs]] computes
     * γ (real-side mean pairwise distance heuristic) and the kernel sums
     * in-task, i-major — the same fold order as [[gaussian]], which the
     * oracle's ordered list folds replay. Groups missing either side are
@@ -134,27 +134,15 @@ object Mmd {
       .sortWithinPartitions(col("gid"), col("is_real").desc, col("t"))
       .as[(Long, Boolean, Int, Seq[Double])]
     u.mapPartitions { rows =>
-      val it = rows.buffered
-      new Iterator[(Long, Double, Double, Int, Int)] {
-        private var nextRow: Option[(Long, Double, Double, Int, Int)] = None
-        private def advance(): Unit =
-          while (nextRow.isEmpty && it.hasNext) {
-            val gid = it.head._1
-            val xb = Array.newBuilder[Array[Double]]
-            val yb = Array.newBuilder[Array[Double]]
-            while (it.hasNext && it.head._1 == gid) {
-              val r = it.next()
-              if (r._2) xb += r._4.toArray else yb += r._4.toArray
-            }
-            val x = xb.result(); val y = yb.result()
-            if (x.nonEmpty && y.nonEmpty) {
-              val g = defaultGamma(x)
-              nextRow = Some((gid, gaussian(x, y, g), g, x.length, y.length))
-            }
-          }
-        def hasNext: Boolean = { advance(); nextRow.nonEmpty }
-        def next(): (Long, Double, Double, Int, Int) = {
-          advance(); val r = nextRow.get; nextRow = None; r
+      graft.series.SeriesOps.runs(rows)(_._1) { (gid, run) =>
+        val xb = Array.newBuilder[Array[Double]]
+        val yb = Array.newBuilder[Array[Double]]
+        run.foreach(r => if (r._2) xb += r._4.toArray else yb += r._4.toArray)
+        val x = xb.result(); val y = yb.result()
+        if (x.isEmpty || y.isEmpty) None
+        else {
+          val g = defaultGamma(x)
+          Some((gid, gaussian(x, y, g), g, x.length, y.length))
         }
       }
     }.toDF(groupCol, "mmd2", "gamma", "n_real", "n_synth")

@@ -26,15 +26,6 @@ object SeriesStats {
       .groupBy(spec.partitionCols.map(col): _*)
       .agg(corr(col(value), col("_lag")).as(out))
 
-  /** A11: volatility clustering — autocorr of |value| at lag k.
-    * Ref: composite_metric.py:59-63. */
-  def volClustering(df: DataFrame, spec: SeriesSpec, value: String, k: Int = 1,
-                    out: String = "vol_ac"): DataFrame =
-    df.withColumn("_a", abs(col(value)))
-      .withColumn("_lag", lag(col("_a"), k).over(spec.w))
-      .groupBy(spec.partitionCols.map(col): _*)
-      .agg(corr(col("_a"), col("_lag")).as(out))
-
   /** A12: leverage effect — corr(ret_t, |ret_{t+k}|).
     * Ref: evaluate_all_generators.py:77-82. */
   def leverage(df: DataFrame, spec: SeriesSpec, value: String, k: Int = 1,
@@ -52,29 +43,12 @@ object SeriesStats {
       .agg(min((col(price) - col("_peak")) / col("_peak")).as(out))
   }
 
-  /** C6: Hurst exponent via rescaled-range (R/S) analysis.
-    * Ref: composite_metric.py:25-47. For each lag ∈ [2, min(100, n/4)]:
-    * chop the series into ⌊n/lag⌋ full segments; per segment
-    * R = range of the cumulative deviations from the segment mean and
-    * S = population std; Hurst = slope of log(mean R/S) vs log(lag),
-    * clipped to [0,1] (0.5 when degenerate).
-    *
-    * Scale design: parallel-over-LAGS with the (bounded, single) series
-    * broadcast — each of the ≤99 tasks runs one cheap O(n) pass, zero
-    * shuffle (same pattern as the GARCH grid, SURVEY §7.4.2: a single
-    * ordered series is driver-bounded by definition; the cluster
-    * dimension is lags/seeds/series, not rows of one series). The
-    * equivalent pure-DataFrame formulation (rows×lags explode + two
-    * (lag,seg)-window stages) shuffles rows×99 and benches 80× slower
-    * at 100k rows. The final slope is a one-row regr_slope agg.
-    * Output: single row (hurst, n_lags).
-    */
   /** C6 at scale: R/S Hurst per SERIES via an IN-PARTITION one-pass
-    * R/S sweep inside a consecutive-run mapPartitions over a single
-    * exchange on the series key (the c01b/g04tb shape) — the
-    * many-series path where nothing is collected and no partition is
-    * global. The previous formulation exploded every row onto
-    * (series, lag) — O(n·maxLag) materialized rows through two window
+    * R/S sweep inside [[SeriesOps.runs]] over a single exchange on the
+    * series key (the c01b/g04tb shape) — the many-series path where
+    * nothing is collected and no partition is global. The previous
+    * formulation exploded every row onto (series, lag) — O(n·maxLag)
+    * materialized rows through two window
     * stages, which the 10× series-LENGTH scale run measured at ratio
     * 9.6 while every other per-series family sat at 0.9–2.1; this one
     * does the identical arithmetic (complete segments only, population
@@ -82,7 +56,7 @@ object SeriesStats {
     * degenerate-slope → 0.0 convention) on an in-task array, emitting
     * one row per series. Per-task memory is one series of doubles —
     * the same task-must-fit contract as the FFT path
-    * ([[graft.stats.Spectral.distanceGrouped]]). The broadcast-series
+    * ([[graft.stats.Spectral.distanceGrouped]]). The collected-prefix
     * [[hurst]] remains the single-bounded-series variant (SURVEY §2.4
     * C6 disposition). Null values are skipped (the fixtures carry
     * none). Ref: distribution_evaluator-style R/S, composite_metric.py
@@ -105,26 +79,10 @@ object SeriesStats {
     implicit val enc: org.apache.spark.sql.Encoder[Row] =
       org.apache.spark.sql.Encoders.row(midSchema)
     val raw = input.mapPartitions { rows =>
-      val it = rows.buffered
-      new Iterator[Row] {
-        private var pending: Row = _
-        private def advance(): Unit =
-          while (pending == null && it.hasNext) {
-            val key = (0 until nPc).map(it.head.get)
-            val xb = Array.newBuilder[Double]
-            while (it.hasNext && (0 until nPc).map(it.head.get) == key) {
-              val r = it.next()
-              if (!r.isNullAt(nPc)) xb += r.getDouble(nPc)
-            }
-            pending = hurstOfSeries(xb.result(), maxLagCap) match {
-              case Some((slope, nLags)) =>
-                Row.fromSeq(key :+ slope :+ nLags)
-              case None => null
-            }
-          }
-        def hasNext: Boolean = { advance(); pending != null }
-        def next(): Row = {
-          advance(); val r = pending; pending = null; r
+      SeriesOps.runs(rows)(r => (0 until nPc).map(r.get)) { (key, run) =>
+        val xs = run.filter(r => !r.isNullAt(nPc)).map(_.getDouble(nPc)).toArray
+        hurstOfSeries(xs, maxLagCap).map { case (slope, nLags) =>
+          Row.fromSeq(key :+ slope :+ nLags)
         }
       }
     }
@@ -200,71 +158,46 @@ object SeriesStats {
     Some((slope, np.toLong))
   }
 
-  /** [[hurst]]'s estimate on an in-memory ordered prefix (the
-    * one-series composite's kernel leg): the R/S sweep of
-    * [[hurstOfSeries]] with [[hurst]]'s conventions — the slope clamped
-    * to [0, 1] and unrounded, 0.5 when the series is too short for two
-    * lags, 0.0 when no lag survives the filters. */
-  private[graft] def hurstOfPrefix(xs: Array[Double]): Double =
-    if (xs.length < 8) 0.5
-    else hurstOfSeries(xs, 100).fold(0.0)(h => math.min(math.max(h._1, 0.0), 1.0))
+  /** [[hurst]]'s (estimate, n_lags) on an in-memory ordered prefix
+    * (also the one-series composite's kernel leg): the R/S sweep of
+    * [[hurstOfSeries]] with the slope clamped to [0, 1] and unrounded;
+    * (0.5, 0) when the series is too short for two lags (< 8 rows),
+    * (0.0, 0) when no lag survives the filters. */
+  private[graft] def hurstOfPrefix(xs: Array[Double]): (Double, Long) =
+    if (xs.length < 8) (0.5, 0L)
+    else hurstOfSeries(xs, 100).fold((0.0, 0L)) { case (slope, nLags) =>
+      (math.min(math.max(slope, 0.0), 1.0), nLags)
+    }
 
+  /** C6: Hurst exponent via rescaled-range (R/S) analysis.
+    * Ref: composite_metric.py:25-47. For each lag ∈ [2, min(100, n/4)]:
+    * chop the series into ⌊n/lag⌋ full segments; per segment
+    * R = range of the cumulative deviations from the segment mean and
+    * S = population std; Hurst = slope of log(mean R/S) vs log(lag),
+    * clipped to [0,1] (0.5 when degenerate).
+    *
+    * The fit runs on the driver over an ordered prefix of at most
+    * `maxRows` observations with [[hurstOfPrefix]], the same R/S sweep
+    * the grouped [[hurstGrouped]] and the composite's kernel run: one
+    * bounded collect, no further job. A single ordered series is
+    * driver-bounded by definition; the cluster dimension for Hurst is
+    * many series ([[hurstGrouped]]), not rows of one series.
+    * Output: single row (hurst, n_lags).
+    */
   def hurst(df: DataFrame, spec: SeriesSpec, value: String,
             maxRows: Int = SeriesStats.MaxCollectRows): DataFrame = {
     val spark = df.sparkSession
+    import spark.implicits._
     // CONTRACT: the R/S fit runs on an ordered prefix of ≤ maxRows
     // observations (the reference fits on ≤ ~7.4k rows; R/S slope
     // estimates stabilize well below this cap). This bounds the driver
-    // collect regardless of input scale — the cluster dimension for
-    // Hurst at 100 TB is many series, not one unbounded one.
+    // collect regardless of input scale.
     val series = df
       .orderBy(spec.orderCols.map(col): _*)
       .limit(maxRows)
       .select(col(value).cast("double"))
       .collect().map(_.getDouble(0))
-    val n = series.length
-    val maxLag = math.min(100L, n.toLong / 4).toInt
-    if (maxLag < 2)
-      return spark.sql("SELECT CAST(0.5 AS DOUBLE) AS hurst, CAST(0 AS BIGINT) AS n_lags")
-    val bc = spark.sparkContext.broadcast(series)
-    import spark.implicits._
-    val perLag = spark.range(2, maxLag + 1).as[Long].mapPartitions { lags =>
-      val x = bc.value
-      lags.flatMap { lagL =>
-        val lag = lagL.toInt
-        val nSeg = x.length / lag
-        var sumRs = 0.0; var nRs = 0
-        var s0 = 0
-        while (s0 < nSeg) {
-          val off = s0 * lag
-          // segment mean
-          var m = 0.0; var i = 0
-          while (i < lag) { m += x(off + i); i += 1 }
-          m /= lag
-          // pop std + cumdev range in one pass
-          var v = 0.0; var cum = 0.0; var cmax = 0.0; var cmin = 0.0
-          i = 0
-          while (i < lag) {
-            val d = x(off + i) - m
-            v += d * d
-            cum += d
-            if (cum > cmax) cmax = cum
-            if (cum < cmin) cmin = cum
-            i += 1
-          }
-          val s = math.sqrt(v / lag)
-          if (s > 1e-12) { sumRs += (cmax - cmin) / s; nRs += 1 }
-          s0 += 1
-        }
-        if (nRs > 0 && sumRs > 0) Some((lag, sumRs / nRs)) else None
-      }
-    }.toDF("lag", "rs_mean").filter(col("rs_mean") > 0)
-    perLag.groupBy().agg(
-      regr_slope(log(col("rs_mean")), log(col("lag").cast("double"))).as("slope"),
-      count(lit(1)).as("n_lags"))
-      .select(
-        coalesce(least(greatest(col("slope"), lit(0.0)), lit(1.0)), lit(0.5)).as("hurst"),
-        col("n_lags"))
+    Seq(hurstOfPrefix(series)).toDF("hurst", "n_lags")
   }
 
   /** Ljung–Box portmanteau test of no autocorrelation up to lag `h`
@@ -552,7 +485,7 @@ object SeriesStats {
     * rounding — no quantile-interpolation formula dependence).
     *
     * Scale shape: ONE exchange on the series key, then an in-partition
-    * consecutive-run pass (the [[hurstGrouped]] harness) — the O(n²)
+    * [[SeriesOps.runs]] pass — the O(n²)
     * pair sweep never materializes rows, and `maxN` prefix-caps the
     * per-task work/memory (slope buffer = n²/2 doubles) the same way
     * the fit-prefix caps bound the GARCH/ADF legs; the cap never binds
@@ -581,27 +514,10 @@ object SeriesStats {
     implicit val enc: org.apache.spark.sql.Encoder[Row] =
       org.apache.spark.sql.Encoders.row(midSchema)
     val raw = input.mapPartitions { rows =>
-      val it = rows.buffered
-      new Iterator[Row] {
-        private var pending: Row = _
-        private def advance(): Unit =
-          while (pending == null && it.hasNext) {
-            val key = (0 until nPc).map(it.head.get)
-            val xb = Array.newBuilder[Double]
-            var taken = 0
-            while (it.hasNext && (0 until nPc).map(it.head.get) == key) {
-              val r = it.next()
-              if (taken < maxN) { xb += r.getDouble(nPc); taken += 1 }
-            }
-            pending = mannKendallOfSeries(xb.result()) match {
-              case Some((n, s, z, p, sen)) =>
-                Row.fromSeq(key ++ Seq(n, s, z, p, sen))
-              case None => null
-            }
-          }
-        def hasNext: Boolean = { advance(); pending != null }
-        def next(): Row = {
-          advance(); val r = pending; pending = null; r
+      SeriesOps.runs(rows)(r => (0 until nPc).map(r.get)) { (key, run) =>
+        val xs = run.take(maxN).map(_.getDouble(nPc)).toArray
+        mannKendallOfSeries(xs).map { case (n, s, z, p, sen) =>
+          Row.fromSeq(key ++ Seq(n, s, z, p, sen))
         }
       }
     }

@@ -3,6 +3,8 @@ package graft.stats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.series.{SeriesOps, SeriesSpec}
+
 /** C7: spectral distance — RMSE between the sum-normalized FFT power
   * spectra of two equal-length series.
   * Ref: composite_metric.py:50-56 (full fft, |X_k|², /(Σ+1e-20),
@@ -43,8 +45,8 @@ object Spectral {
     * the real/synth return halves are truncated to their common length
     * n and each half's n-point power spectrum is computed by an
     * IN-PARTITION FFT (`Fft.dftReal`, Bluestein for arbitrary n —
-    * O(n log n) per series) inside a consecutive-run mapPartitions over
-    * a single exchange on the series key. Spectra are sum-normalized
+    * O(n log n) per series) inside [[SeriesOps.runs]] over a single
+    * exchange on the series key. Spectra are sum-normalized
     * and reduced to the RMSE distance; emits one row per (series, k)
     * plus the per-series distance.
     *
@@ -59,7 +61,6 @@ object Spectral {
   def distanceGrouped(real: DataFrame, synth: DataFrame, seriesCol: String,
                       orderCols: Seq[String], price: String,
                       maxPoints: Int = 1 << 20): DataFrame = {
-    import graft.series.{SeriesOps, SeriesSpec}
     def labeled(df: DataFrame, lab: String): DataFrame =
       df.select((col(seriesCol).cast("long").as("_k") +: lit(lab).as("lab") +:
         col(price).cast("double").as("_p") +: orderCols.map(col)): _*)
@@ -95,48 +96,33 @@ object Spectral {
         (col("lab") === "real").as("is_real"),
         col("t"), col("ret"))
     // ONE exchange on the series key; the in-partition sort puts each
-    // series' two halves back to back in t-order (real first), so the
-    // run grouping below needs no per-group shuffle or state
+    // series' two halves back to back in t-order (real first), so
+    // SeriesOps.runs below needs no per-group shuffle or state
     val sorted = rets
       .repartition(col("sid"))
       .sortWithinPartitions(col("sid"), col("is_real").desc, col("t"))
       .as[(Long, Boolean, Long, Double)]
     sorted.mapPartitions { rows =>
-      val it = rows.buffered
-      new Iterator[(Long, Int, Double, Double, Double, Int)] {
-        private var cur: Iterator[(Long, Int, Double, Double, Double, Int)] =
-          Iterator.empty
-        private def advance(): Unit =
-          while (!cur.hasNext && it.hasNext) {
-            val sid = it.head._1
-            val rb = Array.newBuilder[Double]
-            val sb = Array.newBuilder[Double]
-            while (it.hasNext && it.head._1 == sid) {
-              val r = it.next()
-              if (r._2) rb += r._4 else sb += r._4
-            }
-            val ra = rb.result(); val sa = sb.result()
-            val n0 = math.min(ra.length, sa.length)
-            val capped = if (n0 > maxPoints) 1 else 0
-            val n = math.min(n0, maxPoints)
-            cur = if (n == 0) Iterator.empty else {
-              val pa = Fft.powerSpectrum(ra.take(n))
-              val pb = Fft.powerSpectrum(sa.take(n))
-              // same fold order as composite_metric.py:50-56
-              val za = pa.sum + 1e-20
-              val zb = pb.sum + 1e-20
-              var acc = 0.0; var k = 0
-              while (k < n) {
-                val d = pa(k) / za - pb(k) / zb; acc += d * d; k += 1
-              }
-              val dist = math.sqrt(acc / n)
-              Iterator.tabulate(n)(k =>
-                (sid, k, pa(k) / za, pb(k) / zb, dist, capped))
-            }
+      SeriesOps.runs(rows)(_._1) { (sid, run) =>
+        val rb = Array.newBuilder[Double]
+        val sb = Array.newBuilder[Double]
+        run.foreach(r => if (r._2) rb += r._4 else sb += r._4)
+        val ra = rb.result(); val sa = sb.result()
+        val n0 = math.min(ra.length, sa.length)
+        val capped = if (n0 > maxPoints) 1 else 0
+        val n = math.min(n0, maxPoints)
+        if (n == 0) Iterator.empty else {
+          val pa = Fft.powerSpectrum(ra.take(n))
+          val pb = Fft.powerSpectrum(sa.take(n))
+          // same fold order as composite_metric.py:50-56
+          val za = pa.sum + 1e-20
+          val zb = pb.sum + 1e-20
+          var acc = 0.0; var k = 0
+          while (k < n) {
+            val d = pa(k) / za - pb(k) / zb; acc += d * d; k += 1
           }
-        def hasNext: Boolean = { advance(); cur.hasNext }
-        def next(): (Long, Int, Double, Double, Double, Int) = {
-          advance(); cur.next()
+          val dist = math.sqrt(acc / n)
+          Iterator.tabulate(n)(k => (sid, k, pa(k) / za, pb(k) / zb, dist, capped))
         }
       }
     }.toDF(seriesCol, "k", "p_real", "p_synth", "spectral_distance", "capped")

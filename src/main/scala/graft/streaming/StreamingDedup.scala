@@ -1,15 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Streaming twins of the dedup operators (SURVEY §2.10 posture: the
   * reference is batch-only; a continuously-ingesting 100 TB pipeline
   * needs the same semantics on a stream).
   *
-  *  - exact text dedup → `dropDuplicates` on the content hash with an
-  *    event-time watermark bounding the dedup state (the unbounded
-  *    alternative OOMs any real stream);
   *  - keep-first-per-(user, ts) (P7 / q18's shape) → dropDuplicates on
   *    the business key, same watermark contract.
   *
@@ -17,16 +13,6 @@ import org.apache.spark.sql.functions._
   * watermark horizon, partitioned by key hash across executors.
   */
 object StreamingDedup {
-
-  /** Streaming exact dedup over a documents stream: first arrival of
-    * each md5(text) within the watermark wins. `tsCol` is the event
-    * time used to expire state. */
-  def exactDedup(docs: DataFrame, tsCol: String,
-                 watermark: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("text_md5", md5(col("text")))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicates("text_md5")
 
   /** Streaming P7: keep the first event per (user_id, ts). */
   def dedupByTime(events: DataFrame, watermark: String = "1 hour"): DataFrame =

@@ -326,13 +326,6 @@ object StreamingScore {
   def langIdScript(docs: DataFrame, id: String, text: String): DataFrame =
     graft.text.TextOps.langIdScript(docs, id, text)
 
-  /** Streaming b08 twin — unigram-LM Viterbi scoring is a stateless
-    * mapPartitions pass over broadcast pieces; batch-identical by
-    * construction. */
-  def unigramViterbi(docs: DataFrame, text: String,
-                     pieces: Seq[graft.text.Unigram.Piece]): DataFrame =
-    graft.text.Unigram.encodeViterbi(docs, text, pieces)
-
   /** Streaming t32 twin — char-entropy is a per-row sorted-array fold
     * (zero shuffles, no state), so it applies DIRECTLY to the
     * streaming frame; batch-identical by construction. */
@@ -352,8 +345,8 @@ object StreamingScore {
     graft.text.TextOps.winnowFingerprints(docs, id, text)
 
   /** Streaming b09 twin — WordPiece greedy encode is a stateless
-    * mapPartitions pass over the broadcast piece set (the b08-twin
-    * shape); batch-identical by construction. */
+    * mapPartitions pass over the broadcast piece set; batch-identical
+    * by construction. */
   def wordPieceEncode(docs: DataFrame, text: String,
                       pieces: Seq[graft.text.WordPiece.Piece]): DataFrame =
     graft.text.WordPiece.encode(docs, text, pieces)

@@ -257,15 +257,6 @@ object Bpe {
     merges.result()
   }
 
-  /** [[train]] as a DataFrame (the gate/model-sink shape). */
-  def trainDF(df: DataFrame, text: String, nMerges: Int): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    train(df, text, nMerges)
-      .map(m => (m.rank, m.left, m.right, m.merged, m.pairCount))
-      .toDF("rank", "left", "right", "merged", "pair_count")
-  }
-
   /** Encode a text column with a trained merge table: every word's
     * character sequence is rewritten by the merges IN RANK ORDER (the
     * BPE apply contract — rank order, not best-pair-first, is the

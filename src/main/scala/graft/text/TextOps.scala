@@ -1253,9 +1253,10 @@ object TextOps {
     * Scale shape: global greedy packing is inherently sequential, so at
     * 100 TB packing is ALWAYS per-shard — that is exactly the `key`
     * contract here. One keyed shuffle (repartition on key + in-partition
-    * sort), then a consecutive-run mapPartitions pass with O(1) state
-    * (the g01b pattern): a million shards pack in parallel, memory
-    * independent of shard size. */
+    * sort), then one in-partition scan with O(1) state (the per-key
+    * walk of [[graft.series.SeriesOps.runs]], without a per-run
+    * buffer): a million shards pack in parallel, memory independent of
+    * shard size. */
   def packSequences(df: DataFrame, id: String, key: String, text: String,
                     budget: Long): DataFrame = {
     // id stays its natural type (long, string, or a composite struct

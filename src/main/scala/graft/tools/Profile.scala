@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time individual SparkEntry queries by name.
   * Usage: runMain graft.tools.Profile <sfDir> <query...> [-n reps]
   */
@@ -13,16 +11,7 @@ object Profile {
     val names = args.drop(1).zipWithIndex.filterNot { case (a, i) =>
       a.startsWith("-") || (i > 0 && args.drop(1)(i - 1) == "-n")
     }.map(_._1)
-    val spark = SparkSession.builder()
-      // numpy-parity numeric semantics: division/overflow yield
-      // nan/inf/null, never errors (the reference never ANSI-errors;
-      // DuckDB corr on constant input is NULL, matching coalesce(corr,0))
-      .config("spark.sql.ansi.enabled", "false")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(32)
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     for (r <- 1 to reps; name <- names) {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build-time 10× scale experiment for the per-series families
@@ -224,14 +223,7 @@ object ScaleBench {
     val out = if (args.length > 2) args(2) else "/tmp/graft_scale"
     val family = if (args.length > 3) args(3) else "series"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.ansi.enabled", "false")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(cpus.toInt)
 
     if (family == "docs" || family == "curate") {
       // corpus replication: disjoint doc_id ranges + per-copy letter

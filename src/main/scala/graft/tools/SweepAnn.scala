@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sim.Similarity
@@ -12,11 +11,7 @@ import graft.sim.Similarity
 object SweepAnn {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Tables.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val emb = graft.core.Tables.embeddings(spark, dir).cache()
     emb.count()

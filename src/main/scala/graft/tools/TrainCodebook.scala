@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build-time IVF codebook trainer: fits MLlib KMeans on the embeddings
@@ -17,12 +16,7 @@ object TrainCodebook {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val k = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(8)
     import spark.implicits._
     val vecs = graft.core.Tables.embeddings(spark, dir)
       .select(col("embedding").cast("array<double>").as("a"))

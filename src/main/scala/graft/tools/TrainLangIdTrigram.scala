@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build-time same-script language-ID trainer (t30): fits a hashed
@@ -126,12 +125,7 @@ object TrainLangIdTrigram {
     val epochs = 1500
     val lr = 3.0
     val l2 = 1e-4
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(8)
     import spark.implicits._
 
     val langs = Corpus.map(_._1).distinct.sorted

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build-time quality-filter classifier trainer (t11): fits a hashed-
@@ -27,12 +26,7 @@ object TrainQualityFilter {
     val epochs = 800
     val lr = 4.0
     val l2 = 1e-4
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(8)
 
     val docs = graft.core.Tables.documents(spark, dir).select("doc_id", "text")
     val stats = graft.text.TextOps.tokenStats(docs, "doc_id", "text")

@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build-time topic-centroid trainer: fits MLlib KMeans on the HASHED
@@ -18,12 +17,7 @@ object TrainTopics {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val k = if (args.length > 1) args(1).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Tables.localSession(8)
     import spark.implicits._
     val docs = graft.core.Tables.documents(spark, dir)
     val vecs = graft.text.TextOps.hashEmbedVectors(docs, "doc_id", "text")

@@ -14,7 +14,8 @@ import graft.stats.{Divergence, SeriesStats, Spectral}
   * driver-side arithmetic; the grouped [[evaluateGrouped]] /
   * [[scoreGrouped]] are the keyed window + hash-aggregate pipelines
   * (per-key histogram, ECDF, lag and pivot legs) the many-series
-  * evaluators ran before. */
+  * evaluators ran before; [[hurst]] is the retired q16 per-lag R/S
+  * Hurst query. */
 object EvalOracle {
 
   private def labeledReturns(real: DataFrame, synth: DataFrame,
@@ -113,7 +114,7 @@ object EvalOracle {
         if (!withExpensive) (0.0, 0.0, 0.0)
         else {
           def hurst(df: DataFrame): Double =
-            SeriesStats.hurst(df.select((col(price).cast("double").as("_p") +:
+            EvalOracle.hurst(df.select((col(price).cast("double").as("_p") +:
                 orderCols.map(col)): _*), SeriesSpec(Nil, orderCols), "_p")
               .first().getAs[Double]("hurst")
           (hurst(real), hurst(synth), Spectral.distance(
@@ -325,5 +326,62 @@ object EvalOracle {
       .withColumn("composite_score",
         weights.map { case (c, wt) => col(c) * lit(wt) }.reduce(_ + _) /
           lit(weights.map(_._2).sum))
+  }
+
+  /** The retired q16 single-series R/S Hurst: the ordered prefix
+    * broadcast, one task per lag (cumulative-deviation range started
+    * at 0), and a SQL `regr_slope` over the surviving lags — the oracle
+    * [[SeriesStats.hurst]] is held to. Output: single row (hurst, n_lags). */
+  def hurst(df: DataFrame, spec: SeriesSpec, value: String,
+            maxRows: Int = SeriesStats.MaxCollectRows): DataFrame = {
+    val spark = df.sparkSession
+    val series = df
+      .orderBy(spec.orderCols.map(col): _*)
+      .limit(maxRows)
+      .select(col(value).cast("double"))
+      .collect().map(_.getDouble(0))
+    val n = series.length
+    val maxLag = math.min(100L, n.toLong / 4).toInt
+    if (maxLag < 2)
+      return spark.sql("SELECT CAST(0.5 AS DOUBLE) AS hurst, CAST(0 AS BIGINT) AS n_lags")
+    val bc = spark.sparkContext.broadcast(series)
+    import spark.implicits._
+    val perLag = spark.range(2, maxLag + 1).as[Long].mapPartitions { lags =>
+      val x = bc.value
+      lags.flatMap { lagL =>
+        val lag = lagL.toInt
+        val nSeg = x.length / lag
+        var sumRs = 0.0; var nRs = 0
+        var s0 = 0
+        while (s0 < nSeg) {
+          val off = s0 * lag
+          // segment mean
+          var m = 0.0; var i = 0
+          while (i < lag) { m += x(off + i); i += 1 }
+          m /= lag
+          // pop std + cumdev range in one pass
+          var v = 0.0; var cum = 0.0; var cmax = 0.0; var cmin = 0.0
+          i = 0
+          while (i < lag) {
+            val d = x(off + i) - m
+            v += d * d
+            cum += d
+            if (cum > cmax) cmax = cum
+            if (cum < cmin) cmin = cum
+            i += 1
+          }
+          val s = math.sqrt(v / lag)
+          if (s > 1e-12) { sumRs += (cmax - cmin) / s; nRs += 1 }
+          s0 += 1
+        }
+        if (nRs > 0 && sumRs > 0) Some((lag, sumRs / nRs)) else None
+      }
+    }.toDF("lag", "rs_mean").filter(col("rs_mean") > 0)
+    perLag.groupBy().agg(
+      regr_slope(log(col("rs_mean")), log(col("lag").cast("double"))).as("slope"),
+      count(lit(1)).as("n_lags"))
+      .select(
+        coalesce(least(greatest(col("slope"), lit(0.0)), lit(1.0)), lit(0.5)).as("hurst"),
+        col("n_lags"))
   }
 }

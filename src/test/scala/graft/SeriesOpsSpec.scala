@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.collection.BufferedIterator
+
 import graft.series.{SeriesOps, SeriesSpec}
 
 class SeriesOpsSpec extends AnyFunSuite {
@@ -192,5 +194,70 @@ class SeriesOpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       SeriesOps.seasonalDecompose(df, spec, "v", period = 4)
     }
+  }
+
+  /** (key, value) rows; `f` sees each run as a buffered iterator. */
+  private def runsOf(rows: Seq[(String, Int)])(
+      f: (String, BufferedIterator[(String, Int)]) => IterableOnce[String]): List[String] =
+    SeriesOps.runs(rows.iterator)(_._1)(f).toList
+
+  private val sumRun: (String, BufferedIterator[(String, Int)]) => IterableOnce[String] =
+    (k, run) => Some(s"$k=${run.map(_._2).sum}")
+
+  test("runs: an empty partition calls f never and yields nothing") {
+    var calls = 0
+    assert(runsOf(Nil) { (_, _) => calls += 1; None } === Nil)
+    assert(calls === 0)
+  }
+
+  test("runs: a single run hands f every row in order, head included") {
+    assert(runsOf(Seq("a" -> 1, "a" -> 2, "a" -> 3)) { (k, run) =>
+      val first = run.head
+      Some(s"$k:$first:" + run.map(_._2).mkString(","))
+    } === List("a:(a,1):1,2,3"))
+  }
+
+  test("runs: rows f leaves unread are skipped; f returning nothing skips the key") {
+    val rows = Seq("a" -> 1, "a" -> 2, "a" -> 3, "b" -> 4, "c" -> 5, "c" -> 6)
+    // reads one row of each run
+    assert(runsOf(rows)((k, run) => Some(s"$k${run.next()._2}")) ===
+      List("a1", "b4", "c5"))
+    // reads nothing at all
+    assert(runsOf(rows)((k, _) => Some(k)) === List("a", "b", "c"))
+    // b returns nothing, after reading its run or not
+    assert(runsOf(rows)((k, run) =>
+      if (k == "b") { run.foreach(_ => ()); None } else sumRun(k, run)) ===
+      List("a=6", "c=11"))
+    assert(runsOf(rows)((k, run) => if (k == "b") Nil else sumRun(k, run)) ===
+      List("a=6", "c=11"))
+    // a run never reads past its key
+    assert(runsOf(rows) { (k, run) =>
+      run.foreach(r => assert(r._1 === k)); Iterator(k, k)
+    } === List("a", "a", "b", "b", "c", "c"))
+  }
+
+  test("runs: a key that reappears after another key starts a second run") {
+    assert(runsOf(Seq("a" -> 1, "b" -> 2, "a" -> 3, "a" -> 4))(sumRun) ===
+      List("a=1", "b=2", "a=7"))
+  }
+
+  test("runs: output streams — a run is read only when its output is needed") {
+    val rows = (0 until 1000).map(i => ((i / 10).toString, i))
+    var pulled = 0
+    val part = rows.iterator.map { r => pulled += 1; r }
+    var calls = 0
+    val out = SeriesOps.runs(part)(_._1) { (k, run) =>
+      calls += 1
+      run.map(r => s"$k/${r._2}") // lazy: reads the run as it is consumed
+    }
+    assert(pulled === 0 && calls === 0)
+    assert(out.next() === "0/0")
+    assert(calls === 1 && pulled === 1)
+    assert(out.take(14).toList.last === "1/14")
+    // the second run has started, and no row past the one just read
+    // has been pulled
+    assert(calls === 2 && pulled === 15)
+    assert(out.size === 1000 - 15)
+    assert(calls === 100 && pulled === 1000)
   }
 }

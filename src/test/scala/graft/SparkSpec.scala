@@ -6,17 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session + fixtures for all suites (one JVM, one session). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // numpy-parity numeric semantics: division/overflow yield
-      // nan/inf/null, never errors (the reference never ANSI-errors;
-      // DuckDB corr on constant input is NULL, matching coalesce(corr,0))
-      .config("spark.sql.ansi.enabled", "false")
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.Tables.localSession(4, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -130,6 +130,26 @@ class StatsSpec extends AnyFunSuite {
     assert(math.abs(integral - 1.0) < 1e-9)
   }
 
+  test("histogram: a null value gets no bin; a zero range still uses the last bin") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(Some(1.0), None, Some(3.0), None, Some(2.0)).toDF("v")
+    val bins = Histogram.fixedBins(df, "v", 4).collect()
+      .map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("cnt")).toMap
+    assert(bins === Map(0 -> 1L, 2 -> 1L, 3 -> 1L))
+    val bucket = Histogram.bucketCol(col("v"), lit(1.0), lit(1.0), 4)
+    assert(Seq(Some(1.0), None).toDF("v").select(bucket).collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSeq === Seq(Some(3), None))
+    // null values drop out of histJsd instead of piling up in bin n-1
+    val lab = (1 to 200).map(i => (Option(i.toDouble), "a")) ++
+      (1 to 200).map(i => (Option(i.toDouble), "b"))
+    val withNulls = lab ++ (1 to 50).map(_ => (Option.empty[Double], "b"))
+    def kl(rows: Seq[(Option[Double], String)]) =
+      Divergence.histJsd(rows.toDF("v", "lab"), "v", col("lab"), "a", "b", 10)
+        .first().getAs[Double]("kl_divergence")
+    assert(kl(withNulls) === kl(lab))
+  }
+
   test("ecdf stats: identical samples give 0 distance; shifted gives the shift") {
     val s = spark
     import s.implicits._
@@ -172,6 +192,33 @@ class StatsSpec extends AnyFunSuite {
     assert(ht === 0.5)
   }
 
+  test("q16 hurst == the retired broadcast per-lag oracle: walks, <8 rows, constant") {
+    val s = spark
+    import s.implicits._
+    val spec = SeriesSpec(Nil, Seq("DATE_TIME"))
+    def both(df: org.apache.spark.sql.DataFrame) = {
+      def one(h: org.apache.spark.sql.DataFrame) = {
+        val r = h.first(); (r.getAs[Double]("hurst"), r.getAs[Long]("n_lags"))
+      }
+      (one(SeriesStats.hurst(df, spec, "typical_price")),
+        one(EvalOracle.hurst(df, spec, "typical_price")))
+    }
+    for ((n, seed) <- Seq((800, 7L), (437, 11L), (3000, 23L), (40, 5L))) {
+      val ((h, lags), (oh, olags)) = both(SparkSpec.randomWalk(n, seed))
+      assert(lags === olags && lags > 1, s"walk n=$n")
+      assert(math.abs(h - oh) <= 1e-12, s"walk n=$n: $h vs oracle $oh")
+    }
+    assert(both(SparkSpec.randomWalk(7)) === (((0.5, 0L), (0.5, 0L))))
+    val t0 = java.time.Instant.parse("2020-01-01T00:00:00Z")
+    val flat = (0 until 200).map(i =>
+      (java.sql.Timestamp.from(t0.plusSeconds(i * 3600L)), 1.25)).toDF("DATE_TIME", "typical_price")
+    assert(both(flat) === (((0.0, 0L), (0.0, 0L))))
+    // q16's path: no job beyond the prefix collect
+    val plan = SeriesStats.hurst(SparkSpec.randomWalk(100), spec, "typical_price")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan") && !plan.contains("Exchange"), plan)
+  }
+
   test("grouped-agg hurst agrees with the broadcast-series hurst per series") {
     val s = spark
     import s.implicits._
@@ -191,10 +238,9 @@ class StatsSpec extends AnyFunSuite {
     for (uid <- Seq(0, 1)) {
       val single = SeriesStats.hurst(df.filter(col("user_id") === uid),
         SeriesSpec(Nil, Seq("t")), "price").first().getAs[Double]("hurst")
-      // same R/S estimator; the broadcast variant seeds cumdev min/max at
-      // 0.0 while the grouped one spans observed cumdevs only -> small
-      // per-segment differences, same estimate to ~5e-2
-      assert(math.abs(grouped(uid) - single) < 0.05,
+      // the same R/S sweep (hurstOfSeries); the grouped output is
+      // rounded to 4 decimals, the single-series one is not
+      assert(math.abs(grouped(uid) - single) <= 5e-5 + 1e-12,
         s"user $uid: grouped ${grouped(uid)} vs single $single")
       assert(grouped(uid) > 0.55, "integrated walk should be persistent")
     }
