@@ -60,7 +60,7 @@ object CompositeMetric {
 
   /** The reference's one-series composite: (score, details) — score 0 =
     * perfect, higher = worse. All 11 components come from one
-    * [[SeriesKernel]] pass with one constant series key, collected: the
+    * one-series [[SeriesKernel]] pass (no exchange), collected: the
     * 9 core components, each side's hurst on its first
     * [[SeriesStats.MaxCollectRows]] PRICES (the single-series
     * [[SeriesStats.hurst]] estimate: clamped to [0, 1], 0.5 when too
@@ -79,7 +79,7 @@ object CompositeMetric {
     val cap = SeriesStats.MaxCollectRows
     def hurst(s: Side) = SeriesStats.hurstOfPrefix(s.prices.take(cap))._1
     val names = CoreComponents ++ Seq("hurst_diff", "spectral")
-    val row = SeriesKernel.run(real, synth, DistributionEvaluator.OneSeries,
+    val row = SeriesKernel.run(real, synth, None,
         orderCols, price, "_k",
         StructType(names.map(StructField(_, DoubleType, nullable = false)))) {
         (r, s) =>
@@ -102,7 +102,7 @@ object CompositeMetric {
     * q31b. */
   def scoreGrouped(real: DataFrame, synth: DataFrame, seriesCol: String,
                    orderCols: Seq[String], price: String): DataFrame =
-    SeriesKernel.run(real, synth, col(seriesCol), orderCols, price, seriesCol,
+    SeriesKernel.run(real, synth, Some(col(seriesCol)), orderCols, price, seriesCol,
       nullableDoubles(CoreComponents: _*))((r, s) => Some(components(r, s, identity)))
 
   /** PER-SERIES FULL composite: all 11 reference components + the
@@ -134,7 +134,7 @@ object CompositeMetric {
     val names = CoreComponents ++ Seq("hurst_diff", "spectral")
     val weights = WeightOrder.map { case (c, wt) => names.indexOf(c) -> wt }
     val totalW = WeightOrder.map(_._2).sum
-    SeriesKernel.run(real, synth, col(seriesCol).cast("long"), orderCols,
+    SeriesKernel.run(real, synth, Some(col(seriesCol).cast("long")), orderCols,
       price, seriesCol, nullableDoubles(names :+ "composite_score": _*)) {
       (r, s) =>
         val n = math.min(math.min(r.rets.length, s.rets.length), 1 << 20)

@@ -22,10 +22,10 @@ import graft.stats.{Adf, SeriesStats}
   *
   * One implementation per metric: the one-series [[evaluate]] and the
   * many-series [[evaluateGrouped]] / [[evaluateGroupedWithAdf]] /
-  * [[adfGrouped]] all run [[SeriesKernel]] — one exchange on the series
-  * key and one pass over each series' two return arrays — and differ
-  * only in the ADF leg they add; [[evaluate]] keys every row by one
-  * constant and collects its one record.
+  * [[adfGrouped]] all run [[SeriesKernel]] — one pass over each series'
+  * two return arrays, after one exchange on the series key — and differ
+  * only in the ADF leg they add; [[evaluate]] runs it as one series,
+  * with no exchange, and collects its one record.
   */
 object DistributionEvaluator {
 
@@ -62,7 +62,7 @@ object DistributionEvaluator {
     * (that is [[evaluateGroupedWithAdf]]'s). */
   def evaluateGrouped(real: DataFrame, synth: DataFrame, seriesCol: String,
                       orderCols: Seq[String], price: String): DataFrame =
-    SeriesKernel.run(real, synth, col(seriesCol), orderCols, price, seriesCol,
+    SeriesKernel.run(real, synth, Some(col(seriesCol)), orderCols, price, seriesCol,
       CoreSchema)((r, s) => Some(core(r, s)))
 
   /** PER-SERIES ADF legs (the c05 record): per series, each side's τ,
@@ -81,7 +81,7 @@ object DistributionEvaluator {
       }
     def side(p: String) = adfFields(s"${p}_adf_tau", s"${p}_adf_pvalue") :+
       StructField(s"${p}_adf_lag", IntegerType, nullable = false)
-    SeriesKernel.run(real, synth, col(seriesCol).cast("long"), orderCols,
+    SeriesKernel.run(real, synth, Some(col(seriesCol).cast("long")), orderCols,
       price, seriesCol, StructType(side("real") ++ side("synthetic"))) {
       (r, s) => Some(legs(r) ++ legs(s))
     }
@@ -96,15 +96,15 @@ object DistributionEvaluator {
                              maxRows: Int = SeriesStats.MaxCollectRows): DataFrame = {
     def pValue(s: Side): Double =
       if (s.rets.isEmpty) -1.0 else Adf.closedForm2(s.rets.take(maxRows)).pValue
-    SeriesKernel.run(real, synth, col(seriesCol), orderCols, price, seriesCol,
+    SeriesKernel.run(real, synth, Some(col(seriesCol)), orderCols, price, seriesCol,
       StructType(CoreSchema.fields ++
         adfFields("real_adf_pvalue", "synthetic_adf_pvalue"))) {
       (r, s) => Some(core(r, s) ++ Seq(pValue(r), pValue(s)))
     }
   }
 
-  /** The reference's one-series metric record: the kernel with one
-    * constant series key, collected. Each side's ADF (C5,
+  /** The reference's one-series metric record: the kernel run as one
+    * series (no exchange), collected. Each side's ADF (C5,
     * [[Adf.test]], maxlag 20) runs on its first
     * [[SeriesStats.MaxCollectRows]] returns inside the same task; a side
     * with ≤ 31 returns, or whose ADF fit is singular, keeps the
@@ -124,7 +124,7 @@ object DistributionEvaluator {
         // OLS normal equations singular here
         scala.util.Try(Adf.test(x).pValue).getOrElse(-1.0)
     }
-    val record = SeriesKernel.run(real, synth, OneSeries, orderCols, price,
+    val record = SeriesKernel.run(real, synth, None, orderCols, price,
         "_k", StructType(CoreSchema.fields.init ++
           adfFields("real_adf_pvalue", "synthetic_adf_pvalue") :+
           CoreSchema.fields.last)) { (r, s) =>
@@ -135,7 +135,4 @@ object DistributionEvaluator {
     real.sparkSession.createDataFrame(
       java.util.Arrays.asList(record.collect(): _*), record.schema)
   }
-
-  /** The series key the one-series evaluators group by. */
-  private[eval] val OneSeries = lit(0L)
 }

@@ -8,14 +8,16 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.series.{SeriesOps, SeriesSpec}
 
 /** The per-series metric kernel both evaluators run, for one series and
-  * for millions. The labeled prices of both tables are hash-clustered on
-  * the series key alone; that exchange also satisfies the (key, label)
-  * log-returns window, which only adds an in-partition sort.
-  * [[graft.series.SeriesOps.runs]] then hands each series' two sides —
-  * its prices and its returns, in time order — to a record function
-  * that computes every metric from those arrays: one exchange and no
-  * materialized intermediate per call, instead of a SQL leg (and its
-  * exchanges and jobs) per metric.
+  * for millions. Keyed calls hash-cluster the labeled prices of both
+  * tables on the series key alone; that exchange also satisfies the
+  * (key, label) log-returns window, which only adds an in-partition
+  * sort. One-series calls coalesce both labeled sides into one partition
+  * instead (the series' rows meet in one task either way), so they plan
+  * no exchange at all. [[graft.series.SeriesOps.runs]] then hands each
+  * series' two sides — its prices and its returns, in time order — to a
+  * record function that computes every metric from those arrays: at most
+  * one exchange and no materialized intermediate per call, instead of a
+  * SQL leg (and its exchanges and jobs) per metric.
   *
   * A series' two sides are held in one task, as the reference's numpy
   * evaluators hold them in one process and as the per-series ADF, hurst
@@ -26,28 +28,30 @@ import graft.series.{SeriesOps, SeriesSpec}
   * value: moments and `corr` use Spark's aggregate update formulas in
   * row (time) order, and a SQL null is carried as NaN (the inputs are
   * finite log returns, so no metric is NaN otherwise) and written back
-  * as null by [[run]]. */
-private[eval] object SeriesKernel {
+  * as null by [[run]]. The single-series regime fit reuses them
+  * ([[graft.gen.RegimeConditional]]). */
+private[graft] object SeriesKernel {
 
   /** One side of one series, in time order: its non-null prices and its
     * log returns (first row and null returns dropped). */
   final case class Side(prices: Array[Double], rets: Array[Double])
 
   /** One row per series present in `real` or `synth` (keyed by `key`,
-    * output under `keyName` with the key's type): `record(real, synth)`
-    * as the `fields` columns, or no row when it returns None. A double
-    * field that is NaN is written as null. */
-  def run(real: DataFrame, synth: DataFrame, key: Column,
+    * output under `keyName` with the key's type; `None` treats each
+    * table as one series, keyed by a constant `0L`): `record(real,
+    * synth)` as the `fields` columns, or no row when it returns None. A
+    * double field that is NaN is written as null. */
+  def run(real: DataFrame, synth: DataFrame, key: Option[Column],
           orderCols: Seq[String], price: String, keyName: String,
           fields: StructType)(record: (Side, Side) => Option[Seq[Any]]): DataFrame = {
+    val k = key.getOrElse(lit(0L))
     // the window below re-sorts each series, so an input's own global
     // sort (CsvIO.loadMultipleCsv ends in one) is dropped unexecuted
     def labeled(df: DataFrame, isReal: Boolean): DataFrame =
-      PlanBridge.withoutTopSorts(df).select((key.as("_k") +: lit(isReal).as("_real") +:
+      PlanBridge.withoutTopSorts(df).select((k.as("_k") +: lit(isReal).as("_real") +:
         col(price).cast("double").as("_p") +: orderCols.map(col)): _*)
-    val clustered = labeled(real, isReal = true)
-      .unionByName(labeled(synth, isReal = false))
-      .repartition(col("_k"))
+    val sides = labeled(real, isReal = true).unionByName(labeled(synth, isReal = false))
+    val clustered = if (key.isDefined) sides.repartition(col("_k")) else sides.coalesce(1)
     val rows = SeriesOps.logReturns(clustered,
         SeriesSpec(Seq("_k", "_real"), orderCols), "_p", "ret")
       .select(col("_k"), col("_real"), col("_p"), col("ret"))
@@ -87,11 +91,15 @@ private[eval] object SeriesKernel {
   def div(a: Double, b: Double): Double = if (b == 0.0) Double.NaN else a / b
 
   /** Spark's central-moment aggregate buffer (`avg`, `stddev_pop`,
-    * `skewness`, `kurtosis`) updated over `xs` in order. */
-  final class Moments(xs: Array[Double]) {
+    * `stddev_samp`, `skewness`, `kurtosis`) updated over `xs(from until
+    * until)` in order. */
+  final class Moments(xs: Array[Double], from: Int, until: Int) {
+    def this(xs: Array[Double]) = this(xs, 0, xs.length)
     private var n = 0.0; private var sum = 0.0; private var avg = 0.0
     private var m2 = 0.0; private var m3 = 0.0; private var m4 = 0.0
-    xs.foreach { x =>
+    private var i = from
+    while (i < until) {
+      val x = xs(i)
       sum += x
       val newN = n + 1.0
       val delta = x - avg
@@ -103,9 +111,12 @@ private[eval] object SeriesKernel {
       m4 = m4 - 4.0 * deltaN * newM3 - 6.0 * deltaN2 * newM2 +
         delta * (delta * delta2 - deltaN * deltaN2)
       m3 = newM3; m2 = newM2; avg = avg + deltaN; n = newN
+      i += 1
     }
     def mean: Double = div(sum, n)
     def stdPop: Double = if (n == 0.0) Double.NaN else math.sqrt(m2 / n)
+    /** null (NaN) for fewer than two values, as Spark's `stddev_samp`. */
+    def stdSamp: Double = if (n <= 1.0) Double.NaN else math.sqrt(m2 / (n - 1.0))
     def skewness: Double =
       if (n == 0.0 || m2 == 0.0) Double.NaN
       else div(math.sqrt(n) * m3, math.sqrt(m2 * m2 * m2))

@@ -25,68 +25,23 @@ final case class GrasyndaModel(
   * pool value per step; prices reconstructed via the running-sum
   * exponential (W2).
   *
-  * Scale split per SURVEY.md §7.4.2: the FIT is pure Spark aggregations
-  * over the full data; the WALK is a sequential small-state recurrence
-  * (n ≤ tens of thousands) done on the driver; the price reconstruction
-  * is a distributed window scan again.
+  * Scale split per SURVEY.md §7.4.2: the single-series FIT is one
+  * time-ordered collect of the returns and [[fitArray]] on the driver
+  * (the reference's series are thousands of bars; the many-series shape,
+  * [[generateGrouped]], runs the same [[fitArray]] inside a keyed pass);
+  * the WALK is a sequential small-state recurrence (n ≤ tens of
+  * thousands) done on the driver; the price reconstruction is a window
+  * scan over the walk's one partition.
   */
 object Grasynda {
 
-  /** Fit on a returns column: three Spark aggregations, tiny collect. */
+  /** Fit on a returns column: one time-ordered collect of the non-null
+    * returns, then [[fitArray]] on the driver. */
   def fit(returns: DataFrame, orderCols: Seq[String], value: String,
           nBins: Int = 10): GrasyndaModel = {
     val v = col(value).cast("double")
-    // persisted: the edge percentile, the transition counts and the
-    // pool collect all sit on this single-series row_number window —
-    // one materialization instead of one full window pass per action
-    val data = returns.filter(v.isNotNull)
-      .withColumn("rn", row_number().over(Window.orderBy(orderCols.map(col): _*)))
-      .select(col("rn"), v.as("v"))
-      .persist()
-
-    // A4: exact quantile edges, dedup'd driver-side (K+1 doubles)
-    val probs = (0 to nBins).map(i => i.toDouble / nBins)
-    val edges = data.agg(
-      expr(s"percentile(v, array(${probs.mkString(",")}))")).first()
-      .getSeq[Double](0).distinct.sorted.toArray
-    val interior = edges.slice(1, edges.length - 1)
-
-    // A5: digitize — state = #(interior edges ≤ x), via a literal-array
-    // higher-order function (codegen'd, no UDF) — a cheap map over the
-    // persisted frame, recomputed per consumer
-    val edgeLit = array(interior.map(lit): _*)
-    val stated = data.withColumn("state",
-      size(filter(edgeLit, e => e <= col("v"))))
-
-    // J2 + A7 transition counts and A9 per-bin pools are independent
-    // actions over the persisted frame — submitted concurrently
-    // (guide §2.6); the per-state counts are the pool LENGTHS (the
-    // same rows grouped the same way), so the third count action is
-    // derived, not re-scanned.
-    val k = interior.length + 1
-    val w = Window.orderBy(col("rn"))
-    val (transCounts, pools) = graft.core.Par.par2(
-      stated
-        .withColumn("next_state", lead(col("state"), 1).over(w))
-        .filter(col("next_state").isNotNull)
-        .groupBy(col("state"), col("next_state")).count()
-        .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap,
-      stated.groupBy(col("state"))
-        .agg(sort_array(collect_list(col("v"))).as("pool"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap)
-    data.unpersist()
-    val transition = Array.tabulate(k) { i =>
-      val row = Array.tabulate(k)(j => transCounts.getOrElse((i, j), 0L).toDouble)
-      val s = row.sum
-      if (s > 0) row.map(_ / s) else Array.fill(k)(1.0 / k)
-    }
-
-    // A6: start dist — counts(i) ≡ pools(i).length by construction
-    val counts = pools.map { case (s, p) => s -> p.length.toLong }
-    val totalN = counts.values.sum.toDouble
-    val startProbs = Array.tabulate(k)(i => counts.getOrElse(i, 0L) / totalN)
-
-    GrasyndaModel(interior, transition, pools, startProbs)
+    fitArray(returns.filter(v.isNotNull).orderBy(orderCols.map(col): _*)
+      .select(v).collect().map(_.getDouble(0)), nBins)
   }
 
   /** The fit ARTIFACT as a checkable DataFrame — one row per observed
@@ -186,12 +141,14 @@ object Grasynda {
       .orderBy(col("state"), col("next_state"))
   }
 
-  /** Pure per-series twin of [[fit]]: the same quantile edges (Spark
-    * Percentile's symmetric interpolation `(hi−pos)·lo + (pos−lo)·hi`,
-    * replicated bit-for-bit), the same dedup/slice, digitize, adjacent
-    * transition counts, sorted pools and start distribution — over one
-    * in-memory series. Lets [[generateGrouped]] fit every series inside
-    * a keyed pass with no driver involvement. */
+  /** The Grasynda fit over one in-memory series, in time order: the
+    * quantile edges of Spark's `percentile` (its interpolation
+    * `(hi−pos)·lo + (pos−lo)·hi`, and the bound itself when both
+    * neighbours are equal, replicated bit-for-bit), deduplicated and
+    * sliced to the interior, digitize, adjacent transition counts,
+    * sorted pools and start distribution. [[fit]] runs it on the
+    * driver; [[generateGrouped]] fits every series with it inside a
+    * keyed pass. */
   def fitArray(vs: Array[Double], nBins: Int = 10): GrasyndaModel = {
     require(vs.nonEmpty, "empty series")
     val sorted = vs.sorted
@@ -201,9 +158,9 @@ object Grasynda {
       val position = p * (n - 1)
       val lower = math.floor(position).toLong
       val higher = math.ceil(position).toLong
-      if (higher == lower) sorted(lower.toInt)
-      else (higher - position) * sorted(lower.toInt) +
-        (position - lower) * sorted(higher.toInt)
+      val lo = sorted(lower.toInt); val hi = sorted(higher.toInt)
+      if (higher == lower || hi == lo) lo
+      else (higher - position) * lo + (position - lower) * hi
     }
     val edges = raw.distinct.sorted
     val interior = edges.slice(1, edges.length - 1)
@@ -289,8 +246,8 @@ object Grasynda {
     probs.length - 1
   }
 
-  /** Seed-deterministic generation: driver walk → distributed W2
-    * reconstruction. Output: (rn, ret, typical_price). */
+  /** Seed-deterministic generation: driver walk → W2 reconstruction.
+    * Output: (rn, ret, typical_price). */
   def generate(spark: SparkSession, model: GrasyndaModel, seed: Long,
                n: Int, initialPrice: Double): DataFrame = {
     import spark.implicits._
@@ -305,8 +262,9 @@ object Grasynda {
       state = sampleCat(model.transition(state), rnd.nextDouble())
       i += 1
     }
+    // one partition: the running-sum window below then plans no exchange
     val retsDf = rets.toIndexedSeq.zipWithIndex
-      .map { case (r, j) => (j, r) }.toDF("rn", "ret")
+      .map { case (r, j) => (j, r) }.toDF("rn", "ret").coalesce(1)
     val w = Window.orderBy(col("rn")).rowsBetween(Window.unboundedPreceding, 0)
     retsDf.withColumn("typical_price",
       lit(initialPrice) * exp(sum(col("ret")).over(w)))

@@ -1,9 +1,11 @@
 package graft.gen
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
+import graft.eval.SeriesKernel
 import graft.series.{SeriesOps, SeriesSpec}
 import graft.stats.{Garch, GarchFit}
 
@@ -33,12 +35,14 @@ final case class RegimeModel(
   * Ref: regime_conditional.py:83-186 (G4); regime_hmm_garch.py:77-190
   * (G5 adds per-regime GARCH(1,1) variance recursions).
   *
-  * Fit split: feature extraction (W1 log-returns, W5 rolling vols with
-  * min_periods=1, W7 vol ratio, P3 NaN/Inf row filter, z-normalize) is
-  * all Spark window/agg work; the small Baum-Welch EM runs on the
-  * driver over the collected bounded feature matrix ([[Hmm]]); the
-  * per-regime statistics are one Spark groupBy over the Viterbi-labeled
-  * rows; G5's GARCH grids run Spark-parallel per regime ([[Garch]]).
+  * Single-series fit: one ordered collect of the capped price prefix;
+  * feature extraction (W1 log-returns, W5 rolling vols with
+  * min_periods=1, W7 vol ratio, P3 NaN/Inf row filter, z-normalize,
+  * [[featureRows]]), the small Baum-Welch EM ([[Hmm]]) and the
+  * per-regime statistics over the Viterbi-labeled returns run on the
+  * driver; G5's GARCH grids run Spark-parallel per regime
+  * ([[Garch.fitMany]]). The many-series fits ([[featuresGrouped]],
+  * [[fitGrouped]], [[regimeGarchGridGrouped]]) stay keyed Spark passes.
   *
   * Generation: sequential small-state recurrences (regime path, AR(1)
   * returns, GARCH σ²) on the driver (SURVEY §7.4.2), price
@@ -46,57 +50,82 @@ final case class RegimeModel(
   */
 object RegimeConditional {
 
-  /** Extract + normalize the [ret, vol_short, vol_ratio] feature frame.
-    * Ref: regime_conditional.py:64-79. */
+  /** One capped price prefix's normalized HMM features, row-aligned:
+    * `rn` (1-based return index), `ret`, the [f0, f1, f2] rows and the
+    * z-normalization means and population stds of [ret, vol_short,
+    * vol_ratio]. */
+  private[gen] final case class FeatureRows(
+      rn: Array[Int], ret: Array[Double], x: Array[Array[Double]],
+      means: Array[Double], stds: Array[Double])
+
+  /** The first `maxRows` prices in `orderCols` order, in one collect (a
+    * null price stays null; [[featureRows]] reads it as the floor). */
+  private def pricePrefix(prices: DataFrame, orderCols: Seq[String], price: String,
+                          maxRows: Int): Array[java.lang.Double] =
+    prices.orderBy(orderCols.map(col): _*).limit(maxRows)
+      .select(col(price).cast("double")).collect()
+      .map(r => if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0)))
+
+  /** The [ret, vol_short, vol_ratio] feature chain (ref
+    * regime_conditional.py:64-79) over one time-ordered price prefix, in
+    * Spark's arithmetic: `lp = log(greatest(p, 1e-10))` (a null price
+    * reads as the floor), W1 returns `lp_t − lp_{t−1}` from the second
+    * row, W5 trailing `stddev_samp` over `volWindow` / `volLong` returns
+    * (each frame recomputed with Spark's update formulas, null for a
+    * one-row frame), W7 `vol_ratio` (1.0 unless `vol_long > 1e-10`, with
+    * SQL's NaN-is-largest comparison), the P3 filter that drops a row
+    * whose ret, vol_short or vol_ratio is null, NaN or infinite, and the
+    * z-normalization by `sum/n` means and population stds over the kept
+    * rows. */
+  private[gen] def featureRows(prices: Array[java.lang.Double], volWindow: Int = 24,
+                               volLong: Int = 72): FeatureRows = {
+    val Floor = 1e-10
+    val lp = prices.map(p => StrictMath.log(if (p == null) Floor else math.max(p, Floor)))
+    val ret = Array.tabulate(math.max(lp.length - 1, 0))(i => lp(i + 1) - lp(i))
+    def trailingStd(w: Int): Array[Double] = Array.tabulate(ret.length) { i =>
+      new SeriesKernel.Moments(ret, math.max(i - w + 1, 0), i + 1).stdSamp
+    }
+    val volShort = trailingStd(volWindow)
+    val volL = trailingStd(volLong)
+    val ratio = Array.tabulate(ret.length) { i =>
+      val vl = volL(i)
+      // a one-row frame's null vol_long fails the condition; NaN passes
+      if (math.min(i + 1, volLong) > 1 && (vl.isNaN || vl > 1e-10)) volShort(i) / vl
+      else 1.0
+    }
+    def finite(v: Double): Boolean = !v.isNaN && !v.isInfinite
+    val kept = ret.indices.filter(i =>
+      finite(ret(i)) && finite(volShort(i)) && finite(ratio(i))).toArray
+    val cols = Array(ret, volShort, ratio).map(c => kept.map(i => c(i)))
+    val ms = cols.map(c => new SeriesKernel.Moments(c))
+    val means = ms.map(_.mean); val stds = ms.map(_.stdPop)
+    FeatureRows(kept.map(_ + 1), cols(0),
+      Array.tabulate(kept.length)(r => Array.tabulate(3)(j =>
+        (cols(j)(r) - means(j)) / (stds(j) + 1e-10))),
+      means, stds)
+  }
+
+  /** Extract + normalize the [ret, vol_short, vol_ratio] feature frame
+    * of the first `maxRows` prices: one ordered collect and
+    * [[featureRows]] on the driver, returned as a local frame
+    * (rn, ret, f0, f1, f2, then the constant normalization stats m0, s0,
+    * m1, s1, m2, s2). Ref: regime_conditional.py:64-79. */
   def features(prices: DataFrame, orderCols: Seq[String], price: String,
                volWindow: Int = 24, volLong: Int = 72,
-               maxRows: Int = 20000): DataFrame =
-    featureFrames(prices, orderCols, price, volWindow, volLong, maxRows)._1
-
-  /** [[features]] plus the persisted clean frame it reads, for callers
-    * that release it when done. */
-  private def featureFrames(prices: DataFrame, orderCols: Seq[String],
-                            price: String, volWindow: Int, volLong: Int,
-                            maxRows: Int): (DataFrame, DataFrame) = {
-    val spec = SeriesSpec(Nil, orderCols)
-    // fit-prefix cap (same contract as maxFitRows below): every stage
-    // here is causal, so capping BEFORE the vol windows bounds the
-    // single-series window work instead of limiting afterwards; the
-    // z-normalization stats consistently describe the fitted prefix
-    val prefix = prices.orderBy(orderCols.map(col): _*).limit(maxRows)
-    val rets = SeriesOps.logReturns(prefix, spec, price, "ret")
-      .filter(col("ret").isNotNull)
-      .withColumn("rn", row_number().over(spec.w))
-    val rspec = SeriesSpec(Nil, Seq("rn"))
-    val f = SeriesOps.rollingStd(
-      SeriesOps.rollingStd(rets, rspec, "ret", volWindow, 1, "vol_short"),
-      rspec, "ret", volLong, 1, "vol_long")
-      .withColumn("vol_ratio", SeriesOps.volRatio(col("vol_short"), col("vol_long")))
-    // P3: NaN/Inf/null row filter (rolling std of a single row is null)
-    val cols = Seq("ret", "vol_short", "vol_ratio")
-    // persisted (≤ maxRows rows by the prefix cap): the z-stat agg
-    // below rides a broadcast subquery that would otherwise re-derive
-    // the whole single-series window chain a second time when the
-    // selected frame materializes
-    val clean = cols.foldLeft(f)((d, c) =>
-      d.filter(col(c).isNotNull && !isnan(col(c)) &&
-        abs(col(c)) =!= Double.PositiveInfinity))
-      .persist()
-    // z-normalize each feature (ref :92-94)
-    val stats = clean.agg(
-      avg(col("ret")).as("m0"), stddev_pop(col("ret")).as("s0"),
-      avg(col("vol_short")).as("m1"), stddev_pop(col("vol_short")).as("s1"),
-      avg(col("vol_ratio")).as("m2"), stddev_pop(col("vol_ratio")).as("s2"))
-    (clean.crossJoin(broadcast(stats))
-      .select(col("rn"), col("ret"),
-        ((col("ret") - col("m0")) / (col("s0") + 1e-10)).as("f0"),
-        ((col("vol_short") - col("m1")) / (col("s1") + 1e-10)).as("f1"),
-        ((col("vol_ratio") - col("m2")) / (col("s2") + 1e-10)).as("f2"),
-        // carried through (constant columns) so fit() can persist the
-        // normalization stats into the reference-compatible artifact
-        col("m0"), col("s0"), col("m1"), col("s1"), col("m2"), col("s2")),
-      clean)
+               maxRows: Int = 20000): DataFrame = {
+    val f = featureRows(pricePrefix(prices, orderCols, price, maxRows), volWindow, volLong)
+    val stats = (0 until 3).flatMap(j => Seq(f.means(j), f.stds(j)))
+    val rows = f.rn.indices.map(i =>
+      Row.fromSeq(Seq[Any](f.rn(i), f.ret(i)) ++ f.x(i) ++ stats))
+    prices.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), FeatureSchema)
   }
+
+  /** [[features]]' columns, with the nullability the SQL chain gave them. */
+  private val FeatureSchema = StructType(
+    StructField("rn", IntegerType, nullable = false) +:
+      StructField("ret", DoubleType) +:
+      Seq("f0", "f1", "f2", "m0", "s0", "m1", "s1", "m2", "s2")
+        .map(StructField(_, DoubleType)))
 
   /** PER-SERIES grouped twin of [[features]]: every series' normalized
     * [f0, f1, f2] feature frame in ONE shuffle on the series key — the
@@ -274,87 +303,57 @@ object RegimeConditional {
     * `maxFitRows` caps the series prefix used for the driver-side EM
     * (the reference fits on ≤ ~7.4k rows; EM is O(iters·n·k²) and a
     * longer single series adds no regime information worth the time —
-    * per-regime Spark stats still use the capped frame consistently). */
+    * the per-regime stats use the capped prefix consistently).
+    *
+    * One ordered collect of the capped price prefix feeds
+    * [[featureRows]], Baum-Welch ([[Hmm.fit]]) and Viterbi labeling on
+    * the driver; the per-regime stats (A8: count, mean, population std,
+    * skewness, lag-1 autocorrelation, in time order) use Spark's
+    * aggregate update formulas ([[SeriesKernel.Moments]],
+    * [[SeriesKernel.lagCorr]]). Two Spark actions remain and run
+    * concurrently: the full-series price mean/std and, for G5, the
+    * [[Garch.fitMany]] grid job over the regime subsequences. Nothing is
+    * persisted. */
   def fit(prices: DataFrame, orderCols: Seq[String], price: String,
           nRegimes: Int = 4, withGarch: Boolean = false,
           maxFitRows: Int = 20000, emIters: Int = 50): RegimeModel = {
-    val spark = prices.sparkSession
-    // the persisted clean frame and the cached features are this fit's
-    // only storage; both are released whether the fit returns or throws
-    val (normalized, clean) =
-      featureFrames(prices, orderCols, price, 24, 72, maxFitRows)
-    val feat = normalized.cache()
-    try {
-      val rows = feat.select("rn", "ret", "f0", "f1", "f2").collect()
-      val x = rows.map(r => Array(r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-      val hmm = Hmm.fit(x, nRegimes, maxIter = emIters)
-      val labels = Hmm.predict(hmm, x)
+    val feats = featureRows(pricePrefix(prices, orderCols, price, maxFitRows))
+    val hmm = Hmm.fit(feats.x, nRegimes, maxIter = emIters)
+    val labels = Hmm.predict(hmm, feats.x)
+    // each regime's returns in time order
+    val byRegime = feats.ret.indices.groupBy(i => labels(i))
+      .map { case (k, is) => k -> is.map(i => feats.ret(i)).toArray }
+    def dbl(v: Double): Double = if (v.isNaN) 0.0 else v
+    val stats = byRegime.map { case (k, r) =>
+      val m = new SeriesKernel.Moments(r)
+      k -> RegimeParams(dbl(m.mean), dbl(m.stdPop), dbl(m.skewness),
+        dbl(SeriesKernel.lagCorr(r, 1)), r.length.toLong)
+    }
+    val globalStd = feats.stds(0) // population std of the fitted returns
+    // same subsequences Garch.fit saw: each labeled regime's returns in
+    // time order, ≥30 rows to earn a grid
+    val (priceStats, rawFits) = graft.core.Par.par2(
+      prices.agg(avg(col(price)).as("m"), stddev_pop(col(price)).as("s")).first(),
+      if (!withGarch) Map.empty[Int, GarchFit]
+      else Garch.fitMany(prices.sparkSession, byRegime.filter(_._2.length >= 30)))
+    val params = Array.tabulate(nRegimes) { k =>
+      stats.get(k).filter(_.count >= 5).getOrElse(
+        RegimeParams(0.0, globalStd, 0.0, 0.0, stats.get(k).map(_.count).getOrElse(0L)))
+    }
 
-      // per-regime stats over the labeled returns — Spark groupBy (A8)
-      import spark.implicits._
-      val labeled = rows.zip(labels).toIndexedSeq
-        .map { case (r, lab) => (r.getInt(0), r.getDouble(1), lab) }
-        .toDF("rn", "ret", "regime")
-      val wReg = Window.partitionBy(col("regime")).orderBy(col("rn"))
-      // the per-regime stats agg, the global std, the znorm row, the
-      // price stats and the G5 GARCH grid are five INDEPENDENT actions
-      // (the grid's regime subsequences are already on the driver — they
-      // fed the EM); submit them concurrently (guide §2.6). The GARCH
-      // stage itself is ONE job of regimes × (α, β) tasks over the
-      // broadcast subsequences ([[Garch.fitMany]]) instead of a
-      // sequential count + collect + grid job per regime — identical
-      // variance targeting, likelihood recursion and tie-break.
-      val ((statsDf, globalStd, znorm, priceStats), rawFits) =
-        graft.core.Par.par2(
-          graft.core.Par.par4(
-            labeled
-              .withColumn("lag_ret", lag(col("ret"), 1).over(wReg))
-              .groupBy(col("regime"))
-              .agg(count(lit(1)).as("n"), avg(col("ret")).as("mean"),
-                stddev_pop(col("ret")).as("std"), skewness(col("ret")).as("skew"),
-                coalesce(corr(col("ret"), col("lag_ret")), lit(0.0)).as("ar1"))
-              .collect().map { r =>
-                def dbl(i: Int): Double =
-                  if (r.isNullAt(i)) 0.0
-                  else { val v = r.getDouble(i); if (v.isNaN) 0.0 else v }
-                r.getInt(0) -> RegimeParams(dbl(2), dbl(3), dbl(4), dbl(5), r.getLong(1))
-              }.toMap,
-            feat.agg(stddev_pop(col("ret"))).first().getDouble(0),
-            feat.select("m0", "s0", "m1", "s1", "m2", "s2").first(),
-            prices.agg(
-              avg(col(price)).as("m"), stddev_pop(col(price)).as("s")).first()),
-          if (!withGarch) Map.empty[Int, GarchFit]
-          else {
-            // same subsequences Garch.fit saw: rn-ascending returns of
-            // each labeled regime, ≥30 rows to earn a grid
-            val ordered = rows.zip(labels)
-              .map { case (r, lab) => (r.getInt(0), r.getDouble(1), lab) }
-              .sortBy(_._1)
-            val byRegime = ordered.groupBy(_._3)
-              .map { case (k, a) => k -> a.map(_._2) }
-            Garch.fitMany(spark, byRegime.filter(_._2.length >= 30))
-          })
-      val params = Array.tabulate(nRegimes) { k =>
-        statsDf.get(k).filter(_.count >= 5).getOrElse(
-          RegimeParams(0.0, globalStd, 0.0, 0.0,
-            statsDf.get(k).map(_.count).getOrElse(0L)))
-      }
+    // G5: regimes whose subsequence is too short for a grid keep the
+    // global-variance fallback
+    val garchFits =
+      if (!withGarch) None
+      else Some(Array.tabulate(nRegimes) { k =>
+        rawFits.getOrElse(k, GarchFit(globalStd * globalStd * 0.05, 0.05, 0.90,
+          globalStd * globalStd, 0.0))
+      })
 
-      // G5: regimes whose subsequence is too short for a grid keep the
-      // global-variance fallback (unchanged)
-      val garchFits =
-        if (!withGarch) None
-        else Some(Array.tabulate(nRegimes) { k =>
-          rawFits.getOrElse(k, GarchFit(globalStd * globalStd * 0.05, 0.05, 0.90,
-            globalStd * globalStd, 0.0))
-        })
-
-      RegimeModel(nRegimes, hmm.transition, hmm.startProbs, params, garchFits,
-        featureMeans = Array(znorm.getDouble(0), znorm.getDouble(2), znorm.getDouble(4)),
-        featureStds = Array(znorm.getDouble(1), znorm.getDouble(3), znorm.getDouble(5)),
-        hmmMeans = hmm.means, hmmCovars = hmm.variances,
-        dataMean = priceStats.getDouble(0), dataStd = priceStats.getDouble(1))
-    } finally { feat.unpersist(); clean.unpersist() }
+    RegimeModel(nRegimes, hmm.transition, hmm.startProbs, params, garchFits,
+      featureMeans = feats.means, featureStds = feats.stds,
+      hmmMeans = hmm.means, hmmCovars = hmm.variances,
+      dataMean = priceStats.getDouble(0), dataStd = priceStats.getDouble(1))
   }
 
   private def sampleCat(probs: Array[Double], u: Double): Int = {
@@ -405,13 +404,14 @@ object RegimeConditional {
   }
 
   /** Seed-deterministic generation (ref :152-186): [[walkRets]] on the
-    * driver, then W2 reconstruction in Spark.
+    * driver, then W2 reconstruction in Spark over its one partition.
     * Output: (rn, ret, typical_price). */
   def generate(spark: SparkSession, model: RegimeModel, seed: Long, n: Int,
                initialPrice: Double): DataFrame = {
     import spark.implicits._
+    // one partition: the running-sum window below then plans no exchange
     val df = walkRets(model, seed, n).toIndexedSeq.zipWithIndex
-      .map { case (r, i) => (i, r) }.toDF("rn", "ret")
+      .map { case (r, i) => (i, r) }.toDF("rn", "ret").coalesce(1)
     val w = Window.orderBy(col("rn"))
       .rowsBetween(Window.unboundedPreceding, 0)
     df.withColumn("typical_price",

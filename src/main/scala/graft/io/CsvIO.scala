@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 
 /** S1–S3: the reference's price-series CSV source/sink.
@@ -54,20 +55,31 @@ object CsvIO {
       out
   }
 
-  /** S2: multi-CSV union → sort by time → keep FIRST row per duplicate
-    * DATE_TIME (pandas drop_duplicates keep="first" after sort — made
-    * deterministic here with an explicit source-order priority).
-    * Ref: app/data_processor.py:27-34. */
-  /** S2: union + first-wins dedup by time (P7, q18 semantics). When a
-    * `seriesCol` is given, the column is CARRIED THROUGH and the dedup
-    * keys on (series, DATE_TIME) — the global-DATE_TIME dedup would
-    * otherwise silently collapse a multi-series CSV to one row per
-    * timestamp (the CLI `--series_col` inputs hit exactly this). */
+  /** S2: multi-CSV union → sort by time → keep the FIRST row per
+    * duplicate DATE_TIME (pandas drop_duplicates keep="first" after
+    * sort — made deterministic here: ties within a file keep file order,
+    * and across files the earlier path wins).
+    * Ref: app/data_processor.py:27-34. When a `seriesCol` is given, the
+    * column is CARRIED THROUGH and the dedup keys on (series, DATE_TIME) —
+    * the global-DATE_TIME dedup would otherwise silently collapse a
+    * multi-series CSV to one row per timestamp (the CLI `--series_col`
+    * inputs hit exactly this).
+    *
+    * Inputs that Spark's own file-split rule would read as one split
+    * ([[PlanBridge.readsAsOneSplit]]; the reference's series are a few
+    * hundred kB) start as one partition. That partition already meets the
+    * dedup window's clustering and the final sort, so neither plans an
+    * exchange (nor the sort its range-sampling job), and a single-series
+    * window or sort downstream plans none either. Larger inputs keep the
+    * keyed exchange and the range-partitioned sort; so do several files
+    * at the default confs, since each file adds `openCostInBytes`. */
   def loadMultipleCsv(spark: SparkSession, paths: Seq[String],
                       seriesCol: Option[String] = None): DataFrame = {
-    val tagged = paths.zipWithIndex.map { case (p, i) =>
+    val union = paths.zipWithIndex.map { case (p, i) =>
       loadCsv(spark, p, seriesCol).withColumn("_src", lit(i))
     }.reduce(_ unionByName _)
+    val tagged =
+      if (PlanBridge.readsAsOneSplit(spark, paths)) union.coalesce(1) else union
     val keyCols = seriesCol.toSeq.map(col) :+ col("DATE_TIME")
     val w = Window.partitionBy(keyCols: _*).orderBy(col("_src"))
     tagged

@@ -73,9 +73,11 @@ object Garch {
 
   /** [[fit]] for MANY already-collected series in ONE job: the same
     * grid, variance targeting, log-likelihood recursion and
-    * (ll desc, α, β) winner per series, but the cluster dimension is
-    * |series| × |grid| tasks over the broadcast series map instead of
-    * one sequential collect + grid job per series. Numerics are
+    * (ll desc, α, β) winner per series, over the broadcast series map
+    * instead of one sequential collect + grid job per series. The
+    * |series| × |grid| candidates are a local relation, so the job runs
+    * min(|candidates|, defaultParallelism) tasks, each scoring its
+    * slice of the candidates. Numerics are
     * byte-identical to per-series [[fit]] calls: each task sees the
     * same ordered return array, computes the same driver-order
     * variance sum, and the driver argmax applies the same

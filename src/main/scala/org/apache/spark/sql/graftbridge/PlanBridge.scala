@@ -1,12 +1,44 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.util.HadoopFSUtils
 
-/** Bridge into `private[sql]` plan construction and the
-  * `private[spark]` listener bus. */
+/** Bridge into `private[sql]` plan construction, Spark's file-split
+  * rule and the `private[spark]` listener bus. */
 object PlanBridge {
+
+  /** Whether one file scan over every data file under `paths` would read
+    * them as ONE split by Spark's own rule: the split size of
+    * [[FilePartition.maxSplitBytes]] (`spark.sql.files.maxPartitionBytes`,
+    * `spark.sql.files.openCostInBytes`, `spark.sql.files.minPartitionNum`)
+    * and the packing of `FilePartition.getFilePartitions`, where each
+    * file after the first also costs `openCostInBytes`. Sizes come from
+    * the Hadoop `FileSystem` listing (globs expanded, directories walked,
+    * hidden and `_`-prefixed names skipped as Spark's file index skips
+    * them); nothing is planned or read. */
+  def readsAsOneSplit(spark: org.apache.spark.sql.SparkSession, paths: Seq[String]): Boolean = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val hadoopConf = session.sessionState.newHadoopConf()
+    def leafLengths(fs: FileSystem, st: FileStatus): Seq[Long] =
+      if (!st.isDirectory) Seq(st.getLen)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => HadoopFSUtils.shouldFilterOutPathName(c.getPath.getName))
+        .flatMap(leafLengths(fs, _))
+    val lengths = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoopConf)
+      Option(fs.globStatus(path)).toSeq.flatten.flatMap(leafLengths(fs, _))
+    }
+    val openCost = session.sessionState.conf.filesOpenCostInBytes
+    val total = lengths.map(_ + openCost).sum
+    lengths.nonEmpty &&
+      total - openCost <= FilePartition.maxSplitBytes(session, total)
+  }
 
   /** Block until every queued listener event (job ends, query
     * executions) has been delivered. */

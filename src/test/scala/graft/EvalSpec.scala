@@ -418,6 +418,123 @@ class EvalSpec extends AnyFunSuite {
     assert(multi.count() === 50)
   }
 
+  test("multi-CSV load: one-split inputs plan no exchange and keep the exchange plan's first-wins rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graftcsv1")
+    val t0 = java.time.LocalDateTime.parse("2020-01-01T00:00:00")
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    def ts(i: Int) = t0.plusHours(4L * i).format(fmt)
+    def write(name: String, rows: Seq[(Int, Double)]): String = {
+      val p = dir.resolve(s"$name.csv")
+      java.nio.file.Files.write(p, ("DATE_TIME,typical_price\n" +
+        rows.map { case (i, v) => s"${ts(i)},$v\n" }.mkString).getBytes("UTF-8"))
+      p.toString
+    }
+    // file a repeats every 25th timestamp mid-file with another price:
+    // for i < 150 the original comes first in the file, for i >= 150 the
+    // repeat does; file b overlaps a (and extends past it) every 7th bar
+    val aRows = (0 until 150).map(i => (i, 1.0 + i * 1e-3)) ++
+      (0 until 300 by 25).map(i => (i, 9.0 + i)) ++
+      (150 until 300).map(i => (i, 1.0 + i * 1e-3))
+    val bRows = (0 until 400 by 7).map(i => (i, 5.0 + i))
+    val paths = Seq(write("a", aRows), write("b", bRows))
+    def firstWins(rows: Seq[(Int, Double)]) = {
+      val first = rows.groupBy(_._1).map { case (i, rs) => i -> rs.head._2 }
+      first.keys.toSeq.sorted.map(first)
+    }
+    def prices(df: org.apache.spark.sql.DataFrame) =
+      df.select("typical_price").collect().map(_.getDouble(0)).toSeq
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    // at the default split confs one small file is one split; two files
+    // are two (each file costs openCostInBytes), until the open cost and
+    // the minimum partition count let them share one
+    val one = CsvIO.loadMultipleCsv(spark, paths.take(1))
+    assert(!plan(one).contains("Exchange"), plan(one))
+    assert(prices(one) === firstWins(aRows))
+    assert(plan(CsvIO.loadMultipleCsv(spark, paths)).contains("Exchange hashpartitioning"))
+    SparkSpec.withConf("spark.sql.files.openCostInBytes" -> "1024",
+        "spark.sql.files.minPartitionNum" -> "1") {
+      val both = CsvIO.loadMultipleCsv(spark, paths)
+      assert(!plan(both).contains("Exchange"), plan(both))
+      assert(prices(both) === firstWins(aRows ++ bRows))
+    }
+    // a small split size reads each file as several splits: the keyed
+    // exchange and the range-partitioned sort come back, rows unchanged
+    SparkSpec.withConf("spark.sql.files.maxPartitionBytes" -> "1024",
+        "spark.sql.files.openCostInBytes" -> "0") {
+      for ((ps, rows) <- Seq(paths.take(1) -> aRows, paths -> (aRows ++ bRows))) {
+        val multi = CsvIO.loadMultipleCsv(spark, ps)
+        assert(plan(multi).contains("Exchange hashpartitioning") &&
+          plan(multi).contains("Exchange rangepartitioning"), plan(multi))
+        assert(prices(multi) === firstWins(rows))
+      }
+    }
+  }
+
+  /** Jobs submitted by `body`'s thread, and the executed plans of the
+    * SQL executions that ran while it did. */
+  private def traced[T](body: => T): (T, Int, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graftbridge.PlanBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val group = s"traced-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    PlanBridge.awaitListeners(spark)
+    sc.addSparkListener(jl); spark.listenerManager.register(ql)
+    sc.setJobGroup(group, group)
+    try {
+      val r = body
+      PlanBridge.awaitListeners(spark)
+      (r, jobs.get, plans.toArray(Array.empty[String]).toSeq)
+    } finally {
+      sc.clearJobGroup(); sc.removeSparkListener(jl); spark.listenerManager.unregister(ql)
+    }
+  }
+
+  test("one-series evaluators on CSV inputs run one job and plan no exchange; " +
+       "grouped ones keep one keyed exchange") {
+    val dir = java.nio.file.Files.createTempDirectory("graftcsv2").toString
+    val order = Seq("DATE_TIME")
+    CsvIO.saveCsv(SparkSpec.randomWalk(500, seed = 31).select("DATE_TIME", "typical_price"),
+      s"$dir/real")
+    CsvIO.saveCsv(SparkSpec.randomWalk(300, seed = 32).select("DATE_TIME", "typical_price"),
+      s"$dir/synth")
+    val real = CsvIO.loadMultipleCsv(spark, Seq(s"$dir/real"))
+    val synth = CsvIO.loadMultipleCsv(spark, Seq(s"$dir/synth"))
+    for ((what, run) <- Seq[(String, () => Any)](
+        "evaluate" -> (() => DistributionEvaluator.evaluate(real, synth, order, "typical_price")),
+        "score" -> (() => CompositeMetric.score(real, synth, order, "typical_price")))) {
+      val (_, jobs, plans) = traced(run())
+      assert(jobs === 1, what)
+      assert(plans.nonEmpty && plans.forall(!_.contains("Exchange")), s"$what:\n$plans")
+    }
+    val (gReal, gSynth) = panel
+    for ((what, df) <- Seq(
+        "evaluateGrouped" -> DistributionEvaluator.evaluateGrouped(gReal, gSynth, "uid",
+          order, "typical_price"),
+        "scoreGrouped" -> CompositeMetric.scoreGrouped(gReal, gSynth, "uid", order,
+          "typical_price"))) {
+      val (_, _, plans) = traced(df.collect())
+      assert(plans.length === 1, what)
+      // the adaptive plan prints its final plan before the initial one
+      val exchanges = "Exchange [a-zA-Z]+".r
+        .findAllIn(plans.head.split("== Initial Plan ==").head).toSeq
+      assert(exchanges === Seq("Exchange hashpartitioning"), s"$what:\n${plans.head}")
+    }
+  }
+
   test("model JSON round-trip (S5)") {
     val path = java.nio.file.Files.createTempFile("grasynda", ".json").toString
     val m = graft.gen.GrasyndaModel(

@@ -18,7 +18,7 @@ class GeneratorSpec extends AnyFunSuite {
     val vs = Array.fill(400)(rnd.nextGaussian() * 0.01)
     val df = vs.toIndexedSeq.zipWithIndex.map { case (v, i) => (i, v) }
       .toDF("rn", "v")
-    val m1 = graft.gen.Grasynda.fit(df, Seq("rn"), "v", nBins = 10)
+    val m1 = GenOracle.grasyndaFit(df, Seq("rn"), "v", nBins = 10)
     val m2 = graft.gen.Grasynda.fitArray(vs, nBins = 10)
     assert(m2.interiorEdges.toSeq === m1.interiorEdges.toSeq,
       "percentile interpolation must replicate Spark's Percentile exactly")
@@ -26,6 +26,38 @@ class GeneratorSpec extends AnyFunSuite {
     assert(m2.transition.map(_.toSeq).toSeq === m1.transition.map(_.toSeq).toSeq)
     assert(m2.pools.keySet === m1.pools.keySet)
     m1.pools.keys.foreach(k => assert(m2.pools(k).toSeq === m1.pools(k).toSeq))
+  }
+
+  test("Grasynda fit == retired DataFrame fit bit-for-bit (walks, ties, constant, nulls, short)") {
+    val s = SparkSpec.spark
+    import s.implicits._
+    def rets(prices: org.apache.spark.sql.DataFrame) =
+      SeriesOps.logReturns(prices, spec, "typical_price", "ret")
+    val cases = Seq(
+      "walk" -> rets(SparkSpec.randomWalk(600, seed = 3)),
+      "walk seed 9" -> rets(SparkSpec.randomWalk(250, seed = 9)),
+      // prices on a 1e-3 grid: many tied returns, tied quantile neighbours
+      "tied returns" -> rets(SparkSpec.randomWalk(500, seed = 4, vol = 2e-3)
+        .withColumn("typical_price", round(col("typical_price"), 3))),
+      "constant" -> rets(SparkSpec.randomWalk(100).withColumn("typical_price", lit(1.3))),
+      // equal quantile neighbours: Spark's percentile returns the value
+      // itself, the interpolation formula would drift by an ulp
+      "repeated returns" -> Seq.tabulate(24)(i => (i, Seq(0.013, -0.021, 0.01)(i % 3)))
+        .toDF("DATE_TIME", "ret"),
+      "null returns" -> Seq((0, Some(0.01)), (1, None), (2, Some(-0.02)), (3, Some(0.0)),
+        (4, None), (5, Some(0.03)), (6, Some(0.01))).toDF("DATE_TIME", "ret"),
+      "short" -> rets(SparkSpec.randomWalk(6, seed = 2)))
+    for ((name, df) <- cases; nBins <- Seq(3, 10)) {
+      val a = Grasynda.fit(df, Seq("DATE_TIME"), "ret", nBins)
+      val b = GenOracle.grasyndaFit(df, Seq("DATE_TIME"), "ret", nBins)
+      def bits(xs: Iterable[Double]) = xs.map(java.lang.Double.doubleToLongBits).toSeq
+      val what = s"$name/$nBins"
+      assert(bits(a.interiorEdges) === bits(b.interiorEdges), what)
+      assert(bits(a.transition.flatten) === bits(b.transition.flatten), what)
+      assert(bits(a.startProbs) === bits(b.startProbs), what)
+      assert(a.pools.keySet === b.pools.keySet, what)
+      a.pools.keys.foreach(k => assert(bits(a.pools(k)) === bits(b.pools(k)), what))
+    }
   }
 
   test("Grasynda generateGrouped: deterministic per (seed, series), distinct across series") {

@@ -103,6 +103,78 @@ class RegimeSpec extends AnyFunSuite {
     assert(a.forall(_ > 0))
   }
 
+  /** Price fixtures for the fit's edge cases: (name, prices, nRegimes,
+    * maxFitRows). */
+  private def regimeCases = {
+    val walk = SparkSpec.randomWalk(600, seed = 3)
+    Seq(
+      ("walk", walk, 4, 20000),
+      ("walk seed 5", SparkSpec.randomWalk(400, seed = 5), 3, 20000),
+      ("constant", SparkSpec.randomWalk(200).withColumn("typical_price", lit(1.3)), 3, 20000),
+      ("null price", SparkSpec.randomWalk(300, seed = 8).withColumn("typical_price",
+        when(col("rn") === 100, lit(null)).otherwise(col("typical_price"))), 3, 20000),
+      // a NaN price makes NaN returns and vols: SQL compares NaN as the
+      // largest double, so vol_ratio's `vol_long > 1e-10` holds for it
+      ("NaN price", SparkSpec.randomWalk(300, seed = 9).withColumn("typical_price",
+        when(col("rn") === 150, lit(Double.NaN)).otherwise(col("typical_price"))), 3, 20000),
+      ("fewer than 24 rows", SparkSpec.randomWalk(20, seed = 6), 3, 20000),
+      ("fewer than 72 rows", SparkSpec.randomWalk(50, seed = 6), 4, 20000),
+      ("maxFitRows below length", walk, 4, 250),
+      // 6 regimes on 300 bars: one regime of 2 rows (< 5: global-std
+      // params), two of 17 and 26 (< 30: GARCH fallback), three fitted
+      ("small regimes", SparkSpec.randomWalk(300, seed = 2), 6, 20000))
+  }
+
+  private def bits(xs: Iterable[Double]): Seq[Long] =
+    xs.map(java.lang.Double.doubleToLongBits).toSeq
+
+  test("regime fit and features == retired DataFrame oracles bit-for-bit") {
+    val order = Seq("DATE_TIME")
+    for ((name, prices, k, cap) <- regimeCases) {
+      for ((vw, vl) <- Seq((24, 72), (3, 1), (5, 10))) {
+        val got = RegimeConditional.features(prices, order, "typical_price", vw, vl, cap)
+        val want = GenOracle.regimeFeatures(prices, order, "typical_price", vw, vl, cap)
+        assert(got.schema === want.schema, name)
+        def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+          r.getInt(0) +: bits((1 until r.length).map(i =>
+            if (r.isNullAt(i)) Double.NaN else r.getDouble(i))))
+        assert(rows(got) === rows(want), s"$name features ($vw, $vl)")
+      }
+      for (garch <- Seq(false, true)) {
+        val what = s"$name fit (garch=$garch)"
+        val got = scala.util.Try(RegimeConditional.fit(prices, order, "typical_price", k,
+          withGarch = garch, maxFitRows = cap))
+        val want = scala.util.Try(GenOracle.regimeFit(prices, order, "typical_price", k,
+          withGarch = garch, maxFitRows = cap))
+        assert(got.isSuccess === want.isSuccess, s"$what: $got vs $want")
+        if (want.isFailure)
+          assert(got.failed.get.getClass === want.failed.get.getClass, what)
+        else {
+          val (a, b) = (got.get, want.get)
+          assert(a.nRegimes === b.nRegimes, what)
+          assert(bits(a.transition.flatten) === bits(b.transition.flatten), what)
+          assert(bits(a.startProbs) === bits(b.startProbs), what)
+          assert(a.params.map(_.count).toSeq === b.params.map(_.count).toSeq, what)
+          assert(bits(a.params.flatMap(p => Seq(p.mean, p.std, p.skew, p.ar1))) ===
+            bits(b.params.flatMap(p => Seq(p.mean, p.std, p.skew, p.ar1))), what)
+          assert(a.garch.map(g => bits(g.flatMap(f => Seq(f.omega, f.alpha, f.beta,
+            f.longRunVar, f.logLik)))) === b.garch.map(g => bits(g.flatMap(f =>
+            Seq(f.omega, f.alpha, f.beta, f.longRunVar, f.logLik)))), what)
+          assert(bits(a.featureMeans) === bits(b.featureMeans), what)
+          assert(bits(a.featureStds) === bits(b.featureStds), what)
+          assert(bits(a.hmmMeans.flatten) === bits(b.hmmMeans.flatten), what)
+          assert(bits(a.hmmCovars.flatten) === bits(b.hmmCovars.flatten), what)
+          assert(bits(Seq(a.dataMean, a.dataStd)) === bits(Seq(b.dataMean, b.dataStd)), what)
+          if (name == "small regimes") {
+            val counts = a.params.map(_.count)
+            assert(counts.exists(_ < 5) && counts.exists(c => c >= 5 && c < 30) &&
+              counts.exists(_ >= 30), s"$what: regime sizes ${counts.toSeq}")
+          }
+        }
+      }
+    }
+  }
+
   test("regime conditional fit releases the storage it persisted") {
     val prices = SparkSpec.randomWalk(400, seed = 3)
     val sc = spark.sparkContext

@@ -18,7 +18,8 @@ object SparkSpec {
     * SQLHelper.withSQLConf. */
   def withConf[T](pairs: (String, String)*)(body: => T): T = {
     val prev = pairs.map { case (k, _) =>
-      k -> (try Some(spark.conf.get(k)) catch { case _: Exception => None })
+      // an optional conf without a value reads as null
+      k -> (try Option(spark.conf.get(k)) catch { case _: Exception => None })
     }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
