@@ -1,35 +1,77 @@
 package graft.opt
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.eval.SeriesKernel.Moments
 
 /** Pure-Scala (task-local) fit + generate + score used as the sweep
   * fitness function. This is the reference's cheap statistical fitness
   * ("No GPU needed — runs in seconds per config",
   * optimize_generator.py / optimize_hybrid.py) restructured for Spark:
-  * the REAL returns are broadcast once; each executor task fits a
-  * candidate generator and scores it locally, so a 300-config × 3-seed
-  * sweep is one embarrassingly-parallel Spark job instead of 900
-  * subprocess launches (SURVEY §2.12, §4 "fitness fan-out").
+  * the REAL returns are broadcast once and every sweep scores its
+  * (config, seed) tasks through [[SweepOptimizer.fitnessFanOut]], one
+  * embarrassingly-parallel Spark job instead of one subprocess per
+  * task (SURVEY §2.12, §4 "fitness fan-out"). Each fan-out task holds
+  * one [[Grasynda]] scorer: the real side of [[compositeLite]] once, one
+  * quantile fit per distinct n_bins, then one seeded walk and one
+  * synthetic-side score per (config, seed).
   */
 object LocalFitness {
 
   /** Grasynda-style fit/gen/score against real returns, all in-task.
-    * Params: n_bins (quantile states), smooth (pool jitter weight). */
+    * Params: n_bins (quantile states), smooth (pool jitter weight).
+    * Fewer than n_bins·4 returns score `Double.MaxValue`. */
   def grasyndaScore(real: Array[Double], nBins: Int, smooth: Double,
-                    n: Int, seed: Long): Double = {
-    if (real.length < nBins * 4) return Double.MaxValue
-    compositeLite(real, grasyndaWalk(real, nBins, smooth, n, seed))
-  }
+                    n: Int, seed: Long): Double =
+    Grasynda.forTask(real)(nBins, smooth, n, seed)
 
   /** The fit + seeded pool walk of [[grasyndaScore]] (exact extraction
     * so the o01f oracle witness steps the real sweep fitness): quantile
     * states, transition matrix, per-state pools, then `n` smoothed
     * samples from one java.util.Random stream. */
   def grasyndaWalk(real: Array[Double], nBins: Int, smooth: Double,
-                   n: Int, seed: Long): Array[Double] = {
-    // quantile edges
-    val sorted = real.sorted
+                   n: Int, seed: Long): Array[Double] =
+    fit(real, real.sorted, nBins).walk(smooth, n, seed)
+
+  /** A fitted Grasynda-lite model: the first state, the row-normalised
+    * transition matrix and each state's sorted pool (an empty state
+    * walks the lowest non-empty state's pool). */
+  private final class GrasyndaLite(
+      start: Int, transN: Array[Array[Double]], pools: Array[Array[Double]]) {
+    private val k = transN.length
+
+    /** `n` smoothed samples from one java.util.Random(seed) stream. */
+    def walk(smooth: Double, n: Int, seed: Long): Array[Double] = {
+      val rnd = new scala.util.Random(seed)
+      var st = start
+      val synth = new Array[Double](n)
+      var i = 0
+      while (i < n) {
+        val pool = pools(st)
+        val v = pool(rnd.nextInt(pool.length))
+        synth(i) = (1.0 - smooth) * v + smooth * (if (i > 0) synth(i - 1) else v)
+        var acc = 0.0; val u = rnd.nextDouble(); var nx = k - 1
+        var j = 0
+        var done = false
+        while (j < k && !done) {
+          acc += transN(st)(j); if (u < acc) { nx = j; done = true }
+          j += 1
+        }
+        st = nx
+        i += 1
+      }
+      synth
+    }
+  }
+
+  /** The quantile fit of [[grasyndaWalk]]: `nBins` quantile-index edges
+    * of `sorted` (the returns `real` in ascending order), collapsed by
+    * `distinct`, then states, transitions and pools of `real`. */
+  private def fit(real: Array[Double], sorted: Array[Double], nBins: Int): GrasyndaLite = {
     val interior = (1 until nBins).map { i =>
       sorted(((i.toDouble / nBins) * (sorted.length - 1)).round.toInt)
     }.distinct.toArray
@@ -47,28 +89,28 @@ object LocalFitness {
       val s = row.sum
       if (s > 0) row.map(_ / s) else Array.fill(k)(1.0 / k)
     }
-    val pools = states.zip(real).groupBy(_._1)
+    val byState = states.zip(real).groupBy(_._1)
       .map { case (s, xs) => s -> xs.map(_._2).sorted }
-    // walk
-    val rnd = new scala.util.Random(seed)
-    var st = states(0)
-    val synth = new Array[Double](n)
-    i = 0
-    while (i < n) {
-      val pool = pools.getOrElse(st, pools(pools.keys.min))
-      val v = pool(rnd.nextInt(pool.length))
-      synth(i) = (1.0 - smooth) * v + smooth * (if (i > 0) synth(i - 1) else v)
-      var acc = 0.0; val u = rnd.nextDouble(); var nx = k - 1
-      var j = 0
-      var done = false
-      while (j < k && !done) {
-        acc += transN(st)(j); if (u < acc) { nx = j; done = true }
-        j += 1
-      }
-      st = nx
-      i += 1
+    val fallback = byState(byState.keys.min)
+    new GrasyndaLite(states(0), transN,
+      Array.tabulate(k)(s => byState.getOrElse(s, fallback)))
+  }
+
+  /** The sweeps' default fitness, [[grasyndaScore]]. Its per-task
+    * scorer computes the real side of [[compositeLite]] on first use and
+    * keeps one [[fit]] per n_bins, so a task's configs and seeds share
+    * both; its scores equal [[grasyndaScore]]'s bit for bit. */
+  object Grasynda extends TaskFitness {
+    def apply(real: Array[Double], nBins: Int, smooth: Double, n: Int,
+              seed: Long): Double = grasyndaScore(real, nBins, smooth, n, seed)
+    def forTask(real: Array[Double]): (Int, Double, Int, Long) => Double = {
+      lazy val realSide = new RealSide(real)
+      val fits = scala.collection.mutable.HashMap.empty[Int, GrasyndaLite]
+      (nBins, smooth, n, seed) =>
+        if (real.length < nBins * 4) Double.MaxValue
+        else realSide.score(fits.getOrElseUpdate(nBins,
+          fit(real, realSide.sorted, nBins)).walk(smooth, n, seed))
     }
-    synth
   }
 
   /** PER-SERIES sweep fitness: [[grasyndaWalk]] + [[compositeLite]] for
@@ -113,58 +155,82 @@ object LocalFitness {
 
   /** Composite-lite: JS divergence (20-bin) + KS + |std ratio − 1| +
     * |ac1 ratio − 1| — the dominant terms of C8 cheap enough per task. */
-  def compositeLite(real: Array[Double], synth: Array[Double]): Double = {
-    val lo = math.min(real.min, synth.min)
-    val hi = math.max(real.max, synth.max)
-    val bins = 20
-    def hist(x: Array[Double]): Array[Double] = {
-      val h = new Array[Double](bins)
-      x.foreach { v =>
-        val b = math.min(((v - lo) / (hi - lo + 1e-30) * bins).toInt, bins - 1)
-        h(b) += 1
+  def compositeLite(real: Array[Double], synth: Array[Double]): Double =
+    new RealSide(real).score(synth)
+
+  /** The real side of [[compositeLite]], computed once per real series:
+    * sorted values, min/max, population std and lag-1 autocorrelation.
+    * `score` is the synthetic side and the combination. */
+  private final class RealSide(real: Array[Double]) {
+    val sorted: Array[Double] = real.sorted
+    private val min = real.min
+    private val max = real.max
+    private val stdR = std(real)
+    private val acR = ac1(real)
+
+    def score(synth: Array[Double]): Double = {
+      val lo = math.min(min, synth.min)
+      val hi = math.max(max, synth.max)
+      val bins = 20
+      def hist(x: Array[Double]): Array[Double] = {
+        val h = new Array[Double](bins)
+        x.foreach { v =>
+          val b = math.min(((v - lo) / (hi - lo + 1e-30) * bins).toInt, bins - 1)
+          h(b) += 1
+        }
+        val s = h.sum
+        h.map(v => v / s + 1e-10)
       }
-      val s = h.sum
-      h.map(v => v / s + 1e-10)
-    }
-    val hr = hist(real); val hs = hist(synth)
-    val js = {
-      val sr = hr.sum; val ss = hs.sum
-      var acc = 0.0
-      for (b <- 0 until bins) {
-        val p = hr(b) / sr; val q = hs(b) / ss; val m = (p + q) / 2
-        acc += 0.5 * p * math.log(p / m) + 0.5 * q * math.log(q / m)
+      val hr = hist(real); val hs = hist(synth)
+      val js = {
+        val sr = hr.sum; val ss = hs.sum
+        var acc = 0.0
+        for (b <- 0 until bins) {
+          val p = hr(b) / sr; val q = hs(b) / ss; val m = (p + q) / 2
+          acc += 0.5 * p * math.log(p / m) + 0.5 * q * math.log(q / m)
+        }
+        math.sqrt(math.max(acc, 0.0))
       }
-      math.sqrt(math.max(acc, 0.0))
-    }
-    def ecdfKs: Double = {
-      val a = real.sorted; val b = synth.sorted
-      var ia = 0; var ib = 0; var ks = 0.0
-      while (ia < a.length && ib < b.length) {
-        if (a(ia) <= b(ib)) ia += 1 else ib += 1
-        ks = math.max(ks, math.abs(ia.toDouble / a.length - ib.toDouble / b.length))
+      def ecdfKs: Double = {
+        val a = sorted; val b = synth.sorted
+        var ia = 0; var ib = 0; var ks = 0.0
+        while (ia < a.length && ib < b.length) {
+          if (a(ia) <= b(ib)) ia += 1 else ib += 1
+          ks = math.max(ks, math.abs(ia.toDouble / a.length - ib.toDouble / b.length))
+        }
+        ks
       }
-      ks
+      val stdDev = math.abs(std(synth) / math.max(stdR, 1e-12) - 1.0)
+      val acDev = if (math.abs(acR) > 1e-6) math.abs(ac1(synth) / acR - 1.0)
+                  else math.abs(ac1(synth))
+      (3.0 * js + 2.0 * ecdfKs + 2.0 * stdDev + 2.0 * acDev) / 9.0
     }
-    def std(x: Array[Double]): Double = {
-      val m = x.sum / x.length
-      math.sqrt(x.map(v => (v - m) * (v - m)).sum / x.length)
-    }
-    def ac1(x: Array[Double]): Double = {
-      if (x.length < 3) return 0.0
-      val m = x.sum / x.length
-      var num = 0.0; var den = 0.0
-      for (i <- x.indices) {
-        den += (x(i) - m) * (x(i) - m)
-        if (i > 0) num += (x(i) - m) * (x(i - 1) - m)
-      }
-      if (den > 0) num / den else 0.0
-    }
-    val stdDev = math.abs(std(synth) / math.max(std(real), 1e-12) - 1.0)
-    val acR = ac1(real)
-    val acDev = if (math.abs(acR) > 1e-6) math.abs(ac1(synth) / acR - 1.0)
-                else math.abs(ac1(synth))
-    (3.0 * js + 2.0 * ecdfKs + 2.0 * stdDev + 2.0 * acDev) / 9.0
   }
+
+  private def std(x: Array[Double]): Double = {
+    val m = x.sum / x.length
+    math.sqrt(x.map(v => (v - m) * (v - m)).sum / x.length)
+  }
+
+  private def ac1(x: Array[Double]): Double = {
+    if (x.length < 3) return 0.0
+    val m = x.sum / x.length
+    var num = 0.0; var den = 0.0
+    for (i <- x.indices) {
+      den += (x(i) - m) * (x(i) - m)
+      if (i > 0) num += (x(i) - m) * (x(i - 1) - m)
+    }
+    if (den > 0) num / den else 0.0
+  }
+}
+
+/** A sweep fitness that shares work between the (config, seed) tuples
+  * of one fan-out task: [[SweepOptimizer.fitnessFanOut]] builds
+  * `forTask(real)` once per Spark task and scores that task's tuples
+  * with it. Any other [[SweepOptimizer.Fitness]] (the md5 witness
+  * scorers) scores each tuple on its own. */
+trait TaskFitness extends SweepOptimizer.Fitness with Serializable {
+  def forTask(real: Array[Double]): (Int, Double, Int, Long) => Double
 }
 
 /** Random sweep + staged tournament GA with Spark-parallel fitness.
@@ -174,8 +240,42 @@ object LocalFitness {
   */
 object SweepOptimizer {
 
-  /** Random sweep: nConfigs draws from the grid × seeds, one Spark
-    * task per (config, seed), averaged per config (A17), best-first. */
+  /** A sweep fitness of (real returns, n_bins, smooth, genN, seed). */
+  type Fitness = (Array[Double], Int, Double, Int, Long) => Double
+
+  /** The one fitness fan-out of every sweep: scores (n_bins, smooth,
+    * seed) tasks against the broadcast real returns in ONE Spark job
+    * with no exchange and returns the scores in task order. The tasks
+    * are sorted by n_bins (stably) and cut into at most
+    * `defaultParallelism` contiguous slices, so each slice holds few
+    * n_bins values and a [[TaskFitness]] scorer shares their fits.
+    * Driver state is one double per task, the user's grid. */
+  def fitnessFanOut(spark: SparkSession, realReturns: Array[Double],
+                    tasks: Seq[(Int, Double, Long)], genN: Int,
+                    fitness: Fitness): Array[Double] = {
+    if (tasks.isEmpty) return Array.empty
+    val sc = spark.sparkContext
+    val byBins = tasks.zipWithIndex.sortBy(_._1._1).map(_.swap)
+    val bc = sc.broadcast(realReturns)
+    try {
+      val scored = sc.parallelize(byBins, math.min(tasks.size, sc.defaultParallelism))
+        .mapPartitions { part =>
+          val score = fitness match {
+            case f: TaskFitness => f.forTask(bc.value)
+            case f => f(bc.value, _: Int, _: Double, _: Int, _: Long)
+          }
+          part.map { case (i, (nb, sm, s)) => (i, score(nb, sm, genN, s)) }
+        }.collect()
+      val out = new Array[Double](tasks.size)
+      scored.foreach { case (i, v) => out(i) = v }
+      out
+    } finally bc.destroy()
+  }
+
+  /** (avg, config_id) ascending, as Spark orders them (no score is −0.0). */
+  private val byScoreThenId: Ordering[(Double, Int)] =
+    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+
   /** o01's seeded config draw, exposed for the o01d witness: two
     * `nextInt` calls per config off ONE java.util.Random(seed) stream
     * (nextInt(4) takes the power-of-2 branch, nextInt(3) the rejection
@@ -190,26 +290,32 @@ object SweepOptimizer {
     }
   }
 
+  /** Random sweep: nConfigs draws from the grid × seeds, every (config,
+    * seed) scored by one [[fitnessFanOut]], averaged per config (A17)
+    * in seed order with Spark's `avg`/`stddev_pop` update formulas
+    * ([[Moments]]), so equal configs get equal doubles on any
+    * partitioning. A local frame, best-first by (avg_score,
+    * config_id). */
   def randomSweep(spark: SparkSession, realReturns: Array[Double],
                   nBinsChoices: Seq[Int], smoothChoices: Seq[Double],
                   nConfigs: Int, seeds: Seq[Long], genN: Int,
                   seed: Long = 42L): DataFrame = {
-    import spark.implicits._
-    val configs = drawConfigs(nBinsChoices, smoothChoices, nConfigs, seed)
-    val tasks = for { (id, nb, sm) <- configs; s <- seeds } yield (id, nb, sm, s)
-    val bc = spark.sparkContext.broadcast(realReturns)
-    tasks.toDF("config_id", "n_bins", "smooth", "seed")
-      .repartition(math.min(tasks.size, 64))
-      .as[(Int, Int, Double, Long)]
-      .map { case (id, nb, sm, s) =>
-        (id, nb, sm, s, LocalFitness.grasyndaScore(bc.value, nb, sm, genN, s))
-      }
-      .toDF("config_id", "n_bins", "smooth", "seed", "score")
-      .groupBy(col("config_id"), col("n_bins"), col("smooth"))
-      .agg(avg(col("score")).as("avg_score"),
-        stddev_pop(col("score")).as("std_score"),
-        count(lit(1)).as("n_seeds"))
-      .orderBy(col("avg_score"), col("config_id"))
+    val configs = if (seeds.isEmpty) Seq.empty
+      else drawConfigs(nBinsChoices, smoothChoices, nConfigs, seed)
+    val scores = fitnessFanOut(spark, realReturns,
+      for { (_, nb, sm) <- configs; s <- seeds } yield (nb, sm, s),
+      genN, LocalFitness.Grasynda)
+    val rows = configs.zipWithIndex.map { case ((id, nb, sm), c) =>
+      val m = new Moments(scores, c * seeds.size, (c + 1) * seeds.size)
+      Row(id, nb, sm, m.mean, m.stdPop, seeds.size.toLong)
+    }.sortBy(r => (r.getDouble(3), r.getInt(0)))(byScoreThenId)
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("config_id", IntegerType, nullable = false),
+      StructField("n_bins", IntegerType, nullable = false),
+      StructField("smooth", DoubleType, nullable = false),
+      StructField("avg_score", DoubleType),
+      StructField("std_score", DoubleType),
+      StructField("n_seeds", LongType, nullable = false))))
   }
 
   /** Grid search with early seed-stopping, re-expressed Spark-first
@@ -238,51 +344,36 @@ object SweepOptimizer {
                           seeds: Seq[Long], genN: Int,
                           earlyAfter: Int = 2,
                           margin: Double = 1.3,
-                          score: (Array[Double], Int, Double, Int, Long) => Double
-                            = LocalFitness.grasyndaScore): DataFrame = {
+                          score: Fitness = LocalFitness.Grasynda): DataFrame = {
     import spark.implicits._
     require(earlyAfter >= 1 && earlyAfter <= seeds.size,
       s"earlyAfter must be in [1, ${seeds.size}]")
     val configs = (for { nb <- nBinsChoices; sm <- smoothChoices }
       yield (nb, sm)).zipWithIndex.map { case ((nb, sm), i) => (i, nb, sm) }
-    val bc = spark.sparkContext.broadcast(realReturns)
-    def run(tasks: Seq[(Int, Int, Double, Long)]): DataFrame =
-      tasks.toDF("config_id", "n_bins", "smooth", "seed")
-        .repartition(math.min(math.max(tasks.size, 1), 64))
-        .as[(Int, Int, Double, Long)]
-        .map { case (id, nb, sm, s) =>
-          (id, nb, sm, s, score(bc.value, nb, sm, genN, s))
-        }
-        .toDF("config_id", "n_bins", "smooth", "seed", "score")
+    // per-config score sums over `phaseSeeds`, folded in seed order
+    def run(cs: Seq[(Int, Int, Double)], phaseSeeds: Seq[Long]): Seq[Double] = {
+      val scores = fitnessFanOut(spark, realReturns,
+        for { (_, nb, sm) <- cs; s <- phaseSeeds } yield (nb, sm, s), genN, score)
+      scores.grouped(phaseSeeds.size).map(_.sum).toSeq
+    }
     val probeSeeds = seeds.take(earlyAfter)
     val restSeeds = seeds.drop(earlyAfter)
-    val probe = run(for { (id, nb, sm) <- configs; s <- probeSeeds }
-      yield (id, nb, sm, s))
-      .groupBy(col("config_id"), col("n_bins"), col("smooth"))
-      .agg(sum(col("score")).as("probe_sum"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2),
-        r.getDouble(3))).toSeq
-    val bestProbe = probe.map(_._4 / probeSeeds.size).min
+    val probe = configs.zip(run(configs, probeSeeds))
+    val bestProbe = probe.map(_._2 / probeSeeds.size).min
     val survivors = probe
-      .filter { case (_, _, _, ps) =>
-        ps / probeSeeds.size <= bestProbe * margin }
-      .map { case (id, nb, sm, _) => (id, nb, sm) }
+      .filter { case (_, ps) => ps / probeSeeds.size <= bestProbe * margin }
+      .map(_._1)
     val restScores =
-      if (restSeeds.isEmpty || survivors.isEmpty)
-        Map.empty[Int, (Double, Int)]
-      else run(for { (id, nb, sm) <- survivors; s <- restSeeds }
-          yield (id, nb, sm, s))
-        .groupBy(col("config_id"))
-        .agg(sum(col("score")).as("s"), count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getLong(2).toInt))
-        .toMap
-    probe.map { case (id, nb, sm, ps) =>
-      val (rs, rn) = restScores.getOrElse(id, (0.0, 0))
-      val n = probeSeeds.size + rn
-      (id, nb, sm, (ps + rs) / n, n, if (rn == 0 && restSeeds.nonEmpty) 1 else 0)
-    }.toDF("config_id", "n_bins", "smooth", "avg_score", "n_seeds",
+      if (restSeeds.isEmpty || survivors.isEmpty) Map.empty[Int, Double]
+      else survivors.map(_._1).zip(run(survivors, restSeeds)).toMap
+    probe.map { case ((id, nb, sm), ps) =>
+      val rs = restScores.get(id)
+      val n = probeSeeds.size + (if (rs.isDefined) restSeeds.size else 0)
+      (id, nb, sm, (ps + rs.getOrElse(0.0)) / n, n,
+        if (rs.isEmpty && restSeeds.nonEmpty) 1 else 0)
+    }.sortBy(r => (r._4, r._1))(byScoreThenId)
+      .toDF("config_id", "n_bins", "smooth", "avg_score", "n_seeds",
         "early_stopped")
-      .orderBy(col("avg_score"), col("config_id"))
   }
 
   /** Successive halving / ASHA-style sweep (beyond reference, o03):
@@ -304,19 +395,11 @@ object SweepOptimizer {
   def successiveHalving(spark: SparkSession, realReturns: Array[Double],
                         nBinsChoices: Seq[Int], smoothChoices: Seq[Double],
                         seeds: Seq[Long], genN: Int, eta: Int = 3,
-                        score: (Array[Double], Int, Double, Int, Long) => Double
-                          = LocalFitness.grasyndaScore): DataFrame = {
+                        score: Fitness = LocalFitness.Grasynda): DataFrame = {
     import spark.implicits._
     require(eta >= 2, "eta must be at least 2")
     val configs = (for { nb <- nBinsChoices; sm <- smoothChoices }
       yield (nb, sm)).zipWithIndex.map { case ((nb, sm), i) => (i, nb, sm) }
-    val bc = spark.sparkContext.broadcast(realReturns)
-    def run(tasks: Seq[(Int, Int, Double, Long)]): Array[(Int, Long, Double)] =
-      tasks.toDF("config_id", "n_bins", "smooth", "seed")
-        .repartition(math.min(math.max(tasks.size, 1), 64))
-        .as[(Int, Int, Double, Long)]
-        .map { case (id, nb, sm, s) => (id, s, score(bc.value, nb, sm, genN, s)) }
-        .collect()
     var alive = configs
     var cum = Map.empty[Int, Vector[(Long, Double)]]
     var consumed = 0
@@ -326,8 +409,7 @@ object SweepOptimizer {
     while (alive.nonEmpty && consumed < seeds.size) {
       val rungSeeds = seeds.slice(consumed,
         math.min(consumed + budget, seeds.size))
-      val scores = run(for { (id, nb, sm) <- alive; s <- rungSeeds }
-        yield (id, nb, sm, s))
+      val scores = rungScores(spark, realReturns, alive, rungSeeds, genN, score)
       for ((id, s, sc) <- scores)
         cum = cum.updated(id, cum.getOrElse(id, Vector.empty) :+ (s, sc))
       consumed += rungSeeds.size
@@ -349,6 +431,18 @@ object SweepOptimizer {
         rungReached(id).toLong)
     }.toDF("config_id", "n_bins", "smooth", "avg_score", "n_seeds",
         "rung_reached")
+  }
+
+  /** (config_id, seed, score) of every alive config × rung seed: one
+    * [[fitnessFanOut]] job per rung of [[successiveHalving]] and
+    * [[hyperband]]. */
+  private def rungScores(spark: SparkSession, realReturns: Array[Double],
+                         alive: Seq[(Int, Int, Double)], rungSeeds: Seq[Long],
+                         genN: Int, score: Fitness): Seq[(Int, Long, Double)] = {
+    val scores = fitnessFanOut(spark, realReturns,
+      for { (_, nb, sm) <- alive; s <- rungSeeds } yield (nb, sm, s), genN, score)
+    (for { (id, _, _) <- alive; s <- rungSeeds } yield (id, s)).zip(scores)
+      .map { case ((id, s), sc) => (id, s, sc) }
   }
 
   /** Deterministic md5 draw for Hyperband's per-bracket config
@@ -382,8 +476,7 @@ object SweepOptimizer {
   def hyperband(spark: SparkSession, realReturns: Array[Double],
                 nBinsChoices: Seq[Int], smoothChoices: Seq[Double],
                 seeds: Seq[Long], genN: Int, eta: Int = 3,
-                score: (Array[Double], Int, Double, Int, Long) => Double
-                  = LocalFitness.grasyndaScore): DataFrame = {
+                score: Fitness = LocalFitness.Grasynda): DataFrame = {
     import spark.implicits._
     require(eta >= 2, "eta must be at least 2")
     val bigR = seeds.size
@@ -391,13 +484,6 @@ object SweepOptimizer {
     val bigB = (smax + 1) * bigR
     val configs = (for { nb <- nBinsChoices; sm <- smoothChoices }
       yield (nb, sm)).zipWithIndex.map { case ((nb, sm), i) => (i, nb, sm) }
-    val bc = spark.sparkContext.broadcast(realReturns)
-    def run(tasks: Seq[(Int, Int, Double, Long)]): Array[(Int, Long, Double)] =
-      tasks.toDF("config_id", "n_bins", "smooth", "seed")
-        .repartition(math.min(math.max(tasks.size, 1), 64))
-        .as[(Int, Int, Double, Long)]
-        .map { case (id, nb, sm, s) => (id, s, score(bc.value, nb, sm, genN, s)) }
-        .collect()
     val rows = (smax to 0 by -1).flatMap { s =>
       val n = math.ceil(bigB.toDouble / bigR * math.pow(eta, s) / (s + 1))
         .toInt
@@ -414,8 +500,7 @@ object SweepOptimizer {
       while (alive.nonEmpty && consumed < bigR) {
         val rungSeeds = seeds.slice(consumed,
           math.min(consumed + budget, bigR))
-        val scores = run(for { (id, nb, sm) <- alive; sd <- rungSeeds }
-          yield (id, nb, sm, sd))
+        val scores = rungScores(spark, realReturns, alive, rungSeeds, genN, score)
         for ((id, sd, sc) <- scores)
           cum = cum.updated(id, cum.getOrElse(id, Vector.empty) :+ (sd, sc))
         consumed += rungSeeds.size
@@ -476,8 +561,9 @@ object SweepOptimizer {
     m
   }
 
-  /** Staged tournament GA (compact): per generation, the population is
-    * evaluated as ONE Spark job; selection/crossover/mutation are
+  /** Staged tournament GA (compact): per generation, the population's
+    * (individual, seed) tasks are one [[fitnessFanOut]] job and each
+    * individual's average folds in seed order; selection/crossover/mutation are
     * driver bookkeeping (O4 hall-of-fame tracked across generations).
     * `checkpointPath` persists {generation, population, best, stale}
     * after each generation and resumes from it when present — the
@@ -491,7 +577,6 @@ object SweepOptimizer {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
     val rnd = new scala.util.Random(seed)
-    val bc = spark.sparkContext.broadcast(realReturns)
     def randomInd(): (Int, Double) =
       (3 + rnd.nextInt(28), rnd.nextDouble() * 0.8)
     var pop = Vector.fill(popSize)(randomInd())
@@ -520,18 +605,14 @@ object SweepOptimizer {
       // numbers as an uninterrupted run (the reference checkpoint's
       // determinism contract, ga_optimizer.py resume path).
       val genRnd = new scala.util.Random(seed ^ (0x9E3779B97F4A7C15L * (g + 1)))
-      val tasks = for { (ind, i) <- pop.zipWithIndex; s <- seeds }
-        yield (i, ind._1, ind._2, s)
-      val scored = tasks.toDF("i", "n_bins", "smooth", "seed")
-        .repartition(math.min(tasks.size, 64))
-        .as[(Int, Int, Double, Long)]
-        .map { case (i, nb, sm, s) =>
-          (i, LocalFitness.grasyndaScore(bc.value, nb, sm, genN, s))
-        }
-        .toDF("i", "score").groupBy(col("i")).agg(avg(col("score")).as("s"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val ranked = pop.zipWithIndex.map { case (ind, i) => (ind, scored(i)) }
-        .sortBy(_._2)
+      val scores = fitnessFanOut(spark, realReturns,
+        for { (nb, sm) <- pop; s <- seeds } yield (nb, sm, s), genN,
+        LocalFitness.Grasynda)
+      // per-individual average in seed order; the stable sort ranks
+      // equal averages (elitism clones) by population index
+      val ranked = pop.zipWithIndex.map { case (ind, i) =>
+        (ind, new Moments(scores, i * seeds.size, (i + 1) * seeds.size).mean)
+      }.sortBy(_._2)
       if (ranked.head._2 < best._2 - 1e-12) { best = ranked.head; stale = 0 }
       else stale += 1
       history += ((g, ranked.head._1._1, ranked.head._1._2, ranked.head._2))

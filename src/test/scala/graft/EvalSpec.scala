@@ -470,39 +470,6 @@ class EvalSpec extends AnyFunSuite {
     }
   }
 
-  /** Jobs submitted by `body`'s thread, and the executed plans of the
-    * SQL executions that ran while it did. */
-  private def traced[T](body: => T): (T, Int, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val sc = spark.sparkContext
-    val group = s"traced-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val jl = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val ql = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    PlanBridge.awaitListeners(spark)
-    sc.addSparkListener(jl); spark.listenerManager.register(ql)
-    sc.setJobGroup(group, group)
-    try {
-      val r = body
-      PlanBridge.awaitListeners(spark)
-      (r, jobs.get, plans.toArray(Array.empty[String]).toSeq)
-    } finally {
-      sc.clearJobGroup(); sc.removeSparkListener(jl); spark.listenerManager.unregister(ql)
-    }
-  }
-
   test("one-series evaluators on CSV inputs run one job and plan no exchange; " +
        "grouped ones keep one keyed exchange") {
     val dir = java.nio.file.Files.createTempDirectory("graftcsv2").toString
@@ -516,9 +483,9 @@ class EvalSpec extends AnyFunSuite {
     for ((what, run) <- Seq[(String, () => Any)](
         "evaluate" -> (() => DistributionEvaluator.evaluate(real, synth, order, "typical_price")),
         "score" -> (() => CompositeMetric.score(real, synth, order, "typical_price")))) {
-      val (_, jobs, plans) = traced(run())
-      assert(jobs === 1, what)
-      assert(plans.nonEmpty && plans.forall(!_.contains("Exchange")), s"$what:\n$plans")
+      val t = SparkSpec.traced(run())
+      assert(t.jobs === 1, what)
+      assert(t.plans.nonEmpty && t.plans.forall(!_.contains("Exchange")), s"$what:\n${t.plans}")
     }
     val (gReal, gSynth) = panel
     for ((what, df) <- Seq(
@@ -526,7 +493,7 @@ class EvalSpec extends AnyFunSuite {
           order, "typical_price"),
         "scoreGrouped" -> CompositeMetric.scoreGrouped(gReal, gSynth, "uid", order,
           "typical_price"))) {
-      val (_, _, plans) = traced(df.collect())
+      val plans = SparkSpec.traced(df.collect()).plans
       assert(plans.length === 1, what)
       // the adaptive plan prints its final plan before the initial one
       val exchanges = "Exchange [a-zA-Z]+".r

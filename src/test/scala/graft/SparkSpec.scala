@@ -29,6 +29,45 @@ object SparkSpec {
     }
   }
 
+  /** What [[traced]] saw while its body ran. */
+  final case class Trace[T](value: T, jobs: Int, tasks: Int, plans: Seq[String])
+
+  /** Jobs (and their tasks) submitted by `body`'s thread, and the
+    * executed plans of the SQL executions that ran while it did. */
+  def traced[T](body: => T): Trace[T] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graftbridge.PlanBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val group = s"traced-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
+        }
+    }
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    PlanBridge.awaitListeners(spark)
+    sc.addSparkListener(jl); spark.listenerManager.register(ql)
+    sc.setJobGroup(group, group)
+    try {
+      val r = body
+      PlanBridge.awaitListeners(spark)
+      Trace(r, jobs.get, tasks.get, plans.toArray(Array.empty[String]).toSeq)
+    } finally {
+      sc.clearJobGroup(); sc.removeSparkListener(jl); spark.listenerManager.unregister(ql)
+    }
+  }
+
   /** Seeded random-walk price fixture mirroring the reference's test
     * fixture (tests/test_plugins.py:11-21): 1.3 + cumsum(N(0,1)*5e-4),
     * 4-hour timestamps from 2020-01-01. */
