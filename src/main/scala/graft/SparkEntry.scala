@@ -1261,9 +1261,12 @@ object SparkEntry {
       graft.opt.SweepOptimizer.randomSweep(s, rets,
         nBinsChoices = Seq(5, 8, 10, 15), smoothChoices = Seq(0.0, 0.2, 0.5),
         nConfigs = 12, seeds = Seq(1L, 2L), genN = 500)
+        // a sweep returns a local frame: re-sort it on the rounded score
+        // in one partition, with no range exchange (o02–o04 and the
+        // witnesses alike)
         .select(col("config_id"), col("n_bins"), col("smooth"),
           round(col("avg_score"), 6).as("avg_score"), col("n_seeds"))
-        .orderBy(col("avg_score"), col("config_id"))
+        .coalesce(1).sortWithinPartitions(col("avg_score"), col("config_id"))
     }),
 
     // ── o01 WITNESS: the random sweep's seeded CONFIG DRAW — the one
@@ -1296,7 +1299,7 @@ object SparkEntry {
         .select(col("config_id"), col("n_bins"), col("smooth"),
           round(col("avg_score"), 6).as("avg_score"), col("n_seeds"),
           col("early_stopped"))
-        .orderBy(col("avg_score"), col("config_id"))
+        .coalesce(1).sortWithinPartitions(col("avg_score"), col("config_id"))
     }),
 
     // ── o02 WITNESS: the grid-earlystop two-phase SELECTION arithmetic
@@ -1318,7 +1321,7 @@ object SparkEntry {
         .select(col("config_id"), col("n_bins"), col("smooth"),
           round(col("avg_score"), 6).as("avg_score"), col("n_seeds"),
           col("rung_reached"))
-        .orderBy(col("avg_score"), col("config_id"))
+        .coalesce(1).sortWithinPartitions(col("avg_score"), col("config_id"))
     }),
 
     // ── o04: Hyperband — three successive-halving brackets hedging
@@ -1334,7 +1337,7 @@ object SparkEntry {
         .select(col("bracket"), col("config_id"), col("n_bins"),
           col("smooth"), round(col("avg_score"), 6).as("avg_score"),
           col("n_seeds"), col("rung_reached"))
-        .orderBy(col("bracket"), col("avg_score"), col("config_id"))
+        .coalesce(1).sortWithinPartitions(col("bracket"), col("avg_score"), col("config_id"))
     }),
 
     // ── o04f: all three brackets' draw/rung/promotion arithmetic
@@ -1347,7 +1350,7 @@ object SparkEntry {
         .select(col("bracket"), col("config_id"), col("n_bins"),
           col("smooth"), round(col("avg_score"), 6).as("avg_score"),
           col("n_seeds"), col("rung_reached"))
-        .orderBy(col("bracket"), col("avg_score"), col("config_id"))
+        .coalesce(1).sortWithinPartitions(col("bracket"), col("avg_score"), col("config_id"))
     }),
 
     // ── o03f: the rung/promotion arithmetic replayed over the md5
@@ -1361,7 +1364,7 @@ object SparkEntry {
         .select(col("config_id"), col("n_bins"), col("smooth"),
           round(col("avg_score"), 6).as("avg_score"), col("n_seeds"),
           col("rung_reached"))
-        .orderBy(col("avg_score"), col("config_id"))
+        .coalesce(1).sortWithinPartitions(col("avg_score"), col("config_id"))
     }),
 
     "o02f_grid_earlystop_core" -> ((s, dir) => {
@@ -1373,7 +1376,7 @@ object SparkEntry {
           round(col("avg_score"), 6).as("avg_score"),
           col("n_seeds").cast("long").as("n_seeds"),
           col("early_stopped").cast("long").as("early_stopped"))
-        .orderBy(col("avg_score"), col("config_id"))
+        .coalesce(1).sortWithinPartitions(col("avg_score"), col("config_id"))
     }),
 
     // ── A17/§2.12 TRAINING witness: the sweep's per-candidate fitness —

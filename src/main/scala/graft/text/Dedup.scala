@@ -1002,24 +1002,24 @@ object Dedup {
     // fixed cost each (join + eager checkpoint + count), so a 500-pair
     // graph spends seconds on scheduling alone. The near-dup pair set
     // after LSH + exact verify is usually tiny relative to the corpus;
-    // probe SIZE first with an early-terminating limit+count over the
-    // checkpointed blocks (a count ships one long per partition, never
-    // rows), and only when the graph is confirmed small collect the
-    // edges — 2M boxed GenericRows are ~100 bytes each, so a blind
-    // collect-then-check would hold ~200 MB of driver transients on
-    // every LARGE graph before abandoning the fast path. A bigger
-    // graph pays one block-read count and goes distributed (the
-    // 100 TB shape).
-    def graphFitsDriver: Boolean =
-      pairs.select(col(idA)).limit(driverEdgeLimit + 1).count() <= driverEdgeLimit
+    // probe SIZE first with an exact count over the checkpointed blocks
+    // (a count ships one long per partition, never rows), and only when
+    // the graph is confirmed small collect the edges — 2M boxed
+    // GenericRows are ~100 bytes each, so a blind collect-then-check
+    // would hold ~200 MB of driver transients on every LARGE graph
+    // before abandoning the fast path. A bigger graph pays one
+    // block-read count and goes distributed (the 100 TB shape). Not a
+    // `limit(n + 1).count()`: a limit names its generated counter from
+    // a JVM-wide sequence (`_limit_counter_N`), so that class misses
+    // the codegen cache and recompiled on every call.
+    lazy val graphFitsDriver: Boolean = pairs.count() <= driverEdgeLimit
     if (castLong && graphFitsDriver) {
       val probe = pairs
-        .select(col(idA).cast("long"), col(idB).cast("long"))
-        .limit(driverEdgeLimit + 1).collect()
+        .select(col(idA).cast("long"), col(idB).cast("long")).collect()
       // null ids (a non-numeric id surviving the cast) fall through to
       // the distributed path rather than NPE-ing here — same contract
       // either way (castLong requires integral ids), one failure mode
-      if (probe.length <= driverEdgeLimit && !probe.exists(_.anyNull)) {
+      if (!probe.exists(_.anyNull)) {
         val parent = new java.util.HashMap[Long, Long]()
         def find(x: Long): Long = {
           var r = x
@@ -1057,14 +1057,13 @@ object Dedup {
             org.apache.spark.sql.types.ShortType,
             org.apache.spark.sql.types.ByteType).contains(f.dataType)) =>
         val probe: Array[org.apache.spark.sql.Row] =
-          if (graphFitsDriver)
-            pairs.select(col(idA), col(idB)).limit(driverEdgeLimit + 1).collect()
+          if (graphFitsDriver) pairs.select(col(idA), col(idB)).collect()
           else null // large graph: skip the row collect, go distributed
         // an entirely-null composite id makes getStruct return null, so
         // check isNullAt first: null ids fall through to the distributed
         // path (the long branch's contract), never NPE here
-        if (probe != null && probe.length <= driverEdgeLimit &&
-            !probe.exists(r => r.isNullAt(0) || r.isNullAt(1) ||
+        if (probe != null && !probe.exists(r =>
+              r.isNullAt(0) || r.isNullAt(1) ||
               r.getStruct(0).anyNull || r.getStruct(1).anyNull)) {
           import scala.math.Ordering.Implicits.seqOrdering
           val ord = implicitly[Ordering[Vector[Long]]]

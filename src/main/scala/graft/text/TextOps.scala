@@ -1629,16 +1629,17 @@ object TextOps {
     // evaluation): both an eager localCheckpoint and a lazy persist
     // measured SLOWER end-to-end at sf0.1 (t05 0.9 s live vs 1.5–2.1 s
     // materialized — cache build + row conversion outweigh the cheap
-    // re-agg and break whole-stage pipelining). The probe itself is
-    // O(threshold) rows by design, so at 100 TB the extra evaluation is
-    // one map-side-combinable agg over the corpus — bounded and
+    // re-agg and break whole-stage pipelining). The probe is a count
+    // of the agg's output, so at 100 TB the extra evaluation is one
+    // map-side-combinable agg over the corpus — bounded and
     // shuffle-light, not a scan blowup.
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    // bounded probe, not a full count: stops scanning the agg output
-    // past the threshold, so the guard job is O(threshold) rows even
-    // on an open-vocabulary corpus
-    val vocabSmall =
-      dfreq.select(col("token")).limit(10_000_001).count() <= 10_000_000L
+    // an exact count, not a `limit(n + 1).count()`: the agg reads its
+    // whole input either way, a count ships one long per partition
+    // where the limit shipped up to n rows each, and a limit's
+    // generated class names its counter from a JVM-wide sequence, so it
+    // missed the codegen cache and recompiled on every call
+    val vocabSmall = dfreq.count() <= 10_000_000L
     val dfreqSide = if (vocabSmall) broadcast(dfreq) else dfreq
     val nDocs = df.agg(countDistinct(col(id)).as("_n"))
     val scored = tf.join(dfreqSide, "token").crossJoin(broadcast(nDocs))

@@ -57,29 +57,50 @@ class CurateSpec extends AnyFunSuite {
     assert(got === java.nio.file.Files.readString(path).trim)
   }
 
+  /** A small chain over the sf0.001 documents, writing under `dir`:
+    * minhash signatures, connected components, semantic vectors and
+    * substring spans all local-checkpoint inside it. */
+  private def curate(dir: String, extra: Map[String, String] = Map.empty): Unit =
+    Cli.run(spark, GraftConfig.defaults ++ Map(
+      "mode" -> "curate",
+      "input_docs" -> s"${SparkSpec.sfDir}/documents.parquet",
+      "near_threshold" -> "0.5", "semantic_threshold" -> "0.9",
+      "max_dup_span" -> "30", "gopher_min_stop" -> "1",
+      "chunk_window" -> "120", "chunk_stride" -> "80",
+      "output" -> s"$dir/chunks", "metrics_out" -> s"$dir/funnel.json") ++ extra)
+
   test("CLI curate releases every block it persisted or checkpointed, " +
        "also when it throws") {
     val sc = spark.sparkContext
     def blocks = sc.getPersistentRDDs.keySet.toSet
     val before = blocks
     val dir = java.nio.file.Files.createTempDirectory("graftrelease").toString
-    def run(extra: Map[String, String]): Unit =
-      Cli.run(spark, GraftConfig.defaults ++ Map(
-        "mode" -> "curate",
-        "input_docs" -> s"${SparkSpec.sfDir}/documents.parquet",
-        // minhash signatures, connected components, semantic vectors and
-        // substring spans all local-checkpoint inside the chain
-        "near_threshold" -> "0.5", "semantic_threshold" -> "0.9",
-        "max_dup_span" -> "30", "gopher_min_stop" -> "1",
-        "chunk_window" -> "120", "chunk_stride" -> "80",
-        "output" -> s"$dir/chunks", "metrics_out" -> s"$dir/funnel.json") ++ extra)
-    run(Map.empty)
+    curate(dir)
     assert(blocks === before)
     // a mixture weight on a source with no documents is infeasible and
     // throws after the dedup stages have checkpointed and persisted
-    val e = intercept[IllegalArgumentException](run(Map(
+    val e = intercept[IllegalArgumentException](curate(dir, Map(
       "mixture_target" -> "src0:0.5,no_such_source:0.5", "source_col" -> "source")))
     assert(e.getMessage.contains("infeasible"), e.getMessage)
     assert(blocks === before)
+  }
+
+  test("a second curate run in the session compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the factory's codegen settings reach the shared session
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+      graft.core.Tables.CodegenCacheEntries.toString)
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") === "false")
+    def compiles(dir: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      curate(dir)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graftreuse").toString
+    compiles(s"$tmp/first")
+    // every class of the first run is still cached: none was evicted,
+    // and none carries a name that changes per call (a limit's counter,
+    // an adaptive stage's codegen id)
+    assert(compiles(s"$tmp/second") === 0L)
   }
 }

@@ -151,6 +151,10 @@ class RangeJoinSketchSpec extends AnyFunSuite {
     try {
       val s2 = SparkSession.builder().master("local[4]")
         .withExtensions(new graft.GraftExtensions).getOrCreate()
+      // a session built beside the factory's shares its SparkContext,
+      // so it carries the factory's codegen cache size too
+      assert(s2.conf.get("spark.sql.codegen.cache.maxEntries") ===
+        graft.core.Tables.CodegenCacheEntries.toString)
       val df = s2.sql(
         "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       assert(df.collect()(0).getDouble(0) === 11.0)
