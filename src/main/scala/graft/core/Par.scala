@@ -47,27 +47,21 @@ object Par {
     (fs.map(settle) :+ last).map(_.get)
   }
 
+  /** Typed two- to four-leg forms of [[seq]]: the same legs, threads and
+    * settle rule. */
   def par2[A, B](a: => A, b: => B): (A, B) = {
-    val fa = Future(a)(pool)
-    val rb = Try(b)
-    (settle(fa).get, rb.get)
+    val Seq(ra, rb) = seq(Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 
   def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val fa = Future(a)(pool)
-    val fb = Future(b)(pool)
-    val rc = Try(c)
-    val (ra, rb) = (settle(fa), settle(fb))
-    (ra.get, rb.get, rc.get)
+    val Seq(ra, rb, rc) = seq(Seq(() => a, () => b, () => c))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B], rc.asInstanceOf[C])
   }
 
   def par4[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
-    val fa = Future(a)(pool)
-    val fb = Future(b)(pool)
-    val fc = Future(c)(pool)
-    val rd = Try(d)
-    val (ra, rb, rc) = (settle(fa), settle(fb), settle(fc))
-    (ra.get, rb.get, rc.get, rd.get)
+    val Seq(ra, rb, rc, rd) = seq(Seq(() => a, () => b, () => c, () => d))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B], rc.asInstanceOf[C], rd.asInstanceOf[D])
   }
 
   private def settle[A](f: Future[A]): Try[A] = {

@@ -71,12 +71,11 @@ object MlpDecoder {
   * window at a random real price, reconstruct prices (W2), concat,
   * truncate to n, attach fixed-interval timestamps.
   *
-  * Scale design (SURVEY §3.1): windows are INDEPENDENT ⇒
-  * `spark.range(nWindows)` → mapPartitions forward pass with the
-  * decoder + anchor pool broadcast → explode to rows. RNG is derived
-  * per-window from (seed, windowIdx), so output is deterministic under
-  * any partitioning / task retry — the determinism contract survives
-  * the cluster.
+  * Scale design (SURVEY §3.1): windows are INDEPENDENT ⇒ one
+  * [[GenOps.windowedDecode]] pass (`spark.range` → mapPartitions
+  * forward pass, per-window RNG from (seed, windowIdx)), so output is
+  * deterministic under any partitioning / task retry — the determinism
+  * contract survives the cluster.
   */
 object DecoderGenerator {
 
@@ -106,79 +105,33 @@ object DecoderGenerator {
                           nTemporal: Int = 6,
                           startEpochSec: Long = 1577836800L,
                           intervalHours: Int = 4): DataFrame = {
-    import spark.implicits._
     val windowSize = decoder.outputDim
     val latent = decoder.latentDim - nTemporal
     require(latent > 0, "decoder input smaller than the temporal width")
-    val nWindows = n / windowSize + 2
-    val bcD = spark.sparkContext.broadcast(decoder)
-    val bcA = spark.sparkContext.broadcast(anchors)
-    val rows = spark.range(nWindows).as[Long].mapPartitions { idxs =>
-      val dec = bcD.value; val anc = bcA.value
-      idxs.flatMap { idx =>
-        val rnd = new scala.util.Random(seed * 1000003L + idx * 7919L)
+    withTimestamps(GenOps.windowedDecode(spark, decoder, anchors, n, seed, windowSize) {
+      (dec, rnd, idx) =>
         val lastTs = startEpochSec +
           ((idx + 1) * windowSize - 1) * (intervalHours * 3600L)
-        val z = Array.fill(latent)(rnd.nextGaussian()) ++ temporalOf(lastTs)
-        val rets = dec.forward(z)
-        val mean = rets.sum / rets.length
-        var i = 0
-        while (i < rets.length) { rets(i) -= mean; i += 1 }
-        val anchor = anc(rnd.nextInt(anc.length))
-        var logP = math.log(anchor)
-        val out = new Array[(Long, Double)](rets.length)
-        i = 0
-        while (i < rets.length) {
-          logP += rets(i)
-          out(i) = (idx * windowSize + i, math.exp(logP))
-          i += 1
-        }
-        out
-      }
-    }.toDF("rn", "typical_price")
-    rows.filter(col("rn") < n)
-      .withColumn("DATE_TIME", timestamp_seconds(
-        lit(startEpochSec) + col("rn") * (intervalHours * 3600)))
-      .select(col("rn"), col("DATE_TIME"), col("typical_price"))
+        dec.forward(Array.fill(latent)(rnd.nextGaussian()) ++ temporalOf(lastTs))
+    }, startEpochSec, intervalHours)
   }
 
   def generate(spark: SparkSession, decoder: MlpDecoder,
                anchors: Array[Double], n: Int, seed: Long,
                startEpochSec: Long = 1577836800L, // 2020-01-01
                intervalHours: Int = 4): DataFrame = {
-    import spark.implicits._
-    val windowSize = decoder.outputDim
     val latent = decoder.latentDim
-    val nWindows = n / windowSize + 2 // ref :118
-    val bcD = spark.sparkContext.broadcast(decoder)
-    val bcA = spark.sparkContext.broadcast(anchors)
-    val rows = spark.range(nWindows).as[Long].mapPartitions { idxs =>
-      val dec = bcD.value; val anc = bcA.value
-      idxs.flatMap { idx =>
-        // per-window deterministic RNG: stable under repartitioning
-        val rnd = new scala.util.Random(seed * 1000003L + idx * 7919L)
-        val z = Array.fill(latent)(rnd.nextGaussian())
-        val rets = dec.forward(z)
-        // W9 mean-center ("zero-mean drift correction", ref :146-149)
-        val mean = rets.sum / rets.length
-        var i = 0
-        while (i < rets.length) { rets(i) -= mean; i += 1 }
-        // anchor at a random real price (ref :141-154)
-        val anchor = anc(rnd.nextInt(anc.length))
-        var logP = math.log(anchor)
-        val out = new Array[(Long, Double)](rets.length)
-        i = 0
-        while (i < rets.length) {
-          logP += rets(i)
-          out(i) = (idx * windowSize + i, math.exp(logP))
-          i += 1
-        }
-        out
-      }
-    }.toDF("rn", "typical_price")
-    rows.filter(col("rn") < n)
-      .withColumn("DATE_TIME", timestamp_seconds(
+    withTimestamps(GenOps.windowedDecode(spark, decoder, anchors, n, seed,
+      decoder.outputDim) { (dec, rnd, _) =>
+      dec.forward(Array.fill(latent)(rnd.nextGaussian()))
+    }, startEpochSec, intervalHours)
+  }
+
+  /** Fixed-interval timestamps from `startEpochSec`:
+    * (rn, DATE_TIME, typical_price). */
+  private def withTimestamps(rows: DataFrame, startEpochSec: Long,
+                             intervalHours: Int): DataFrame =
+    rows.withColumn("DATE_TIME", timestamp_seconds(
         lit(startEpochSec) + col("rn") * (intervalHours * 3600)))
       .select(col("rn"), col("DATE_TIME"), col("typical_price"))
-  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.series.SeriesOps
+import graft.series.{SeriesOps, SeriesSpec}
 
 /** Fitted Grasynda model: quantile bin edges (interior), row-stochastic
   * transition matrix, per-bin value pools (sorted for determinism),
@@ -214,59 +214,37 @@ object Grasynda {
       SeriesOps.runs(part)(_._1) { (sid, run) =>
         val vs = run.map(_._3).toArray
         if (vs.length < minRows) Iterator.empty
-        else {
-          val m = fitArray(vs, nBins)
-          val rnd = new scala.util.Random(seed + sid)
-          var state = sampleCat(m.startProbs, rnd.nextDouble())
-          val out = new Array[(Long, Int, Double)](n)
-          var i = 0
-          while (i < n) {
-            val pool = m.pools.getOrElse(state, m.pools(m.pools.keys.min))
-            out(i) = (sid, i, pool(rnd.nextInt(pool.length)))
-            state = sampleCat(m.transition(state), rnd.nextDouble())
-            i += 1
-          }
-          out.iterator
-        }
+        else walkRets(fitArray(vs, nBins), seed + sid, n).iterator.zipWithIndex
+          .map { case (r, i) => (sid, i, r) }
       }
     }.toDF(seriesCol, "rn", "ret")
-    val w = Window.partitionBy(col(seriesCol)).orderBy(col("rn"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    rows.withColumn("typical_price",
-      lit(initialPrice) * exp(sum(col("ret")).over(w)))
+    SeriesOps.reconstructPrices(rows, SeriesSpec(Seq(seriesCol), Seq("rn")), "ret",
+      lit(initialPrice), "typical_price")
   }
 
-  private def sampleCat(probs: Array[Double], u: Double): Int = {
-    var acc = 0.0; var i = 0
-    while (i < probs.length - 1) {
-      acc += probs(i)
-      if (u < acc) return i
-      i += 1
-    }
-    probs.length - 1
-  }
-
-  /** Seed-deterministic generation: driver walk → W2 reconstruction.
-    * Output: (rn, ret, typical_price). */
-  def generate(spark: SparkSession, model: GrasyndaModel, seed: Long,
-               n: Int, initialPrice: Double): DataFrame = {
-    import spark.implicits._
+  /** The seeded Markov walk from `Random(seed)`: a start state, then per
+    * step a draw from the state's pool (the lowest state's pool when the
+    * state has none) and a transition draw. Shared by the single-series
+    * [[generate]] and the per-series [[generateGrouped]]. */
+  def walkRets(model: GrasyndaModel, seed: Long, n: Int): Array[Double] = {
     val rnd = new scala.util.Random(seed)
-    var state = sampleCat(model.startProbs, rnd.nextDouble())
+    var state = GenOps.sampleCat(model.startProbs, rnd.nextDouble())
     val rets = new Array[Double](n)
     var i = 0
     while (i < n) {
       val pool = model.pools.getOrElse(state,
         model.pools(model.pools.keys.min))
       rets(i) = pool(rnd.nextInt(pool.length))
-      state = sampleCat(model.transition(state), rnd.nextDouble())
+      state = GenOps.sampleCat(model.transition(state), rnd.nextDouble())
       i += 1
     }
-    // one partition: the running-sum window below then plans no exchange
-    val retsDf = rets.toIndexedSeq.zipWithIndex
-      .map { case (r, j) => (j, r) }.toDF("rn", "ret").coalesce(1)
-    val w = Window.orderBy(col("rn")).rowsBetween(Window.unboundedPreceding, 0)
-    retsDf.withColumn("typical_price",
-      lit(initialPrice) * exp(sum(col("ret")).over(w)))
+    rets
   }
+
+  /** Seed-deterministic generation: [[walkRets]] on the driver, then W2
+    * reconstruction over its one partition. Output: (rn, ret,
+    * typical_price). */
+  def generate(spark: SparkSession, model: GrasyndaModel, seed: Long,
+               n: Int, initialPrice: Double): DataFrame =
+    GenOps.walkPrices(spark, walkRets(model, seed, n), initialPrice)
 }

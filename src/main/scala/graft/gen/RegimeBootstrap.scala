@@ -28,7 +28,8 @@ final case class RegimeBootstrapModel(
   * passes: W5 rolling vol → A4/A5 quantile digitize → run segmentation
   * (lag-change flag + running sum) → one groupBy(segment) with
   * sort_array(collect_list) per block. Walk on driver (SURVEY §7.4.2),
-  * reconstruction distributed.
+  * smoothing and reconstruction are Spark window scans over the walk's
+  * one partition.
   */
 object RegimeBootstrap {
 
@@ -192,25 +193,19 @@ object RegimeBootstrap {
       .orderBy(col("segment"))
   }
 
-  private def sampleCat(probs: Array[Double], u: Double): Int = {
-    var acc = 0.0; var i = 0
-    while (i < probs.length - 1) {
-      acc += probs(i); if (u < acc) return i
-      i += 1
-    }
-    probs.length - 1
-  }
-
   /** Seed-deterministic generation: regime walk samples whole blocks;
     * boundary smoothing and price reconstruction run as Spark window
-    * ops. Output: (rn, ret, typical_price). */
+    * ops over the walk's one partition. Output: (rn, ret,
+    * typical_price). */
   def generate(spark: SparkSession, model: RegimeBootstrapModel, seed: Long,
                n: Int, initialPrice: Double,
                smoothWeight: Double = 0.5): DataFrame = {
     import spark.implicits._
+    require(model.blocks.nonEmpty, "regime bootstrap model has no blocks: " +
+      "fit it on a series with at least minBlock returns")
     val rnd = new scala.util.Random(seed)
     val regimesWithBlocks = model.blocks.keys.toArray.sorted
-    var regime = sampleCat(model.startProbs, rnd.nextDouble())
+    var regime = GenOps.sampleCat(model.startProbs, rnd.nextDouble())
     val rows = Vector.newBuilder[(Int, Double, Boolean)]
     var i = 0
     while (i < n) {
@@ -224,16 +219,14 @@ object RegimeBootstrap {
         rows += ((i, block(j), j == 0))
         i += 1; j += 1
       }
-      regime = sampleCat(model.transition(regime), rnd.nextDouble())
+      regime = GenOps.sampleCat(model.transition(regime), rnd.nextDouble())
     }
-    val df = rows.result().toDF("rn", "ret_raw", "is_block_start")
+    val df = rows.result().toDF("rn", "ret_raw", "is_block_start").coalesce(1)
     val spec = SeriesSpec(Nil, Seq("rn"))
     val smoothed = SeriesOps.blockSmooth(
       df.withColumnRenamed("ret_raw", "ret"), spec, "ret",
       col("is_block_start"), smoothWeight, "ret_s")
-    smoothed
-      .withColumn("typical_price",
-        lit(initialPrice) * exp(sum(col("ret_s")).over(spec.running)))
+    SeriesOps.reconstructPrices(smoothed, spec, "ret_s", lit(initialPrice), "typical_price")
       .select(col("rn"), col("ret_s").as("ret"), col("typical_price"))
   }
 }

@@ -178,7 +178,6 @@ object RegimeConditional {
                              orderCols: Seq[String], price: String,
                              nRegimes: Int = 3, volWindow: Int = 24,
                              minRows: Int = 10): DataFrame = {
-    import graft.series.SeriesOps
     val spec = SeriesSpec(Seq(seriesCol), orderCols)
     val rets = SeriesOps.logReturns(prices, spec, price, "ret")
       .filter(col("ret").isNotNull)
@@ -356,15 +355,6 @@ object RegimeConditional {
       dataMean = priceStats.getDouble(0), dataStd = priceStats.getDouble(1))
   }
 
-  private def sampleCat(probs: Array[Double], u: Double): Int = {
-    var acc = 0.0; var i = 0
-    while (i < probs.length - 1) {
-      acc += probs(i); if (u < acc) return i
-      i += 1
-    }
-    probs.length - 1
-  }
-
   /** The pure seeded walk (ref :152-186): regime path from the
     * transition matrix, then AR(1) returns per regime (G5: GARCH σ²
     * recursion instead of constant σ). Shared by the single-series
@@ -372,10 +362,10 @@ object RegimeConditional {
   def walkRets(model: RegimeModel, seed: Long, n: Int): Array[Double] = {
     val rnd = new scala.util.Random(seed)
     val regimes = new Array[Int](n)
-    regimes(0) = sampleCat(model.startProbs, rnd.nextDouble())
+    regimes(0) = GenOps.sampleCat(model.startProbs, rnd.nextDouble())
     var t = 1
     while (t < n) {
-      regimes(t) = sampleCat(model.transition(regimes(t - 1)), rnd.nextDouble())
+      regimes(t) = GenOps.sampleCat(model.transition(regimes(t - 1)), rnd.nextDouble())
       t += 1
     }
     val rets = new Array[Double](n)
@@ -407,16 +397,8 @@ object RegimeConditional {
     * driver, then W2 reconstruction in Spark over its one partition.
     * Output: (rn, ret, typical_price). */
   def generate(spark: SparkSession, model: RegimeModel, seed: Long, n: Int,
-               initialPrice: Double): DataFrame = {
-    import spark.implicits._
-    // one partition: the running-sum window below then plans no exchange
-    val df = walkRets(model, seed, n).toIndexedSeq.zipWithIndex
-      .map { case (r, i) => (i, r) }.toDF("rn", "ret").coalesce(1)
-    val w = Window.orderBy(col("rn"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    df.withColumn("typical_price",
-      lit(initialPrice) * exp(sum(col("ret")).over(w)))
-  }
+               initialPrice: Double): DataFrame =
+    GenOps.walkPrices(spark, walkRets(model, seed, n), initialPrice)
 
   /** PER-SERIES seeded generation: every series id in `users` draws its
     * own [[walkRets]] from `Random(seed + sid)` — deterministic per
@@ -439,9 +421,7 @@ object RegimeConditional {
             .map { case (r, i) => (sid, i, r) }
         }
       }.toDF(seriesCol, "rn", "ret")
-    val w = Window.partitionBy(col(seriesCol)).orderBy(col("rn"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    rows.withColumn("typical_price",
-      lit(initialPrice) * exp(sum(col("ret")).over(w)))
+    SeriesOps.reconstructPrices(rows, SeriesSpec(Seq(seriesCol), Seq("rn")), "ret",
+      lit(initialPrice), "typical_price")
   }
 }

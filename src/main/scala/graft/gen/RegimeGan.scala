@@ -1,7 +1,6 @@
 package graft.gen
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.series.{SeriesOps, SeriesSpec}
@@ -27,7 +26,8 @@ final case class RegimeGanModel(
   * the regime's GAN (parametric Normal fallback when a regime was too
   * short to train — same as the reference).
   * PELT + ward + the tiny GAN fits run on the driver over the bounded
-  * series (SURVEY §7.4.2); reconstruction (W2) is distributed.
+  * series (SURVEY §7.4.2); reconstruction (W2) is a Spark window scan
+  * over the walk's one partition.
   */
 object RegimeGan {
 
@@ -141,24 +141,15 @@ object RegimeGan {
       "mean_ret", "std_ret", "skew", "ac1")
   }
 
-  private def sampleCat(probs: Array[Double], u: Double): Int = {
-    var acc = 0.0; var i = 0
-    while (i < probs.length - 1) {
-      acc += probs(i); if (u < acc) return i
-      i += 1
-    }
-    probs.length - 1
-  }
-
   /** Chunked generation (ref :339-380): per seq_len chunk, sample the
     * active regime's trained GAN (z∼N(0,I) → G(z) → denormalize) or the
     * parametric Normal fallback when that regime has no GAN; regime
-    * chained by the transition matrix; W2 reconstruction distributed. */
+    * chained by the transition matrix; W2 reconstruction over the
+    * walk's one partition. */
   def generate(spark: SparkSession, model: RegimeGanModel, seed: Long,
                n: Int, initialPrice: Double): DataFrame = {
-    import spark.implicits._
     val rnd = new scala.util.Random(seed)
-    var regime = sampleCat(model.startProbs, rnd.nextDouble())
+    var regime = GenOps.sampleCat(model.startProbs, rnd.nextDouble())
     val rets = new Array[Double](n)
     var i = 0
     while (i < n) {
@@ -181,12 +172,8 @@ object RegimeGan {
             i += 1; j += 1
           }
       }
-      regime = sampleCat(model.transition(regime), rnd.nextDouble())
+      regime = GenOps.sampleCat(model.transition(regime), rnd.nextDouble())
     }
-    val df = rets.toIndexedSeq.zipWithIndex.map { case (r, idx) => (idx, r) }
-      .toDF("rn", "ret")
-    val w = Window.orderBy(col("rn")).rowsBetween(Window.unboundedPreceding, 0)
-    df.withColumn("typical_price",
-      lit(initialPrice) * exp(sum(col("ret")).over(w)))
+    GenOps.walkPrices(spark, rets, initialPrice)
   }
 }

@@ -1,7 +1,6 @@
 package graft.gen
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Single GRU layer (weights: input kernels W*, recurrent kernels U*,
   * biases b*), returning the full hidden sequence. */
@@ -118,41 +117,17 @@ object TimeGanModel {
   * Training lives in [[graft.train.TimeGanTrainer]] (3-phase BPTT);
   * weights round-trip through the S5 JSON artifact (ModelIO.saveTimeGan).
   *
-  * Same scale shape as G1: windows independent ⇒ spark.range →
-  * mapPartitions with model+anchors broadcast; per-window RNG derived
-  * from (seed, windowIdx) so output is partitioning-invariant.
+  * Same scale shape as G1: one [[GenOps.windowedDecode]] over
+  * independent windows, so the output is partitioning-invariant.
   */
 object TimeGanGenerator {
 
   def generate(spark: SparkSession, model: TimeGanModel,
-               anchors: Array[Double], n: Int, seed: Long): DataFrame = {
-    import spark.implicits._
-    val w = model.windowSize
-    val nWindows = n / w + 2 // ref :228
-    val bcM = spark.sparkContext.broadcast(model)
-    val bcA = spark.sparkContext.broadcast(anchors)
-    val rows = spark.range(nWindows).as[Long].mapPartitions { idxs =>
-      val m = bcM.value; val anc = bcA.value
-      idxs.flatMap { idx =>
-        val rnd = new scala.util.Random(seed * 1000003L + idx * 7919L)
+               anchors: Array[Double], n: Int, seed: Long): DataFrame =
+    GenOps.windowedDecode(spark, model, anchors, n, seed, model.windowSize) {
+      (m, rnd, _) =>
         val z = Array.fill(m.windowSize)(Array.fill(m.latentDim)(rnd.nextGaussian()))
         val xHat = m.recovery.run(m.supervisor.run(m.generator.run(z)))
-        val rets = xHat.map(_(0) * m.dataRange + m.dataMin)
-        val mean = rets.sum / rets.length
-        var i = 0
-        while (i < rets.length) { rets(i) -= mean; i += 1 }
-        val anchor = anc(rnd.nextInt(anc.length))
-        var logP = math.log(anchor)
-        val out = new Array[(Long, Double)](rets.length)
-        i = 0
-        while (i < rets.length) {
-          logP += rets(i)
-          out(i) = (idx * m.windowSize + i, math.exp(logP))
-          i += 1
-        }
-        out
-      }
-    }.toDF("rn", "typical_price")
-    rows.filter(col("rn") < n)
-  }
+        xHat.map(_(0) * m.dataRange + m.dataMin)
+    }
 }

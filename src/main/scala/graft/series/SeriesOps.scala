@@ -79,14 +79,16 @@ object SeriesOps {
     df.withColumn(out, lp - lag(lp, 1).over(spec.w))
   }
 
-  /** W2: reconstruct prices from log-returns: `exp(ln(p0) + running Σ ret)`.
+  /** W2: reconstruct prices from log-returns: `p0 · exp(running Σ ret)`.
     * Ref: app/data_processor.py:50-54. `initial` is the p0 column or
     * literal; the running sum is a single window scan — no recurrence.
+    * Every generator reconstructs through here (the g-query oracles
+    * replay this exact arithmetic); a row whose running sum is still
+    * null (only null returns so far) gets a null price.
     */
   def reconstructPrices(df: DataFrame, spec: SeriesSpec, ret: String,
                         initial: Column, out: String = "price"): DataFrame =
-    df.withColumn(out,
-      exp(log(initial) + coalesce(sum(col(ret)).over(spec.running), lit(0.0))))
+    df.withColumn(out, initial * exp(sum(col(ret)).over(spec.running)))
 
   /** W3: overlapping sliding windows of `size` values (only full windows
     * kept — reference errors when n < W, data_processor.py:62-63; here

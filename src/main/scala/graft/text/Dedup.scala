@@ -979,6 +979,32 @@ object Dedup {
       .select(col(id), col("cluster_id"), col(scoreCol), col("kept"))
   }
 
+  /** Driver union-find over an edge list: every node with its
+    * component's root, where the root IS the component's minimum node
+    * under `ord` — the distributed min-label fixpoint's answer exactly.
+    * Nodes come back in the node map's iteration order. */
+  private def minRootComponents[K](edges: Iterator[(K, K)])(
+      implicit ord: Ordering[K]): Seq[(K, K)] = {
+    val parent = new java.util.HashMap[K, K]()
+    def find(x: K): K = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ord.lt(ra, rb)) parent.put(rb, ra)
+      else if (ord.lt(rb, ra)) parent.put(ra, rb)
+    }
+    val out = Vector.newBuilder[(K, K)]
+    val it = parent.keySet().iterator()
+    while (it.hasNext) { val k = it.next(); out += ((k, find(k))) }
+    out.result()
+  }
+
   def connectedComponents(pairs0: DataFrame, idA: String = "id_a",
                           idB: String = "id_b",
                           maxIters: Int = 20,
@@ -1020,30 +1046,10 @@ object Dedup {
       // the distributed path rather than NPE-ing here — same contract
       // either way (castLong requires integral ids), one failure mode
       if (!probe.exists(_.anyNull)) {
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x // path compression
-          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        probe.foreach { row =>
-          val a = row.getLong(0); val b = row.getLong(1)
-          if (!parent.containsKey(a)) parent.put(a, a)
-          if (!parent.containsKey(b)) parent.put(b, b)
-          val ra = find(a); val rb = find(b)
-          // min-root union: the component root IS its min id, matching
-          // the distributed min-label fixpoint exactly
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-        val out = new Array[(Long, Long)](parent.size())
-        val it = parent.keySet().iterator(); var i = 0
-        while (it.hasNext) { val k = it.next(); out(i) = (k, find(k)); i += 1 }
         val s = pairs.sparkSession
         import s.implicits._
-        return out.toSeq.toDF("id", "cluster")
+        return minRootComponents(probe.iterator.map(r => (r.getLong(0), r.getLong(1))))
+          .toDF("id", "cluster")
       }
     } else pairs.schema(idA).dataType match {
       // composite node ids (d06 spans): same fast path when every
@@ -1066,38 +1072,24 @@ object Dedup {
               r.isNullAt(0) || r.isNullAt(1) ||
               r.getStruct(0).anyNull || r.getStruct(1).anyNull)) {
           import scala.math.Ordering.Implicits.seqOrdering
-          val ord = implicitly[Ordering[Vector[Long]]]
           def key(r: org.apache.spark.sql.Row): Vector[Long] =
             (0 until r.length).map(i =>
               r.get(i).asInstanceOf[Number].longValue).toVector
-          val parent =
-            scala.collection.mutable.HashMap.empty[Vector[Long], Vector[Long]]
           val rowOf =
             scala.collection.mutable.HashMap.empty[Vector[Long],
               org.apache.spark.sql.Row]
-          def find(x: Vector[Long]): Vector[Long] = {
-            var r = x
-            while (parent(r) != r) r = parent(r)
-            var c = x
-            while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
-          probe.foreach { row =>
+          val comps = minRootComponents(probe.iterator.map { row =>
             val sa = row.getStruct(0); val sb = row.getStruct(1)
             val a = key(sa); val b = key(sb)
             rowOf.getOrElseUpdate(a, sa); rowOf.getOrElseUpdate(b, sb)
-            if (!parent.contains(a)) parent(a) = a
-            if (!parent.contains(b)) parent(b) = b
-            val ra = find(a); val rb = find(b)
-            if (ord.lt(ra, rb)) parent(rb) = ra
-            else if (ord.lt(rb, ra)) parent(ra) = rb
-          }
+            (a, b)
+          })
           val schema = org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("id", st),
             org.apache.spark.sql.types.StructField("cluster", st)))
-          val rows: Seq[org.apache.spark.sql.Row] = parent.keysIterator
-            .map(k => org.apache.spark.sql.Row(rowOf(k), rowOf(find(k))))
-            .toSeq
+          val rows: Seq[org.apache.spark.sql.Row] = comps.map { case (k, r) =>
+            org.apache.spark.sql.Row(rowOf(k), rowOf(r))
+          }
           val s = pairs.sparkSession
           return s.createDataFrame(
             s.sparkContext.parallelize(rows,

@@ -38,7 +38,7 @@ object GanTrainer {
     if (all.isEmpty) None else Some(all)
   }
 
-  import VaeTrainer.Dense
+  import VaeTrainer.{Dense, Disc}
 
   /** One adversarial epoch — a discriminator BCE step over
     * (real, fake₁) then a generator step against the frozen (already
@@ -49,44 +49,30 @@ object GanTrainer {
            d1: Dense, d2: Dense, d3: Dense,
            real: Array[Array[Double]], z1: Array[Array[Double]],
            z2: Array[Array[Double]], t: Int, lr: Double): Unit = {
-    val gLayers = Seq(g1, g2, g2t, g3); val dLayers = Seq(d1, d2, d3)
+    val gLayers = Seq(g1, g2, g2t, g3)
+    val disc = new Disc(d1, d2, d3)
     def gForward(z: Array[Array[Double]]) = {
       val (p1, o1) = g1.forward(z); val (p2, o2) = g2.forward(o1)
       val (p2t, o2t) = g2t.forward(o2)
       val (p3, o3) = g3.forward(o2t)
       (p1, o1, p2, o2, p2t, o2t, p3, o3)
     }
-    def dForward(x: Array[Array[Double]]) = {
-      val (p1, o1) = d1.forward(x); val (p2, o2) = d2.forward(o1)
-      val (p3, o3) = d3.forward(o2)
-      (p1, o1, p2, o2, p3, o3)
-    }
-    def sigm(x: Double) = 1.0 / (1.0 + math.exp(-x))
-    /** BCE-with-logits grad (σ(logit) − t)/n through the disc;
-      * returns dL/dx. */
-    def dBackward(x: Array[Array[Double]],
-                  f: (Array[Array[Double]], Array[Array[Double]], Array[Array[Double]],
-                      Array[Array[Double]], Array[Array[Double]], Array[Array[Double]]),
-                  target: Double): Array[Array[Double]] = {
-      val (p1, o1, p2, o2, p3, o3) = f
-      val n = x.length
-      val gLogit = Array.tabulate(n, 1)((r, _) => (sigm(o3(r)(0)) - target) / n)
-      val gb2 = d3.backward(o2, p3, o3, gLogit)
-      val gb1 = d2.backward(o1, p2, o2, gb2)
-      d1.backward(x, p1, o1, gb1)
-    }
+    /** BCE-with-logits grad (σ(logit) − t)/n through the disc; returns
+      * dL/dx. */
+    def dBackward(x: Array[Array[Double]], target: Double): Array[Array[Double]] =
+      disc.backward(x, disc.forward(x), target, 1.0)
     // ── D step ── (fake detached: generator not updated)
-    dLayers.foreach(_.zeroGrad())
+    disc.layers.foreach(_.zeroGrad())
     val fake1 = gForward(z1)._8
-    dBackward(real, dForward(real), 1.0)
-    dBackward(fake1, dForward(fake1), 0.0)
-    dLayers.foreach(_.adam(lr, t, b1 = 0.5))
+    dBackward(real, 1.0)
+    dBackward(fake1, 0.0)
+    disc.layers.foreach(_.adam(lr, t, b1 = 0.5))
     // ── G step ── (disc frozen: its grads discarded after backprop)
     gLayers.foreach(_.zeroGrad())
     val (pg1, og1, pg2, og2, pg2t, og2t, pg3, fake2) = gForward(z2)
-    dLayers.foreach(_.zeroGrad())
-    val gFake = dBackward(fake2, dForward(fake2), 1.0)
-    dLayers.foreach(_.zeroGrad())
+    disc.layers.foreach(_.zeroGrad())
+    val gFake = dBackward(fake2, 1.0)
+    disc.layers.foreach(_.zeroGrad())
     val gg2t = g3.backward(og2t, pg3, fake2, gFake)
     val gg2 = g2t.backward(og2, pg2t, og2t, gg2t)
     val gg1 = g2.backward(og1, pg2, og2, gg2)

@@ -58,7 +58,7 @@ object VaeTrainer {
     private def phi(x: Double): Double = act match {
       case "tanh" => math.tanh(x)
       case "lrelu" => if (x >= 0) x else 0.2 * x
-      case "sigmoid" => 1.0 / (1.0 + math.exp(-x))
+      case "sigmoid" => sigm(x)
       case _ => x // linear
     }
     private def dphi(pre: Double, out: Double): Double = act match {
@@ -155,6 +155,58 @@ object VaeTrainer {
         b(o) -= lr * (mB(o) / c1) / (math.sqrt(vB(o) / c2) + eps)
         o += 1
       }
+    }
+  }
+
+  /** Logistic sigmoid: the Dense "sigmoid" activation and the
+    * discriminators' probability. */
+  def sigm(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
+
+  /** `a` with each unit multiplied by its dropout-mask entry; a null
+    * mask (dropout off) returns `a` itself. */
+  private def masked(a: Array[Array[Double]], m: Array[Array[Double]]): Array[Array[Double]] =
+    if (m == null) a
+    else Array.tabulate(a.length, a(0).length)((r, j) => a(r)(j) * m(r)(j))
+
+  /** One discriminator pass: each layer's (pre, out); `logit` is the
+    * head's output, the probability is `sigm(logit)`. */
+  final case class DiscPass(p1: Array[Array[Double]], o1: Array[Array[Double]],
+                            p2: Array[Array[Double]], o2: Array[Array[Double]],
+                            p3: Array[Array[Double]], logit: Array[Array[Double]])
+
+  /** The adversarial trainers' three-layer discriminator (lrelu, lrelu,
+    * linear LOGIT head). The sigmoid is applied outside, so the fused
+    * sigmoid+BCE gradient (σ − t) feeds the pre-activation directly —
+    * numerically exact even when the sigmoid saturates. Optional
+    * dropout masks multiply the two hidden outputs. */
+  final class Disc(d1: Dense, d2: Dense, d3: Dense) {
+    val layers: Seq[Dense] = Seq(d1, d2, d3)
+
+    /** With dropout, the MASKED activations ride in the out slots —
+      * safe because every disc layer is lrelu/linear, whose dphi reads
+      * only the pre-activation. */
+    def forward(x: Array[Array[Double]], m1: Array[Array[Double]] = null,
+                m2: Array[Array[Double]] = null): DiscPass = {
+      val (p1, o1) = d1.forward(x)
+      val o1m = masked(o1, m1)
+      val (p2, o2) = d2.forward(o1m)
+      val o2m = masked(o2, m2)
+      val (p3, o3) = d3.forward(o2m)
+      DiscPass(p1, o1m, p2, o2m, p3, o3)
+    }
+
+    /** Fused sigmoid+BCE gradient dL/dlogit = (σ(logit) − target)·scale/n,
+      * backpropagated through the disc (accumulating its grads); returns
+      * dL/dx. Masks (if any) must be the forward's. */
+    def backward(x: Array[Array[Double]], f: DiscPass, target: Double,
+                 scale: Double, m1: Array[Array[Double]] = null,
+                 m2: Array[Array[Double]] = null): Array[Array[Double]] = {
+      val n = x.length
+      val gLogit = Array.tabulate(n, 1)((r, _) =>
+        (sigm(f.logit(r)(0)) - target) * scale / n)
+      val g2 = masked(d3.backward(f.o2, f.p3, f.logit, gLogit), m2)
+      val g1 = masked(d2.backward(f.o1, f.p2, f.o2, g2), m1)
+      d1.backward(x, f.p1, f.o1, g1)
     }
   }
 
@@ -361,16 +413,11 @@ object VaeTrainer {
     val encLv = new Dense(cfg.hidden + nT, ld, "linear", rnd)
     val dec1 = new Dense(ld + nT, cfg.hidden, "tanh", rnd)
     val dec2 = new Dense(cfg.hidden, ws, "linear", rnd)
-    // discriminator: (ws [⧺temp]) -> 64(lrelu) -> 32(lrelu) -> 1 (linear
-    // head; sigmoid applied outside so the fused sigmoid+BCE gradient
-    // (p - t) feeds the pre-activation directly — numerically exact even
-    // when the sigmoid saturates)
-    val d1 = new Dense(ws + nT, 64, "lrelu", rnd)
-    val d2 = new Dense(64, 32, "lrelu", rnd)
-    val d3 = new Dense(32, 1, "linear", rnd)
+    // discriminator: (ws [⧺temp]) -> 64(lrelu) -> 32(lrelu) -> 1 logit
+    val disc = new Disc(new Dense(ws + nT, 64, "lrelu", rnd),
+      new Dense(64, 32, "lrelu", rnd), new Dense(32, 1, "linear", rnd))
 
     val genLayers = Seq(dec1, dec2)
-    val discLayers = Seq(d1, d2, d3)
 
     // seeded inverted dropout (Keras Dropout twin): keep with prob
     // 1−p, scale kept units by 1/(1−p); masks draw from the main
@@ -380,42 +427,6 @@ object VaeTrainer {
       if (dropP <= 0) null
       else Array.fill(n, dim)(
         if (rnd.nextDouble() < dropP) 0.0 else 1.0 / (1.0 - dropP))
-    def masked(a: Array[Array[Double]], m: Array[Array[Double]]): Array[Array[Double]] =
-      if (m == null) a
-      else Array.tabulate(a.length, a(0).length)((r, j) => a(r)(j) * m(r)(j))
-
-    /** Forward through the disc; o3 holds the LOGIT, prob = sigmoid(o3).
-      * With dropout, the MASKED activations ride in the out slots —
-      * safe because every disc layer is lrelu/linear, whose dphi reads
-      * only the pre-activation. */
-    def discForward(x: Array[Array[Double]],
-                    m1: Array[Array[Double]] = null,
-                    m2: Array[Array[Double]] = null) = {
-      val (p1, o1) = d1.forward(x)
-      val o1m = masked(o1, m1)
-      val (p2, o2) = d2.forward(o1m)
-      val o2m = masked(o2, m2)
-      val (p3, o3) = d3.forward(o2m)
-      (p1, o1m, p2, o2m, p3, o3)
-    }
-    def sigm(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
-    /** Fused sigmoid+BCE gradient: dL/dlogit = (σ(logit) − target)·scale/n.
-      * Backprops the disc (accumulating its grads) and returns dL/dx
-      * for the generator leg. Masks (if any) must be the forward's. */
-    def discBackward(x: Array[Array[Double]],
-                     f: (Array[Array[Double]], Array[Array[Double]], Array[Array[Double]],
-                         Array[Array[Double]], Array[Array[Double]], Array[Array[Double]]),
-                     target: Double, scale: Double,
-                     m1: Array[Array[Double]] = null,
-                     m2: Array[Array[Double]] = null): Array[Array[Double]] = {
-      val (p1, o1, p2, o2, p3, o3) = f
-      val n = x.length
-      val gLogit = Array.tabulate(n, 1)((r, _) =>
-        (sigm(o3(r)(0)) - target) * scale / n)
-      val g2 = masked(d3.backward(o2, p3, o3, gLogit), m2)
-      val g1 = masked(d2.backward(o1, p2, o2, g2), m1)
-      d1.backward(x, p1, o1, g1)
-    }
 
     val nW = windows.length
     val bs = math.min(cfg.batchSize, nW)
@@ -448,22 +459,22 @@ object VaeTrainer {
         if (cfg.adversarial) {
           // ── discriminator step ── (fake from frozen decoder on noise;
           // conditional: temporal features ride along on every input)
-          discLayers.foreach(_.zeroGrad())
+          disc.layers.foreach(_.zeroGrad())
           val noise1 = Array.fill(n, ld)(rnd.nextGaussian())
           val fake1 = dec2.forward(dec1.forward(cat(noise1, tBatch))._2)._2
           val mR1 = dropMask(n, 64); val mR2 = dropMask(n, 32)
-          val fR = discForward(cat(batch, tBatch), mR1, mR2)
+          val fR = disc.forward(cat(batch, tBatch), mR1, mR2)
           val mF1 = dropMask(n, 64); val mF2 = dropMask(n, 32)
-          val fF = discForward(cat(fake1, tBatch), mF1, mF2)
+          val fF = disc.forward(cat(fake1, tBatch), mF1, mF2)
           def bce(p: Double, t: Double): Double = {
             val c = math.max(1e-7, math.min(1 - 1e-7, p))
             -(t * math.log(c) + (1 - t) * math.log(1 - c))
           }
-          dL = (batch.indices.map(i => bce(sigm(fR._6(i)(0)), 1.0)).sum / n +
-            batch.indices.map(i => bce(sigm(fF._6(i)(0)), 0.0)).sum / n) / 2.0
-          discBackward(cat(batch, tBatch), fR, 1.0, 0.5, mR1, mR2)
-          discBackward(cat(fake1, tBatch), fF, 0.0, 0.5, mF1, mF2)
-          discLayers.foreach(_.adam(cfg.discriminatorLr, adamT))
+          dL = (batch.indices.map(i => bce(sigm(fR.logit(i)(0)), 1.0)).sum / n +
+            batch.indices.map(i => bce(sigm(fF.logit(i)(0)), 0.0)).sum / n) / 2.0
+          disc.backward(cat(batch, tBatch), fR, 1.0, 0.5, mR1, mR2)
+          disc.backward(cat(fake1, tBatch), fF, 0.0, 0.5, mF1, mF2)
+          disc.layers.foreach(_.adam(cfg.discriminatorLr, adamT))
 
           // ── generator adversarial step ── (disc frozen)
           genLayers.foreach(_.zeroGrad())
@@ -472,13 +483,13 @@ object VaeTrainer {
           val (pg1, hg1) = dec1.forward(noise2Cat)
           val (pg2, fake2) = dec2.forward(hg1)
           val mG1 = dropMask(n, 64); val mG2 = dropMask(n, 32)
-          val fF2 = discForward(cat(fake2, tBatch), mG1, mG2)
-          gL = batch.indices.map(i => bce(sigm(fF2._6(i)(0)), 1.0)).sum / n
+          val fF2 = disc.forward(cat(fake2, tBatch), mG1, mG2)
+          gL = batch.indices.map(i => bce(sigm(fF2.logit(i)(0)), 1.0)).sum / n
           // dL/dfake through the (frozen) disc: save+restore disc grads
-          discLayers.foreach(_.zeroGrad())
+          disc.layers.foreach(_.zeroGrad())
           val gFake = head(
-            discBackward(cat(fake2, tBatch), fF2, 1.0, 1.0, mG1, mG2), ws)
-          discLayers.foreach(_.zeroGrad()) // discard disc grads (frozen)
+            disc.backward(cat(fake2, tBatch), fF2, 1.0, 1.0, mG1, mG2), ws)
+          disc.layers.foreach(_.zeroGrad()) // discard disc grads (frozen)
           val gHg1 = dec2.backward(hg1, pg2, fake2, gFake)
           dec1.backward(noise2Cat, pg1, hg1, gHg1)
           genLayers.foreach(_.adam(cfg.generatorLr, adamT))
