@@ -39,14 +39,14 @@ object SparkEntry {
   private def li(s: SparkSession, dir: String) = Tables.lineitem(s, dir)
   private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
 
-  /** The bNN oracles replay exactly `n` merge levels (m1..mn CTEs,
-    * CROSS JOINed into the encode chain) — a trainer that exhausts the
-    * corpus early would silently EMPTY the oracle result while the
-    * Spark side still emits rows. Fail loudly instead. */
   /** The reserved special tokens the b03/b06/t09b vocabularies carry
     * at ids 0..3 (the tokenizer artifact contract). */
   private val reservedTokens = Seq("<pad>", "<bos>", "<eos>", "<unk>")
 
+  /** The bNN oracles replay exactly `n` merge levels (m1..mn CTEs,
+    * CROSS JOINed into the encode chain) — a trainer that exhausts the
+    * corpus early would silently EMPTY the oracle result while the
+    * Spark side still emits rows. Fail loudly instead. */
   private def bpeOracleGuard(merges: Seq[graft.text.Bpe.Merge],
                              n: Int): Unit =
     require(merges.size == n,
@@ -2416,12 +2416,13 @@ object SparkEntry {
     }),
 
     // ── b01: in-engine BPE tokenizer TRAINING — corpus touched once
-    //    (word-count agg), then 8 integer-exact merge elections on the
-    //    vocabulary frame; the model (merge table) is the only driver
-    //    state ─────────────────────────────────────────────────────────
+    //    (word-count agg), then 8 integer-exact merges elected in
+    //    batches on the vocabulary frame (the oracle replays them one
+    //    election at a time); the model (merge table) is the only
+    //    driver state ──────────────────────────────────────────────────
     "b01_bpe_train" -> ((s, dir) => {
       val d = docs(s, dir)
-      val merges = graft.text.Bpe.train(d, "text", nMerges = 8)
+      val merges = graft.text.Bpe.trainBatched(d, "text", nMerges = 8)
       bpeOracleGuard(merges, 8)
       import s.implicits._
       merges.map(m => (m.rank, m.left, m.right, m.merged, m.pairCount))
@@ -2429,17 +2430,15 @@ object SparkEntry {
         .orderBy(col("rank"))
     }),
 
-    // ── b02: BPE ENCODE with the b01 merges — a static 8-deep chain
-    //    of codegen'd replaces inside one per-word lambda; map-side,
-    //    zero shuffles. The model comes from the BATCHED trainer
-    //    (bit-identical merges by the conflict-free prefix rule —
-    //    spec-pinned, b01p oracle-gated; b01 still times the sequential
-    //    path it gates): ~2 election jobs instead of 8 ──────────────────
+    // ── b02: BPE ENCODE with the b01 merges — the one encode loop
+    //    (mapPartitions over a broadcast merge table, per-task word
+    //    cache); map-side, zero shuffles. The oracle replays it as the
+    //    rank-ordered replace chain ───────────────────────────────────
     "b02_bpe_encode" -> ((s, dir) => {
       val d = docs(s, dir)
       val merges = graft.text.Bpe.trainBatched(d, "text", nMerges = 8)
       bpeOracleGuard(merges, 8)
-      graft.text.Bpe.encode(d, "text", merges)
+      graft.text.Bpe.encodeFast(d, "text", merges)
         .select(col("doc_id"), col("n_tokens_bpe"), col("encoded"))
         .orderBy(col("doc_id"))
     }),
@@ -2525,12 +2524,11 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
 
-    // ── b01p: the PRODUCTION trainer (batched non-interacting merge
-    //    election — one Spark job elects many merges) replaying the b01
+    // ── b01p: the b01 trainer at electBatch=3 replaying the b01
     //    oracle verbatim: the conflict-free prefix rule makes batching
     //    bit-identical to the sequential greedy, and this entry is the
-    //    driver-gated witness (electBatch=3 forces multi-round batching
-    //    with sentinel truncation on the fixture) ──────────────────────
+    //    gate's witness that forces multi-round batching with
+    //    sentinel truncation on the fixture ───────────────────────────
     "b01p_bpe_train_batched" -> ((s, dir) => {
       val d = docs(s, dir)
       val merges = graft.text.Bpe.trainBatched(d, "text", nMerges = 8,
@@ -2542,11 +2540,10 @@ object SparkEntry {
         .orderBy(col("rank"))
     }),
 
-    // ── b02p: the PRODUCTION encoder (mapPartitions greedy linear
-    //    scan over a broadcast merge-rank map — per-word cost
-    //    independent of |merges|, no 32k-deep replace chain, no janino
-    //    method cliff) replaying the b02 oracle verbatim over the
-    //    batched trainer's table ────────────────────────────────────────
+    // ── b02p: the same production encode as b02 (greedy scan over a
+    //    broadcast merge-rank map, per-word cost independent of
+    //    |merges|), kept under its own gated name; it replays the b02
+    //    oracle verbatim ────────────────────────────────────────────────
     "b02p_bpe_encode_fast" -> ((s, dir) => {
       val d = docs(s, dir)
       val merges = graft.text.Bpe.trainBatched(d, "text", nMerges = 8)
@@ -2736,7 +2733,7 @@ object SparkEntry {
       // batched trainer: bit-identical merges (b01p-gated), ~2 jobs not 8
       val merges = graft.text.Bpe.trainBatched(d, "text", nMerges = 8)
       bpeOracleGuard(merges, 8)
-      val enc = graft.text.Bpe.encode(d, "text", merges)
+      val enc = graft.text.Bpe.encodeFast(d, "text", merges)
         .select(col("doc_id"), col("n_tokens_bpe").cast("long")
           .as("n_tok"))
       val base = d.select(col("doc_id"), col("lang"),

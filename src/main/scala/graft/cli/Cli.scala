@@ -292,32 +292,33 @@ object Cli {
     // series (the reference scripts read one CSV); per-series tolerance
     // at scale goes through the library API, not this entry point
     val w = org.apache.spark.sql.expressions.Window.orderBy(Order.map(col): _*)
-    val idx = data.withColumn("__i", row_number().over(w)).cache()
-    val nTrain = (n * 0.6).toLong; val nVal = (n * 0.2).toLong
-    val train = idx.filter(col("__i") <= nTrain).drop("__i")
-    val valid = idx.filter(col("__i") > nTrain && col("__i") <= nTrain + nVal)
-      .drop("__i")
-    val test = idx.filter(col("__i") > nTrain + nVal).drop("__i")
-    val nSeeds = cfg.strOpt("n_seeds").map(_.toInt).getOrElse(if (v2) 8 else 10)
-    val winSize = cfg.strOpt("tol_window").map(_.toInt).getOrElse(24)
-    val maxIter = cfg.strOpt("max_iter").map(_.toInt).getOrElse(20)
-    val nSamples = cfg.int("n_samples")
-    val blockSize = cfg.int("block_size")
-    val metrics =
-      if (v2)
-        graft.eval.ToleranceMeasure.blockBootstrapToleranceV2(
-          train, valid, Order, Price, nSeeds = nSeeds, nSamples = nSamples,
-          blockSize = blockSize, windowSize = winSize, maxIter = maxIter)
-      else {
-        val cache = cfg.strOpt("baseline_cache").getOrElse(
-          Files.createTempDirectory("graft_tol").resolve("baseline.json").toString)
-        graft.eval.ToleranceMeasure.blockBootstrapTolerance(
-          spark, train, valid, test, Order, Price, cache, nSeeds = nSeeds,
-          nSamples = nSamples, blockSize = blockSize, windowSize = winSize,
-          maxIter = maxIter)
-      }
-    writeMetricsJson(metrics, cfg.str("metrics_out"))
-    idx.unpersist()
+    graft.core.Scope.cached { keep =>
+      val idx = keep(data.withColumn("__i", row_number().over(w)))
+      val nTrain = (n * 0.6).toLong; val nVal = (n * 0.2).toLong
+      val train = idx.filter(col("__i") <= nTrain).drop("__i")
+      val valid = idx.filter(col("__i") > nTrain && col("__i") <= nTrain + nVal)
+        .drop("__i")
+      val test = idx.filter(col("__i") > nTrain + nVal).drop("__i")
+      val nSeeds = cfg.strOpt("n_seeds").map(_.toInt).getOrElse(if (v2) 8 else 10)
+      val winSize = cfg.strOpt("tol_window").map(_.toInt).getOrElse(24)
+      val maxIter = cfg.strOpt("max_iter").map(_.toInt).getOrElse(20)
+      val nSamples = cfg.int("n_samples")
+      val blockSize = cfg.int("block_size")
+      val metrics =
+        if (v2)
+          graft.eval.ToleranceMeasure.blockBootstrapToleranceV2(
+            train, valid, Order, Price, nSeeds = nSeeds, nSamples = nSamples,
+            blockSize = blockSize, windowSize = winSize, maxIter = maxIter)
+        else {
+          val cache = cfg.strOpt("baseline_cache").getOrElse(
+            Files.createTempDirectory("graft_tol").resolve("baseline.json").toString)
+          graft.eval.ToleranceMeasure.blockBootstrapTolerance(
+            spark, train, valid, test, Order, Price, cache, nSeeds = nSeeds,
+            nSamples = nSamples, blockSize = blockSize, windowSize = winSize,
+            maxIter = maxIter)
+        }
+      writeMetricsJson(metrics, cfg.str("metrics_out"))
+    }
   }
 
   /** Training-corpus curation (beyond reference): the text-pipeline
@@ -365,17 +366,10 @@ object Cli {
     * stages register are released when the run ends, also when it
     * throws (a bad id, an infeasible mixture).
     */
-  def runCurate(spark: SparkSession, cfg: GraftConfig): Unit = {
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  def runCurate(spark: SparkSession, cfg: GraftConfig): Unit =
     graft.core.Scope.released(spark) {
-      try curate(spark, cfg, df => {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persisted += p
-        p
-      })
-      finally persisted.foreach(_.unpersist())
+      graft.core.Scope.cached(curate(spark, cfg, _))
     }
-  }
 
   private def curate(spark: SparkSession, cfg: GraftConfig,
                      persist: DataFrame => DataFrame): Unit = {
@@ -910,24 +904,17 @@ object Cli {
     // output chunk — the count a sequence packer or token-budget
     // accountant actually needs, instead of the whitespace proxy.
     // The merge table is model-sized by contract (the only collect);
-    // the encode is the PRODUCTION linear-scan path (broadcast rank
-    // map + mapPartitions — per-chunk cost independent of |merges|, so
-    // a real 32k-merge tokenizer model works here, where a replace
-    // chain would blow janino's method limit).
+    // the encode is Bpe's one encode loop (broadcast merge table +
+    // mapPartitions — per-chunk cost independent of |merges|, so a
+    // real 32k-merge tokenizer model works here; a rank-straddling
+    // foreign table takes the per-word rank-ordered chain inside it).
     val chunksCounted = cfg.strOpt("bpe_merges") match {
       case Some(p) =>
         val merges = spark.read.parquet(p).orderBy(col("rank")).collect()
           .map(r => graft.text.Bpe.Merge(r.getInt(0), r.getString(1),
             r.getString(2), r.getString(3), r.getLong(4))).toSeq
-        // rank-straddling tables (a component also formable by a
-        // LATER rank — rare but legal trainer output) are outside the
-        // greedy scan's equivalence contract; route them through the
-        // rank-ordered chain, whose semantics IS the pinned one
-        val counted =
-          if (graft.text.Bpe.isRankConsistent(merges))
-            graft.text.Bpe.encodeFast(chunks, "chunk", merges)
-          else graft.text.Bpe.encode(chunks, "chunk", merges)
-        counted.drop("encoded")
+        graft.text.Bpe.encodeFast(chunks, "chunk", merges)
+          .drop("encoded")
       case None => chunks
     }
     val split = ScaleOps.hashSplit(chunksCounted, id,

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.RddBridge
 
 /** Storage-block scoping for multi-stage pipelines (guide §5: unpersist
@@ -27,5 +27,18 @@ object Scope {
       if (!pre(id) && RddBridge.isLocalCheckpoint(rdd))
         rdd.unpersist(blocking = false)
     }
+  }
+
+  /** Run `body` with a `keep` that caches a frame for it, then — in
+    * `finally`, whether `body` returns or throws — unpersist every
+    * frame it kept: the cached plan and, once a job filled it, its
+    * blocks. Newest first, so no kept frame outlives one it reads
+    * (uncaching a frame re-plans the unfilled caches built on it).
+    * `body` must not return a frame that reads the kept ones: collect
+    * first. */
+  def cached[A](body: (DataFrame => DataFrame) => A): A = {
+    val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => kept += df; df.cache() }
+    finally kept.reverseIterator.foreach(_.unpersist())
   }
 }

@@ -62,17 +62,20 @@ object AugmentationEvaluator {
     val b = baseline.get
 
     // warm path: augmented leg only
-    val sTrain = indexed(realTrain, orderCols, price).cache()
-    val sSyn = indexed(synthetic, orderCols, price).cache()
-    val nTrain = sTrain.count(); val nSyn = sSyn.count()
-    val augmented = sSyn.unionByName(
-      sTrain.withColumn("rn", org.apache.spark.sql.functions.col("rn")
-        .plus(org.apache.spark.sql.functions.lit(nSyn))))
-    val wVal = windowsXy(indexed(realVal, orderCols, price), windowSize, horizon)
-    val wTest = windowsXy(indexed(realTest, orderCols, price), windowSize, horizon)
-    val wAug = windowsXy(augmented, windowSize, horizon).cache()
-    val aug = fitPredictor(wAug, seed, maxIter)
-    val aTrain = mae(aug, wAug); val aVal = mae(aug, wVal); val aTest = mae(aug, wTest)
+    val (nTrain, nSyn, aTrain, aVal, aTest, dist) = graft.core.Scope.cached { keep =>
+      val sTrain = keep(indexed(realTrain, orderCols, price))
+      val sSyn = keep(indexed(synthetic, orderCols, price))
+      val nTrain = sTrain.count(); val nSyn = sSyn.count()
+      val augmented = sSyn.unionByName(
+        sTrain.withColumn("rn", org.apache.spark.sql.functions.col("rn")
+          .plus(org.apache.spark.sql.functions.lit(nSyn))))
+      val wVal = windowsXy(indexed(realVal, orderCols, price), windowSize, horizon)
+      val wTest = windowsXy(indexed(realTest, orderCols, price), windowSize, horizon)
+      val wAug = keep(windowsXy(augmented, windowSize, horizon))
+      val aug = fitPredictor(wAug, seed, maxIter)
+      (nTrain, nSyn, mae(aug, wAug), mae(aug, wVal), mae(aug, wTest),
+        DistributionEvaluator.evaluate(sTrain, sSyn, Seq("rn"), "p"))
+    }
     val nVal = realVal.count(); val nTest = realTest.count()
     val dVal = aVal - b.maeVal; val dTest = aTest - b.maeTest
 
@@ -90,10 +93,8 @@ object AugmentationEvaluator {
         "n_real_train", "n_synthetic", "n_augmented_train", "n_val", "n_test",
         "window_size", "horizon",
         "synthetic_helps_val", "synthetic_helps_test")
-    val dist = DistributionEvaluator.evaluate(sTrain, sSyn, Seq("rn"), "p")
     val distRenamed = dist.columns.foldLeft(dist)((d, c) =>
       d.withColumnRenamed(c, s"dist_$c"))
-    Seq(sTrain, sSyn, wAug).foreach(_.unpersist())
     core.crossJoin(distRenamed)
   }
 }

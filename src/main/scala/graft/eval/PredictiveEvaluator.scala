@@ -85,38 +85,40 @@ object PredictiveEvaluator {
       realTrain.count(), synthetic.count(), realVal.count(), realTest.count())
     def isBig(n: Long) = n > BigSeriesRows
 
-    val sTrain = indexed(realTrain, orderCols, price, isBig(nTrain)).cache()
-    val sVal = indexed(realVal, orderCols, price, isBig(nVal))
-    val sTest = indexed(realTest, orderCols, price, isBig(nTest))
-    val sSyn = indexed(synthetic, orderCols, price, isBig(nSyn)).cache()
+    val (baseMaes, augMaes, dist) = graft.core.Scope.cached { keep =>
+      val sTrain = keep(indexed(realTrain, orderCols, price, isBig(nTrain)))
+      val sVal = indexed(realVal, orderCols, price, isBig(nVal))
+      val sTest = indexed(realTest, orderCols, price, isBig(nTest))
+      val sSyn = keep(indexed(synthetic, orderCols, price, isBig(nSyn)))
 
-    // synthetic ⧺ real: re-index real rows after the synthetic block so
-    // windows straddle the seam exactly like np.concatenate (U2)
-    val augmented = sSyn
-      .unionByName(sTrain.withColumn("rn", col("rn") + lit(nSyn))).cache()
+      // synthetic ⧺ real: re-index real rows after the synthetic block so
+      // windows straddle the seam exactly like np.concatenate (U2)
+      val augmented = keep(sSyn
+        .unionByName(sTrain.withColumn("rn", col("rn") + lit(nSyn))))
 
-    val wTrain = windowsXy(sTrain, windowSize, horizon, isBig(nTrain)).cache()
-    val wVal = windowsXy(sVal, windowSize, horizon, isBig(nVal)).cache()
-    val wTest = windowsXy(sTest, windowSize, horizon, isBig(nTest)).cache()
-    val wAug = windowsXy(augmented, windowSize, horizon, isBig(nSyn + nTrain)).cache()
+      val wTrain = keep(windowsXy(sTrain, windowSize, horizon, isBig(nTrain)))
+      val wVal = keep(windowsXy(sVal, windowSize, horizon, isBig(nVal)))
+      val wTest = keep(windowsXy(sTest, windowSize, horizon, isBig(nTest)))
+      val wAug = keep(windowsXy(augmented, windowSize, horizon, isBig(nSyn + nTrain)))
 
-    // the BASELINE chain (fit + 3 MAEs), the AUGMENTED chain (fit + 3
-    // MAEs) and the secondary distribution record are mutually
-    // independent — three concurrent driver chains (guide §2.6); inside
-    // each chain the three MAE aggregations after the fit are
-    // independent too. Both GBT fits keep the identical data, params
-    // and seed, so every leg computes exactly what it did sequentially.
-    val (baseMaes, augMaes, dist) = graft.core.Par.par3(
-      {
-        val base = fitPredictor(wTrain, seed, maxIter)
-        graft.core.Par.par3(mae(base, wTrain), mae(base, wVal), mae(base, wTest))
-      },
-      {
-        val aug = fitPredictor(wAug, seed, maxIter)
-        graft.core.Par.par3(mae(aug, wAug), mae(aug, wVal), mae(aug, wTest))
-      },
-      // secondary distribution metrics: dist_* of synthetic vs real train
-      DistributionEvaluator.evaluate(sTrain, sSyn, Seq("rn"), "p"))
+      // the BASELINE chain (fit + 3 MAEs), the AUGMENTED chain (fit + 3
+      // MAEs) and the secondary distribution record are mutually
+      // independent — three concurrent driver chains (guide §2.6); inside
+      // each chain the three MAE aggregations after the fit are
+      // independent too. Both GBT fits keep the identical data, params
+      // and seed, so every leg computes exactly what it did sequentially.
+      graft.core.Par.par3(
+        {
+          val base = fitPredictor(wTrain, seed, maxIter)
+          graft.core.Par.par3(mae(base, wTrain), mae(base, wVal), mae(base, wTest))
+        },
+        {
+          val aug = fitPredictor(wAug, seed, maxIter)
+          graft.core.Par.par3(mae(aug, wAug), mae(aug, wVal), mae(aug, wTest))
+        },
+        // secondary distribution metrics: dist_* of synthetic vs real train
+        DistributionEvaluator.evaluate(sTrain, sSyn, Seq("rn"), "p"))
+    }
     val (bTrain, bVal, bTest) = baseMaes
     val (aTrain, aVal, aTest) = augMaes
 
@@ -141,8 +143,6 @@ object PredictiveEvaluator {
 
     val distRenamed = dist.columns.foldLeft(dist)((d, c) =>
       d.withColumnRenamed(c, s"dist_$c"))
-
-    Seq(wTrain, wVal, wTest, wAug, sTrain, sSyn, augmented).foreach(_.unpersist())
     core.crossJoin(distRenamed)
   }
 }

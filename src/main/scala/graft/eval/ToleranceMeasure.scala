@@ -66,13 +66,14 @@ object ToleranceMeasure {
                 windowSize: Int = 24, horizon: Int = 1,
                 seed: Long = 42L, maxIter: Int = 20): DataFrame = {
     val spark = realTrain.sparkSession
-    val wTrain = PredictiveEvaluator.windowsXy(
-      PredictiveEvaluator.indexed(realTrain, orderCols, price),
-      windowSize, horizon).cache()
     val wVal = PredictiveEvaluator.windowsXy(
       PredictiveEvaluator.indexed(realVal, orderCols, price),
       windowSize, horizon)
-    val model = PredictiveEvaluator.fitPredictor(wTrain, seed, maxIter)
+    val model = graft.core.Scope.cached { keep =>
+      PredictiveEvaluator.fitPredictor(keep(PredictiveEvaluator.windowsXy(
+        PredictiveEvaluator.indexed(realTrain, orderCols, price),
+        windowSize, horizon)), seed, maxIter)
+    }
     val realMae = PredictiveEvaluator.mae(model, wVal)
     val synMaes = seeds.map { sd =>
       val wSyn = PredictiveEvaluator.windowsXy(
@@ -80,7 +81,6 @@ object ToleranceMeasure {
         windowSize, horizon)
       PredictiveEvaluator.mae(model, wSyn)
     }
-    wTrain.unpersist()
     val mean = synMaes.sum / synMaes.length
     val std = math.sqrt(synMaes.map(x => (x - mean) * (x - mean)).sum / synMaes.length)
     val maxDev =

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * Output `array<double>` of length m·k*.
   *
   * Value-identical to the composed form it replaced
-  * ([[graft.sim.Similarity.pqLutComposed]]): per entry a strict
+  * (kept in the specs as `SimOracle.pqLutComposed`): per entry a strict
   * left-to-right double fold over `min(sub, numElements − mi·sub)`
   * elements — exactly `dot(slice(v, mi·sub+1, sub), c)` — but generated
   * as three tight loops over a referenced codebook array instead of

@@ -49,53 +49,54 @@ object RegimeBootstrap {
       .filter(col("ret").isNotNull)
       .withColumn("rn", row_number().over(spec.w))
     val rspec = SeriesSpec(Nil, Seq("rn"))
-    // persisted: the edge percentile AND the regimed cache fill both
-    // sit on this single-series window chain (returns → two rolling
-    // stds → backfill) — one materialization instead of one full
-    // window pass per action
-    val withVol = SeriesOps.backfill(
-      SeriesOps.rollingStd(rets, rspec, "ret", volWindow, volWindow / 2, "vol"),
-      rspec, "vol", "volf")
-      .persist()
+    val (blocks, trans, counts) = graft.core.Scope.cached { keep =>
+      // persisted: the edge percentile AND the regimed cache fill both
+      // sit on this single-series window chain (returns → two rolling
+      // stds → backfill) — one materialization instead of one full
+      // window pass per action
+      val withVol = keep(SeriesOps.backfill(
+        SeriesOps.rollingStd(rets, rspec, "ret", volWindow, volWindow / 2, "vol"),
+        rspec, "vol", "volf"))
 
-    // A4 quantile edges of vol → regime label
-    val probs = (1 until nRegimes).map(i => i.toDouble / nRegimes)
-    val edges = withVol.agg(
-      expr(s"percentile(volf, array(${probs.mkString(",")}))")).first()
-      .getSeq[Double](0).distinct.sorted.toArray
-    val edgeLit = array(edges.map(lit): _*)
-    // cached: three collects (blocks/transition/starts) share the
-    // window-heavy lineage above
-    val regimed = withVol.withColumn("regime",
-      size(filter(edgeLit, e => e <= col("volf")))).cache()
+      // A4 quantile edges of vol → regime label
+      val probs = (1 until nRegimes).map(i => i.toDouble / nRegimes)
+      val edges = withVol.agg(
+        expr(s"percentile(volf, array(${probs.mkString(",")}))")).first()
+        .getSeq[Double](0).distinct.sorted.toArray
+      val edgeLit = array(edges.map(lit): _*)
+      // cached: three collects (blocks/transition/starts) share the
+      // window-heavy lineage above
+      val regimed = keep(withVol.withColumn("regime",
+        size(filter(edgeLit, e => e <= col("volf")))))
 
-    // the three collects (blocks / transition / starts) are independent
-    // actions over the cached frame — submitted concurrently (guide §2.6)
-    val seg = SeriesOps.runSegments(regimed, rspec, "regime", "segment")
-    val (blocks, trans, counts) = graft.core.Par.par3(
-      // contiguous per-regime blocks (runSegments) → per-block return arrays
-      seg.groupBy(col("segment"))
-        .agg(first(col("regime")).as("regime"),
-          count(lit(1)).as("len"),
-          // array ordered by rn: collect (rn, ret) structs then strip
-          sort_array(collect_list(struct(col("rn"), col("ret")))).as("pairs"))
-        .filter(col("len") >= minBlock)
-        .select(col("regime"), col("segment"),
-          transform(col("pairs"), p => p.getField("ret")).as("block"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (r, rows) =>
-          r -> rows.sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray).toArray
-        },
-      // transition matrix over the per-row regime sequence (J2/A7)
-      regimed
-        .withColumn("next_regime",
-          lead(col("regime"), 1).over(Window.orderBy(col("rn"))))
-        .filter(col("next_regime").isNotNull)
-        .groupBy(col("regime"), col("next_regime")).count()
-        .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap,
-      regimed.groupBy(col("regime")).count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+      // the three collects (blocks / transition / starts) are independent
+      // actions over the cached frame — submitted concurrently (guide §2.6)
+      val seg = SeriesOps.runSegments(regimed, rspec, "regime", "segment")
+      graft.core.Par.par3(
+        // contiguous per-regime blocks (runSegments) → per-block return arrays
+        seg.groupBy(col("segment"))
+          .agg(first(col("regime")).as("regime"),
+            count(lit(1)).as("len"),
+            // array ordered by rn: collect (rn, ret) structs then strip
+            sort_array(collect_list(struct(col("rn"), col("ret")))).as("pairs"))
+          .filter(col("len") >= minBlock)
+          .select(col("regime"), col("segment"),
+            transform(col("pairs"), p => p.getField("ret")).as("block"))
+          .collect()
+          .groupBy(_.getInt(0))
+          .map { case (r, rows) =>
+            r -> rows.sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray).toArray
+          },
+        // transition matrix over the per-row regime sequence (J2/A7)
+        regimed
+          .withColumn("next_regime",
+            lead(col("regime"), 1).over(Window.orderBy(col("rn"))))
+          .filter(col("next_regime").isNotNull)
+          .groupBy(col("regime"), col("next_regime")).count()
+          .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap,
+        regimed.groupBy(col("regime")).count()
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    }
     val k = nRegimes
     val transition = Array.tabulate(k) { i =>
       val row = Array.tabulate(k)(j => trans.getOrElse((i, j), 0L).toDouble)
@@ -104,7 +105,6 @@ object RegimeBootstrap {
     }
     val total = counts.values.sum.toDouble
     val start = Array.tabulate(k)(i => counts.getOrElse(i, 0L) / total)
-    regimed.unpersist(); withVol.unpersist()
 
     RegimeBootstrapModel(
       blocks.filter(_._2.nonEmpty),

@@ -396,22 +396,11 @@ object Similarity {
     * |v|² is common to all centroids, so the comparison key is
     * `|c|² − 2·v·c`. Ties break to the smallest centroid id. Runs as
     * the single-subspace case of the native [[graft.functions.PqEncode]]
-    * expression (value-identical to the composed struct/array_min form,
-    * see [[pqEncodeComposed]]) — tight generated loops instead of a
-    * 16-dot inlined subtree. */
+    * expression (value-identical to the composed struct/array_min form
+    * the specs keep as `SimOracle.ivfAssignComposed`) — tight generated
+    * loops instead of a 16-dot inlined subtree. */
   def ivfAssign(v: Column, centroids: Array[Array[Double]]): Column =
     element_at(graft.functions.PqEncode(v, Array(centroids)), 1)
-
-  /** The composed-expression twin of [[ivfAssign]], kept for the
-    * bit-equality spec (DedupSimSpec): argmin via struct ordering. */
-  def ivfAssignComposed(v: Column, centroids: Array[Array[Double]]): Column = {
-    val ds = centroids.zipWithIndex.map { case (c, i) =>
-      val cLit = array(c.map(lit): _*)
-      val c2 = c.map(x => x * x).sum
-      struct((dot(v, cLit) * -2.0 + lit(c2)).as("d"), lit(i).as("cid"))
-    }
-    array_min(array(ds: _*)).getField("cid")
-  }
 
   /** IVF ANN top-k: corpus vectors are bucketed into inverted lists by
     * nearest centroid; each query probes its `nProbe` nearest lists and
@@ -455,52 +444,27 @@ object Similarity {
     * map-only — the corpus never shuffles, and the 8-byte code array
     * stands in for the 256-byte float vector in the scan. Runs as the
     * native [[graft.functions.PqEncode]] expression: the composed
-    * m·k*-subtree form ([[pqEncodeComposed]]) inlined ~130 expressions
-    * into the whole-stage-codegen consume method, pushing it past the
-    * JVM JIT's huge-method bytecode limit — the stage ran
-    * bytecode-interpreted (measured 2.8 s vs 0.57 s with codegen off on
-    * a 10k-row window stage; value-identical per the DedupSimSpec
-    * bit-equality test). */
+    * m·k*-subtree form (the specs' `SimOracle.pqEncodeComposed`)
+    * inlined ~130 expressions into the whole-stage-codegen consume
+    * method, pushing it past the JVM JIT's huge-method bytecode limit
+    * — the stage ran bytecode-interpreted (measured 2.8 s vs 0.57 s
+    * with codegen off on a 10k-row window stage; value-identical per
+    * the DedupSimSpec bit-equality test). */
   def pqEncode(v: Column, codebook: Array[Array[Array[Double]]]): Column =
     graft.functions.PqEncode(v, codebook)
-
-  /** The composed-expression twin of [[pqEncode]], kept for the
-    * bit-equality spec (DedupSimSpec). */
-  def pqEncodeComposed(v: Column, codebook: Array[Array[Array[Double]]]): Column = {
-    val sub = codebook(0)(0).length
-    array(codebook.zipWithIndex.map { case (cents, mi) =>
-      val s = slice(v, mi * sub + 1, sub)
-      val ds = cents.zipWithIndex.map { case (c, i) =>
-        val cLit = array(c.map(lit): _*)
-        val c2 = c.map(x => x * x).sum
-        struct((dot(s, cLit) * -2.0 + lit(c2)).as("d"), lit(i).as("cid"))
-      }
-      array_min(array(ds: _*)).getField("cid")
-    }: _*)
-  }
 
   /** Per-query ADC lookup table: dot(q_m, c_{m,k}) for every subspace ×
     * centroid, flattened m-major (m·K + k). dot(q, x) ≈ Σ_m lut[m·K +
     * code_m(x)] — 8 array lookups per candidate instead of a 64-dim
     * multiply. Runs as the native [[graft.functions.PqLut]] expression:
-    * the composed m·k*-dot-subtree form ([[pqLutComposed]]) generates a
-    * method that exceeds Janino's hard 64 KB bytecode limit at
-    * production dims (m=96: compile fails, the failure is NOT cached,
+    * the composed m·k*-dot-subtree form (the specs'
+    * `SimOracle.pqLutComposed`) generates a method that exceeds
+    * Janino's hard 64 KB bytecode limit at production dims (m=96: compile fails, the failure is NOT cached,
     * and every run re-pays a ~7 s compile attempt before interpreted
     * fallback — the dim-12× scale cell measured ~21× wall from this
     * alone). */
   def pqLut(v: Column, codebook: Array[Array[Array[Double]]]): Column =
     graft.functions.PqLut(v, codebook)
-
-  /** The composed-expression twin of [[pqLut]], kept for the
-    * bit-equality spec (DedupSimSpec). */
-  def pqLutComposed(v: Column, codebook: Array[Array[Array[Double]]]): Column = {
-    val sub = codebook(0)(0).length
-    array(codebook.zipWithIndex.flatMap { case (cents, mi) =>
-      val s = slice(v, mi * sub + 1, sub)
-      cents.map(c => dot(s, array(c.map(lit): _*)))
-    }: _*)
-  }
 
   /** PQ ANN top-k: asymmetric-distance (ADC) scan + exact rerank. The
     * corpus is PQ-encoded once (map-only, no shuffle); each (query,

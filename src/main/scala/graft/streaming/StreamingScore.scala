@@ -480,22 +480,13 @@ object StreamingScore {
   }
 
   /** Streaming b02 twin — BPE encoding of a document stream with a
-    * FROZEN merge table ([[graft.text.Bpe.train]], run once offline —
-    * the tokenizer is versioned model state, never retrained
-    * mid-stream): the encode is a static chain of per-row replaces
-    * (no shuffle, no Generate), so it applies DIRECTLY to the
-    * streaming frame — no foreachBatch, no state, batch-identical by
-    * construction. */
-  def bpeEncode(docs: DataFrame, text: String,
-                merges: Seq[graft.text.Bpe.Merge]): DataFrame =
-    graft.text.Bpe.encode(docs, text, merges)
-
-  /** Streaming twin of the PRODUCTION encoders ([[graft.text.Bpe
-    * .encodeFast]] / [[graft.text.Bpe.encodeSp]]): per-row
-    * mapPartitions over a broadcast merge-rank map — stateless, no
-    * shuffle, so it applies DIRECTLY to the streaming frame and is
-    * batch-identical by construction (encodeFast ≡ encode is itself
-    * spec-pinned). `sp = true` selects the ▁-marker form. */
+    * FROZEN merge table ([[graft.text.Bpe.trainBatched]], run once
+    * offline — the tokenizer is versioned model state, never retrained
+    * mid-stream): [[graft.text.Bpe.encodeFast]] / `sp = true`
+    * [[graft.text.Bpe.encodeSp]] are one stateless per-row
+    * mapPartitions over a broadcast merge table, no shuffle, so they
+    * apply DIRECTLY to the streaming frame — no foreachBatch, no
+    * state, batch-identical by construction. */
   def bpeEncodeFast(docs: DataFrame, text: String,
                     merges: Seq[graft.text.Bpe.Merge],
                     sp: Boolean = false): DataFrame =
@@ -503,8 +494,8 @@ object StreamingScore {
     else graft.text.Bpe.encodeFast(docs, text, merges)
 
   /** Streaming b07 twin — byte-fallback encode on a document stream:
-    * the same stateless mapPartitions greedy scan over a broadcast
-    * rank map, so it applies DIRECTLY to the streaming frame and is
+    * the same stateless mapPartitions over a broadcast merge table,
+    * so it applies DIRECTLY to the streaming frame and is
     * batch-identical by construction (serving shape: tokenize ingest
     * with a FROZEN byte-level tokenizer, zero OOV on any input). */
   def bpeEncodeBytes(docs: DataFrame, text: String,

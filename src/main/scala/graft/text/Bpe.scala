@@ -1,25 +1,27 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
 /** In-engine BPE tokenizer training and encoding (beyond reference;
   * Sennrich et al. 2016 — the "train a tokenizer on the corpus" step
   * of every LLM data pipeline, usually punted to a single-node tool).
   *
-  * Scale design — the whole point of doing this in Spark: the corpus
-  * is touched ONCE (a word-count aggregation, map-side combinable);
-  * every merge iteration then runs on the VOCABULARY frame (distinct
-  * words + counts — orders of magnitude smaller than the corpus and
-  * still distributed, so a 100M-type vocabulary from 100 TB of text
-  * never funnels through the driver). Per merge: one map-side
-  * adjacent-pair explode, one (left,right)-keyed sum agg, and a
-  * TakeOrdered(1) argmax — the only driver state is the merge table
-  * itself (the model, |merges| rows). Merge application is a map-side
-  * string `replace` on the symbol column.
+  * Training ([[trainBatched]]) — the whole point of doing this in
+  * Spark: the corpus is touched ONCE (a word-count aggregation,
+  * map-side combinable); every merge election then runs on the
+  * VOCABULARY frame (distinct words + counts — orders of magnitude
+  * smaller than the corpus and still distributed, so a 100M-type
+  * vocabulary from 100 TB of text never funnels through the driver).
+  * Per election: one map-side adjacent-pair explode, one
+  * (left,right)-keyed sum agg, and a TakeOrdered top-k — the only
+  * driver state is the merge table itself (the model, |merges| rows).
+  * Merge application is a map-side string `replace` on the symbol
+  * column.
   *
   * Determinism / oracle parity: pair counts are INTEGERS (no float
-  * drift anywhere); the argmax tie-breaks (count DESC, left ASC,
+  * drift anywhere); the election tie-breaks (count DESC, left ASC,
   * right ASC) on ASCII binary collation; greedy left-to-right
   * non-overlapping `replace` has identical semantics in the JVM and
   * DuckDB — so the whole trainer replays exactly in SQL (the k01
@@ -38,7 +40,18 @@ import org.apache.spark.sql.functions._
   * first replacement eats the separator the next match needs, giving
   * aa a aa — and the lookaround regex that fixes it (Sennrich's
   * `(?<!\S)l r(?!\S)`) does not exist in RE2, so the oracle could
-  * never replay it. */
+  * never replay it.
+  *
+  * Encoding: the pinned semantics is the rank-ordered replace chain
+  * (every merge, in rank order, over each word's unit string — what
+  * the SQL oracle replays). All three encoders ([[encodeFast]] char
+  * level, [[encodeSp]] ▁-marked, [[encodeBytes]] byte fallback) are
+  * configurations of ONE `mapPartitions` loop ([[encodeWith]]): a
+  * broadcast merge table, a per-task word cache, and one
+  * rank-straddle rule — the greedy lowest-rank-first scan when the
+  * table [[isRankConsistent]] (where it equals the chain, and costs
+  * per word independent of |merges|), the per-word chain itself
+  * otherwise. */
 object Bpe {
 
   /** One trained merge: `rank` (1-based), the two joined symbols, the
@@ -47,7 +60,7 @@ object Bpe {
                          merged: String, pairCount: Long)
 
   /** The ` s1  s2  … ` unit string of a word at character level. */
-  private def charSyms(word: Column): Column =
+  private[graft] def charSyms(word: Column): Column =
     regexp_replace(word, "(.)", " $1 ")
 
   /** Adjacent symbol pairs of a symbol string, as (l, r) structs.
@@ -63,62 +76,53 @@ object Bpe {
       .otherwise(array().cast("array<struct<l:string,r:string>>"))
   }
 
-  /** The distinct-word count frame (word, wcount) — the ONE pass over
-    * the corpus both trainers share; materialized because every merge
-    * iteration re-reads it. */
-  private def wordCounts(df: DataFrame, text: String): DataFrame = df
-    .select(explode(split(col(text), " ")).as("word"))
-    .filter(col("word") =!= "")
-    .groupBy(col("word")).agg(count(lit(1)).as("wcount"))
-    .localCheckpoint()
+  /** The (sym, wcount) frame every election runs on: the distinct
+    * words of a whitespace-pretokenized text column with their counts,
+    * each as its char-level unit string — the ONE pass over the
+    * corpus, materialized because every election re-reads it. */
+  private[graft] def wordSyms(df: DataFrame, text: String): DataFrame =
+    df.select(explode(split(col(text), " ")).as("word"))
+      .filter(col("word") =!= "")
+      .groupBy(col("word")).agg(count(lit(1)).as("wcount"))
+      .localCheckpoint()
+      .select(charSyms(col("word")).as("sym"), col("wcount"))
 
-  /** Train `nMerges` BPE merges over a whitespace-pretokenized text
-    * column. Returns the merge table in rank order; stops early if the
-    * corpus runs out of co-occurring pairs. `checkpointEvery`
-    * truncates the symbol frame's lineage (each merge stacks one
-    * `replace` — fine for tens of merges, a 32k-merge production run
-    * needs periodic truncation exactly like k01/pageRank).
-    *
-    * ONE Spark job per merge — the right shape for the model-sized
-    * merge counts the SQL oracle replays, but at a production 32k-merge
-    * vocabulary 32k sequential jobs of fixed scheduling cost dominate
-    * the wall; [[trainBatched]] is the production path (bit-identical
-    * output by construction, spec-pinned). */
-  def train(df: DataFrame, text: String, nMerges: Int,
-            checkpointEvery: Int = 64): Seq[Merge] = {
-    val words = wordCounts(df, text)
-    var syms = words.select(charSyms(col("word")).as("sym"),
-      col("wcount"))
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val best = syms
-        .select(explode(pairsOf(col("sym"))).as("p"), col("wcount"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("wcount")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, c) = (best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2))
-        merges += Merge(rank, l, r, l + r, c)
-        syms = syms.withColumn("sym",
-          call_function("replace", col("sym"), lit(s" $l  $r "),
-            lit(s" $l$r ")))
-        if (rank % checkpointEvery == 0) syms = syms.localCheckpoint()
-        rank += 1
-      }
+  /** The top `n` adjacent pairs of a symbol frame as (l, r, count), in
+    * the (count DESC, l, r) election order. */
+  private[graft] def electTop(syms: DataFrame,
+                              n: Int): Array[(String, String, Long)] =
+    syms
+      .select(explode(pairsOf(col("sym"))).as("p"), col("wcount"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("wcount")).as("cnt"))
+      .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
+      .limit(n).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+
+  /** A unit string rewritten by `merges` in the given order: one
+    * ` l  r ` → ` lr ` replace per merge. */
+  private[graft] def applyChain(sym: Column, merges: Seq[Merge]): Column =
+    merges.foldLeft(sym) { (e, m) =>
+      call_function("replace", e, lit(s" ${m.left}  ${m.right} "),
+        lit(s" ${m.merged} "))
     }
-    merges.result()
-  }
 
-  /** Production trainer: identical output to [[train]] (spec-pinned,
-    * and the b01p gate entry replays the b01 oracle over this path),
-    * but each Spark job elects a BATCH of merges instead of one —
-    * standard parallel-BPE with a conflict-free prefix rule that makes
-    * the batching EXACT, not approximate:
+  /** The corpus's base characters (every char but the space), sorted —
+    * the alphabet-sized scan [[vocab]] numbers and [[trainBatched]]'s
+    * `targetVocab` budget subtracts. */
+  private def baseChars(df: DataFrame, text: String): Array[String] =
+    df.select(explode(split(col(text), "")).as("ch"))
+      .filter(col("ch") =!= "" && col("ch") =!= " ")
+      .distinct().collect().map(_.getString(0)).sorted
+
+  /** The trainer: merges elected in rank order over a
+    * whitespace-pretokenized text column, stopping early if the corpus
+    * runs out of co-occurring pairs. The sequential reference — one
+    * argmax election per merge — is what the SQL oracle replays; each
+    * Spark job here elects a BATCH of merges instead, with a
+    * conflict-free prefix rule that makes the batching EXACT, not
+    * approximate (bit-identical to the sequential greedy, spec-pinned;
+    * the b01p gate entry forces multi-round batching):
     *
     *  1. One pair-count job collects the top `electBatch`+1 candidates
     *     (TakeOrdered — the same (cnt DESC, l, r) order the sequential
@@ -140,9 +144,9 @@ object Bpe {
     *     (x,l) shares a symbol with the applied pair, so it sits at or
     *     below the sentinel) — so after applying any batch prefix, the
     *     next sequential argmax is exactly the next batch member: same
-    *     merges, same ranks, same counts as [[train]], including
-    *     tie-breaks (strictness of the sentinel cut protects the
-    *     (l,r) tie order).
+    *     merges, same ranks, same counts as the sequential greedy,
+    *     including tie-breaks (strictness of the sentinel cut protects
+    *     the (l,r) tie order).
     *  4. SELF-pairs (l == r) are the one case where a newly created
     *     pair's count is bounded only by the applied pair's OWN count,
     *     not by an interacting neighbor's (a run " l l l " rewrites to
@@ -163,16 +167,16 @@ object Bpe {
     *  5. All accepted merges apply in ONE chained rewrite.
     *
     * Worst case (every candidate interacts) degenerates to one merge
-    * per job = [[train]]; English-like corpora accept tens of pairs
-    * per batch, collapsing a 32k-merge run from 32k sequential jobs to
-    * hundreds. The corpus is still touched once; elections still run
-    * on the distributed vocabulary frame.
+    * per job; English-like corpora accept tens of pairs per batch,
+    * collapsing a 32k-merge run from 32k sequential jobs to hundreds.
+    * `checkpointEvery` truncates the symbol frame's lineage (each
+    * merge stacks one `replace`).
     *
     * `targetVocab` is the knob a training run actually specifies:
     * stop when reserved specials + base characters + merges reach it
     * (so the [[vocab]] built with `reservedCount` specials lands at
     * EXACTLY `targetVocab` entries, minus any duplicate-merged-string
-    * gaps). One distinct-char count up front — the merge budget is a
+    * gaps). One distinct-char scan up front — the merge budget is a
     * subtraction, batching is unchanged, and the tighter of
     * (`nMerges`, the budget) wins. */
   def trainBatched(df: DataFrame, text: String, nMerges: Int,
@@ -181,15 +185,10 @@ object Bpe {
                    targetVocab: Option[Int] = None,
                    reservedCount: Int = 0): Seq[Merge] = {
     val nTarget = targetVocab.fold(nMerges) { tv =>
-      val nChars = df
-        .select(explode(split(col(text), "")).as("ch"))
-        .filter(col("ch") =!= "" && col("ch") =!= " ")
-        .distinct().count().toInt
-      math.min(nMerges, math.max(0, tv - reservedCount - nChars))
+      math.min(nMerges,
+        math.max(0, tv - reservedCount - baseChars(df, text).length))
     }
-    val words = wordCounts(df, text)
-    var syms = words.select(charSyms(col("word")).as("sym"),
-      col("wcount"))
+    var syms = wordSyms(df, text)
     val merges = Seq.newBuilder[Merge]
     // every merged string produced by a PRIOR round (rule 4b): a
     // candidate re-forming one of these must ship alone
@@ -198,16 +197,9 @@ object Bpe {
     var exhausted = false
     var sinceCheckpoint = 0
     while (rank <= nTarget && !exhausted) {
-      val top = syms
-        .select(explode(pairsOf(col("sym"))).as("p"), col("wcount"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("wcount")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-        .limit(electBatch + 1).collect()
-      if (top.isEmpty) exhausted = true
+      val cand = electTop(syms, electBatch + 1)
+      if (cand.isEmpty) exhausted = true
       else {
-        val cand = top.map(r =>
-          (r.getString(0), r.getString(1), r.getLong(2)))
         // the (electBatch+1)-th row is only ever a sentinel
         val window = cand.take(electBatch)
         val dirty = scala.collection.mutable.HashSet[String]()
@@ -242,11 +234,7 @@ object Bpe {
         }
         merges ++= applied
         producedAll ++= applied.iterator.map(_.merged)
-        syms = syms.withColumn("sym",
-          applied.foldLeft(col("sym")) { (e, m) =>
-            call_function("replace", e, lit(s" ${m.left}  ${m.right} "),
-              lit(s" ${m.merged} "))
-          })
+        syms = syms.withColumn("sym", applyChain(col("sym"), applied))
         sinceCheckpoint += applied.length
         if (sinceCheckpoint >= checkpointEvery) {
           syms = syms.localCheckpoint()
@@ -257,37 +245,6 @@ object Bpe {
     merges.result()
   }
 
-  /** Encode a text column with a trained merge table: every word's
-    * character sequence is rewritten by the merges IN RANK ORDER (the
-    * BPE apply contract — rank order, not best-pair-first, is the
-    * standard fast encoder and matches how [[train]] built the table
-    * on the training corpus itself). The merge table is model-sized
-    * by contract, so it unrolls into a STATIC chain of `replace`
-    * calls inside one per-word lambda — fully codegen'd, map-side,
-    * zero shuffles, embarrassingly parallel at 100 TB. Merges never
-    * cross word boundaries (`ws` separates words in the output).
-    *
-    * Emits `n_tokens_bpe` (INT) and `encoded` — words joined by
-    * ` | `, each word its space-separated symbol sequence. */
-  def encode(df: DataFrame, text: String, merges: Seq[Merge]): DataFrame = {
-    val ordered = merges.sortBy(_.rank)
-    def applyMerges(sym: Column): Column =
-      ordered.foldLeft(sym) { (e, m) =>
-        call_function("replace", e, lit(s" ${m.left}  ${m.right} "),
-          lit(s" ${m.merged} "))
-      }
-    val encodedWords = transform(
-      filter(split(col(text), " "), w => w =!= ""),
-      w => call_function("replace", trim(applyMerges(charSyms(w))),
-        lit("  "), lit(" ")))
-    df.withColumn("_enc", encodedWords)
-      .withColumn("n_tokens_bpe",
-        aggregate(col("_enc"), lit(0), (acc, s) =>
-          acc + size(split(s, " "))).cast("int"))
-      .withColumn("encoded", array_join(col("_enc"), " | "))
-      .drop("_enc")
-  }
-
   /** A word's initial symbol list, replicating [[charSyms]]'s regex
     * semantics exactly: `(.)` matches one CODEPOINT (surrogate pairs
     * stay whole) and skips line terminators, so a run of terminator
@@ -295,8 +252,6 @@ object Bpe {
     * symbol (single-spaced in the unit string, no merge pattern can
     * touch it). */
   private def charSymbols(word: String): Array[String] = {
-    def isTerm(cp: Int) = cp == '\n' || cp == '\r' || cp == 0x85 ||
-      cp == 0x2028 || cp == 0x2029
     val out = Array.newBuilder[String]
     val run = new java.lang.StringBuilder
     var i = 0
@@ -314,101 +269,77 @@ object Bpe {
     out.result()
   }
 
-  /** One word through the merge table by greedy lowest-rank-first
-    * merging — the standard fast-BPE encoder. Equivalent to the
-    * rank-ordered replace chain (spec-pinned): a merge's components
-    * are themselves chars or lower-rank merges, so any adjacency a
-    * merge can consume exists by the time its rank comes up in either
-    * order; within one rank, all occurrences merge left-to-right
+  private def isTerm(cp: Int) = cp == '\n' || cp == '\r' || cp == 0x85 ||
+    cp == 0x2028 || cp == 0x2029
+
+  /** Line-terminator run symbols never merge: their single-space
+    * representation in the unit string means no ` l  r ` pattern ever
+    * matches them. */
+  private def mergeable(s: String) = !isTerm(s.charAt(0).toInt)
+
+  /** One rewrite pass over a symbol list: every adjacent pair `join`
+    * maps to a non-null string merges into it, left-to-right
+    * non-overlapping — exactly the ` l  r ` string replace. */
+  private def mergePass(syms: Array[String],
+                        join: (String, String) => String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var j = 0
+    while (j < syms.length) {
+      val m =
+        if (j < syms.length - 1 && mergeable(syms(j)) &&
+            mergeable(syms(j + 1))) join(syms(j), syms(j + 1))
+        else null
+      if (m != null) { out += m; j += 2 }
+      else { out += syms(j); j += 1 }
+    }
+    out.result()
+  }
+
+  /** One word by greedy lowest-rank-first merging — the standard
+    * fast-BPE encoder. Equivalent to the rank-ordered chain on a
+    * rank-consistent table (spec-pinned): a merge's components are
+    * themselves chars or lower-rank merges, so any adjacency a merge
+    * can consume exists by the time its rank comes up in either order;
+    * within one rank, all occurrences merge left-to-right
     * non-overlapping in both. Work per word is O(len²) HASH LOOKUPS
-    * independent of |merges| — vs the replace chain's O(|merges|·len)
-    * and its janino 64 KB method blowup at real vocabulary sizes.
-    * Line-terminator run symbols never merge (their single-space
-    * representation in the chain path means no ` l  r ` pattern ever
-    * matches them). */
-  private def encodeWordFast(word: String,
+    * independent of |merges| — vs the chain's O(|merges|·len). */
+  private def encodeWordFast(word: Array[String],
                              ranks: java.util.HashMap[String, Integer])
       : Array[String] = {
-    var syms = scala.collection.mutable.ArrayBuffer.empty[String]
-    syms ++= charSymbols(word)
-    def mergeable(s: String) = {
-      val c = s.charAt(0).toInt
-      !(c == 10 || c == 13 || c == 0x85 || c == 0x2028 || c == 0x2029)
+    def rankOf(a: String, b: String) = {
+      val r = ranks.get(a + " " + b)
+      if (r == null) Int.MaxValue else r.intValue
     }
-    var done = syms.length < 2
-    while (!done) {
-      // lowest-rank adjacent pair present in the table
+    def lowest(syms: Array[String]) = {
       var best = Int.MaxValue
       var i = 0
       while (i < syms.length - 1) {
-        if (mergeable(syms(i)) && mergeable(syms(i + 1))) {
-          val r = ranks.get(syms(i) + " " + syms(i + 1))
-          if (r != null && r < best) best = r
-        }
+        if (mergeable(syms(i)) && mergeable(syms(i + 1)))
+          best = math.min(best, rankOf(syms(i), syms(i + 1)))
         i += 1
       }
-      if (best == Int.MaxValue) done = true
-      else {
-        // merge ALL its occurrences, left-to-right non-overlapping
-        val next = scala.collection.mutable.ArrayBuffer.empty[String]
-        var j = 0
-        while (j < syms.length) {
-          if (j < syms.length - 1 && mergeable(syms(j)) &&
-              mergeable(syms(j + 1)) && {
-                val r = ranks.get(syms(j) + " " + syms(j + 1))
-                r != null && r == best
-              }) {
-            next += syms(j) + syms(j + 1)
-            j += 2
-          } else {
-            next += syms(j)
-            j += 1
-          }
-        }
-        syms = next
-        if (syms.length < 2) done = true
-      }
+      best
     }
-    syms.toArray
+    var syms = word
+    var best = lowest(syms)
+    while (best != Int.MaxValue) {
+      val r = best
+      syms = mergePass(syms, (a, b) => if (rankOf(a, b) == r) a + b else null)
+      best = lowest(syms)
+    }
+    syms
   }
 
-  /** [[encode]] at the PRODUCTION operating point: same output
-    * bit-for-bit (spec-pinned; the b02p gate entry replays the b02
-    * oracle over this path), but the merge table ships as a broadcast
-    * rank map and each word runs the [[encodeWordFast]] greedy scan
-    * inside one `mapPartitions` pass — no 32k-deep expression chain,
-    * no janino method-size cliff, per-word cost independent of
-    * |merges|. Still map-side, zero shuffles, embarrassingly parallel;
-    * use this for large frozen merge tables, [[encode]] for the
-    * model-sized oracle-replayable ones. */
-  def encodeFast(df: DataFrame, text: String,
-                 merges: Seq[Merge]): DataFrame = {
-    requireRankConsistent(merges)
-    val spark = df.sparkSession
-    val rankMap = new java.util.HashMap[String, Integer](
-      math.max(16, merges.size * 2))
-    merges.foreach(m =>
-      rankMap.put(m.left + " " + m.right, Integer.valueOf(m.rank)))
-    val bc = spark.sparkContext.broadcast(rankMap)
-    val ti = df.schema.fieldIndex(text)
-    val outSchema = df.schema
-      .add("n_tokens_bpe", org.apache.spark.sql.types.IntegerType)
-      .add("encoded", org.apache.spark.sql.types.StringType)
-    df.mapPartitions { rows =>
-      val ranks = bc.value
-      val cache = newWordCache()
-      rows.map { row =>
-        val t = row.getString(ti)
-        val words =
-          if (t == null) Array.empty[String]
-          else t.split(" ").filter(_.nonEmpty)
-        val enc = words.map(w => cachedEncode(w, ranks, cache))
-        val nTok = enc.iterator.map(_.length).sum
-        org.apache.spark.sql.Row.fromSeq(
-          row.toSeq :+ nTok :+ enc.map(_.mkString(" ")).mkString(" | "))
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
+  /** One word through the merges IN RANK ORDER — the chain semantics
+    * on the JVM side, for rank-straddling tables, where the greedy
+    * scan's equivalence does not hold. O(|merges|·len). */
+  private def encodeWordChain(word: Array[String],
+                              ordered: Array[Merge]): Array[String] =
+    ordered.foldLeft(word) { (syms, m) =>
+      if (syms.length < 2) syms
+      else mergePass(syms, (a, b) =>
+        if (a == m.left && b == m.right) m.merged else null)
+    }
 
   /** Greedy-scan ≡ rank-ordered-chain holds ONLY for RANK-CONSISTENT
     * tables: no merge's component may be the OUTPUT of a later-rank
@@ -422,112 +353,101 @@ object Bpe {
     * component is only safe when its MAXIMUM forming rank precedes
     * the using merge. (Components formable by NO merge at all —
     * single chars or dead entries — are fine: they match identically,
-    * or never, in both paths.) Fail loudly instead.
-    * O(|merges|) hash probes, once per encode call. */
-  def isRankConsistent(merges: Seq[Merge]): Boolean =
-    firstStraddle(merges).isEmpty
-
-  /** The first (using-merge, component, later-forming-rank) violation,
-    * if any — shared by the boolean probe and the loud guard. */
-  private def firstStraddle(merges: Seq[Merge])
-      : Option[(Merge, String, Int)] = {
-    val maxFormingRank = new java.util.HashMap[String, Integer]()
-    merges.foreach { m =>
-      val prev = maxFormingRank.get(m.merged)
-      if (prev == null || prev < m.rank)
-        maxFormingRank.put(m.merged, Integer.valueOf(m.rank))
-    }
-    merges.iterator.flatMap { m =>
-      Seq(m.left, m.right).iterator.flatMap { c =>
-        val r = maxFormingRank.get(c)
-        if (r != null && r > m.rank) Some((m, c, r.intValue())) else None
-      }
-    }.nextOption()
+    * or never, in both paths.) O(|merges|) hash probes, once per
+    * encode call. */
+  def isRankConsistent(merges: Seq[Merge]): Boolean = {
+    val maxFormingRank = scala.collection.mutable.HashMap[String, Int]()
+    merges.foreach(m => maxFormingRank(m.merged) =
+      math.max(m.rank, maxFormingRank.getOrElse(m.merged, m.rank)))
+    merges.forall(m => Seq(m.left, m.right).forall(c =>
+      maxFormingRank.get(c).forall(_ <= m.rank)))
   }
 
-  private def requireRankConsistent(merges: Seq[Merge]): Unit =
-    firstStraddle(merges).foreach { case (m, c, r) =>
-      throw new IllegalArgumentException(
-        s"merge table is not rank-consistent: rank ${m.rank} uses " +
-          s"component '$c', which is also FORMED by the later rank " +
-          s"$r — the linear-scan encoder and the rank-ordered chain " +
-          "would diverge on such a table; use the rank-ordered " +
-          "Bpe.encode chain for it, or re-export it from " +
-          "Bpe.train/trainBatched")
-    }
+  /** The encode-side merge table, shipped once per encode call as one
+    * broadcast. The straddle rule lives here: a rank-consistent table
+    * encodes each word by the greedy scan over the rank map, any other
+    * (rare but legal, e.g. a hand-edited or foreign table) by the
+    * per-word rank-ordered chain. */
+  private final class MergeTable(merges: Seq[Merge]) extends Serializable {
+    private val ranks = new java.util.HashMap[String, Integer](
+      math.max(16, merges.size * 2))
+    merges.foreach(m =>
+      ranks.put(m.left + " " + m.right, Integer.valueOf(m.rank)))
+    // null when the greedy scan equals the chain
+    private val chain: Array[Merge] =
+      if (isRankConsistent(merges)) null else merges.sortBy(_.rank).toArray
 
-  /** Per-task word→encoding cache (the fastBPE/HF-tokenizers token
-    * cache): natural corpora are Zipf-distributed, so the hit rate is
-    * near-total and per-word work amortizes to a hash probe. Bounded —
-    * cleared when it reaches 100k entries — so a pathological
-    * all-unique-words corpus can't grow task memory. */
-  private def newWordCache() =
-    new java.util.HashMap[String, Array[String]](1 << 12)
-
-  private def cachedEncode(w: String,
-                           ranks: java.util.HashMap[String, Integer],
-                           cache: java.util.HashMap[String, Array[String]])
-      : Array[String] = {
-    val hit = cache.get(w)
-    if (hit != null) hit
-    else {
-      val e = encodeWordFast(w, ranks)
-      if (cache.size >= 100000) cache.clear()
-      cache.put(w, e)
-      e
-    }
+    def encodeWord(w: String): Array[String] =
+      if (chain == null) encodeWordFast(charSymbols(w), ranks)
+      else encodeWordChain(charSymbols(w), chain)
   }
 
-  /** One word through the merges IN RANK ORDER — the pinned chain
-    * semantics ([[encode]]'s replace chain) on the JVM side, for
-    * rank-straddling tables where the greedy scan's equivalence
-    * contract does not hold. Each merge consumes all its adjacencies
-    * left-to-right non-overlapping, exactly like the ` l  r ` string
-    * replace. O(|merges|·len) — the fallback's price; consistent
-    * tables (every trainer output in practice) take the greedy
-    * scan. */
-  private def encodeWordChain(word: String,
-                              ordered: Array[Merge]): Array[String] = {
-    var syms = scala.collection.mutable.ArrayBuffer.empty[String]
-    syms ++= charSymbols(word)
-    def mergeable(s: String) = {
-      val c = s.charAt(0).toInt
-      !(c == 10 || c == 13 || c == 0x85 || c == 0x2028 || c == 0x2029)
-    }
-    var mi = 0
-    while (mi < ordered.length && syms.length > 1) {
-      val m = ordered(mi)
-      val next = scala.collection.mutable.ArrayBuffer.empty[String]
-      var j = 0
-      while (j < syms.length) {
-        if (j < syms.length - 1 && syms(j) == m.left &&
-            syms(j + 1) == m.right && mergeable(syms(j)) &&
-            mergeable(syms(j + 1))) {
-          next += m.merged
-          j += 2
-        } else {
-          next += syms(j)
-          j += 1
+  /** How one encoder splits a text into words and names its output:
+    * `n` symbols in `enc`, each word's symbols space-joined, words
+    * joined by `sep`. */
+  private final case class Mode(words: String => Array[String],
+                                n: String, enc: String, sep: String)
+
+  /** Sentencepiece-style word marking on a JVM string (see
+    * [[markWords]]), split into the marked words. */
+  private def markedWords(t: String): Array[String] =
+    ("▁" + t.replace(" ", " ▁")).split(" ")
+
+  private val CharMode =
+    Mode(t => t.split(" "), "n_tokens_bpe", "encoded", " | ")
+  private val SpMode =
+    Mode(t => markedWords(t), "n_tokens_sp", "encoded_sp", " ")
+  private val ByteMode =
+    Mode(t => markedWords(premapBytes(t)), "n_tokens_b", "encoded_b", " ")
+
+  /** THE encode loop: one `mapPartitions` pass over a broadcast
+    * [[MergeTable]], each task holding a word→encoding cache (the
+    * fastBPE/HF-tokenizers token cache: natural corpora are
+    * Zipf-distributed, so the hit rate is near-total and per-word work
+    * amortizes to a hash probe; cleared at 100k entries, so an
+    * all-unique-words corpus can't grow task memory). Appends the
+    * mode's count and encoding columns; a null text encodes as 0
+    * symbols / `""`. Map-side, zero shuffles, stateless — so it also
+    * applies directly to a streaming frame. */
+  private def encodeWith(df: DataFrame, text: String, merges: Seq[Merge],
+                         mode: Mode): DataFrame = {
+    val bc = df.sparkSession.sparkContext.broadcast(new MergeTable(merges))
+    val ti = df.schema.fieldIndex(text)
+    val outSchema = df.schema.add(mode.n, IntegerType)
+      .add(mode.enc, StringType)
+    df.mapPartitions { rows =>
+      val table = bc.value
+      val cache = new java.util.HashMap[String, Array[String]](1 << 12)
+      def encodeWord(w: String): Array[String] = {
+        var e = cache.get(w)
+        if (e == null) {
+          e = table.encodeWord(w)
+          if (cache.size >= 100000) cache.clear()
+          cache.put(w, e)
         }
+        e
       }
-      syms = next
-      mi += 1
-    }
-    syms.toArray
+      rows.map { row =>
+        val t = row.getString(ti)
+        val enc =
+          if (t == null) Array.empty[Array[String]]
+          else mode.words(t).filter(_.nonEmpty).map(encodeWord)
+        Row.fromSeq(row.toSeq :+ enc.iterator.map(_.length).sum :+
+          enc.map(_.mkString(" ")).mkString(mode.sep))
+      }
+    }(Encoders.row(outSchema))
   }
 
-  private def cachedEncodeChain(w: String, ordered: Array[Merge],
-      cache: java.util.HashMap[String, Array[String]])
-      : Array[String] = {
-    val hit = cache.get(w)
-    if (hit != null) hit
-    else {
-      val e = encodeWordChain(w, ordered)
-      if (cache.size >= 100000) cache.clear()
-      cache.put(w, e)
-      e
-    }
-  }
+  /** Encode a text column at character level: every word's characters
+    * merge by the table's rank order (the BPE apply contract — rank
+    * order, not best-pair-first, matches how [[trainBatched]] built the
+    * table on the training corpus itself). Merges never cross word
+    * boundaries. Emits `n_tokens_bpe` (INT) and `encoded` — words
+    * joined by ` | `, each word its space-separated symbol sequence
+    * (the b02p gate entry replays the b02 SQL oracle over it). */
+  def encodeFast(df: DataFrame, text: String,
+                 merges: Seq[Merge]): DataFrame =
+    encodeWith(df, text, merges, CharMode)
 
   /** Sentencepiece-style word marking (b05): every word gets a ▁
     * (U+2581) prefix — including a synthetic leading one — so word
@@ -551,57 +471,13 @@ object Bpe {
     trainBatched(df.select(markWords(col(text)).as("_sp")), "_sp",
       nMerges, electBatch)
 
-  /** Encode with word markers: the marked words run the
-    * [[encodeWordFast]] greedy scan and ALL symbols join into one
-    * space-separated stream — no `|` separator needed, the ▁s carry
-    * the boundaries. Emits `n_tokens_sp` / `encoded_sp`;
-    * [[decodeSp]] inverts it exactly. */
+  /** Encode with word markers: the marked words run the encode loop
+    * and ALL symbols join into one space-separated stream — no `|`
+    * separator needed, the ▁s carry the boundaries. Emits
+    * `n_tokens_sp` / `encoded_sp`; [[decodeSp]] inverts it exactly. */
   def encodeSp(df: DataFrame, text: String,
-               merges: Seq[Merge]): DataFrame = {
-    requireRankConsistent(merges)
-    val spark = df.sparkSession
-    val rankMap = new java.util.HashMap[String, Integer](
-      math.max(16, merges.size * 2))
-    merges.foreach(m =>
-      rankMap.put(m.left + " " + m.right, Integer.valueOf(m.rank)))
-    val bc = spark.sparkContext.broadcast(rankMap)
-    val ti = df.schema.fieldIndex(text)
-    val outSchema = df.schema
-      .add("n_tokens_sp", org.apache.spark.sql.types.IntegerType)
-      .add("encoded_sp", org.apache.spark.sql.types.StringType)
-    df.mapPartitions { rows =>
-      val ranks = bc.value
-      val cache = newWordCache()
-      rows.map { row =>
-        val t = row.getString(ti)
-        val words =
-          if (t == null) Array.empty[String]
-          else ("▁" + t.replace(" ", " ▁"))
-            .split(" ").filter(_.nonEmpty)
-        val enc = words.flatMap(w => cachedEncode(w, ranks, cache))
-        org.apache.spark.sql.Row.fromSeq(
-          row.toSeq :+ enc.length :+ enc.mkString(" "))
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
-
-  /** Tokenizer-feed INTEGER ids for the ▁-marker form (b06): the
-    * [[encodeSp]] stream mapped through a vocabulary built on the
-    * MARKED corpus (▁ is an ordinary base character there, so
-    * word-initial symbols get their own ids — exactly how
-    * sentencepiece vocabularies look). No boundary elision needed:
-    * the ▁s ARE the boundaries, so `pos` is simply the symbol
-    * position. */
-  def encodeIdsSp(df: DataFrame, id: String, text: String,
-                  merges: Seq[Merge],
-                  vocab: Seq[(Int, String, String)]): DataFrame = {
-    val vmap = typedLit(vocab.map(v => v._2 -> v._1).toMap)
-    encodeSp(df, text, merges)
-      .select(col(id), posexplode(filter(
-        split(col("encoded_sp"), " "), s => s =!= ""))
-        .as(Seq("pos", "symbol")))
-      .withColumn("token_id", element_at(vmap, col("symbol")))
-  }
+               merges: Seq[Merge]): DataFrame =
+    encodeWith(df, text, merges, SpMode)
 
   /** Exact inverse of [[encodeSp]]'s stream: drop the inter-symbol
     * spaces, turn each ▁ back into a space, drop the synthetic
@@ -633,49 +509,68 @@ object Bpe {
     * special token's string resolves to the special id (min-id dedup,
     * the sentencepiece user-defined-symbol behavior). */
   def vocab(df: DataFrame, text: String, merges: Seq[Merge],
-            reserved: Seq[String] = Nil): Seq[(Int, String, String)] = {
-    val chars = df
-      .select(explode(split(col(text), "")).as("ch"))
-      .filter(col("ch") =!= "" && col("ch") =!= " ")
-      .distinct().collect().map(_.getString(0)).sorted
-    val r = reserved.zipWithIndex.map { case (t, i) => (i, t, "special") }
-    val off = reserved.length
-    val base = chars.zipWithIndex.map { case (c, i) =>
-      (off + i, c, "char") }
-    val m = merges.sortBy(_.rank).zipWithIndex.map { case (mg, i) =>
-      (off + chars.length + i, mg.merged, "merge") }
+            reserved: Seq[String] = Nil): Seq[(Int, String, String)] =
+    numbered(reserved, baseChars(df, text).toSeq, merges)
+
+  /** reserved ++ base ++ merges (rank order), ids positional, every
+    * symbol at its minimum id. */
+  private def numbered(reserved: Seq[String], base: Seq[String],
+                       merges: Seq[Merge]): Seq[(Int, String, String)] = {
     val seen = scala.collection.mutable.HashSet[String]()
-    (r ++ base ++ m).filter { case (_, sym, _) => seen.add(sym) }.toSeq
+    (reserved.map(_ -> "special") ++ base.map(_ -> "char") ++
+      merges.sortBy(_.rank).map(_.merged -> "merge"))
+      .zipWithIndex.collect {
+        case ((sym, kind), i) if seen.add(sym) => (i, sym, kind)
+      }
   }
 
-  /** Tokenizer-feed-ready INTEGER id sequences: [[encode]] then map
-    * every symbol through the model-sized vocabulary (a `typedLit`
-    * map literal — broadcast-free, codegen'd, still zero shuffles).
-    * Emitted EXPLODED as (id, pos, symbol, token_id) — the shape
-    * sequence packers and feature stores consume; `pos` is the 0-based
-    * symbol position with word boundaries elided. A symbol outside the
-    * vocabulary (encoding a corpus the tokenizer never saw, with
-    * characters outside the base set) yields a NULL token_id — the
-    * caller's OOV policy owns it. */
-  def encodeIds(df: DataFrame, id: String, text: String,
-                merges: Seq[Merge],
-                vocab: Seq[(Int, String, String)],
-                fast: Boolean = false): DataFrame = {
+  /** An encoding exploded through a model-sized vocabulary (a
+    * `typedLit` map literal — broadcast-free, codegen'd, still zero
+    * shuffles) as (id, pos, symbol, token_id) — the shape sequence
+    * packers and feature stores consume; `pos` is the 0-based symbol
+    * position. Empty symbols (an empty or whitespace-only document)
+    * are dropped, and so is char mode's `|` word separator; in ▁/byte
+    * streams `bar` is empty, because there a lone `|` is a real
+    * symbol. A symbol outside the vocabulary yields a NULL token_id —
+    * the caller's OOV policy owns it. */
+  private def idsWith(df: DataFrame, id: String, text: String,
+                      merges: Seq[Merge], vocab: Seq[(Int, String, String)],
+                      mode: Mode): DataFrame = {
     val vmap = typedLit(vocab.map(v => v._2 -> v._1).toMap)
-    // `fast` routes through the production linear-scan encoder —
-    // spec-pinned identical output, required once the merge table
-    // outgrows the replace chain's janino ceiling
-    val enc = if (fast) encodeFast(df, text, merges)
-              else encode(df, text, merges)
-    enc
-      // drop word separators AND the empty symbol an empty/whitespace-
-      // only document splits to — otherwise it lands as a spurious
-      // NULL-token_id row and inflates coverageReport's OOV mass
+    val bar = mode.sep.trim
+    encodeWith(df, text, merges, mode)
       .select(col(id), posexplode(filter(
-        split(col("encoded"), " "), s => s =!= "|" && s =!= ""))
+        split(col(mode.enc), " "), s => s =!= bar && s =!= ""))
         .as(Seq("pos", "symbol")))
       .withColumn("token_id", element_at(vmap, col("symbol")))
   }
+
+  /** Tokenizer-feed-ready INTEGER id sequences: [[encodeFast]] through
+    * the vocabulary, `pos` counting symbols with word boundaries
+    * elided. */
+  def encodeIds(df: DataFrame, id: String, text: String,
+                merges: Seq[Merge],
+                vocab: Seq[(Int, String, String)]): DataFrame =
+    idsWith(df, id, text, merges, vocab, CharMode)
+
+  /** Tokenizer-feed INTEGER ids for the ▁-marker form (b06): the
+    * [[encodeSp]] stream mapped through a vocabulary built on the
+    * MARKED corpus (▁ is an ordinary base character there, so
+    * word-initial symbols get their own ids — exactly how
+    * sentencepiece vocabularies look). */
+  def encodeIdsSp(df: DataFrame, id: String, text: String,
+                  merges: Seq[Merge],
+                  vocab: Seq[(Int, String, String)]): DataFrame =
+    idsWith(df, id, text, merges, vocab, SpMode)
+
+  /** Per-document token and OOV counts of an id frame (`n`, n_oov,
+    * oov_ratio) — one doc-keyed agg. */
+  private def coverage(ids: DataFrame, id: String, n: String): DataFrame =
+    ids.groupBy(col(id))
+      .agg(count(lit(1)).cast("long").as(n),
+        sum(when(col("token_id").isNull, 1).otherwise(0)).cast("long")
+          .as("n_oov"))
+      .withColumn("oov_ratio", round(col("n_oov") / col(n), 6))
 
   /** Tokenizer coverage report (b04): encode a corpus with a FROZEN
     * tokenizer and measure per-document out-of-vocabulary mass — the
@@ -683,19 +578,11 @@ object Bpe {
     * committing to a training mix (a vocabulary trained on English
     * prose meeting code or another script shows up here first). A
     * symbol is OOV iff it maps to no vocabulary id (with character
-    * fallback that means characters the training corpus never saw).
-    * One map-side encode + one doc-keyed agg. */
+    * fallback that means characters the training corpus never saw). */
   def coverageReport(df: DataFrame, id: String, text: String,
                      merges: Seq[Merge],
-                     vocab: Seq[(Int, String, String)],
-                     fast: Boolean = false): DataFrame =
-    encodeIds(df, id, text, merges, vocab, fast)
-      .groupBy(col(id))
-      .agg(count(lit(1)).cast("long").as("n_tokens_bpe"),
-        sum(when(col("token_id").isNull, 1).otherwise(0)).cast("long")
-          .as("n_oov"))
-      .withColumn("oov_ratio",
-        round(col("n_oov") / col("n_tokens_bpe"), 6))
+                     vocab: Seq[(Int, String, String)]): DataFrame =
+    coverage(encodeIds(df, id, text, merges, vocab), id, "n_tokens_bpe")
 
   // ── byte-fallback mode (b07): the zero-OOV production tokenizer ──
 
@@ -756,16 +643,14 @@ object Bpe {
     * UTF-8 expansion is not char-to-char). */
   private def byteMarkedFrame(df: DataFrame, text: String): DataFrame = {
     val ti = df.schema.fieldIndex(text)
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("_sp", org.apache.spark.sql.types.StringType)
+    val schema = new StructType().add("_sp", StringType)
     df.mapPartitions { rows =>
       rows.map { row =>
         val t = row.getString(ti)
-        org.apache.spark.sql.Row(
-          if (t == null) null
-          else "▁" + premapBytes(t).replace(" ", " ▁"))
+        Row(if (t == null) null
+            else "▁" + premapBytes(t).replace(" ", " ▁"))
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }(Encoders.row(schema))
   }
 
   /** Train in byte-fallback mode: [[trainBatched]] over the marked,
@@ -778,54 +663,14 @@ object Bpe {
                  electBatch: Int = 256): Seq[Merge] =
     trainBatched(byteMarkedFrame(df, text), "_sp", nMerges, electBatch)
 
-  /** Encode in byte-fallback mode: [[encodeSp]]'s greedy-scan
-    * mapPartitions over the marked PREMAPPED words, emitting one
-    * concatenated symbol stream (`n_tokens_b` / `encoded_b`).
-    * [[decodeBytes]] inverts it byte-exactly for ANY input — there is
-    * no OOV and no lossy step anywhere. Map-side, zero shuffles,
-    * stateless (streaming-safe). Rank-straddling tables fall back to
-    * the per-word rank-ordered chain (the pinned semantics) instead
-    * of hard-failing the serving path. */
+  /** Encode in byte-fallback mode: the encode loop over the marked
+    * PREMAPPED words, emitting one concatenated symbol stream
+    * (`n_tokens_b` / `encoded_b`). [[decodeBytes]] inverts it
+    * byte-exactly for ANY input — there is no OOV and no lossy step
+    * anywhere. */
   def encodeBytes(df: DataFrame, text: String,
-                  merges: Seq[Merge]): DataFrame = {
-    // rank-straddling tables (rare but legal trainer output) are
-    // outside the greedy scan's equivalence contract; instead of
-    // hard-failing the serving/streaming path, route each word
-    // through the rank-ordered chain — the pinned semantics — like
-    // the Cli batch-encode path does for char mode
-    val consistent = isRankConsistent(merges)
-    val spark = df.sparkSession
-    val rankMap = new java.util.HashMap[String, Integer](
-      math.max(16, merges.size * 2))
-    merges.foreach(m =>
-      rankMap.put(m.left + " " + m.right, Integer.valueOf(m.rank)))
-    val bc = spark.sparkContext.broadcast(rankMap)
-    val bcOrdered = spark.sparkContext.broadcast(
-      if (consistent) Array.empty[Merge]
-      else merges.sortBy(_.rank).toArray)
-    val ti = df.schema.fieldIndex(text)
-    val outSchema = df.schema
-      .add("n_tokens_b", org.apache.spark.sql.types.IntegerType)
-      .add("encoded_b", org.apache.spark.sql.types.StringType)
-    df.mapPartitions { rows =>
-      val ranks = bc.value
-      val ordered = bcOrdered.value
-      val cache = newWordCache()
-      val enc1: String => Array[String] =
-        if (consistent) w => cachedEncode(w, ranks, cache)
-        else w => cachedEncodeChain(w, ordered, cache)
-      rows.map { row =>
-        val t = row.getString(ti)
-        val words =
-          if (t == null) Array.empty[String]
-          else ("▁" + premapBytes(t).replace(" ", " ▁"))
-            .split(" ").filter(_.nonEmpty)
-        val enc = words.flatMap(enc1)
-        org.apache.spark.sql.Row.fromSeq(
-          row.toSeq :+ enc.length :+ enc.mkString(" "))
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
+                  merges: Seq[Merge]): DataFrame =
+    encodeWith(df, text, merges, ByteMode)
 
   /** Exact inverse of [[encodeBytes]]'s stream: skip the inter-symbol
     * spaces, map ▁ to the space byte and every surrogate char back to
@@ -859,15 +704,13 @@ object Bpe {
     * detokenization sinks); stateless mapPartitions. */
   def decodeBytesFrame(df: DataFrame, enc: String): DataFrame = {
     val ti = df.schema.fieldIndex(enc)
-    val outSchema = df.schema
-      .add("decoded_b", org.apache.spark.sql.types.StringType)
+    val outSchema = df.schema.add("decoded_b", StringType)
     df.mapPartitions { rows =>
       rows.map { row =>
         val e = row.getString(ti)
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+
-          (if (e == null) null else decodeBytes(e)))
+        Row.fromSeq(row.toSeq :+ (if (e == null) null else decodeBytes(e)))
       }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+    }(Encoders.row(outSchema))
   }
 
   /** Byte-mode vocabulary: the CLOSED base alphabet — all 256
@@ -876,30 +719,16 @@ object Bpe {
     * the base set does not depend on the data, which is the whole
     * point of byte fallback. */
   def byteVocab(merges: Seq[Merge],
-                reserved: Seq[String] = Nil): Seq[(Int, String, String)] = {
-    val r = reserved.zipWithIndex.map { case (t, i) => (i, t, "special") }
-    val off = reserved.length
-    val base = (byteAlphabet :+ '▁').map(_.toString).sorted
-      .zipWithIndex.map { case (c, i) => (off + i, c, "char") }
-    val m = merges.sortBy(_.rank).zipWithIndex.map { case (mg, i) =>
-      (off + base.length + i, mg.merged, "merge") }
-    val seen = scala.collection.mutable.HashSet[String]()
-    (r ++ base ++ m).filter { case (_, sym, _) => seen.add(sym) }.toSeq
-  }
+                reserved: Seq[String] = Nil): Seq[(Int, String, String)] =
+    numbered(reserved, (byteAlphabet :+ '▁').map(_.toString).sorted, merges)
 
   /** Byte-mode id sequences: [[encodeBytes]] exploded through the
     * byte vocabulary — every symbol resolves (token_id is never NULL
     * when `vocab` is [[byteVocab]] of the same merges). */
   def encodeIdsBytes(df: DataFrame, id: String, text: String,
                      merges: Seq[Merge],
-                     vocab: Seq[(Int, String, String)]): DataFrame = {
-    val vmap = typedLit(vocab.map(v => v._2 -> v._1).toMap)
-    encodeBytes(df, text, merges)
-      .select(col(id), posexplode(filter(
-        split(col("encoded_b"), " "), s => s =!= ""))
-        .as(Seq("pos", "symbol")))
-      .withColumn("token_id", element_at(vmap, col("symbol")))
-  }
+                     vocab: Seq[(Int, String, String)]): DataFrame =
+    idsWith(df, id, text, merges, vocab, ByteMode)
 
   /** [[coverageReport]] in byte mode (b07): by construction the OOV
     * mass is ZERO on any corpus — the card that certifies a frozen
@@ -907,11 +736,5 @@ object Bpe {
   def coverageReportBytes(df: DataFrame, id: String, text: String,
                           merges: Seq[Merge],
                           vocab: Seq[(Int, String, String)]): DataFrame =
-    encodeIdsBytes(df, id, text, merges, vocab)
-      .groupBy(col(id))
-      .agg(count(lit(1)).cast("long").as("n_tokens_b"),
-        sum(when(col("token_id").isNull, 1).otherwise(0)).cast("long")
-          .as("n_oov"))
-      .withColumn("oov_ratio",
-        round(col("n_oov") / col("n_tokens_b"), 6))
+    coverage(encodeIdsBytes(df, id, text, merges, vocab), id, "n_tokens_b")
 }

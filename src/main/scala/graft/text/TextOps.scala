@@ -1317,8 +1317,8 @@ object TextOps {
     val keys = df.select(col(id).as("_id"),
       col(key).cast("string").as("_g"))
     // the encoded id stream feeds TWO consumers (the per-doc cost agg
-    // and the final union+join) and the merge-fold encode chain is the
-    // most expensive map work in the op — materialize it once instead
+    // and the final union+join) and the encode is the most expensive
+    // map work in the op — materialize it once instead
     // of encoding the corpus twice (guide §5: reuse beats recompute
     // when the recompute is the hot path; spills to disk when the
     // token stream outgrows memory)

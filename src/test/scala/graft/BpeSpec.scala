@@ -20,14 +20,14 @@ class BpeSpec extends AnyFunSuite {
        "hand-computed merges with deterministic tie-breaks") {
     val df = corpus("low" -> 5, "lower" -> 2, "newest" -> 6,
       "widest" -> 3)
-    val m = Bpe.train(df, "text", nMerges = 4)
+    val m = BpeOracle.train(df, "text", nMerges = 4)
     assert(m.map(x => (x.rank, x.left, x.right, x.pairCount)) === Seq(
       (1, "e", "s", 9L),   // es 9 ties st 9; 'e' < 's' breaks it
       (2, "es", "t", 9L),  // est forms immediately
       (3, "l", "o", 7L),   // lo 7 ties ow 7; 'l' < 'o'
       (4, "lo", "w", 7L)))
     // the canonical payoff: an UNSEEN word segments morphologically
-    val enc = Bpe.encode(Seq((1L, "lowest")).toDF("id", "text"),
+    val enc = BpeOracle.encode(Seq((1L, "lowest")).toDF("id", "text"),
         "text", m)
       .select("encoded").as[String].head()
     assert(enc === "low est")
@@ -36,9 +36,9 @@ class BpeSpec extends AnyFunSuite {
   test("train + encode: repeated runs merge greedily left-to-right " +
        "like reference BPE (aaaaa -> aa aa a, not aa a aa)") {
     val df = Seq((1L, "aaaaa")).toDF("doc_id", "text")
-    val m = Bpe.train(df, "text", nMerges = 1)
+    val m = BpeOracle.train(df, "text", nMerges = 1)
     assert(m === Seq(Bpe.Merge(1, "a", "a", "aa", 4L)))
-    val enc = Bpe.encode(df, "text", m)
+    val enc = BpeOracle.encode(df, "text", m)
       .select("n_tokens_bpe", "encoded").as[(Int, String)].head()
     assert(enc === ((3, "aa aa a")),
       "the unit encoding must not let one replacement eat the next " +
@@ -47,26 +47,26 @@ class BpeSpec extends AnyFunSuite {
 
   test("encode: merges never cross word boundaries and ride rank order") {
     val m = Seq(Bpe.Merge(1, "b", "a", "ba", 0L))
-    val enc = Bpe.encode(Seq((1L, "ab ab")).toDF("id", "text"), "text", m)
+    val enc = BpeOracle.encode(Seq((1L, "ab ab")).toDF("id", "text"), "text", m)
       .select("n_tokens_bpe", "encoded").as[(Int, String)].head()
     assert(enc === ((4, "a b | a b")),
       "'b a' spans the word boundary — it must never merge")
     // rank order, not refreshed counts: (a,b) then (ab,c) chains
     val m2 = Seq(Bpe.Merge(1, "a", "b", "ab", 0L),
       Bpe.Merge(2, "ab", "c", "abc", 0L))
-    val enc2 = Bpe.encode(Seq((1L, "abc")).toDF("id", "text"), "text", m2)
+    val enc2 = BpeOracle.encode(Seq((1L, "abc")).toDF("id", "text"), "text", m2)
       .select("encoded").as[String].head()
     assert(enc2 === "abc")
   }
 
   test("train: pair-starved corpora stop early instead of crashing " +
        "(single-char words, empty corpus)") {
-    assert(Bpe.train(Seq((1L, "a b a")).toDF("doc_id", "text"),
+    assert(BpeOracle.train(Seq((1L, "a b a")).toDF("doc_id", "text"),
       "text", nMerges = 5).isEmpty)
-    assert(Bpe.train(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+    assert(BpeOracle.train(Seq.empty[(Long, String)].toDF("doc_id", "text"),
       "text", nMerges = 3).isEmpty)
     // merges stop when the vocabulary is fully merged
-    val m = Bpe.train(Seq((1L, "ab ab")).toDF("doc_id", "text"),
+    val m = BpeOracle.train(Seq((1L, "ab ab")).toDF("doc_id", "text"),
       "text", nMerges = 10)
     assert(m.map(_.merged) === Seq("ab"),
       "one merge exhausts the two-char vocabulary")
@@ -76,7 +76,7 @@ class BpeSpec extends AnyFunSuite {
        "whole-stage codegen") {
     val docs = graft.core.Tables.documents(spark, SparkSpec.sfDir)
     val m = (1 to 8).map(i => Bpe.Merge(i, s"x$i", "y", s"x${i}y", 0L))
-    val out = Bpe.encode(docs, "text", m)
+    val out = BpeOracle.encode(docs, "text", m)
     out.collect()
     val p = out.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
@@ -87,7 +87,7 @@ class BpeSpec extends AnyFunSuite {
   test("vocab + encodeIds: chars-then-merges ids, positions elide " +
        "word boundaries, OOV symbols map to null") {
     val df = Seq((1L, "ab ab b")).toDF("doc_id", "text")
-    val m = Bpe.train(df, "text", nMerges = 1) // (a,b) cnt 2
+    val m = BpeOracle.train(df, "text", nMerges = 1) // (a,b) cnt 2
     assert(m.map(_.merged) === Seq("ab"))
     val v = Bpe.vocab(df, "text", m)
     assert(v === Seq((0, "a", "char"), (1, "b", "char"),
@@ -114,7 +114,7 @@ class BpeSpec extends AnyFunSuite {
   test("coverageReport: unseen characters are the OOV mass, covered " +
        "text scores zero") {
     val train = Seq((1L, "aa bb aa")).toDF("doc_id", "text")
-    val m = Bpe.train(train, "text", nMerges = 2)
+    val m = BpeOracle.train(train, "text", nMerges = 2)
     val v = Bpe.vocab(train, "text", m)
     val eval = Seq(
       (1L, "aa bb"),          // fully covered
@@ -133,12 +133,12 @@ class BpeSpec extends AnyFunSuite {
        "repeated-run / chain / boundary adversaries") {
     val docs = graft.core.Tables.documents(spark, SparkSpec.sfDir)
       .select("doc_id", "text")
-    val m = Bpe.train(docs, "text", nMerges = 8)
+    val m = BpeOracle.train(docs, "text", nMerges = 8)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "n_tokens_bpe", "encoded")
         .as[(Long, Int, String)].collect().sortBy(_._1).toSeq
     assert(rows(Bpe.encodeFast(docs, "text", m)) ===
-      rows(Bpe.encode(docs, "text", m)))
+      rows(BpeOracle.encode(docs, "text", m)))
     // adversaries: greedy repeated runs, rank chains, word boundaries,
     // unseen symbols, empty-ish text
     val adv = Seq((1L, "aaaaa"), (2L, "ab ab"), (3L, "abc abc zq"),
@@ -148,7 +148,7 @@ class BpeSpec extends AnyFunSuite {
       Bpe.Merge(3, "ab", "c", "abc", 0L),
       Bpe.Merge(4, "aa", "aa", "aaaa", 0L))
     assert(rows(Bpe.encodeFast(adv, "text", m2)) ===
-      rows(Bpe.encode(adv, "text", m2)))
+      rows(BpeOracle.encode(adv, "text", m2)))
   }
 
   test("encodeFast: per-word cost independent of merge count — a " +
@@ -167,7 +167,7 @@ class BpeSpec extends AnyFunSuite {
       Bpe.Merge(4095, "i", "n", "in", 0L),
       Bpe.Merge(4096, "o", "f", "of", 0L))
     val out = Bpe.encodeFast(docs, "text", filler ++ real)
-    val small = Bpe.encode(docs, "text", real)
+    val small = BpeOracle.encode(docs, "text", real)
     import org.apache.spark.sql.functions.col
     val a = out.select("doc_id", "n_tokens_bpe", "encoded")
       .as[(Long, Int, String)].collect().sortBy(_._1).toSeq
@@ -180,56 +180,65 @@ class BpeSpec extends AnyFunSuite {
     assert(!p.contains("Exchange"), s"encodeFast must not shuffle:\n$p")
   }
 
-  test("encodeIds fast=true ≡ fast=false (ids, positions, OOV nulls)") {
+  test("encodeIds ≡ the oracle chain exploded through the vocab (ids, " +
+       "positions, OOV nulls)") {
     val docs = graft.core.Tables.documents(spark, SparkSpec.sfDir)
       .select("doc_id", "text").filter(col("doc_id") < 80)
-    val m = Bpe.train(docs, "text", nMerges = 6)
+    val m = BpeOracle.train(docs, "text", nMerges = 6)
     val v = Bpe.vocab(docs, "text", m)
-    def rows(fast: Boolean) =
-      Bpe.encodeIds(docs, "doc_id", "text", m, v, fast = fast)
-        .select("doc_id", "pos", "symbol", "token_id")
+    val vmap = typedLit(v.map(x => x._2 -> x._1).toMap)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "pos", "symbol", "token_id")
         .as[(Long, Int, String, Integer)].collect()
         .sortBy(r => (r._1, r._2)).toSeq
-    assert(rows(fast = true) === rows(fast = false))
+    val chain = BpeOracle.encode(docs, "text", m)
+      .select(col("doc_id"), posexplode(filter(split(col("encoded"), " "),
+        s => s =!= "|" && s =!= "")).as(Seq("pos", "symbol")))
+      .withColumn("token_id", element_at(vmap, col("symbol")))
+    assert(rows(Bpe.encodeIds(docs, "doc_id", "text", m, v)) === rows(chain))
   }
 
   test("trainBatched ≡ train: gate fixture at several batch widths") {
     val docs = graft.core.Tables.documents(spark, SparkSpec.sfDir)
       .select("doc_id", "text")
-    val seq = Bpe.train(docs, "text", nMerges = 8)
+    val seq = BpeOracle.train(docs, "text", nMerges = 8)
     for (w <- Seq(1, 2, 256)) {
       assert(Bpe.trainBatched(docs, "text", nMerges = 8,
         electBatch = w) === seq, s"electBatch=$w diverged")
     }
   }
 
-  test("encodeFast rejects rank-INCONSISTENT tables (component formed " +
-       "by a later merge) but accepts dead never-formable entries") {
+  test("encodeFast encodes a rank-INCONSISTENT table (component " +
+       "formed by a later merge) with the chain semantics, and dead " +
+       "never-formable entries are harmless") {
     val df = Seq((1L, "abc")).toDF("doc_id", "text")
-    // rank 1 consumes 'ab', which only rank 2 can form — the chain
-    // and the greedy scan would silently tokenize differently
+    def enc(f: org.apache.spark.sql.DataFrame) =
+      f.select("n_tokens_bpe", "encoded").as[(Int, String)].head()
+    // rank 1 consumes 'ab', which only rank 2 can form: the chain has
+    // passed rank 1 by the time 'ab' exists, the greedy scan would not
     val bad = Seq(Bpe.Merge(1, "ab", "c", "abc", 0L),
       Bpe.Merge(2, "a", "b", "ab", 0L))
-    val e = intercept[IllegalArgumentException] {
-      Bpe.encodeFast(df, "text", bad).collect()
-    }
-    assert(e.getMessage.contains("rank-consistent"))
+    assert(!Bpe.isRankConsistent(bad))
+    assert(enc(Bpe.encodeFast(df, "text", bad)) === ((2, "ab c")))
+    assert(enc(Bpe.encodeFast(df, "text", bad)) ===
+      enc(BpeOracle.encode(df, "text", bad)))
     // a dead multi-char component no merge ever forms is harmless —
     // it can match in NEITHER path
     val dead = Seq(Bpe.Merge(1, "qqq", "zzz", "qqqzzz", 0L),
       Bpe.Merge(2, "a", "b", "ab", 0L))
+    assert(Bpe.isRankConsistent(dead))
     val out = Bpe.encodeFast(df, "text", dead)
       .select("encoded").as[String].head()
     assert(out === "ab c")
   }
 
-  test("rank-consistency guard: rejects a component whose forming " +
-       "ranks STRADDLE its use (min rank before, max rank after) — " +
-       "the case a min-rank-only check waves through") {
+  test("rank-straddling table (a component's forming ranks STRADDLE " +
+       "its use — the case a min-rank-only check waves through): " +
+       "encodeFast and encodeSp follow the oracle chain") {
     val df = Seq((1L, "dabc")).toDF("doc_id", "text")
     // 'abc' forms at rank 3 AND rank 5; rank 4 uses it in between.
     // On 'dabc' the chain yields [d, abc] (rank 4 has already passed
-    // when rank 5 finally assembles abc) while the greedy scan forms
+    // when rank 5 finally assembles abc) while a greedy scan forms
     // abc via rank 5 and then applies rank 4 → [dabc].
     val straddle = Seq(Bpe.Merge(1, "a", "b", "ab", 0L),
       Bpe.Merge(2, "b", "c", "bc", 0L),
@@ -237,13 +246,22 @@ class BpeSpec extends AnyFunSuite {
       Bpe.Merge(4, "d", "abc", "dabc", 0L),
       Bpe.Merge(5, "ab", "c", "abc", 0L))
     assert(!Bpe.isRankConsistent(straddle))
-    val e = intercept[IllegalArgumentException] {
-      Bpe.encodeFast(df, "text", straddle).collect()
-    }
-    assert(e.getMessage.contains("rank-consistent"))
-    // the chain itself stays available and pins the semantics
-    assert(Bpe.encode(df, "text", straddle)
-      .select("encoded").as[String].head() === "d abc")
+    val chain = BpeOracle.encode(df, "text", straddle)
+      .select("encoded").as[String].head()
+    assert(chain === "d abc")
+    assert(Bpe.encodeFast(df, "text", straddle)
+      .select("encoded").as[String].head() === chain)
+    // ▁-marked: the chain over the marked words, words joined by a
+    // space instead of ` | ` (the ▁s carry the boundaries)
+    val sp = Seq((1L, "dabc abc")).toDF("doc_id", "text")
+    val spChain = BpeOracle.encode(
+        sp.select(col("doc_id"), Bpe.markWords(col("text")).as("text")),
+        "text", straddle)
+      .select("n_tokens_bpe", "encoded").as[(Int, String)].head()
+    assert(spChain === ((5, "▁ d abc | ▁ abc")))
+    assert(Bpe.encodeSp(sp, "text", straddle)
+      .select("n_tokens_sp", "encoded_sp").as[(Int, String)].head() ===
+      ((spChain._1, spChain._2.replace(" | ", " "))))
     // duplicate-formable is FINE when every forming rank precedes
     // every use: same table with ranks 4/5 swapped is consistent and
     // the two paths agree
@@ -255,8 +273,23 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.isRankConsistent(ok))
     assert(Bpe.encodeFast(df, "text", ok)
         .select("encoded").as[String].head() ===
-      Bpe.encode(df, "text", ok)
+      BpeOracle.encode(df, "text", ok)
         .select("encoded").as[String].head())
+  }
+
+  test("a null text encodes as 0 tokens and an empty encoding on " +
+       "every encoder (encodeFast, encodeSp, encodeBytes)") {
+    val df = Seq((1L, null: String), (2L, "ab")).toDF("doc_id", "text")
+    val m = Seq(Bpe.Merge(1, "a", "b", "ab", 0L))
+    def nullRow(f: org.apache.spark.sql.DataFrame, n: String, e: String) =
+      f.filter(col("doc_id") === 1L).select(n, e)
+        .as[(Int, String)].collect().toSeq
+    assert(nullRow(Bpe.encodeFast(df, "text", m), "n_tokens_bpe",
+      "encoded") === Seq((0, "")))
+    assert(nullRow(Bpe.encodeSp(df, "text", m), "n_tokens_sp",
+      "encoded_sp") === Seq((0, "")))
+    assert(nullRow(Bpe.encodeBytes(df, "text", m), "n_tokens_b",
+      "encoded_b") === Seq((0, "")))
   }
 
   test("encodeBytes: a rank-straddling frozen table routes through the " +
@@ -309,7 +342,7 @@ class BpeSpec extends AnyFunSuite {
       // exhaustion before nMerges
       corpus("ab" -> 2))
     for ((df, fi) <- fixtures.zipWithIndex; w <- Seq(1, 2, 3, 64)) {
-      val seq = Bpe.train(df, "text", nMerges = 12)
+      val seq = BpeOracle.train(df, "text", nMerges = 12)
       val bat = Bpe.trainBatched(df, "text", nMerges = 12,
         electBatch = w)
       assert(bat === seq, s"fixture $fi electBatch=$w diverged")
@@ -359,7 +392,7 @@ class BpeSpec extends AnyFunSuite {
           1 + rnd.nextInt(4))
       }
       val df = corpus(words: _*)
-      val seq = Bpe.train(df, "text", nMerges = 6)
+      val seq = BpeOracle.train(df, "text", nMerges = 6)
       for (w <- Seq(2, 4)) {
         val bat = Bpe.trainBatched(df, "text", nMerges = 6,
           electBatch = w)
@@ -503,8 +536,8 @@ class BpeSpec extends AnyFunSuite {
        "merge table matches batch") {
     val docs = graft.core.Tables.documents(spark, SparkSpec.sfDir)
       .select("doc_id", "text")
-    val m = Bpe.train(docs, "text", nMerges = 4)
-    val batch = Bpe.encode(docs, "text", m)
+    val m = BpeOracle.train(docs, "text", nMerges = 4)
+    val batch = BpeOracle.encode(docs, "text", m)
       .select("doc_id", "n_tokens_bpe", "encoded")
       .as[(Long, Int, String)].collect().map(r => r._1 -> r).toMap
     val tmp = java.nio.file.Files.createTempDirectory("graftbpe").toString
@@ -517,7 +550,7 @@ class BpeSpec extends AnyFunSuite {
         buf ++= b.select("doc_id", "n_tokens_bpe", "encoded")
           .as[(Long, Int, String)].collect().map(r => r._1 -> r)
       }
-    val q = graft.streaming.StreamingScore.bpeEncode(stream, "text", m)
+    val q = graft.streaming.StreamingScore.bpeEncodeFast(stream, "text", m)
       .writeStream.foreachBatch(sink).start()
     q.processAllAvailable(); q.stop()
     assert(buf.nonEmpty && buf.toMap === batch)
@@ -642,9 +675,9 @@ class BpeSpec extends AnyFunSuite {
     // one merge forms 'ab': 'ab ab cd' -> tokens [ab, ab, c, d]
     val df = Seq((1L, "ab ab cd", "en"), (2L, "ab cd cd", "de"))
       .toDF("doc_id", "text", "lang")
-    val m = Bpe.train(df, "text", nMerges = 1)
+    val m = BpeOracle.train(df, "text", nMerges = 1)
     assert(m.map(_.merged) === Seq("ab"))
-    val enc = Bpe.encode(df, "text", m)
+    val enc = BpeOracle.encode(df, "text", m)
       .select(col("doc_id"), col("n_tokens_bpe")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     // doc1: [ab][ab][c][d] = 4 tokens over 3 words, 6 chars

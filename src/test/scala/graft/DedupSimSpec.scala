@@ -1132,9 +1132,9 @@ class DedupSimSpec extends AnyFunSuite {
     val cb = graft.sim.PqCodebook.M8K16
     val both = emb.select(col("vec_id"),
         Similarity.pqEncode(col("embedding"), cb).as("native"),
-        Similarity.pqEncodeComposed(col("embedding"), cb).as("composed"),
+        SimOracle.pqEncodeComposed(col("embedding"), cb).as("composed"),
         Similarity.ivfAssign(col("embedding"), graft.sim.IvfCodebook.K16).as("na"),
-        Similarity.ivfAssignComposed(col("embedding"), graft.sim.IvfCodebook.K16).as("ca"))
+        SimOracle.ivfAssignComposed(col("embedding"), graft.sim.IvfCodebook.K16).as("ca"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -1178,7 +1178,7 @@ class DedupSimSpec extends AnyFunSuite {
           "spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
         v.select(col("vec_id"),
-            Similarity.pqLutComposed(col("embedding"), cb).as("composed"))
+            SimOracle.pqLutComposed(col("embedding"), cb).as("composed"))
           .collect()
       }.map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
       assert(native.nonEmpty && native.keySet === composed.keySet)

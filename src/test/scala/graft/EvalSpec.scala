@@ -200,6 +200,37 @@ class EvalSpec extends AnyFunSuite {
       real, failing, Seq("DATE_TIME"), "typical_price"))).isEmpty)
   }
 
+  test("predictive evaluate leaves no persisted RDD and no cached plan " +
+       "behind when a leg throws after its caches are registered") {
+    val sc = spark.sparkContext
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // the plan registry has no public size; read the field it lives in
+    val registry = cacheManager.getClass.getDeclaredField("cachedData")
+    registry.setAccessible(true)
+    def cachedPlans = registry.get(cacheManager).asInstanceOf[Seq[_]].size
+    val (rdds, plans) = (sc.getPersistentRDDs.keySet.toSet, cachedPlans)
+    // a price past the first few rows fails when a job reads it; the
+    // leg-size counts never do, so both fits have filled their caches
+    // when the validation MAEs throw. (A failing SYNTHETIC frame is not
+    // used: two legs then build the dependent sSyn/augmented/wAug caches
+    // at once, and Spark's failed-build recache can deadlock them.)
+    val failing = SparkSpec.randomWalk(150, seed = 2).repartition(2)
+      .withColumn("typical_price", when(col("rn") >= 5,
+        raise_error(lit("validation leg failed")))
+        .otherwise(col("typical_price")))
+    val e = intercept[Exception](graft.eval.PredictiveEvaluator.evaluate(
+      SparkSpec.randomWalk(200, seed = 4), SparkSpec.randomWalk(400, seed = 1),
+      failing, SparkSpec.randomWalk(150, seed = 3),
+      Seq("DATE_TIME"), "typical_price", windowSize = 12, maxIter = 2))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("validation leg failed")),
+      e.toString)
+    assert(sc.getPersistentRDDs.keySet.toSet.diff(rdds).isEmpty)
+    assert(cachedPlans === plans)
+  }
+
   test("Scope.released drops the body's local checkpoints, also when it throws, " +
        "and keeps a caller's cache") {
     val sc = spark.sparkContext

@@ -71,7 +71,7 @@ class TextLmPackSpec extends AnyFunSuite {
       (2L, "s0", ""),        // 0 symbols (+eos = 1)
       (3L, "s0", "ab b b")   // 3 symbols (+eos = 4)
     ).toDF("doc_id", "source", "text")
-    val m = Bpe.train(docs, "text", nMerges = 1) // (a,b)->ab
+    val m = BpeOracle.train(docs, "text", nMerges = 1) // (a,b)->ab
     assert(m.map(_.merged) === Seq("ab"))
     val v = Bpe.vocab(docs, "text", m,
       Seq("<pad>", "<bos>", "<eos>", "<unk>"))
@@ -102,7 +102,7 @@ class TextLmPackSpec extends AnyFunSuite {
       "newest newest newest newest widest widest widest"))
       .toDF("doc_id", "text")
     // distinct chars: d,e,i,l,n,o,r,s,t,w = 10
-    val seq = Bpe.train(df, "text", nMerges = 6)
+    val seq = BpeOracle.train(df, "text", nMerges = 6)
     val m = Bpe.trainBatched(df, "text", nMerges = 100,
       targetVocab = Some(17), reservedCount = 4)
     assert(m === seq.take(3), "17 - 4 reserved - 10 chars = 3 merges")
@@ -611,7 +611,7 @@ class TextLmPackSpec extends AnyFunSuite {
     assert(t.values.forall(c => c >= 0 && c < 8))
     // assignment equals the composed struct-argmin (PqEncode parity)
     val composed = TextOps.hashEmbedVectors(docs, "doc_id", "text")
-      .select(col("doc_id"), graft.sim.Similarity
+      .select(col("doc_id"), SimOracle
         .ivfAssignComposed(col("embedding"), graft.text.TopicCentroids.K8)
         .cast("long").as("topic"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
